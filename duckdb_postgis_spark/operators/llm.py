@@ -2165,10 +2165,11 @@ def _knn_ivf_lsh_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
         "aggregate(transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), "
         "CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"
     )
-    # nrm BEFORE the banding explode (r13 verdict order #6): the 64-element
-    # interpreted fold runs once per VECTOR and the 8-byte double rides the
-    # explode, instead of re-folding once per (vector, band) row — same
-    # expression, same double, bit-identical downstream cosines
+    # nrm is attached before _bucketize, but the optimizer does not keep
+    # it there: the executed plan (plans/r14/knn_ivf_lsh_after.txt, node
+    # 22) evaluates the SQRT fold in a Project ABOVE the posexplode
+    # Generate, once per (vector, band) row, not once per vector.  Same
+    # expression, same double, so downstream cosines are bit-identical.
     withnorm = _bucketize(
         spark,
         emb.repartition(nparts).withColumn("nrm", F.sqrt(sumsq)),
@@ -4388,7 +4389,8 @@ def dedup_exact_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# R11 incremental new-batch-vs-index dedup — the nightly 100 TB ingest shape
+# incremental new-batch-vs-index dedup — the nightly 100 TB ingest shape:
+# probe -> append -> compact over a persisted (band, bsig)-bucketed index
 # --------------------------------------------------------------------------
 def ensure_minhash_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Persisted MinHash band-signature INDEX over the standing corpus
@@ -4400,24 +4402,58 @@ def ensure_minhash_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket-wise with NO exchange and shuffles ONLY the delta side into
     the bucket layout — the shuffle over the corpus happened once at
     write time and is amortized over every nightly run (the
-    ensure_bucketed_table convention, plans/layout.py:96).  Signatures
-    come from the same _minhash_signatures pass dedup_minhash_lsh uses,
-    so index and probe stay bit-identical."""
-    from duckdb_postgis_spark.plans.layout import _LAYOUT_ROOT, _token
+    layout.write_bucketed convention shared with ensure_bucketed_table).
+    Signatures come from the same _minhash_signatures pass
+    dedup_minhash_lsh uses, so index and probe stay bit-identical."""
+    from duckdb_postgis_spark.plans.layout import _token, ensure_tables, write_bucketed
 
-    tbl = f"minhash_index_{_token(sf_dir, 'documents')}"
-    if not spark.catalog.tableExists(tbl):
+    def build(tbl: str) -> None:
         corpus = table(spark, sf_dir, "documents").filter(F.col("doc_id") % 10 != 0)
         banded = _minhash_banded(_minhash_signatures(spark, corpus))
-        (
-            banded.write.bucketBy(8, "band", "bsig")
-            .sortBy("band", "bsig")
-            .option("path", f"{_LAYOUT_ROOT}/{tbl}")
-            .mode("overwrite")
-            .format("parquet")
-            .saveAsTable(tbl)
+        write_bucketed(banded, tbl, ("band", "bsig"), "overwrite")
+
+    tbl = f"minhash_index_{_token(sf_dir, 'documents')}"
+    return ensure_tables(spark, (tbl,), build)[0]
+
+
+def _minhash_probe(
+    spark: SparkSession, sf_dir: str, idx: DataFrame, idx_src: bool
+) -> DataFrame:
+    """Tonight's delta (doc_id % 10 == 0) probed against a persisted
+    (band, bsig)-bucketed index: every (new doc, indexed doc) band
+    collision with its estimated Jaccard, plus — for a post-append
+    generation (``idx_src``) — whether the indexed doc is 'appended'
+    delta or standing 'corpus'.  Shared by the probe, append and
+    compaction gates so all three prove their contract on one plan: only
+    the delta's band rows shuffle, the index reads bucket-wise with no
+    exchange."""
+    delta = table(spark, sf_dir, "documents").filter(F.col("doc_id") % 10 == 0)
+    probe = _minhash_banded(_minhash_signatures(spark, delta))
+    a = probe.select(
+        F.col("doc_id").alias("new_id"), "band", "bsig", F.col("sig").alias("sig_a")
+    )
+    b = idx.select(
+        F.col("doc_id").alias("idx_id"), "band", "bsig", F.col("sig").alias("sig_b")
+    )
+    agree = F.aggregate(
+        F.zip_with("sig_a", "sig_b", lambda x, y: F.when(x == y, 1.0).otherwise(0.0)),
+        F.lit(0.0),
+        lambda acc, v: acc + v,
+    )
+    cols = ["new_id", "idx_id"]
+    if idx_src:
+        cols.append(
+            F.when(F.col("idx_id") % 10 == 0, F.lit("appended"))
+            .otherwise(F.lit("corpus"))
+            .alias("idx_src")
         )
-    return spark.table(tbl)
+    cols.append(F.round(agree / F.lit(float(_MINHASH_SEEDS)), 6).alias("est_jaccard"))
+    return (
+        a.join(b, ["band", "bsig"])
+        .dropDuplicates(["new_id", "idx_id"])
+        .select(*cols)
+        .orderBy("new_id", "idx_id")
+    )
 
 
 @query(
@@ -4463,37 +4499,9 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage shrinking linearly in the delta share).
     Oracle replays both sides' signature chains in DuckDB; column names
     pinned new_id/idx_id/est_jaccard on both engines."""
-    idx = ensure_minhash_index(spark, sf_dir)
-    delta = table(spark, sf_dir, "documents").filter(F.col("doc_id") % 10 == 0)
-    probe = _minhash_banded(_minhash_signatures(spark, delta))
-    a = probe.select(
-        F.col("doc_id").alias("new_id"), "band", "bsig", F.col("sig").alias("sig_a")
-    )
-    b = idx.select(
-        F.col("doc_id").alias("idx_id"), "band", "bsig", F.col("sig").alias("sig_b")
-    )
-    agree = F.aggregate(
-        F.zip_with("sig_a", "sig_b", lambda x, y: F.when(x == y, 1.0).otherwise(0.0)),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    return (
-        a.join(b, ["band", "bsig"])
-        .dropDuplicates(["new_id", "idx_id"])
-        .select(
-            "new_id",
-            "idx_id",
-            F.round(agree / F.lit(float(_MINHASH_SEEDS)), 6).alias("est_jaccard"),
-        )
-        .orderBy("new_id", "idx_id")
-    )
+    return _minhash_probe(spark, sf_dir, ensure_minhash_index(spark, sf_dir), False)
 
 
-# --------------------------------------------------------------------------
-# R12 incremental-dedup WRITE path: append the accepted delta's signatures
-# back into the standing index (the half of the nightly loop
-# dedup_incremental_minhash's docstring narrated but nothing registered)
-# --------------------------------------------------------------------------
 def ensure_minhash_index2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Index state AFTER one nightly append cycle: the standing corpus
     index (ensure_minhash_index) plus the banded signatures of the
@@ -4506,42 +4514,17 @@ def ensure_minhash_index2(spark: SparkSession, sf_dir: str) -> DataFrame:
     the nightly index-maintenance cost is O(|delta|) — never a corpus
     rewrite.  tests/test_fuzz_index_append.py pins that file-level claim
     by grouping the table's parquet files by write job and row-counting
-    each group.  A ``_APPEND_DONE`` marker (underscore-prefixed, so the
-    parquet reader ignores it) makes the two-step build crash-safe: a
-    table found without the marker is dropped and rebuilt.  The rebuild
-    also clears the table DIRECTORY: the table is EXTERNAL (explicit
-    ``path``), so ``DROP TABLE`` leaves the parquet files behind, and
-    Spark (≥3.2) rejects CTAS into a non-empty location — without the
-    rmtree a run interrupted between the two write steps would error
-    forever instead of rebuilding (r12 ADVICE fix, pinned by
-    tests/test_fuzz_index_append.py's interrupted-build case)."""
-    import shutil
+    each group.  The two-write build is committed by ensure_tables'
+    marker, so an interrupted build is dropped and rebuilt."""
+    from duckdb_postgis_spark.plans.layout import _token, ensure_tables, write_bucketed
 
-    from duckdb_postgis_spark.plans.layout import _LAYOUT_ROOT, _token
-
-    tbl = f"minhash_index2_{_token(sf_dir, 'documents')}"
-    tbl_dir = f"{_LAYOUT_ROOT}/{tbl}"
-    marker = f"{tbl_dir}/_APPEND_DONE"
-    if spark.catalog.tableExists(tbl) and not os.path.exists(marker):
-        spark.sql(f"DROP TABLE {tbl}")
-    if not spark.catalog.tableExists(tbl):
-        # DROP TABLE on an EXTERNAL table keeps the files; a stale
-        # half-built directory (or marker) would make the step-1 CTAS
-        # fail (allowNonEmptyLocationInCTAS=false) — clear it first.
-        shutil.rmtree(tbl_dir, ignore_errors=True)
+    def build(tbl: str) -> None:
         idx = ensure_minhash_index(spark, sf_dir)
-        # step 1: seed the v2 table with the standing index rows (a
+        # seed the v2 table with the standing index rows (a
         # bucket-preserving copy; at 100 TB this is the one-time index
         # clone a blue/green maintenance job pays, not a nightly cost)
-        (
-            idx.write.bucketBy(8, "band", "bsig")
-            .sortBy("band", "bsig")
-            .option("path", f"{_LAYOUT_ROOT}/{tbl}")
-            .mode("overwrite")
-            .format("parquet")
-            .saveAsTable(tbl)
-        )
-        # step 2: the nightly append — accepted = delta docs with NO band
+        write_bucketed(idx, tbl, ("band", "bsig"), "overwrite")
+        # the nightly append — accepted = delta docs with NO band
         # collision against the standing index; only their rows land
         delta = table(spark, sf_dir, "documents").filter(F.col("doc_id") % 10 == 0)
         banded = _minhash_banded(_minhash_signatures(spark, delta))
@@ -4551,22 +4534,22 @@ def ensure_minhash_index2(spark: SparkSession, sf_dir: str) -> DataFrame:
             .distinct()
         )
         accepted = banded.join(rejected, "doc_id", "left_anti")
-        (
-            accepted.select("doc_id", "sig", "band", "bsig")
-            .write.mode("append")
-            .format("parquet")
-            .bucketBy(8, "band", "bsig")
-            .sortBy("band", "bsig")
-            .saveAsTable(tbl)
+        write_bucketed(
+            accepted.select("doc_id", "sig", "band", "bsig"),
+            tbl,
+            ("band", "bsig"),
+            "append",
         )
-        with open(marker, "w") as fh:
-            fh.write("appended\n")
-    return spark.table(tbl)
+
+    tbl = f"minhash_index2_{_token(sf_dir, 'documents')}"
+    return ensure_tables(spark, (tbl,), build)[0]
 
 
-@query(
-    "dedup_minhash_index_append",
-    oracle=_MINHASH_BANDS_CTE
+#: shared by the append gate AND the compaction gate — compaction must be
+#: LOSSLESS, so its oracle is the append op's verbatim (probe-result
+#: identity IS the losslessness proof)
+_MINHASH_APPEND_ORACLE = (
+    _MINHASH_BANDS_CTE
     + """,
     rej AS (
         SELECT DISTINCT a.doc_id FROM bands a JOIN bands b
@@ -4595,14 +4578,17 @@ def ensure_minhash_index2(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN mh y ON y.doc_id = c.idx_id AND y.seed = x.seed
     GROUP BY c.new_id, c.idx_id
     ORDER BY c.new_id, c.idx_id
-    """,
+    """
 )
+
+
+@query("dedup_minhash_index_append", oracle=_MINHASH_APPEND_ORACLE)
 def dedup_minhash_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Index-append MAINTENANCE op closing the nightly incremental-dedup
-    loop (r11 judge order #2): the accepted delta's banded signatures are
-    appended into the standing (band, bsig)-bucketed index
-    (ensure_minhash_index2), and this query RE-PROBES the full delta
-    against the post-append index.  The pin: every ACCEPTED doc now
+    loop: the accepted delta's banded signatures are appended into the
+    standing (band, bsig)-bucketed index (ensure_minhash_index2), and
+    this query RE-PROBES the full delta against the post-append index.
+    The pin: every ACCEPTED doc now
     collides with ITSELF (new_id = idx_id, est_jaccard 1.0,
     idx_src 'appended') — yesterday's accepted batch IS standing corpus
     — while rejected docs still surface only their original corpus
@@ -4616,33 +4602,7 @@ def dedup_minhash_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange.  Per-night cost stays O(|delta|) end to end.
     Oracle replays the accept/reject gate and the post-append probe from
     the base table; columns pinned new_id/idx_id/idx_src/est_jaccard."""
-    idx2 = ensure_minhash_index2(spark, sf_dir)
-    delta = table(spark, sf_dir, "documents").filter(F.col("doc_id") % 10 == 0)
-    probe = _minhash_banded(_minhash_signatures(spark, delta))
-    a = probe.select(
-        F.col("doc_id").alias("new_id"), "band", "bsig", F.col("sig").alias("sig_a")
-    )
-    b = idx2.select(
-        F.col("doc_id").alias("idx_id"), "band", "bsig", F.col("sig").alias("sig_b")
-    )
-    agree = F.aggregate(
-        F.zip_with("sig_a", "sig_b", lambda x, y: F.when(x == y, 1.0).otherwise(0.0)),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    return (
-        a.join(b, ["band", "bsig"])
-        .dropDuplicates(["new_id", "idx_id"])
-        .select(
-            "new_id",
-            "idx_id",
-            F.when(F.col("idx_id") % 10 == 0, F.lit("appended"))
-            .otherwise(F.lit("corpus"))
-            .alias("idx_src"),
-            F.round(agree / F.lit(float(_MINHASH_SEEDS)), 6).alias("est_jaccard"),
-        )
-        .orderBy("new_id", "idx_id")
-    )
+    return _minhash_probe(spark, sf_dir, ensure_minhash_index2(spark, sf_dir), True)
 
 
 def ensure_minhash_index_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4652,57 +4612,17 @@ def ensure_minhash_index_compacted(spark: SparkSession, sf_dir: str) -> DataFram
     nights every bucket-wise probe opens N files per bucket; compaction
     folds them back to one.  Content is byte-identical to the appended
     index (the registered query proves it by probe-result identity)."""
-    from duckdb_postgis_spark.plans.layout import _LAYOUT_ROOT, _token
+    from duckdb_postgis_spark.plans.layout import _token, ensure_tables, write_bucketed
+
+    def build(tbl: str) -> None:
+        idx2 = ensure_minhash_index2(spark, sf_dir)
+        write_bucketed(idx2, tbl, ("band", "bsig"), "overwrite")
 
     tbl = f"minhash_index3_{_token(sf_dir, 'documents')}"
-    if not spark.catalog.tableExists(tbl):
-        idx2 = ensure_minhash_index2(spark, sf_dir)
-        (
-            idx2.write.bucketBy(8, "band", "bsig")
-            .sortBy("band", "bsig")
-            .option("path", f"{_LAYOUT_ROOT}/{tbl}")
-            .mode("overwrite")
-            .format("parquet")
-            .saveAsTable(tbl)
-        )
-    return spark.table(tbl)
+    return ensure_tables(spark, (tbl,), build)[0]
 
 
-@query(
-    "dedup_minhash_index_compact",
-    # probe-result IDENTITY with the pre-compaction index is the whole
-    # point: the oracle is dedup_minhash_index_append's, verbatim
-    oracle=_MINHASH_BANDS_CTE
-    + """,
-    rej AS (
-        SELECT DISTINCT a.doc_id FROM bands a JOIN bands b
-          ON a.band = b.band AND a.bsig = b.bsig
-        WHERE a.doc_id % 10 = 0 AND b.doc_id % 10 <> 0
-    ),
-    idx2 AS (
-        SELECT doc_id, band, bsig FROM bands WHERE doc_id % 10 <> 0
-        UNION ALL
-        SELECT doc_id, band, bsig FROM bands
-        WHERE doc_id % 10 = 0
-          AND doc_id NOT IN (SELECT doc_id FROM rej)
-    ),
-    cand AS (
-        SELECT DISTINCT a.doc_id AS new_id, i.doc_id AS idx_id
-        FROM bands a JOIN idx2 i ON a.band = i.band AND a.bsig = i.bsig
-        WHERE a.doc_id % 10 = 0
-    )
-    SELECT c.new_id, c.idx_id,
-           CASE WHEN c.idx_id % 10 = 0 THEN 'appended' ELSE 'corpus' END
-               AS idx_src,
-           ROUND(AVG(CASE WHEN x.mh = y.mh THEN 1.0 ELSE 0.0 END), 6)
-               AS est_jaccard
-    FROM cand c
-    JOIN mh x ON x.doc_id = c.new_id
-    JOIN mh y ON y.doc_id = c.idx_id AND y.seed = x.seed
-    GROUP BY c.new_id, c.idx_id
-    ORDER BY c.new_id, c.idx_id
-    """,
-)
+@query("dedup_minhash_index_compact", oracle=_MINHASH_APPEND_ORACLE)
 def dedup_minhash_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Index COMPACTION gate — the third leg of the incremental-dedup
     maintenance cycle (probe -> append -> compact): the appended index's
@@ -4721,38 +4641,13 @@ def dedup_minhash_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     text scale); probe cost afterwards returns to single-file-per-bucket
     reads no matter how many nightly appends preceded it."""
     idx3 = ensure_minhash_index_compacted(spark, sf_dir)
-    delta = table(spark, sf_dir, "documents").filter(F.col("doc_id") % 10 == 0)
-    probe = _minhash_banded(_minhash_signatures(spark, delta))
-    a = probe.select(
-        F.col("doc_id").alias("new_id"), "band", "bsig", F.col("sig").alias("sig_a")
-    )
-    b = idx3.select(
-        F.col("doc_id").alias("idx_id"), "band", "bsig", F.col("sig").alias("sig_b")
-    )
-    agree = F.aggregate(
-        F.zip_with("sig_a", "sig_b", lambda x, y: F.when(x == y, 1.0).otherwise(0.0)),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    return (
-        a.join(b, ["band", "bsig"])
-        .dropDuplicates(["new_id", "idx_id"])
-        .select(
-            "new_id",
-            "idx_id",
-            F.when(F.col("idx_id") % 10 == 0, F.lit("appended"))
-            .otherwise(F.lit("corpus"))
-            .alias("idx_src"),
-            F.round(agree / F.lit(float(_MINHASH_SEEDS)), 6).alias("est_jaccard"),
-        )
-        .orderBy("new_id", "idx_id")
-    )
+    return _minhash_probe(spark, sf_dir, idx3, True)
 
 
 # --------------------------------------------------------------------------
-# R13 incremental SEMANTIC dedup — the embedding twin of the minhash
-# probe -> append nightly cycle (r12 judge order #2).  Two warehouse
-# tables per index generation, committed by one marker:
+# incremental SEMANTIC dedup — the embedding twin of the minhash
+# probe -> append -> compact cycle.  Two warehouse tables per index
+# generation, committed by one ensure_tables marker:
 #   * codes  — (vec_id, band, bucket) sign-LSH codes, bucketed on
 #     (band, bucket): the probe join reads it bucket-wise, no exchange;
 #   * vectors — (vec_id, embedding, norm), bucketed on vec_id: the exact
@@ -4765,47 +4660,12 @@ def dedup_minhash_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
 # as the oracle's sqrt(list_sum(...)), so the stored double is
 # bit-identical to a fresh computation).
 # --------------------------------------------------------------------------
-def _embed_index_tables(spark: SparkSession, sf_dir: str, gen: str, build):
-    """Crash-safe ensure for the (codes, vectors) table PAIR of one index
-    generation: a ``_BUILD_DONE`` marker in the codes table's directory
-    commits BOTH tables; a pair found without it (either table missing,
-    or a crash mid-build) is dropped and rebuilt, including clearing the
-    external directories — DROP TABLE keeps the files and Spark (≥3.2)
-    rejects CTAS into a non-empty location (the ensure_minhash_index2
-    r12 ADVICE lesson, applied from day one here)."""
-    import shutil
-
-    from duckdb_postgis_spark.plans.layout import _LAYOUT_ROOT, _token
+def _embed_index_names(sf_dir: str, gen: str) -> tuple[str, str]:
+    """(codes, vectors) table names of one index generation."""
+    from duckdb_postgis_spark.plans.layout import _token
 
     tok = _token(sf_dir, "embeddings")
-    ct, vt = f"embed_index{gen}_codes_{tok}", f"embed_index{gen}_vecs_{tok}"
-    marker = f"{_LAYOUT_ROOT}/{ct}/_BUILD_DONE"
-    done = (
-        spark.catalog.tableExists(ct)
-        and spark.catalog.tableExists(vt)
-        and os.path.exists(marker)
-    )
-    if not done:
-        for t in (ct, vt):
-            if spark.catalog.tableExists(t):
-                spark.sql(f"DROP TABLE {t}")
-            shutil.rmtree(f"{_LAYOUT_ROOT}/{t}", ignore_errors=True)
-        build(ct, vt)
-        with open(marker, "w") as fh:
-            fh.write("built\n")
-    return spark.table(ct), spark.table(vt)
-
-
-def _embed_index_write(df: DataFrame, tbl: str, keys: tuple[str, ...], mode: str):
-    """One bucketed table write (8 buckets, sorted on the bucket keys) —
-    shared by seed builds and nightly appends so every generation keeps
-    the identical physical layout."""
-    from duckdb_postgis_spark.plans.layout import _LAYOUT_ROOT
-
-    w = df.write.bucketBy(8, *keys).sortBy(*keys).mode(mode).format("parquet")
-    if mode == "overwrite":
-        w = w.option("path", f"{_LAYOUT_ROOT}/{tbl}")
-    w.saveAsTable(tbl)
+    return f"embed_index{gen}_codes_{tok}", f"embed_index{gen}_vecs_{tok}"
 
 
 def ensure_embedding_index(spark: SparkSession, sf_dir: str):
@@ -4814,14 +4674,16 @@ def ensure_embedding_index(spark: SparkSession, sf_dir: str):
     codes + a norms-precomputed vector store.  Bit width comes from the
     FULL corpus count (_embed_codes law) — a structural choice made once
     at build time, exactly how a production index pins its geometry."""
+    from duckdb_postgis_spark.plans.layout import ensure_tables, write_bucketed
+
     n, dim = _corpus_stats(f"{sf_dir}/embeddings.parquet")
 
     def build(ct: str, vt: str) -> None:
         corpus = table(spark, sf_dir, "embeddings").filter(F.col("vec_id") % 10 != 0)
-        _embed_index_write(
+        write_bucketed(
             _embed_codes(corpus, n, dim), ct, ("band", "bucket"), "overwrite"
         )
-        _embed_index_write(
+        write_bucketed(
             corpus.select(
                 "vec_id", "embedding", F.sqrt(_sumsq("embedding")).alias("norm")
             ),
@@ -4830,7 +4692,7 @@ def ensure_embedding_index(spark: SparkSession, sf_dir: str):
             "overwrite",
         )
 
-    return _embed_index_tables(spark, sf_dir, "", build)
+    return ensure_tables(spark, _embed_index_names(sf_dir, ""), build)
 
 
 def _embed_probe(
@@ -4935,15 +4797,17 @@ def ensure_embedding_index2(spark: SparkSession, sf_dir: str):
     rows land as fresh bucket files, the corpus files are untouched
     (file-level pin in tests/test_fuzz_embed_index.py), and one marker
     commits the four-write build (seed copy x2 + append x2) with the
-    crash recovery _embed_index_tables provides."""
+    crash recovery ensure_tables provides."""
+    from duckdb_postgis_spark.plans.layout import ensure_tables, write_bucketed
+
     n, dim = _corpus_stats(f"{sf_dir}/embeddings.parquet")
 
     def build(ct: str, vt: str) -> None:
         c1, v1 = ensure_embedding_index(spark, sf_dir)
         # seed: bucket-preserving copy of the standing generation (the
         # one-time blue/green clone, not a nightly cost)
-        _embed_index_write(c1, ct, ("band", "bucket"), "overwrite")
-        _embed_index_write(v1, vt, ("vec_id",), "overwrite")
+        write_bucketed(c1, ct, ("band", "bucket"), "overwrite")
+        write_bucketed(v1, vt, ("vec_id",), "overwrite")
         # nightly append: accepted = delta with no verified index match
         delta = table(spark, sf_dir, "embeddings").filter(F.col("vec_id") % 10 == 0)
         rejected = (
@@ -4951,10 +4815,10 @@ def ensure_embedding_index2(spark: SparkSession, sf_dir: str):
             .withColumnRenamed("new_id", "vec_id")
         )
         accepted = delta.join(rejected, "vec_id", "left_anti")
-        _embed_index_write(
+        write_bucketed(
             _embed_codes(accepted, n, dim), ct, ("band", "bucket"), "append"
         )
-        _embed_index_write(
+        write_bucketed(
             accepted.select(
                 "vec_id", "embedding", F.sqrt(_sumsq("embedding")).alias("norm")
             ),
@@ -4963,7 +4827,7 @@ def ensure_embedding_index2(spark: SparkSession, sf_dir: str):
             "append",
         )
 
-    return _embed_index_tables(spark, sf_dir, "2", build)
+    return ensure_tables(spark, _embed_index_names(sf_dir, "2"), build)
 
 
 #: shared by the append gate AND the compaction gate below — compaction
@@ -5067,13 +4931,14 @@ def ensure_embedding_index_compacted(spark: SparkSession, sf_dir: str):
     folds BOTH tables (codes and vectors) back to one file per bucket.
     Content is byte-identical to the appended generation (the registered
     query proves it by probe-result identity)."""
+    from duckdb_postgis_spark.plans.layout import ensure_tables, write_bucketed
 
     def build(ct: str, vt: str) -> None:
         c2, v2 = ensure_embedding_index2(spark, sf_dir)
-        _embed_index_write(c2, ct, ("band", "bucket"), "overwrite")
-        _embed_index_write(v2, vt, ("vec_id",), "overwrite")
+        write_bucketed(c2, ct, ("band", "bucket"), "overwrite")
+        write_bucketed(v2, vt, ("vec_id",), "overwrite")
 
-    return _embed_index_tables(spark, sf_dir, "3", build)
+    return ensure_tables(spark, _embed_index_names(sf_dir, "3"), build)
 
 
 @query("dedup_embedding_index_compact", oracle=_EMBED_APPEND_ORACLE)

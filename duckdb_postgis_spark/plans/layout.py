@@ -18,6 +18,8 @@ from __future__ import annotations
 
 import os
 import re
+import shutil
+from collections.abc import Callable
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -59,6 +61,50 @@ def _write_json_atomic(path: str, obj: object) -> None:
         fh.flush()
         os.fsync(fh.fileno())
     os.replace(tmp, path)
+
+
+#: bucket count of every bucketed warehouse table (facts and indexes)
+_BUCKETS = 8
+#: commit marker of an ensure_tables build (underscore-prefixed, so the
+#: parquet reader skips it)
+_BUILD_DONE = "_BUILD_DONE"
+
+
+def write_bucketed(
+    df: DataFrame, tbl: str, keys: tuple[str, ...], mode: str
+) -> None:
+    """One bucketed table write: _BUCKETS buckets, sorted on the bucket
+    keys, so every table (seed build, nightly append, compaction) keeps
+    the identical physical layout.  ``overwrite`` creates the EXTERNAL
+    table under _LAYOUT_ROOT; ``append`` adds new files per bucket to it
+    and leaves the existing files untouched."""
+    w = df.write.bucketBy(_BUCKETS, *keys).sortBy(*keys).mode(mode).format("parquet")
+    if mode == "overwrite":
+        w = w.option("path", f"{_LAYOUT_ROOT}/{tbl}")
+    w.saveAsTable(tbl)
+
+
+def ensure_tables(
+    spark: SparkSession, names: tuple[str, ...], build: Callable[..., None]
+) -> tuple[DataFrame, ...]:
+    """Crash-safe ensure for the warehouse tables one ``build(*names)``
+    writes: a _BUILD_DONE marker in the first table's directory commits
+    all of them.  Tables found without it (one missing, or a build
+    interrupted between its writes) are dropped and rebuilt.  The rebuild
+    also clears each table DIRECTORY: the tables are EXTERNAL (explicit
+    ``path``), so ``DROP TABLE`` leaves their parquet files behind, and a
+    half-written directory must not leak rows into the next build."""
+    marker = f"{_LAYOUT_ROOT}/{names[0]}/{_BUILD_DONE}"
+    registered = all(spark.catalog.tableExists(t) for t in names)
+    if not (registered and os.path.exists(marker)):
+        for t in names:
+            if spark.catalog.tableExists(t):
+                spark.sql(f"DROP TABLE {t}")
+            shutil.rmtree(f"{_LAYOUT_ROOT}/{t}", ignore_errors=True)
+        build(*names)
+        with open(marker, "w") as fh:
+            fh.write("built\n")
+    return tuple(spark.table(t) for t in names)
 
 
 # --------------------------------------------------------------------------
@@ -112,7 +158,7 @@ def events_partition_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
 # hash-bucketed facts (co-located join)
 # --------------------------------------------------------------------------
 def ensure_bucketed_table(
-    spark: SparkSession, sf_dir: str, name: str, key: str, buckets: int = 8
+    spark: SparkSession, sf_dir: str, name: str, key: str
 ) -> DataFrame:
     """Materialize a testdata table bucketed+sorted by ``key``.
 
@@ -120,18 +166,12 @@ def ensure_bucketed_table(
     Exchange and NO Sort — the shuffle happened once at write time and is
     amortized over every subsequent join. This is the single biggest lever
     for a recurring 100 TB join pipeline."""
-    tbl = f"{name}_b{buckets}_{_token(sf_dir, name)}"
-    if not spark.catalog.tableExists(tbl):
-        df = table(spark, sf_dir, name)
-        (
-            df.write.bucketBy(buckets, key)
-            .sortBy(key)
-            .option("path", f"{_LAYOUT_ROOT}/{tbl}")
-            .mode("overwrite")
-            .format("parquet")
-            .saveAsTable(tbl)
-        )
-    return spark.table(tbl)
+    tbl = f"{name}_b{_BUCKETS}_{_token(sf_dir, name)}"
+
+    def build(t: str) -> None:
+        write_bucketed(table(spark, sf_dir, name), t, (key,), "overwrite")
+
+    return ensure_tables(spark, (tbl,), build)[0]
 
 
 @query(
@@ -312,8 +352,6 @@ def ensure_evolved_docs(spark: SparkSession, sf_dir: str) -> str:
     # them must not cache a single-generation directory as done
     done = f"{path}/_EVOLVED_OK"
     if not os.path.exists(done):
-        import shutil
-
         # build into a private temp dir and PUBLISH with one atomic
         # rename: two concurrent sessions (pytest-xdist, parallel sweeps)
         # can both see the marker missing, and interleaved
@@ -434,11 +472,10 @@ def ensure_embeddings_by_cell(spark: SparkSession, sf_dir: str):
     # swept on sight so abandoned cache dirs don't accumulate under
     # _LAYOUT_ROOT forever
     import glob as _glob
-    import shutil as _shutil
 
     for stale in _glob.glob(f"{_LAYOUT_ROOT}/embeddings_by_cell_*"):
         if "/embeddings_by_cell_v2_" not in stale:
-            (_shutil.rmtree if os.path.isdir(stale) else os.remove)(stale)
+            (shutil.rmtree if os.path.isdir(stale) else os.remove)(stale)
 
     path = f"{_LAYOUT_ROOT}/embeddings_by_cell_v2_{_token(sf_dir, 'embeddings')}"
     cpath = f"{path}_centroids.npy"

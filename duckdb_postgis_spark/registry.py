@@ -39,13 +39,13 @@ ORACLES: dict[str, str] = {}
 # order #1 overrides the staleness plan: the r13 optimization sessions
 # rewrote 24 query paths AFTER the window was frozen by the build half,
 # so those 24 lead (changed-code-outranks-refreshes applied
-# retroactively).  The arithmetic (24 + 18 + 8 = 50):
+# retroactively).  The arithmetic (24 + 21 + 5 = 50):
 #   (a1) the 24 r13-rewritten-but-driver-unverified queries, in the
 #        verdict's listing order (their r13 evidence was the builder's
 #        replica + pytest only; several were rewritten AGAIN this round —
 #        dedup_minhash_lsh/knn_ivf_lsh got the salt-segment skew guard,
 #        similarity_search_ann shares the _bucketize projection change);
-#   (a2) 18 r14 changed-code re-entries: multimodal_image_features (dims
+#   (a2) 21 r14 changed-code re-entries: multimodal_image_features (dims
 #        asserts in its kernel; phash twin is already in (a1));
 #        dedup_verify_levenshtein (consumes the skew-guarded minhash pair
 #        set; its cluster/survivorship siblings are in (a1));

@@ -970,49 +970,6 @@ def q_stream_chained_dedup_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --------------------------------------------------------------------------
-# transformWithStateInPandas (Spark 4 stateful API) — ENV-GATED
-# --------------------------------------------------------------------------
-# The Spark 4 successor to applyInPandasWithState speaks a protobuf-based
-# state-server protocol; this container ships no google.protobuf, so the
-# driver-side TWS worker crashes on import (verified:
-# STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE, ImportError
-# google.protobuf.descriptor).  The semantics are covered by the
-# applyInPandasWithState twin (stream_user_state); this builder exists so an
-# environment WITH protobuf can run the new API unchanged, and
-# tests/test_streaming_live.py pins the loud env failure.
-def stream_transform_with_state_live(events: DataFrame) -> DataFrame:
-    """Per-user running totals via transformWithStateInPandas (value state,
-    exact integer cents — same contract as stream_user_state)."""
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    class Totals(StatefulProcessor):
-        def init(self, handle):
-            self.state = handle.getValueState("tot", "n LONG, cents LONG")
-
-        def handleInputRows(self, key, rows, timerValues):
-            import numpy as np
-
-            n, cents = self.state.get() if self.state.exists() else (0, 0)
-            for pdf in rows:
-                n += len(pdf)
-                cents += int(np.rint(pdf["value"].to_numpy() * 100).sum())
-            self.state.update((n, cents))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events": [n], "total_value": [cents / 100.0]}
-            )
-
-        def close(self):
-            pass
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=Totals(),
-        outputStructType=USER_STATE_OUTPUT,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
 @query(
     "stream_quantile_hist_live",
     oracle="""

@@ -188,14 +188,19 @@ def test_append_cost_is_delta_sized(spark, tmp_path):
 
 
 def test_interrupted_build_recovers(spark, tmp_path):
-    """Marker-committed two-table crash recovery (built right from day
-    one after the r12 minhash ADVICE): a missing marker, a half-dropped
-    pair, or stale files in either external directory must all rebuild
-    cleanly instead of hitting the non-empty-location CTAS rejection."""
+    """Marker-committed two-table crash recovery (layout.ensure_tables):
+    a missing marker, a half-dropped pair, stale files in either external
+    directory, or a build that raises between its writes must all rebuild
+    both tables completely."""
     import shutil
 
     from duckdb_postgis_spark.operators.llm import ensure_embedding_index2
-    from duckdb_postgis_spark.plans.layout import _LAYOUT_ROOT, _token
+    from duckdb_postgis_spark.plans.layout import (
+        _LAYOUT_ROOT,
+        _token,
+        ensure_tables,
+        write_bucketed,
+    )
 
     _write_embeddings(_directed_rows(), tmp_path)
     tok = _token(str(tmp_path), "embeddings")
@@ -222,6 +227,41 @@ def test_interrupted_build_recovers(spark, tmp_path):
         shutil.rmtree(f"{_LAYOUT_ROOT}/{t}", ignore_errors=True)
     c2d, v2d = ensure_embedding_index2(spark, str(tmp_path))
     assert (c2d.count(), v2d.count()) == (n_c, n_v)
+
+    # the shared helper itself: a two-table build that dies after its
+    # first write commits nothing, and the next call rebuilds BOTH tables
+    names = (f"ensure_a_{tok}", f"ensure_b_{tok}")
+    marker = f"{_LAYOUT_ROOT}/{names[0]}/_BUILD_DONE"
+    rows = spark.range(40).selectExpr("id AS vec_id", "id % 5 AS band")
+
+    def build(a: str, b: str, crash: bool = False) -> None:
+        write_bucketed(rows, a, ("band",), "overwrite")
+        if crash:
+            raise RuntimeError("interrupted build")
+        write_bucketed(rows, b, ("vec_id",), "overwrite")
+
+    def assert_complete() -> None:
+        ta, tb = ensure_tables(spark, names, build)
+        assert (ta.count(), tb.count()) == (40, 40)
+        assert os.path.exists(marker)
+
+    with pytest.raises(RuntimeError):
+        ensure_tables(spark, names, lambda a, b: build(a, b, crash=True))
+    assert not os.path.exists(marker)
+    assert_complete()
+
+    # catalog entries dropped, a stray part file left behind: its rows
+    # must not leak into the rebuilt table
+    part = next(
+        f for f in os.listdir(f"{_LAYOUT_ROOT}/{names[0]}") if f.endswith(".parquet")
+    )
+    for t in names:
+        spark.sql(f"DROP TABLE {t}")
+    shutil.copy(
+        f"{_LAYOUT_ROOT}/{names[0]}/{part}",
+        f"{_LAYOUT_ROOT}/{names[1]}/part-00000-stray_00003.c000.snappy.parquet",
+    )
+    assert_complete()
 
 
 def test_probe_plan_is_index_colocated(spark, tmp_path):

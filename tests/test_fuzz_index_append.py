@@ -260,14 +260,13 @@ def test_index_compaction_folds_bucket_files(spark, tmp_path):
 
 
 def test_interrupted_build_recovers(spark, tmp_path):
-    """r12 ADVICE crash-recovery pin: the index table is EXTERNAL, so the
-    recovery DROP TABLE leaves its parquet files on disk — a rebuild
-    that CTAS-es into the non-empty location errors forever
-    (allowNonEmptyLocationInCTAS=false since Spark 3.2) unless the
-    builder clears the directory first.  Simulate the two interrupted
-    states and assert the builder self-heals in both:
+    """Crash-recovery pin for the two-write (seed + append) build: the
+    index table is EXTERNAL, so a recovery DROP TABLE leaves its parquet
+    files on disk, and a build that stopped after the seed write must
+    not be served as complete.  Simulate the two interrupted states and
+    assert the builder self-heals in both:
 
-    1. crash between step-1 seed write and the _APPEND_DONE marker
+    1. crash between step-1 seed write and the _BUILD_DONE marker
        (table registered, marker missing, files on disk);
     2. crash between the recovery DROP and the rebuild (table gone,
        stale files AND stale marker on disk).
@@ -284,9 +283,9 @@ def test_interrupted_build_recovers(spark, tmp_path):
     n_full = ensure_minhash_index2(spark, str(tmp_path)).count()
 
     # state 1: marker missing, table registered, directory non-empty
-    os.remove(f"{tbl_dir}/_APPEND_DONE")
+    os.remove(f"{tbl_dir}/_BUILD_DONE")
     assert ensure_minhash_index2(spark, str(tmp_path)).count() == n_full
-    assert os.path.exists(f"{tbl_dir}/_APPEND_DONE")
+    assert os.path.exists(f"{tbl_dir}/_BUILD_DONE")
 
     # state 2: table dropped mid-recovery, stale files + stale marker
     spark.sql(f"DROP TABLE {tbl}")

@@ -142,37 +142,6 @@ def test_upsert_merge_slicing_invariant(spark, sf_dir):
     assert got == want
 
 
-def test_transform_with_state_env_gate(spark, sf_dir):
-    """transformWithStateInPandas (Spark 4 stateful API) needs the protobuf
-    state-server protocol; this container has no google.protobuf, so the
-    stream must fail LOUDLY at start (never silently produce nothing).  If
-    protobuf ever lands here, this test flips: run the stream and compare
-    to the applyInPandasWithState twin."""
-    import importlib.util
-
-    import pytest
-
-    from duckdb_postgis_spark.streaming.streams import (
-        events_stream,
-        run_available_now,
-        stream_transform_with_state_live,
-    )
-
-    sdf = stream_transform_with_state_live(events_stream(spark, sf_dir))
-    try:
-        have_protobuf = importlib.util.find_spec("google.protobuf") is not None
-    except ModuleNotFoundError:  # no 'google' namespace package at all
-        have_protobuf = False
-    if not have_protobuf:
-        from pyspark.errors.exceptions.captured import StreamingQueryException
-
-        with pytest.raises(StreamingQueryException):
-            run_available_now(sdf, "q_tws_gate", "update", timeout=60)
-    else:  # pragma: no cover — environment finally has protobuf
-        out = run_available_now(sdf, "q_tws_gate", "update")
-        assert out.count() > 0
-
-
 def test_chained_dedup_agg_matches_batch_twin(spark, sf_dir):
     """The chained dedup→agg stream equals the batch distinct-minute rollup
     computed in Spark (independent of the DuckDB oracle)."""
