@@ -315,58 +315,47 @@ def ensure_scan_layout(
     engines and the optimized-layout comparison is engine-vs-engine, not
     a trick.
     """
-    import hashlib
     import time as _time
 
     import pyarrow.parquet as pq
 
-    sig_parts = [sf_dir, str(target_groups), "v2-granular-text"]
-    for t in TABLES:
-        st = os.stat(f"{sf_dir}/{t}.parquet")
-        sig_parts.append(f"{t}:{st.st_size}:{st.st_mtime_ns}")
-    token = hashlib.md5("|".join(sig_parts).encode()).hexdigest()[:16]
-    out = f"{_SCAN_LAYOUT_ROOT}/{token}"
-    if os.path.exists(f"{out}/_SUCCESS"):
-        return out, 0.0
+    # layout imports this module, so its helpers are imported at call time
+    from duckdb_postgis_spark.plans.layout import _token, publish
 
-    import uuid
+    out = (
+        f"{_SCAN_LAYOUT_ROOT}/v2-granular-text_g{target_groups}_"
+        f"{_token(sf_dir, *TABLES)}"
+    )
+
+    def build(tmp: str) -> None:
+        os.makedirs(tmp)
+        for t in TABLES:
+            src = f"{sf_dir}/{t}.parquet"
+            dst = f"{tmp}/{t}.parquet"
+            if os.path.isdir(src):
+                # directory-shaped table (the at-scale norm): many part
+                # files already parallelize the scan — link as-is
+                os.symlink(os.path.abspath(src), dst)
+                continue
+            pf = pq.ParquetFile(src)
+            rows = pf.metadata.num_rows
+            min_rows = _SCAN_LAYOUT_MIN_ROWS_OF.get(t, _SCAN_LAYOUT_MIN_ROWS)
+            min_group = _SCAN_LAYOUT_MIN_GROUP_OF.get(t, _SCAN_LAYOUT_MIN_GROUP)
+            groups = max(1, min(target_groups, rows // min_group))
+            if rows < min_rows or pf.metadata.num_row_groups >= groups:
+                # already scan-friendly (or too small to matter): link
+                # as-is.  os.stat follows the link, so every size/mtime
+                # cache key (table cache, ts probe) keys on the REAL file.
+                os.symlink(os.path.abspath(src), dst)
+                continue
+            row_group_size = -(-rows // groups)  # ceil
+            pq.write_table(
+                pf.read(), dst, row_group_size=row_group_size, version="2.6"
+            )
 
     t0 = _time.perf_counter()
-    # unique per builder (pid alone collides for two THREADS of one
-    # process); the rename below keeps the publish step atomic either way
-    tmp = f"{out}.tmp.{os.getpid()}.{uuid.uuid4().hex[:8]}"
-    os.makedirs(tmp, exist_ok=True)
-    for t in TABLES:
-        src = f"{sf_dir}/{t}.parquet"
-        dst = f"{tmp}/{t}.parquet"
-        if os.path.isdir(src):
-            # directory-shaped table (the at-scale norm): many part files
-            # already parallelize the scan — link as-is
-            os.symlink(os.path.abspath(src), dst)
-            continue
-        pf = pq.ParquetFile(src)
-        rows = pf.metadata.num_rows
-        min_rows = _SCAN_LAYOUT_MIN_ROWS_OF.get(t, _SCAN_LAYOUT_MIN_ROWS)
-        min_group = _SCAN_LAYOUT_MIN_GROUP_OF.get(t, _SCAN_LAYOUT_MIN_GROUP)
-        groups = max(1, min(target_groups, rows // min_group))
-        if rows < min_rows or pf.metadata.num_row_groups >= groups:
-            # already scan-friendly (or too small to matter): link as-is.
-            # os.stat follows the link, so every size/mtime cache key
-            # (table cache, ts probe) keys on the REAL file.
-            os.symlink(os.path.abspath(src), dst)
-            continue
-        row_group_size = -(-rows // groups)  # ceil
-        pq.write_table(
-            pf.read(), dst, row_group_size=row_group_size, version="2.6"
-        )
-    open(f"{tmp}/_SUCCESS", "w").close()
-    try:
-        os.rename(tmp, out)
-    except OSError:
-        # concurrent builder won the rename race: theirs is complete
-        import shutil
-
-        shutil.rmtree(tmp, ignore_errors=True)
+    if not publish(out, build):
+        return out, 0.0
     return out, _time.perf_counter() - t0
 
 

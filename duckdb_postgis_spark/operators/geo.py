@@ -14,6 +14,9 @@ fold (geo_strategy.rs:186-225); the WKB round-trip mirrors the probe ladder
 
 from __future__ import annotations
 
+from collections.abc import Callable
+from typing import TextIO
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, LongType, StructField, StructType
@@ -852,6 +855,31 @@ def _geo_knn_grid(cust: DataFrame, supp: DataFrame) -> DataFrame:
 # --------------------------------------------------------------------------
 # G12 reference lifecycle end-to-end as a driver-checkable query (round 5)
 # --------------------------------------------------------------------------
+def _e2e_input(
+    sf_dir: str, suffix: str, write: Callable[[list[int], TextIO], None]
+) -> str:
+    """A generated pipeline input: ``write`` renders the sorted customer
+    keys (bounded driver-side pyarrow read, no Spark collect) into it,
+    published once per customer file under the layout root."""
+    import pyarrow.parquet as _pq
+
+    from duckdb_postgis_spark.plans import layout
+
+    def build(tmp: str) -> None:
+        keys = _pq.read_table(
+            f"{sf_dir}/customer.parquet", columns=["c_custkey"]
+        ).column(0).to_pylist()
+        with open(tmp, "w") as fh:
+            write(sorted(keys), fh)
+
+    path = (
+        f"{layout._LAYOUT_ROOT}/geo_e2e_"
+        f"{layout._token(sf_dir, 'customer')}{suffix}"
+    )
+    layout.publish(path, build)
+    return path
+
+
 @query(
     "pipeline_geo_file_e2e",
     oracle=f"""
@@ -881,26 +909,13 @@ def pipeline_geo_file_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     pyarrow read of a dimension table — bounded, no Spark collect); both
     lon and lat are exact .5 decimals so double→string formatting agrees
     across engines."""
-    import os as _os
 
-    import pyarrow.parquet as _pq
+    def write(keys: list[int], fh: TextIO) -> None:
+        fh.write("id,longitude,latitude\n")
+        for k in keys:
+            fh.write(f"{k},{(k % 360) - 179.5:.1f},{(k % 180) - 89.5:.1f}\n")
 
-    src = f"{sf_dir}/customer.parquet"
-    st = _os.stat(src)
-    path = (
-        "/tmp/duckdb_postgis_spark_layout/"
-        f"geo_e2e_{st.st_size}_{st.st_mtime_ns}.csv"
-    )
-    if not _os.path.exists(path):
-        _os.makedirs(_os.path.dirname(path), exist_ok=True)
-        keys = _pq.read_table(src, columns=["c_custkey"]).column(0).to_pylist()
-        tmp = f"{path}.tmp"
-        with open(tmp, "w") as fh:
-            fh.write("id,longitude,latitude\n")
-            for k in sorted(keys):
-                fh.write(f"{k},{(k % 360) - 179.5:.1f},{(k % 180) - 89.5:.1f}\n")
-        _os.replace(tmp, path)
-
+    path = _e2e_input(sf_dir, ".csv", write)
     from duckdb_postgis_spark.pipeline import process_file
 
     res = process_file(spark, path)
@@ -946,19 +961,8 @@ def pipeline_geojson_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver-side pyarrow read, G12 pattern); .5-decimal coordinates keep
     double→string formatting engine-identical."""
     import json as _json
-    import os as _os
 
-    import pyarrow.parquet as _pq
-
-    src = f"{sf_dir}/customer.parquet"
-    st = _os.stat(src)
-    path = (
-        "/tmp/duckdb_postgis_spark_layout/"
-        f"geo_e2e_{st.st_size}_{st.st_mtime_ns}.geojson"
-    )
-    if not _os.path.exists(path):
-        _os.makedirs(_os.path.dirname(path), exist_ok=True)
-        keys = _pq.read_table(src, columns=["c_custkey"]).column(0).to_pylist()
+    def write(keys: list[int], fh: TextIO) -> None:
         feats = [
             {
                 "type": "Feature",
@@ -968,13 +972,11 @@ def pipeline_geojson_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "coordinates": [(k % 360) - 179.5, (k % 180) - 89.5],
                 },
             }
-            for k in sorted(keys)
+            for k in keys
         ]
-        tmp = f"{path}.tmp"
-        with open(tmp, "w") as fh:
-            _json.dump({"type": "FeatureCollection", "features": feats}, fh)
-        _os.replace(tmp, path)
+        _json.dump({"type": "FeatureCollection", "features": feats}, fh)
 
+    path = _e2e_input(sf_dir, ".geojson", write)
     from duckdb_postgis_spark.pipeline import process_file
 
     res = process_file(spark, path)
@@ -1012,26 +1014,13 @@ def pipeline_nongeo_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     coordinate-pair matcher (e.g. a non-coordinate column name suddenly
     matching one of the 14 patterns) changes the output schema and fails
     the driver hash."""
-    import os as _os
 
-    import pyarrow.parquet as _pq
+    def write(keys: list[int], fh: TextIO) -> None:
+        fh.write("id,amount\n")
+        for k in keys:
+            fh.write(f"{k},{k % 97}\n")
 
-    src = f"{sf_dir}/customer.parquet"
-    st = _os.stat(src)
-    path = (
-        "/tmp/duckdb_postgis_spark_layout/"
-        f"geo_e2e_{st.st_size}_{st.st_mtime_ns}_nongeo.csv"
-    )
-    if not _os.path.exists(path):
-        _os.makedirs(_os.path.dirname(path), exist_ok=True)
-        keys = _pq.read_table(src, columns=["c_custkey"]).column(0).to_pylist()
-        tmp = f"{path}.tmp"
-        with open(tmp, "w") as fh:
-            fh.write("id,amount\n")
-            for k in sorted(keys):
-                fh.write(f"{k},{k % 97}\n")
-        _os.replace(tmp, path)
-
+    path = _e2e_input(sf_dir, "_nongeo.csv", write)
     from duckdb_postgis_spark.pipeline import process_file
 
     res = process_file(spark, path)

@@ -243,12 +243,12 @@ def _minhash_banded(sig: DataFrame) -> DataFrame:
 # always-segment floor cost +63% on dedup_minhash_lsh for nothing); above
 # the target the segmented join runs, so max buffer ≤ ~_LSH_SEG_TARGET
 # members at EVERY corpus size.  The segmented branch is verified by the
-# fuzz equality family below AND by a driver-contract replica run with
-# SPARK_GRAFT_LSH_SEG_TARGET lowered (hash-green vs the DuckDB oracle —
-# recorded in OPTIMIZATION_r14.md), the join_theta_range dispatch
-# precedent.
+# fuzz equality family (tests/test_fuzz_lsh_skew.py lowers this constant
+# with monkeypatch) AND was verified once by a driver-contract replica run
+# with the target lowered (hash-green vs the DuckDB oracle — recorded in
+# OPTIMIZATION_r14.md), the join_theta_range dispatch precedent.
 # --------------------------------------------------------------------------
-_LSH_SEG_TARGET = int(os.environ.get("SPARK_GRAFT_LSH_SEG_TARGET", "8192"))
+_LSH_SEG_TARGET = 8192
 
 
 def _lsh_seg_count(n_rows: int) -> int:

@@ -102,8 +102,8 @@ def text_gopher_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     array is MATERIALIZED behind a projection before the metric
     expressions reference it (r8; the minhash shingle lesson): an
     un-materialized split(text) gets inlined by Catalyst into every
-    reference, re-splitting each document per metric.  r12 (the
-    training_e2e_ab.py skeleton-floor decomposition): the word-length
+    reference, re-splitting each document per metric.  r12 (a
+    skeleton-floor A/B decomposition, SURVEY.md): the word-length
     fold and the 8-way array_contains stopword probe were the dominant
     in-row cost — sum_len now uses the exact char-count identity
     sum(len(w_i)) = length(text) - (n_words - 1) (true for ANY text:
@@ -637,8 +637,8 @@ def pipeline_training_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     instead of the multi-KB document body — at 100 TB that is the
     difference between shuffling 100 TB and shuffling ~1 TB.
 
-    r12 (judge order #6 — the interleaved A/B in
-    scripts/training_e2e_ab.py): the refreshed stage-skeleton floor
+    r12 (judge order #6 — an interleaved A/B, recorded in
+    SURVEY.md): the refreshed stage-skeleton floor
     showed the in-row Gopher compute dominating (full 2.20 s vs skeleton
     0.66 s at the sf1 shape).  Root cause read off the executed plan:
     PushDownPredicate substitutes the split(text) alias into EVERY

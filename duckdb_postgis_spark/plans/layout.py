@@ -12,13 +12,25 @@ tests/test_layout_plans.py (PartitionFilters / no Exchange).
 Local testdata stands in for the cluster's object store: layouts are written
 once per scale factor under /tmp and reused. On a real deployment the same
 code targets the warehouse path; nothing else changes.
+
+Every derived layout is keyed by ``_token``.  File and directory
+artifacts (here, ``catalog.ensure_scan_layout`` and the generated pipeline
+inputs of ``operators/geo.py``) commit through ``publish``.  Two commits
+stay separate: ``ensure_tables``, because a catalog table's external
+location is fixed when it is written, so it cannot be built elsewhere and
+renamed; and the manifest family (``ensure_versioned_docs``, the
+delete-vector, equality-delete and compaction chain,
+``ensure_vacuum_layout``, ``ensure_manifest_stats_layout``), whose
+atomically written ``manifest-N.json`` is the Iceberg-style commit: its
+versions extend one root in place and list absolute file paths.
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
-import re
 import shutil
+import uuid
 from collections.abc import Callable
 
 import pandas as pd
@@ -28,31 +40,60 @@ from pyspark.sql import functions as F
 from duckdb_postgis_spark.catalog import table
 from duckdb_postgis_spark.functions.num import dsum, sql_dsum
 from duckdb_postgis_spark.registry import query
+from duckdb_postgis_spark.session import session_conf
 
 _LAYOUT_ROOT = "/tmp/duckdb_postgis_spark_layout"
+#: session conf the layout writers pin to MICROS for parquet min/max stats
+_TS_TYPE = "spark.sql.parquet.outputTimestampType"
 
 
 def _token(sf_dir: str, *tables: str) -> str:
-    """Cache key for a materialized layout: path + source file size/mtime,
-    so a regenerated testdata directory can never serve a stale layout."""
-    sig = [re.sub(r"[^A-Za-z0-9]", "_", sf_dir.strip("/"))]
+    """The cache key of every derived layout: a short md5 over ``sf_dir``
+    and each source table's size and mtime (ns), so a regenerated testdata
+    directory can never serve a stale layout."""
+    sig = [sf_dir]
     for t in tables:
         try:
             st = os.stat(f"{sf_dir}/{t}.parquet")
-            sig.append(f"{st.st_size}_{int(st.st_mtime)}")
+            sig.append(f"{t}:{st.st_size}:{st.st_mtime_ns}")
         except OSError:
-            sig.append("missing")
-    return "_".join(sig)
+            sig.append(f"{t}:missing")
+    return hashlib.md5("|".join(sig).encode()).hexdigest()[:16]
+
+
+def publish(path: str, build: Callable[[str], None]) -> bool:
+    """Publish-by-rename: unless ``path`` exists (-> False), run
+    ``build(tmp)`` on a private sibling and move it onto ``path`` in one
+    atomic step (-> True), so ``path`` exists only when complete.  If a
+    concurrent builder published first the move fails, ``tmp`` is removed
+    and the winner's copy stays (-> False).  Directories move by
+    ``os.rename`` (refuses a non-empty target); files by hard link, since a
+    rename would replace the winner's file."""
+    if os.path.exists(path):
+        return False
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    tmp = f"{path}.tmp.{os.getpid()}.{uuid.uuid4().hex[:8]}"
+    try:
+        build(tmp)
+        try:
+            (os.rename if os.path.isdir(tmp) else os.link)(tmp, path)
+        except OSError:
+            if not os.path.exists(path):
+                raise
+            return False
+        return True
+    finally:
+        if os.path.isdir(tmp):
+            shutil.rmtree(tmp, ignore_errors=True)
+        elif os.path.lexists(tmp):
+            os.remove(tmp)
 
 
 def _write_json_atomic(path: str, obj: object) -> None:
-    """Manifest writes must be all-or-nothing: every ensure_* builder
-    guards on ``os.path.exists(manifest-N.json)``, so a crash mid
-    ``json.dump`` would leave a truncated file that satisfies the guard
-    forever and poisons every later read (r12 ADVICE).  Writing to a
-    sibling temp file and ``os.replace``-ing it in makes the guard only
-    ever observe a complete manifest — the same commit protocol Iceberg
-    uses for its metadata.json (atomic rename on the catalog)."""
+    """All-or-nothing manifest write: the manifest builders guard on
+    ``os.path.exists(manifest-N.json)``, so the file is written to a
+    sibling temp file and ``os.replace``-d in — the guard only ever sees a
+    complete manifest (Iceberg's metadata.json commit)."""
     import json
 
     tmp = f"{path}.tmp"
@@ -114,19 +155,22 @@ def ensure_events_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Events re-laid-out as parquet partitioned by event_date.
 
     At scale this is the landing layout (one directory per day); the write
-    itself is a narrow pass. _SUCCESS marks completion so concurrent/repeat
+    itself is a narrow pass. ``publish`` commits it, so concurrent/repeat
     callers reuse the materialization.
     """
     path = f"{_LAYOUT_ROOT}/events_by_day_{_token(sf_dir, 'events')}"
-    if not os.path.exists(f"{path}/_SUCCESS"):
-        ev = table(spark, sf_dir, "events")
+
+    def build(tmp: str) -> None:
         (
-            ev.withColumn("event_date", F.to_date("ts"))
+            table(spark, sf_dir, "events")
+            .withColumn("event_date", F.to_date("ts"))
             .repartition("event_date")  # one output file per partition dir
             .write.partitionBy("event_date")
             .mode("overwrite")
-            .parquet(path)
+            .parquet(tmp)
         )
+
+    publish(path, build)
     return spark.read.parquet(path)
 
 
@@ -216,16 +260,19 @@ def ensure_training_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     loader's memory budget. At 100 TB this exact pipeline writes ~O(10^5)
     uniformly-sized shards with no driver involvement."""
     path = f"{_LAYOUT_ROOT}/training_shards_{_token(sf_dir, 'documents')}"
-    if not os.path.exists(f"{path}/_SUCCESS"):
-        docs = table(spark, sf_dir, "documents")
+
+    def build(tmp: str) -> None:
         (
-            docs.repartitionByRange(8, "lang", "doc_id")
+            table(spark, sf_dir, "documents")
+            .repartitionByRange(8, "lang", "doc_id")
             .sortWithinPartitions("lang", "doc_id")
             .write.partitionBy("lang")
             .option("maxRecordsPerFile", 200)
             .mode("overwrite")
-            .parquet(path)
+            .parquet(tmp)
         )
+
+    publish(path, build)
     return spark.read.parquet(path)
 
 
@@ -271,15 +318,18 @@ def ensure_fragmented_docs(spark: SparkSession, sf_dir: str) -> str:
     lang with maxRecordsPerFile=50 — the many-small-files state a streaming
     ingest leaves behind."""
     path = f"{_LAYOUT_ROOT}/docs_fragmented_{_token(sf_dir, 'documents')}"
-    if not os.path.exists(f"{path}/_SUCCESS"):
-        docs = table(spark, sf_dir, "documents")
+
+    def build(tmp: str) -> None:
         (
-            docs.repartition("lang")
+            table(spark, sf_dir, "documents")
+            .repartition("lang")
             .write.partitionBy("lang")
             .option("maxRecordsPerFile", 50)
             .mode("overwrite")
-            .parquet(path)
+            .parquet(tmp)
         )
+
+    publish(path, build)
     return path
 
 
@@ -294,14 +344,17 @@ def ensure_compacted_docs(spark: SparkSession, sf_dir: str) -> str:
     partition instead of thousands."""
     frag = ensure_fragmented_docs(spark, sf_dir)
     path = f"{_LAYOUT_ROOT}/docs_compacted_{_token(sf_dir, 'documents')}"
-    if not os.path.exists(f"{path}/_SUCCESS"):
+
+    def build(tmp: str) -> None:
         (
             spark.read.parquet(frag)
             .repartition("lang")
             .write.partitionBy("lang")
             .mode("overwrite")
-            .parquet(path)
+            .parquet(tmp)
         )
+
+    publish(path, build)
     return path
 
 
@@ -347,19 +400,10 @@ def ensure_evolved_docs(spark: SparkSession, sf_dir: str) -> str:
     ``source`` and a derived ``quality`` column.  Parquet files carry
     their own schemas; the append never rewrites generation-1 files."""
     path = f"{_LAYOUT_ROOT}/evolved_docs_{_token(sf_dir, 'documents')}"
-    # completion marker distinct from _SUCCESS: the layout needs TWO write
-    # jobs, and the first one already drops _SUCCESS — a crash between
-    # them must not cache a single-generation directory as done
-    done = f"{path}/_EVOLVED_OK"
-    if not os.path.exists(done):
-        # build into a private temp dir and PUBLISH with one atomic
-        # rename: two concurrent sessions (pytest-xdist, parallel sweeps)
-        # can both see the marker missing, and interleaved
-        # overwrite/append into the shared path would mix generations
-        # (judge r8 advice #5).  rename() is atomic on one filesystem;
-        # the loser of the race keeps the winner's directory.
-        tmp = f"{path}.tmp.{os.getpid()}"
-        shutil.rmtree(tmp, ignore_errors=True)
+
+    def build(tmp: str) -> None:
+        # two write jobs: the first one's directory is not a finished
+        # layout, so only the rename after both commits it
         docs = table(spark, sf_dir, "documents")
         (
             docs.filter(F.col("doc_id") % 2 == 0)
@@ -381,25 +425,8 @@ def ensure_evolved_docs(spark: SparkSession, sf_dir: str) -> str:
             .write.mode("append")
             .parquet(tmp)
         )
-        with open(f"{tmp}/_EVOLVED_OK", "w") as fh:
-            fh.write("ok")
-        try:
-            os.rename(tmp, path)
-        except OSError:
-            if not os.path.exists(done):
-                # stale partial directory from a crashed pre-atomic
-                # build — replace it; if a concurrent publisher beats
-                # this second rename, its complete directory wins
-                shutil.rmtree(path, ignore_errors=True)
-                try:
-                    os.rename(tmp, path)
-                except OSError:
-                    pass
-            shutil.rmtree(tmp, ignore_errors=True)
-            if not os.path.exists(done):
-                raise RuntimeError(
-                    f"ensure_evolved_docs: could not publish {path}"
-                )
+
+    publish(path, build)
     return path
 
 
@@ -457,9 +484,10 @@ def ensure_embeddings_by_cell(spark: SparkSession, sf_dir: str):
     into parquet partition pruning: scanning nprobe of K cells touches
     nprobe/K of the files, no row-level filter needed.
 
-    Returns (path, centroids). The centroids ride alongside the layout
-    (.npy) so queries and the writer share one quantizer — retraining
-    would silently shuffle cell ids."""
+    Returns (path, centroids). The centroids ride inside the published
+    directory (``_centroids.npy``; the parquet reader skips ``_`` names)
+    so queries and the writer share one quantizer — retraining would
+    silently shuffle cell ids."""
     import numpy as np
 
     from duckdb_postgis_spark.operators.llm import (
@@ -467,19 +495,9 @@ def ensure_embeddings_by_cell(spark: SparkSession, sf_dir: str):
         _ivf_train_sample,
     )
 
-    # v2: hash-priority training sample (unbiased) replaced head-of-table;
-    # superseded v1 layouts (centroids trained on the biased sample) are
-    # swept on sight so abandoned cache dirs don't accumulate under
-    # _LAYOUT_ROOT forever
-    import glob as _glob
+    path = f"{_LAYOUT_ROOT}/embeddings_by_cell_{_token(sf_dir, 'embeddings')}"
 
-    for stale in _glob.glob(f"{_LAYOUT_ROOT}/embeddings_by_cell_*"):
-        if "/embeddings_by_cell_v2_" not in stale:
-            (shutil.rmtree if os.path.isdir(stale) else os.remove)(stale)
-
-    path = f"{_LAYOUT_ROOT}/embeddings_by_cell_v2_{_token(sf_dir, 'embeddings')}"
-    cpath = f"{path}_centroids.npy"
-    if not (os.path.exists(f"{path}/_SUCCESS") and os.path.exists(cpath)):
+    def build(tmp: str) -> None:
         emb = table(spark, sf_dir, "embeddings")
         C = _ivf_train(_ivf_train_sample(emb))
         b_C = spark.sparkContext.broadcast(C)
@@ -496,11 +514,12 @@ def ensure_embeddings_by_cell(spark: SparkSession, sf_dir: str):
             .repartition("cell")
             .write.partitionBy("cell")
             .mode("overwrite")
-            .parquet(path)
+            .parquet(tmp)
         )
-        os.makedirs(os.path.dirname(cpath), exist_ok=True)
-        np.save(cpath, C)
-    return path, __import__("numpy").load(cpath)
+        np.save(f"{tmp}/_centroids.npy", C)
+
+    publish(path, build)
+    return path, np.load(f"{path}/_centroids.npy")
 
 
 def _similarity_search_ivf_pruned_approx(
@@ -788,8 +807,9 @@ def ensure_events_zorder(spark: SparkSession, sf_dir: str) -> str:
     beyond 2^16 widen the mask or bucket ids first.  The write is a
     one-time narrow pass + one range exchange (at 100 TB: the clustering
     compaction job)."""
-    path = f"{_LAYOUT_ROOT}/events_zorder_v2_{_token(sf_dir, 'events')}"
-    if not os.path.exists(f"{path}/_SUCCESS"):
+    path = f"{_LAYOUT_ROOT}/events_zorder_{_token(sf_dir, 'events')}"
+
+    def build(tmp: str) -> None:
         ev = (
             table(spark, sf_dir, "events")
             .withColumn("ub", F.expr("user_id & 65535"))
@@ -803,20 +823,15 @@ def ensure_events_zorder(spark: SparkSession, sf_dir: str) -> str:
         # NO parquet min/max statistics, which would silently disable the
         # very skipping this layout exists for; pin MICROS for the write
         # regardless of session (session.get_spark also sets it globally)
-        prev = spark.conf.get("spark.sql.parquet.outputTimestampType", None)
-        spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-        try:
+        with session_conf(spark, _TS_TYPE, "TIMESTAMP_MICROS"):
             (
                 ev.repartitionByRange(16, "z")
                 .sortWithinPartitions("z")
                 .write.mode("overwrite")
-                .parquet(path)
+                .parquet(tmp)
             )
-        finally:
-            if prev is not None:
-                spark.conf.set("spark.sql.parquet.outputTimestampType", prev)
-            else:
-                spark.conf.unset("spark.sql.parquet.outputTimestampType")
+
+    publish(path, build)
     return path
 
 
@@ -873,26 +888,16 @@ def events_directory_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     original single-file table, so a part-file split that loses, splits
     or re-encodes rows (including the TIMESTAMP encoding surviving the
     rewrite) is a driver hash failure."""
-    src_stat = os.stat(f"{sf_dir}/events.parquet")
-    root = (
-        f"{_LAYOUT_ROOT}/events_dir_{src_stat.st_size}_{src_stat.st_mtime_ns}"
-    )
-    dir_path = f"{root}/events.parquet"
-    if not os.path.exists(f"{root}/_SUCCESS"):
-        ev = table(spark, sf_dir, "events")
+    root = f"{_LAYOUT_ROOT}/events_dir_{_token(sf_dir, 'events')}"
+
+    def build(tmp: str) -> None:
         # 4-part directory; MICROS so the encoding gate sees a modern file
-        prev = spark.conf.get("spark.sql.parquet.outputTimestampType", None)
-        spark.conf.set(
-            "spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS"
-        )
-        try:
-            ev.repartition(4).write.mode("overwrite").parquet(dir_path)
-        finally:
-            if prev is not None:
-                spark.conf.set("spark.sql.parquet.outputTimestampType", prev)
-            else:
-                spark.conf.unset("spark.sql.parquet.outputTimestampType")
-        open(f"{root}/_SUCCESS", "w").close()
+        with session_conf(spark, _TS_TYPE, "TIMESTAMP_MICROS"):
+            table(spark, sf_dir, "events").repartition(4).write.mode(
+                "overwrite"
+            ).parquet(f"{tmp}/events.parquet")
+
+    publish(root, build)
     return (
         table(spark, root, "events")
         .groupBy("event_type")
@@ -1039,8 +1044,10 @@ def ensure_orc_copy(spark: SparkSession, sf_dir: str) -> str:
     Spark reads/writes it natively with the same vectorized reader
     contract as parquet)."""
     path = f"{_LAYOUT_ROOT}/lineitem_orc_{_token(sf_dir, 'lineitem')}"
-    if not os.path.exists(f"{path}/_SUCCESS"):
-        table(spark, sf_dir, "lineitem").write.mode("overwrite").orc(path)
+    publish(
+        path,
+        lambda tmp: table(spark, sf_dir, "lineitem").write.mode("overwrite").orc(tmp),
+    )
     return path
 
 

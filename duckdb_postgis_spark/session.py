@@ -10,6 +10,8 @@ scale (AQE on, partition coalescing, broadcast threshold).
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -52,3 +54,18 @@ def get_spark(
         .config("spark.ui.enabled", "false")
     )
     return builder.getOrCreate()
+
+
+@contextmanager
+def session_conf(spark: SparkSession, key: str, value: str) -> Iterator[None]:
+    """Set one session conf for the body of a ``with`` block, then restore
+    the previous value (or unset the key if it had none)."""
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        if prev is not None:
+            spark.conf.set(key, prev)
+        else:
+            spark.conf.unset(key)

@@ -34,6 +34,7 @@ from duckdb_postgis_spark.operators.relational import (
     cms_bucket,
 )
 from duckdb_postgis_spark.registry import query
+from duckdb_postgis_spark.session import session_conf
 
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -212,6 +213,15 @@ def _replay_ckpt_dir(prefix: str) -> str:
     return tempfile.mkdtemp(prefix=prefix, dir=root or None)
 
 
+#: state-store partitions of a replay, pinned for its checkpoint only: the
+#: count is fixed at first start from spark.sql.shuffle.partitions, which
+#: is 200 under a plain session — 200 state tasks per micro-batch for a
+#: testdata-sized replay (11-31 s per query at sf0.01, pure scheduling).
+#: A real deployment sizes state partitions to the cluster once, at first
+#: deploy; the conf travels with the checkpoint, not the code.
+_STATE_PARTS = 8
+
+
 def run_available_now(
     sdf: DataFrame, name: str, output_mode: str = "append", timeout: int = 120
 ) -> DataFrame:
@@ -224,19 +234,6 @@ def run_available_now(
     and a durable sink; only this runner changes.
     """
     spark = sdf.sparkSession
-    # The state-store partition count is fixed at first start from
-    # spark.sql.shuffle.partitions; under the driver's plain session that is
-    # 200 — 200 state tasks per micro-batch for a testdata-sized replay
-    # (measured 11-31 s per query at sf0.01, pure scheduling).  Pin a small
-    # count for THIS replay checkpoint and restore the session conf after.
-    # This is a harness knob, not the production plan: a real deployment
-    # sizes state partitions to the cluster once, at first deploy, the same
-    # way — the conf travels with the checkpoint, not the code.
-    prev = spark.conf.get("spark.sql.shuffle.partitions", None)
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTS", "8"),
-    )
     # At the driver's correctness scale (sf0.01) every replay drains in
     # seconds; at larger sweep scales (sf0.1+) the stream-stream joins
     # legitimately need longer.  Overridable, and NEVER silent: a replay
@@ -247,27 +244,27 @@ def run_available_now(
     timeout = int(os.environ.get("SPARK_GRAFT_STREAM_TIMEOUT", str(timeout)))
     ckpt = _replay_ckpt_dir(f"ckpt_{name}_")
     try:
-        q = (
-            sdf.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        finished = q.awaitTermination(timeout)
-        if not finished or q.isActive:
-            q.stop()
-            raise RuntimeError(
-                f"streaming replay {name!r} did not drain within {timeout}s "
-                "(AvailableNow still active) — refusing to return a partial "
-                "result; raise SPARK_GRAFT_STREAM_TIMEOUT for larger scales"
+        with session_conf(
+            spark, "spark.sql.shuffle.partitions", str(_STATE_PARTS)
+        ):
+            q = (
+                sdf.writeStream.format("memory")
+                .queryName(name)
+                .outputMode(output_mode)
+                .trigger(availableNow=True)
+                .option("checkpointLocation", ckpt)
+                .start()
             )
+            finished = q.awaitTermination(timeout)
+            if not finished or q.isActive:
+                q.stop()
+                raise RuntimeError(
+                    f"streaming replay {name!r} did not drain within "
+                    f"{timeout}s (AvailableNow still active) — refusing to "
+                    "return a partial result; raise "
+                    "SPARK_GRAFT_STREAM_TIMEOUT for larger scales"
+                )
     finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-        else:
-            spark.conf.unset("spark.sql.shuffle.partitions")
         # the memory-sink table is independent of the checkpoint; a drained
         # replay's state/offset files are dead weight (RAM when on /dev/shm)
         import shutil

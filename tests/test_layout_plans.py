@@ -229,6 +229,119 @@ def test_scan_layout_parallelizes_the_scan(spark):
     assert working_partitions(out) >= 8
 
 
+# --------------------------------------------------------------------------
+# publish-by-rename commit (layout.publish)
+# --------------------------------------------------------------------------
+def _write_dir(tmp: str, text: str) -> None:
+    import os
+
+    os.makedirs(tmp)
+    with open(f"{tmp}/part-0", "w") as fh:
+        fh.write(text)
+
+
+def _write_file(tmp: str, text: str) -> None:
+    with open(tmp, "w") as fh:
+        fh.write(text)
+
+
+def _read(path: str) -> str:
+    import os
+
+    with open(f"{path}/part-0" if os.path.isdir(path) else path) as fh:
+        return fh.read()
+
+
+def test_publish_interrupted_build_leaves_no_path(tmp_path):
+    """A build that raises publishes nothing and leaves no temp sibling;
+    the next call builds from scratch and publishes."""
+    import os
+
+    import pytest
+
+    from duckdb_postgis_spark.plans.layout import publish
+
+    for writer in (_write_dir, _write_file):
+        path = str(tmp_path / writer.__name__ / "artifact")
+
+        def crash(tmp: str) -> None:
+            writer(tmp, "half")
+            raise RuntimeError("interrupted")
+
+        with pytest.raises(RuntimeError, match="interrupted"):
+            publish(path, crash)
+        assert os.listdir(os.path.dirname(path)) == []
+        assert publish(path, lambda tmp: writer(tmp, "full")) is True
+        assert _read(path) == "full"
+        assert os.listdir(os.path.dirname(path)) == ["artifact"]
+
+
+def test_publish_existing_path_skips_build(tmp_path):
+    from duckdb_postgis_spark.plans.layout import publish
+
+    path = str(tmp_path / "artifact")
+    _write_dir(path, "old")
+    calls = []
+    assert publish(path, calls.append) is False
+    assert calls == []
+    assert _read(path) == "old"
+
+
+def test_publish_concurrent_winner_keeps_its_copy(tmp_path):
+    """A concurrent builder publishing first wins: this builder's move
+    fails, its temp copy is removed and the winner's content stays."""
+    import os
+
+    from duckdb_postgis_spark.plans.layout import publish
+
+    for writer in (_write_dir, _write_file):
+        path = str(tmp_path / writer.__name__ / "artifact")
+
+        def racing(tmp: str) -> None:
+            writer(path, "winner")
+            writer(tmp, "loser")
+
+        assert publish(path, racing) is False
+        assert _read(path) == "winner"
+        assert not [
+            f for f in os.listdir(os.path.dirname(path)) if ".tmp." in f
+        ]
+
+
+def test_publish_racing_threads_publish_one_copy(tmp_path):
+    """More builders than cores race on one path, all past the exists
+    check before any moves: exactly one publishes, its copy is the one
+    left, and no temp sibling survives."""
+    import os
+    import threading
+
+    from duckdb_postgis_spark.plans.layout import publish
+
+    n = 2 * (os.cpu_count() or 1) + 2
+    for writer in (_write_dir, _write_file):
+        path = str(tmp_path / writer.__name__ / "artifact")
+        gate = threading.Barrier(n, timeout=60)
+        won = []
+
+        def race(i: int) -> None:
+            def build(tmp: str) -> None:
+                writer(tmp, str(i))
+                gate.wait()
+
+            if publish(path, build):
+                won.append(i)
+
+        threads = [threading.Thread(target=race, args=(i,)) for i in range(n)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+            assert not t.is_alive()
+        assert len(won) == 1, won
+        assert _read(path) == str(won[0])
+        assert os.listdir(os.path.dirname(path)) == ["artifact"]
+
+
 def test_zorder_layout_skips_most_files(spark):
     """The Z-order clustering property itself: each output file's
     (user_id, ts) bounding rectangle is tight, so the query's rectangle

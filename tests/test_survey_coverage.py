@@ -134,81 +134,11 @@ def test_every_survey_operator_is_registered():
     assert not missing, f"SURVEY-declared but unregistered: {missing}"
 
 
-def test_driver_window_covers_required_families():
-    """The driver verifies only the first DRIVER_WINDOW entries of
-    queries().  Round-13 rotation (CORRECTNESS_r12 was 50/50, so all r12
-    slots rotate out with verdicts standing): (a) first driver verdicts
-    for the SIX r13 additions + twelve r13 changed-code re-entries = 18,
-    (b) the full remaining thirteen r8-era verdicts (the six r12
-    late-addition displacees lead), (c) the 19 stalest r9 verdicts in
-    registration order (subquery_scalar_in, array_map_json, and
-    scalar_string_date_math displaced to r14 by the sixth addition and
-    the two perf re-entries).  After this window lands no registered verdict
-    is older than r9, and the r9 tail shrinks to 24 (pre-written as the
-    r14 (b) block in registry.py).  Earlier rounds' displacement
-    rationales live in the r10-r12 revisions of this file (git)."""
-    window = set(list(registry.all_queries())[: registry.DRIVER_WINDOW])
-    added_r13 = {
-        # the embedding twin of the minhash nightly cycle (judge order #2)
-        "dedup_incremental_embedding", "dedup_embedding_index_append",
-        # polygon-polygon ST_Intersects overlay (order #3)
-        "geo_polygon_intersects_join",
-        # manifest-stats file pruning (order #4)
-        "lakehouse_manifest_pruned_scan",
-        # batched top-m BPE merge learning (order #5)
-        "text_bpe_train_batched",
-        # semantic cycle third leg (beyond-order widening; displaces
-        # the last (c) slot subquery_scalar_in to the r14 (b) block)
-        "dedup_embedding_index_compact",
-    }
-    changed_r13 = {
-        # ensure_minhash_index2 gained the rmtree crash-recovery path
-        # (r12 ADVICE medium)
-        "dedup_minhash_index_append", "dedup_minhash_index_compact",
-        # codes computation factored into _embed_codes (plan-identical;
-        # changed code outranks refreshes)
-        "dedup_embedding_cosine",
-        # manifest writers moved to atomic temp-file + os.replace
-        # commits (r12 ADVICE low) — every reader re-enters
-        "snapshot_time_travel", "lakehouse_manifest_diff",
-        "maintenance_vacuum_orphans", "lakehouse_delete_vectors",
-        "lakehouse_equality_deletes", "lakehouse_compact_deletes",
-        "maintenance_expire_snapshots",
-        # _num_blocks parallelism floor: 15 cogroup tasks on 32 cores was
-        # the r12 order-#6 drift root cause (8.8 s -> 1.28 s interleaved);
-        # displaces the last (c) slot array_map_json to the r14 (b) block
-        "knn_cosine_topk",
-        # same under-parallelism class on linear chunking (chunk floor
-        # 2x defaultParallelism); displaces scalar_string_date_math
-        "sample_hard_negative_mining",
-    }
-    r8_tail = {
-        "text_pii_scrub", "text_unigram_likelihood", "agg_hll_sketch_merge",
-        "agg_histogram", "agg_percentiles", "grouping_sets_cube_rollup",
-        "window_analytic", "window_rank_topn", "sort_limit_topk",
-        "pivot_lang_counts", "json_extract_events", "join_null_safe",
-        "join_bucketed_colocated",
-    }
-    r9_refresh = {
-        "geo_transform_27700_to_4326", "pipeline_geo_file_e2e",
-        "join_scd2_point_in_time", "dedup_crosslingual_semantic",
-        "multimodal_meta_stats", "multimodal_image_features",
-        "multimodal_audio_energy", "scan_project", "filter_pred",
-        "pricing_summary", "join_inner_hash", "join_broadcast_4way",
-        "join_left_right_full", "join_semi_anti", "join_theta_range",
-        "join_asof", "join_asof_forward", "agg_cms_topk_merge", "set_ops",
-    }
-    required = added_r13 | changed_r13 | r8_tail | r9_refresh
-    missing = sorted(required - window)
-    assert not missing, f"outside driver window: {missing}"
-    assert len(required) == registry.DRIVER_WINDOW
-
-
 def test_priority_names_all_registered():
     unknown = [n for n in registry.PRIORITY if n not in registry.QUERIES]
     assert not unknown, f"PRIORITY names not in registry: {unknown}"
     assert len(registry.PRIORITY) == len(set(registry.PRIORITY))
-    assert len(registry.PRIORITY) <= registry.DRIVER_WINDOW
+    assert len(registry.PRIORITY) == registry.DRIVER_WINDOW
 
 
 def test_oracle_coverage_floor():
