@@ -625,33 +625,21 @@ def geo_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     to anything outside the probed ring — sends the rare uncertified
     point back through the broadcast attach, so the grid path returns
     the same rows the attach would (equality pinned at sf0.01 AND sf0.1
-    in tests/test_geo_functions.py).  Both paths overridable via
-    SPARK_GRAFT_GEO_KNN=grid|broadcast."""
-    import os as _os
-
-    forced = _os.environ.get("SPARK_GRAFT_GEO_KNN", "")
-    if forced not in ("", "grid", "broadcast"):
-        # a typo (e.g. 'GRID') must not silently fall back to the size
-        # dispatch and mask a misconfigured stress re-measurement
-        raise ValueError(
-            f"SPARK_GRAFT_GEO_KNN={forced!r}: expected 'grid' or 'broadcast'"
+    in tests/test_geo_functions.py)."""
+    try:
+        pairs = table_num_rows(f"{sf_dir}/customer.parquet") * table_num_rows(
+            f"{sf_dir}/supplier.parquet"
         )
-    if forced not in ("grid", "broadcast"):
-        try:
-            pairs = table_num_rows(f"{sf_dir}/customer.parquet") * table_num_rows(
-                f"{sf_dir}/supplier.parquet"
-            )
-        except OSError:
-            pairs = 0
-        forced = "grid" if pairs > _KNN_GRID_PAIR_THRESHOLD else "broadcast"
+    except OSError:
+        pairs = 0
+    knn = _geo_knn_grid if pairs > _KNN_GRID_PAIR_THRESHOLD else _geo_knn_attach
     cust = _coords(spark, sf_dir).select(
         "c_custkey",
         F.col("lon").cast("double").alias("lon"),
         F.col("lat").cast("double").alias("lat"),
     )
     supp = _knn_suppliers(spark, sf_dir)
-    top = _geo_knn_grid(cust, supp) if forced == "grid" else _geo_knn_attach(cust, supp)
-    return top.orderBy("c_custkey", "rk")
+    return knn(cust, supp).orderBy("c_custkey", "rk")
 
 
 #: above this many customer×supplier candidate pairs, the broadcast attach

@@ -14,7 +14,6 @@ from __future__ import annotations
 
 import functools
 import math
-import os
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -30,6 +29,7 @@ from duckdb_postgis_spark.catalog import table
 from duckdb_postgis_spark.functions.num import dsum, sql_dsum
 from duckdb_postgis_spark.functions.order import sorted_small
 from duckdb_postgis_spark.registry import query
+from duckdb_postgis_spark.session import keep, release
 
 # --------------------------------------------------------------------------
 # L1 text stats
@@ -731,17 +731,13 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cached frame is |docs| × 3 longs.  Ledger unpersists on the next
     # call, so bench reps never reuse a prior run's computation.
     # Measured 3.5 s → 1.6 s at sf0.1.
-    from py4j.protocol import Py4JError
-
-    while _SIMHASH_PERSISTED:
-        try:
-            _SIMHASH_PERSISTED.pop().unpersist(blocking=False)
-        except Py4JError:
-            pass  # cache died with its stopped session (pagerank precedent)
-    sigs = votes.select(
-        "doc_id", half(0).cast("long").alias("lo"), half(32).cast("long").alias("hi")
-    ).persist()
-    _SIMHASH_PERSISTED.append(sigs)
+    release("simhash")
+    sigs = keep(
+        "simhash",
+        votes.select(
+            "doc_id", half(0).cast("long").alias("lo"), half(32).cast("long").alias("hi")
+        ),
+    )
     # ids-only band join (the cos-dedup pattern): the pair dedup shuffles
     # two longs per candidate, not the signatures; sigs re-attach after
     banded = sigs.select(
@@ -1344,19 +1340,8 @@ _SEMDEDUP_MATMUL_SCORES = 5_000_000
 # driver memory) and the full seed set stays distributed, co-located
 # with its vectors by super-cell (judge r10 order #2).
 _SEMDEDUP_BCAST_SEEDS = 65_536
-# Bounded persist ledger: the (vec_id, cell) frame must stay cached while
-# the RETURNED lazy frame materializes (both pair-join sides read it), so
-# the function cannot unpersist before returning.  Instead each call
-# unpersists whatever the PREVIOUS call left behind, capping the leak at
-# one ids-only frame per session (judge r8 advice item #1).
-# CONTRACT (judge r9 advice #3): sequential single-threaded use — call
-# N's returned frame must be materialized before call N+1 runs, or call
-# N's cached assignment is silently voided (its pair join then recomputes
-# the assignment subtree per side; results stay correct, only slower).
-# The registry/driver/bench harnesses all materialize between calls.
-_SEMDEDUP_PERSISTED: list[DataFrame] = []
-#: simhash signature cache ledger (same contract — see dedup_simhash)
-_SIMHASH_PERSISTED: list[DataFrame] = []
+#: floor of the two-level route's super-seed count m = max(floor, sqrt(K))
+_SEMDEDUP_SUPER_MIN = 16
 
 
 def _semdedup_two_level(
@@ -1393,13 +1378,9 @@ def _semdedup_two_level(
     activates only past ~67M vectors — and a forced-equality test pins
     it to the single-level result when m >= K (every seed its own
     super-cell makes routing exact by construction)."""
-    import os
-
     import numpy as np
 
-    m = int(os.environ.get("SPARK_GRAFT_SEMDEDUP_SUPER", "0")) or max(
-        16, math.isqrt(kk)
-    )
+    m = max(_SEMDEDUP_SUPER_MIN, math.isqrt(kk))
     sup_frame = seed_frame.orderBy(
         F.md5(F.col("seed_id").cast("string")), "seed_id"
     ).limit(m)
@@ -1553,9 +1534,7 @@ def dedup_semdedup_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     routed assignment (_semdedup_two_level) broadcasts only ceil(sqrt(K))
     super-seeds and cogroups vectors with their super-cell's seeds —
     O(sqrt(K)) driver memory, full seed set stays distributed (judge r10
-    order #2).  SPARK_GRAFT_SEMDEDUP=sql|matmul|twolevel forces a path;
-    any other non-empty value raises (a typo must not silently change
-    the plan).
+    order #2).
 
     Scale: K grows with n so cells stay ~1024 vectors; within-cell
     pair work is n·cell/2 — linear in n at fixed cell size (the paper
@@ -1563,8 +1542,6 @@ def dedup_semdedup_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell co-location join, plus two ids-only vec_id re-joins for the
     exact verify — embedding arrays never ride the pair shuffle (the
     dedup_embedding_cosine discipline)."""
-    import os
-
     emb = table(spark, sf_dir, "embeddings")
     n, dim = _corpus_stats(f"{sf_dir}/embeddings.parquet")
     kk = max(16, n // _SEMDEDUP_CELL)
@@ -1573,25 +1550,10 @@ def dedup_semdedup_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(kk)
         .select(F.col("vec_id").alias("seed_id"), F.col("embedding").alias("se"))
     )
-    forced = os.environ.get("SPARK_GRAFT_SEMDEDUP", "")
-    if forced not in ("", "sql", "matmul", "twolevel"):
-        raise ValueError(
-            f"SPARK_GRAFT_SEMDEDUP={forced!r}: expected 'sql', 'matmul' "
-            "or 'twolevel'"
-        )
-    use_matmul = forced == "matmul" or (
-        forced == ""
-        and n * kk > _SEMDEDUP_MATMUL_SCORES
-        and kk <= _SEMDEDUP_BCAST_SEEDS
-    )
-    use_twolevel = forced == "twolevel" or (
-        forced == ""
-        and n * kk > _SEMDEDUP_MATMUL_SCORES
-        and kk > _SEMDEDUP_BCAST_SEEDS
-    )
-    if use_twolevel:
+    large = n * kk > _SEMDEDUP_MATMUL_SCORES
+    if large and kk > _SEMDEDUP_BCAST_SEEDS:
         assigned = _semdedup_two_level(spark, emb, seed_frame, kk)
-    elif use_matmul:
+    elif large:
         import numpy as np
 
         # Seeds to the driver: K x dim float64 sorted by seed_id ASCENDING
@@ -1635,21 +1597,14 @@ def dedup_semdedup_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("cell")
             )
         )
-    while _SEMDEDUP_PERSISTED:
-        try:
-            _SEMDEDUP_PERSISTED.pop().unpersist(blocking=False)
-        except Exception:
-            # ledgered frame from an already-stopped SparkSession (a
-            # multi-session harness run) — its cache died with the
-            # context; same guard as the pagerank ledger, found by the
-            # r10 bench NPE on a dead driverEndpoint
-            pass
+    release("semdedup")
     # the n x K scoring + argmax is the dominant stage and BOTH sides
     # of the pair self-join read it — persist the tiny ids-only
     # (vec_id, cell) frame so it computes once (review finding: the
-    # executed plan re-ran the whole assignment subtree per side)
-    cells = assigned.persist()
-    _SEMDEDUP_PERSISTED.append(cells)
+    # executed plan re-ran the whole assignment subtree per side).  It
+    # must stay cached while the RETURNED lazy frame materializes, so
+    # the ledger releases it on the next call, not before returning.
+    cells = keep("semdedup", assigned)
     ca = cells.select(F.col("vec_id").alias("a_id"), "cell")
     cb = cells.select(F.col("vec_id").alias("b_id"), "cell")
     pairs = ca.join(cb, "cell").filter(F.col("a_id") < F.col("b_id"))
@@ -2616,11 +2571,6 @@ def cogroup_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # near-dup clustering: connected components over MinHash candidate pairs
 # --------------------------------------------------------------------------
-#: one-deep persist ledger for the final CC labels frame (see the
-#: dedup_cluster_components docstring; same contract as _PAGERANK_PERSISTED)
-_CLUSTER_CC_PERSISTED: list[DataFrame] = []
-
-
 @query(
     "dedup_cluster_components",
     oracle=_MINHASH_CAND_CTE.replace("WITH ", "WITH RECURSIVE ", 1)
@@ -2656,13 +2606,7 @@ def dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     CacheManager (silent cross-invocation result reuse, exactly what the
     bench rules ban).  The ledger unpersists the previous call's frame on
     entry, so every invocation recomputes from parquet."""
-    from py4j.protocol import Py4JError
-
-    while _CLUSTER_CC_PERSISTED:
-        try:
-            _CLUSTER_CC_PERSISTED.pop().unpersist(blocking=False)
-        except Py4JError:
-            pass  # cache died with its stopped session (pagerank precedent)
+    release("cluster_cc")
     pairs = dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")
     edges = pairs.union(
         pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
@@ -2697,7 +2641,7 @@ def dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
             break
     out = labels.select(F.col("id").alias("doc_id"), F.col("label").alias("cluster_rep"))
     edges.unpersist()
-    _CLUSTER_CC_PERSISTED.append(labels)
+    keep("cluster_cc", labels)
     return out.orderBy("doc_id")
 
 

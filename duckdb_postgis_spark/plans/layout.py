@@ -22,12 +22,16 @@ renamed; and the manifest family (``ensure_versioned_docs``, the
 delete-vector, equality-delete and compaction chain,
 ``ensure_vacuum_layout``, ``ensure_manifest_stats_layout``), whose
 atomically written ``manifest-N.json`` is the Iceberg-style commit: its
-versions extend one root in place and list absolute file paths.
+versions extend one root in place and list absolute file paths.  Every
+manifest is written by ``_write_json_atomic`` (each version of the chain
+through ``_commit_version``), loaded by ``_manifest`` and, for a
+snapshot, read by ``read_snapshot``.
 """
 
 from __future__ import annotations
 
 import hashlib
+import json
 import os
 import shutil
 import uuid
@@ -37,7 +41,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from duckdb_postgis_spark.catalog import table
+from duckdb_postgis_spark.catalog import _staleness_sig, table
 from duckdb_postgis_spark.functions.num import dsum, sql_dsum
 from duckdb_postgis_spark.registry import query
 from duckdb_postgis_spark.session import session_conf
@@ -49,13 +53,15 @@ _TS_TYPE = "spark.sql.parquet.outputTimestampType"
 
 def _token(sf_dir: str, *tables: str) -> str:
     """The cache key of every derived layout: a short md5 over ``sf_dir``
-    and each source table's size and mtime (ns), so a regenerated testdata
-    directory can never serve a stale layout."""
+    and each source table's ``catalog._staleness_sig`` (size and mtime in
+    ns of the file, or of every part of a directory-shaped table), so a
+    regenerated or rewritten source can never serve a stale layout."""
     sig = [sf_dir]
     for t in tables:
+        path = f"{sf_dir}/{t}.parquet"
         try:
-            st = os.stat(f"{sf_dir}/{t}.parquet")
-            sig.append(f"{t}:{st.st_size}:{st.st_mtime_ns}")
+            parts = _staleness_sig(path, os.stat(path))
+            sig.append(":".join(map(str, (t, *parts))))
         except OSError:
             sig.append(f"{t}:missing")
     return hashlib.md5("|".join(sig).encode()).hexdigest()[:16]
@@ -94,14 +100,45 @@ def _write_json_atomic(path: str, obj: object) -> None:
     ``os.path.exists(manifest-N.json)``, so the file is written to a
     sibling temp file and ``os.replace``-d in — the guard only ever sees a
     complete manifest (Iceberg's metadata.json commit)."""
-    import json
-
     tmp = f"{path}.tmp"
     with open(tmp, "w") as fh:
         json.dump(obj, fh)
         fh.flush()
         os.fsync(fh.fileno())
     os.replace(tmp, path)
+
+
+def _manifest(root: str, name: int | str) -> dict:
+    """The parsed ``{root}/manifest-{name}.json``: a chain version
+    (``1``..``5``), ``"current"`` (vacuum layout) or ``"stats"``."""
+    with open(f"{root}/manifest-{name}.json") as fh:
+        return json.load(fh)
+
+
+def _parquet_files(d: str) -> list[str]:
+    """The sorted absolute paths of the parquet parts in directory ``d``."""
+    return sorted(f"{d}/{f}" for f in os.listdir(d) if f.endswith(".parquet"))
+
+
+def _write_parts(df: DataFrame, out: str) -> list[str]:
+    """Write ``df`` as one parquet part under ``out``; return its paths."""
+    df.coalesce(1).write.mode("overwrite").parquet(out)
+    return _parquet_files(out)
+
+
+def _commit_version(
+    root: str, version: int, build: Callable[[dict], dict]
+) -> None:
+    """One step of the manifest version chain: unless
+    ``manifest-{version}.json`` exists, ``build(prev)`` writes the
+    version's new files and returns its manifest entries (``prev`` is the
+    previous version's manifest; version 1 starts from no files), and the
+    manifest is committed with ``_write_json_atomic``."""
+    path = f"{root}/manifest-{version}.json"
+    if os.path.exists(path):
+        return
+    prev = _manifest(root, version - 1) if version > 1 else {"files": []}
+    _write_json_atomic(path, {"version": version, **build(prev)})
 
 
 #: bucket count of every bucketed warehouse table (facts and indexes)
@@ -645,38 +682,57 @@ def ensure_versioned_docs(spark: SparkSession, sf_dir: str) -> str:
     old files.  The manifest write is driver-side metadata (a few KB at
     any data scale)."""
     path = f"{_LAYOUT_ROOT}/docs_versioned_{_token(sf_dir, 'documents')}"
-    if not os.path.exists(f"{path}/manifest-2.json"):
-        docs = table(spark, sf_dir, "documents")
-        docs.filter(F.col("doc_id") % 2 == 0).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(f"{path}/data/add-1")
-        docs.filter(F.col("doc_id") % 2 == 1).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(f"{path}/data/add-2")
+    for v in (1, 2):
 
-        def parts(sub: str) -> list[str]:
-            d = f"{path}/data/{sub}"
-            return sorted(
-                f"{d}/{f}" for f in os.listdir(d) if f.endswith(".parquet")
-            )
+        def append(prev: dict, v: int = v) -> dict:
+            docs = table(spark, sf_dir, "documents")
+            added = docs.filter(F.col("doc_id") % 2 == v - 1)
+            return {"files": prev["files"] + _write_parts(added, f"{path}/data/add-{v}")}
 
-        v1 = parts("add-1")
-        _write_json_atomic(f"{path}/manifest-1.json", {"version": 1, "files": v1})
-        _write_json_atomic(
-            f"{path}/manifest-2.json",
-            {"version": 2, "files": v1 + parts("add-2")},
-        )
+        _commit_version(path, v, append)
     return path
 
 
 def read_snapshot(spark: SparkSession, root: str, version: int) -> DataFrame:
-    """Time-travel read: the scan's file list IS the manifest's list —
-    files appended after this version physically cannot be read."""
-    import json
+    """Snapshot read, the Iceberg-v2 reader contract: scan the manifest's
+    files, then apply whatever deletes that manifest lists — position
+    deletes first, as a broadcast anti-join on (file_path, row_index),
+    then equality deletes, as a broadcast anti-join on the key columns.
+    Both delete sides are O(|deletes|).  The scan's file list IS the
+    manifest's list, so files appended after this version cannot be
+    read, and an older manifest has no entry for a younger delete, so
+    time travel never sees it.  A manifest with neither entry is a bare
+    scan."""
+    manifest = _manifest(root, version)
+    df = spark.read.parquet(*manifest["files"])
+    dv_dir = manifest.get("delete_vectors")
+    if dv_dir:
+        with_meta = df.select(
+            "*",
+            F.col("_metadata.file_path").alias("_fp"),
+            F.col("_metadata.row_index").alias("_ri"),
+        )
+        dv = spark.read.parquet(dv_dir).select(
+            F.col("file_path").alias("_fp"), F.col("row_index").alias("_ri")
+        )
+        df = with_meta.join(F.broadcast(dv), ["_fp", "_ri"], "left_anti").drop(
+            "_fp", "_ri"
+        )
+    eq = manifest.get("equality_deletes")
+    if eq:
+        keys = spark.read.parquet(eq["path"])
+        df = df.join(F.broadcast(keys), eq["keys"], "left_anti")
+    return df
 
-    with open(f"{root}/manifest-{version}.json") as fh:
-        manifest = json.load(fh)
-    return spark.read.parquet(*manifest["files"])
+
+def _lang_digest(df: DataFrame, version: int) -> DataFrame:
+    """Per-lang row count and n_chars sum of one snapshot, tagged with its
+    version — the digest every snapshot-reading query returns."""
+    return (
+        df.groupBy("lang")
+        .agg(F.count("*").alias("n"), F.sum("n_chars").alias("total_chars"))
+        .select(F.lit(version).alias("version"), "lang", "n", "total_chars")
+    )
 
 
 @query(
@@ -703,14 +759,8 @@ def snapshot_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     version metadata never touches the data path.  This is the plain-
     parquet skeleton of Iceberg/Delta VERSION AS OF."""
     root = ensure_versioned_docs(spark, sf_dir)
-
-    def agg(df: DataFrame, v: int) -> DataFrame:
-        return df.groupBy("lang").agg(
-            F.count("*").alias("n"), F.sum("n_chars").alias("total_chars")
-        ).select(F.lit(v).alias("version"), "lang", "n", "total_chars")
-
-    v1 = agg(read_snapshot(spark, root, 1), 1)
-    v2 = agg(read_snapshot(spark, root, 2), 2)
+    v1 = _lang_digest(read_snapshot(spark, root, 1), 1)
+    v2 = _lang_digest(read_snapshot(spark, root, 2), 2)
     return v1.unionByName(v2).orderBy("version", "lang")
 
 
@@ -1016,13 +1066,9 @@ def lakehouse_manifest_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     linear in the DELTA, not the table: a 100 TB table appending 100 GB a
     day re-processes 100 GB.  Manifest set-difference is driver-side
     metadata (KBs); the data path scans only the new files."""
-    import json
-
     root = ensure_versioned_docs(spark, sf_dir)
-    with open(f"{root}/manifest-1.json") as fh:
-        v1 = set(json.load(fh)["files"])
-    with open(f"{root}/manifest-2.json") as fh:
-        v2 = json.load(fh)["files"]
+    v1 = set(_manifest(root, 1)["files"])
+    v2 = _manifest(root, 2)["files"]
     added = sorted(set(v2) - v1)
     delta = spark.read.parquet(*added)
     return (
@@ -1105,17 +1151,10 @@ def ensure_vacuum_layout(spark: SparkSession, sf_dir: str) -> str:
     path = f"{_LAYOUT_ROOT}/docs_vacuum_{_token(sf_dir, 'documents')}"
     if not os.path.exists(f"{path}/manifest-current.json"):
         docs = table(spark, sf_dir, "documents")
-        docs.filter(F.col("doc_id") % 2 == 0).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(f"{path}/data/committed")
-        docs.filter(F.col("doc_id") % 2 == 1).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(f"{path}/data/orphaned")
-        live = sorted(
-            f"{path}/data/committed/{f}"
-            for f in os.listdir(f"{path}/data/committed")
-            if f.endswith(".parquet")
+        live = _write_parts(
+            docs.filter(F.col("doc_id") % 2 == 0), f"{path}/data/committed"
         )
+        _write_parts(docs.filter(F.col("doc_id") % 2 == 1), f"{path}/data/orphaned")
         _write_json_atomic(f"{path}/manifest-current.json", {"files": live})
     return path
 
@@ -1150,16 +1189,12 @@ def maintenance_vacuum_orphans(spark: SparkSession, sf_dir: str) -> DataFrame:
     manifest pattern of `snapshot_time_travel`); each digest scans only
     its own files.  At 100 TB this runs as the nightly retention job;
     the audit-before-delete split keeps it idempotent and safe."""
-    import json
-
     root = ensure_vacuum_layout(spark, sf_dir)
-    with open(f"{root}/manifest-current.json") as fh:
-        live = set(json.load(fh)["files"])
+    live = set(_manifest(root, "current")["files"])
     all_files = sorted(
-        f"{root}/data/{sub}/{f}"
+        f
         for sub in os.listdir(f"{root}/data")
-        for f in os.listdir(f"{root}/data/{sub}")
-        if f.endswith(".parquet")
+        for f in _parquet_files(f"{root}/data/{sub}")
     )
     orphans = sorted(set(all_files) - live)
 
@@ -1197,59 +1232,25 @@ def ensure_delete_vectors(spark: SparkSession, sf_dir: str) -> str:
     is never re-evaluated — readers apply positions blindly, exactly
     like a production DV (the oracle re-derives membership from the
     predicate, so a mis-built or mis-applied DV is a hash failure)."""
-    import json
-
     root = ensure_versioned_docs(spark, sf_dir)
-    if not os.path.exists(f"{root}/manifest-3.json"):
-        with open(f"{root}/manifest-2.json") as fh:
-            m2 = json.load(fh)
+
+    def delete_positions(prev: dict) -> dict:
         dv_dir = f"{root}/deletes/dv-3"
-        (
-            spark.read.parquet(*m2["files"])
+        _write_parts(
+            spark.read.parquet(*prev["files"])
             .select(
                 F.col("doc_id"),
                 F.col("_metadata.file_path").alias("file_path"),
                 F.col("_metadata.row_index").alias("row_index"),
             )
             .filter(F.col("doc_id") % 7 == 3)
-            .select("file_path", "row_index")
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(dv_dir)
+            .select("file_path", "row_index"),
+            dv_dir,
         )
-        _write_json_atomic(
-            f"{root}/manifest-3.json",
-            {"version": 3, "files": m2["files"], "delete_vectors": dv_dir},
-        )
+        return {"files": prev["files"], "delete_vectors": dv_dir}
+
+    _commit_version(root, 3, delete_positions)
     return root
-
-
-def read_snapshot_mor(spark: SparkSession, root: str, version: int) -> DataFrame:
-    """MERGE-ON-READ snapshot read: scan the manifest's files and, when
-    the manifest carries delete vectors, anti-join the scan against them
-    on (file_path, row_index).  The DV side is O(|deletes|) and
-    broadcasts; versions WITHOUT a DV never touch the delete path — time
-    travel to version 2 cannot see version 3's deletes, because the old
-    manifest simply has no delete_vectors entry."""
-    import json
-
-    with open(f"{root}/manifest-{version}.json") as fh:
-        manifest = json.load(fh)
-    df = spark.read.parquet(*manifest["files"])
-    dv_dir = manifest.get("delete_vectors")
-    if not dv_dir:
-        return df
-    with_meta = df.select(
-        "*",
-        F.col("_metadata.file_path").alias("_fp"),
-        F.col("_metadata.row_index").alias("_ri"),
-    )
-    dv = spark.read.parquet(dv_dir).select(
-        F.col("file_path").alias("_fp"), F.col("row_index").alias("_ri")
-    )
-    return with_meta.join(F.broadcast(dv), ["_fp", "_ri"], "left_anti").drop(
-        "_fp", "_ri"
-    )
 
 
 @query(
@@ -1280,16 +1281,8 @@ def lakehouse_delete_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     the v2 read is byte-identical to plain time travel.  At compaction
     time the DV folds into a rewrite and the sidecar drops."""
     root = ensure_delete_vectors(spark, sf_dir)
-
-    def agg(df: DataFrame, v: int) -> DataFrame:
-        return (
-            df.groupBy("lang")
-            .agg(F.count("*").alias("n"), F.sum("n_chars").alias("total_chars"))
-            .select(F.lit(v).alias("version"), "lang", "n", "total_chars")
-        )
-
-    v2 = agg(read_snapshot_mor(spark, root, 2), 2)
-    v3 = agg(read_snapshot_mor(spark, root, 3), 3)
+    v2 = _lang_digest(read_snapshot(spark, root, 2), 2)
+    v3 = _lang_digest(read_snapshot(spark, root, 3), 3)
     return v2.unionByName(v3).orderBy("version", "lang")
 
 
@@ -1306,45 +1299,21 @@ def ensure_equality_deletes(spark: SparkSession, sf_dir: str) -> str:
     (Iceberg-v2 equality_ids); readers apply them as a key anti-join.
     The sidecar costs O(|distinct deleted keys|) — even cheaper than
     positions — and compaction folds both flavors into a rewrite."""
-    import json
-
     root = ensure_delete_vectors(spark, sf_dir)
-    if not os.path.exists(f"{root}/manifest-4.json"):
-        with open(f"{root}/manifest-3.json") as fh:
-            m3 = json.load(fh)
+
+    def delete_keys(prev: dict) -> dict:
         eq_dir = f"{root}/deletes/eq-4"
         # the equality-delete key set: every doc from source 'src1'
         # (a handful of key VALUES, not row positions)
-        spark.createDataFrame([("src1",)], "source string").coalesce(
-            1
-        ).write.mode("overwrite").parquet(eq_dir)
-        _write_json_atomic(
-            f"{root}/manifest-4.json",
-            {
-                "version": 4,
-                "files": m3["files"],
-                "delete_vectors": m3["delete_vectors"],
-                "equality_deletes": {"keys": ["source"], "path": eq_dir},
-            },
-        )
+        _write_parts(spark.createDataFrame([("src1",)], "source string"), eq_dir)
+        return {
+            "files": prev["files"],
+            "delete_vectors": prev["delete_vectors"],
+            "equality_deletes": {"keys": ["source"], "path": eq_dir},
+        }
+
+    _commit_version(root, 4, delete_keys)
     return root
-
-
-def read_snapshot_mor_eq(spark: SparkSession, root: str, version: int) -> DataFrame:
-    """Merge-on-read with BOTH delete flavors: position deletes first
-    (file anti-join), then equality deletes (key anti-join) — the
-    Iceberg-v2 apply order.  Manifests without either entry skip that
-    path entirely, so old snapshots see neither."""
-    import json
-
-    with open(f"{root}/manifest-{version}.json") as fh:
-        manifest = json.load(fh)
-    df = read_snapshot_mor(spark, root, version)
-    eq = manifest.get("equality_deletes")
-    if not eq:
-        return df
-    keys = spark.read.parquet(eq["path"])
-    return df.join(F.broadcast(keys), eq["keys"], "left_anti")
 
 
 @query(
@@ -1376,16 +1345,8 @@ def lakehouse_equality_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     unchanged from the v3 read.  Apply order (positions, then equality)
     matches the Iceberg-v2 reader contract."""
     root = ensure_equality_deletes(spark, sf_dir)
-
-    def agg(df: DataFrame, v: int) -> DataFrame:
-        return (
-            df.groupBy("lang")
-            .agg(F.count("*").alias("n"), F.sum("n_chars").alias("total_chars"))
-            .select(F.lit(v).alias("version"), "lang", "n", "total_chars")
-        )
-
-    v3 = agg(read_snapshot_mor_eq(spark, root, 3), 3)
-    v4 = agg(read_snapshot_mor_eq(spark, root, 4), 4)
+    v3 = _lang_digest(read_snapshot(spark, root, 3), 3)
+    v4 = _lang_digest(read_snapshot(spark, root, 4), 4)
     return v3.unionByName(v4).orderBy("version", "lang")
 
 
@@ -1411,17 +1372,13 @@ def ensure_compacted_mor(spark: SparkSession, sf_dir: str) -> str:
     convention; a 100 TB OPTIMIZE sizes output files via repartition /
     maxRecordsPerFile instead (the plan shape is identical)."""
     root = ensure_equality_deletes(spark, sf_dir)
-    if not os.path.exists(f"{root}/manifest-5.json"):
-        live = read_snapshot_mor_eq(spark, root, 4)
-        live.coalesce(1).write.mode("overwrite").parquet(f"{root}/data/add-5")
-        files = sorted(
-            f"{root}/data/add-5/{f}"
-            for f in os.listdir(f"{root}/data/add-5")
-            if f.endswith(".parquet")
-        )
-        _write_json_atomic(
-            f"{root}/manifest-5.json", {"version": 5, "files": files}
-        )
+    _commit_version(
+        root,
+        5,
+        lambda _prev: {
+            "files": _write_parts(read_snapshot(spark, root, 4), f"{root}/data/add-5")
+        },
+    )
     return root
 
 
@@ -1457,16 +1414,8 @@ def lakehouse_compact_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     one-time rewrite; at 100 TB this is the nightly OPTIMIZE that keeps
     read amplification flat as deletes accumulate."""
     root = ensure_compacted_mor(spark, sf_dir)
-
-    def agg(df: DataFrame, v: int) -> DataFrame:
-        return (
-            df.groupBy("lang")
-            .agg(F.count("*").alias("n"), F.sum("n_chars").alias("total_chars"))
-            .select(F.lit(v).alias("version"), "lang", "n", "total_chars")
-        )
-
-    v4 = agg(read_snapshot_mor_eq(spark, root, 4), 4)
-    v5 = agg(read_snapshot_mor_eq(spark, root, 5), 5)
+    v4 = _lang_digest(read_snapshot(spark, root, 4), 4)
+    v5 = _lang_digest(read_snapshot(spark, root, 5), 5)
     return v4.unionByName(v5).orderBy("version", "lang")
 
 
@@ -1521,22 +1470,15 @@ def maintenance_expire_snapshots(spark: SparkSession, sf_dir: str) -> DataFrame:
     data scale); each digest scans only its own file set.  At 100 TB
     this is the retention job that bounds storage growth after nightly
     OPTIMIZE runs."""
-    import json
-
     root = ensure_compacted_mor(spark, sf_dir)
     keep_versions = {5}
     versions = range(1, 6)
-
-    def manifest(v: int) -> dict:
-        with open(f"{root}/manifest-{v}.json") as fh:
-            return json.load(fh)
-
-    kept_files = {f for v in keep_versions for f in manifest(v)["files"]}
+    kept_files = {f for v in keep_versions for f in _manifest(root, v)["files"]}
     expired_files = {
         f
         for v in versions
         if v not in keep_versions
-        for f in manifest(v)["files"]
+        for f in _manifest(root, v)["files"]
     }
     deletable = sorted(expired_files - kept_files)
 
@@ -1553,7 +1495,7 @@ def maintenance_expire_snapshots(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     parts = [
         digest(
-            read_snapshot_mor_eq(spark, root, v),
+            read_snapshot(spark, root, v),
             f"v{v}",
             "kept" if v in keep_versions else "expired",
         )
@@ -1604,10 +1546,8 @@ def ensure_manifest_stats_layout(spark: SparkSession, sf_dir: str) -> str:
             .parquet(f"{path}/data")
         )
         files = []
-        for f in sorted(os.listdir(f"{path}/data")):
-            if not f.endswith(".parquet"):
-                continue
-            md = pq.ParquetFile(f"{path}/data/{f}").metadata
+        for f in _parquet_files(f"{path}/data"):
+            md = pq.ParquetFile(f).metadata
             stats: dict[str, dict[str, int]] = {}
             for rg in range(md.num_row_groups):
                 row = md.row_group(rg)
@@ -1621,7 +1561,7 @@ def ensure_manifest_stats_layout(spark: SparkSession, sf_dir: str) -> str:
                     )
                     cur["min"] = min(cur["min"], s.min)
                     cur["max"] = max(cur["max"], s.max)
-            files.append({"path": f"{path}/data/{f}", "stats": stats})
+            files.append({"path": f, "stats": stats})
         _write_json_atomic(
             f"{path}/manifest-stats.json", {"version": 1, "files": files}
         )
@@ -1634,10 +1574,7 @@ def manifest_pruned_paths(
     """Plan a [lo, hi] range predicate on ``col`` from the manifest
     alone: returns (matching file paths, total file count).  Pure
     driver-side metadata — no footer opens, no Spark job."""
-    import json
-
-    with open(f"{root}/manifest-stats.json") as fh:
-        manifest = json.load(fh)
+    manifest = _manifest(root, "stats")
     keep = [
         f["path"]
         for f in manifest["files"]
@@ -1700,10 +1637,7 @@ def _manifest_pruned_events(
     (never rows: a file outside every manifest range holds no matching
     user_id unless the manifest lied, which the fuzz family's footer
     recomputation would catch first)."""
-    import json
-
     keep, _total = manifest_pruned_paths(root, "user_id", lo, hi)
     if not keep:
-        with open(f"{root}/manifest-stats.json") as fh:
-            keep = [json.load(fh)["files"][0]["path"]]
+        keep = [_manifest(root, "stats")["files"][0]["path"]]
     return spark.read.parquet(*keep).filter(F.col("user_id").between(lo, hi))

@@ -13,7 +13,8 @@ import os
 from collections.abc import Iterator
 from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from py4j.protocol import Py4JError
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -69,3 +70,31 @@ def session_conf(spark: SparkSession, key: str, value: str) -> Iterator[None]:
             spark.conf.set(key, prev)
         else:
             spark.conf.unset(key)
+
+
+#: one-deep persist ledger: the frames each owner's previous call cached
+_LEDGER: dict[str, list[DataFrame]] = {}
+
+
+def release(owner: str) -> None:
+    """Unpersist what ``owner``'s previous call left cached, so no call
+    reuses a prior call's computation through the CacheManager.  Only
+    ``Py4JError`` is swallowed: it means the frame belongs to an
+    already-stopped session, whose cache died with it.  Contract:
+    sequential single-threaded use — a call's frames must be consumed
+    before the owner's next call releases them."""
+    frames = _LEDGER.get(owner, [])
+    while frames:
+        try:
+            frames.pop().unpersist(blocking=False)
+        except Py4JError:
+            pass
+
+
+def keep(owner: str, df: DataFrame) -> DataFrame:
+    """Persist ``df`` (unless it already is) and record it for
+    ``owner``'s next ``release``."""
+    if not df.is_cached:
+        df = df.persist()
+    _LEDGER.setdefault(owner, []).append(df)
+    return df

@@ -22,6 +22,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from duckdb_postgis_spark.session import keep, release
 from duckdb_postgis_spark.sources.sniffer import (
     FileType,
     determine_file_type,
@@ -73,13 +74,6 @@ def read_csv(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-#: ledgered persist for the parsed GeoJSON frame (the _PAGERANK_PERSISTED
-#: convention: single-threaded-sequential contract; each read_geojson call
-#: releases the previous call's cache, so repeated invocations never reuse
-#: a prior run's computation — only the probes WITHIN one process_file do)
-_GEOJSON_PERSISTED: list[DataFrame] = []
-
-
 def read_geojson(spark: SparkSession, path: str) -> DataFrame:
     """GeoJSON FeatureCollection → one row per feature: properties flattened
     to columns + ``geometry_json`` (full geometry as JSON text) +
@@ -94,16 +88,11 @@ def read_geojson(spark: SparkSession, path: str) -> DataFrame:
     unsplittable parse task, and process_file's lifecycle (geometry
     detection probe, CRS probe, final consumer) re-ran that parse + the
     WKT UDF 4-5× per invocation — measured 8.7 s → 2.6 s at the sf0.1
-    GeoJSON-e2e shape from caching it once per call.  The ledger
-    unpersists on the NEXT read_geojson call, so no computation survives
-    across invocations (bench reps each pay the full parse)."""
-    from py4j.protocol import Py4JError
-
-    while _GEOJSON_PERSISTED:
-        try:
-            _GEOJSON_PERSISTED.pop().unpersist(blocking=False)
-        except Py4JError:
-            pass  # cache died with its stopped session (pagerank precedent)
+    GeoJSON-e2e shape from caching it once per call.  The
+    ``session.keep`` ledger unpersists it on the NEXT read_geojson call,
+    so no computation survives across invocations (bench reps each pay
+    the full parse)."""
+    release("geojson")
     raw = spark.read.option("multiLine", True).json(path)
     if "features" not in raw.columns:
         return raw  # bare Feature / geometry object
@@ -122,9 +111,7 @@ def read_geojson(spark: SparkSession, path: str) -> DataFrame:
     out = feats.select(*cols, geom_json)
     # pandas_udf registration needs a live session → wrap at call time
     wkt_udf = F.pandas_udf(_geojson_wkt_series, "string")
-    res = out.withColumn("geometry_wkt", wkt_udf("geometry_json")).persist()
-    _GEOJSON_PERSISTED.append(res)
-    return res
+    return keep("geojson", out.withColumn("geometry_wkt", wkt_udf("geometry_json")))
 
 
 def _geojson_wkt_series(geom_json):  # pd.Series[str] -> pd.Series[str]

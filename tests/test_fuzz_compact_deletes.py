@@ -106,18 +106,18 @@ def test_v5_plan_has_no_anti_join_and_time_travel_isolated(spark, tmp_path):
     no delete entries."""
     from duckdb_postgis_spark.plans.layout import (
         ensure_compacted_mor,
-        read_snapshot_mor_eq,
+        read_snapshot,
     )
 
     _write_docs(1, tmp_path)
     root = ensure_compacted_mor(spark, str(tmp_path))
 
-    v5 = read_snapshot_mor_eq(spark, root, 5)
+    v5 = read_snapshot(spark, root, 5)
     plan = v5._jdf.queryExecution().executedPlan().toString()
     assert "Anti" not in plan, plan
     # v4 by contrast still pays both anti-joins (merge-on-read)
     v4_plan = (
-        read_snapshot_mor_eq(spark, root, 4)
+        read_snapshot(spark, root, 4)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
@@ -136,10 +136,10 @@ def test_v5_plan_has_no_anti_join_and_time_travel_isolated(spark, tmp_path):
     n_both = docs.filter("doc_id % 7 <> 3 AND source <> 'src1'").count()
     for version, expect in [(1, n_even), (2, n_all), (3, n_pos),
                             (4, n_both), (5, n_both)]:
-        assert read_snapshot_mor_eq(spark, root, version).count() == expect, version
+        assert read_snapshot(spark, root, version).count() == expect, version
     # v5 content row-for-row equals the v4 merge-on-read view
-    a = read_snapshot_mor_eq(spark, root, 4)
-    b = read_snapshot_mor_eq(spark, root, 5)
+    a = read_snapshot(spark, root, 4)
+    b = read_snapshot(spark, root, 5)
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
 
 

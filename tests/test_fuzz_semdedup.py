@@ -23,10 +23,20 @@ import pyarrow.parquet as pq
 import pytest
 
 from duckdb_postgis_spark import registry
+from duckdb_postgis_spark.operators import llm
 
 registry.load_all()
 
 SEEDS = range(40)
+
+
+def _force_path(monkeypatch, path: str) -> None:
+    """Route every corpus size to the matmul or the two-level assignment
+    by moving the size-dispatch thresholds under it."""
+    monkeypatch.setattr(llm, "_SEMDEDUP_MATMUL_SCORES", 0)
+    monkeypatch.setattr(
+        llm, "_SEMDEDUP_BCAST_SEEDS", 0 if path == "twolevel" else 1 << 62
+    )
 
 
 def _write_corpus(seed: int, path) -> None:
@@ -78,15 +88,15 @@ def test_semdedup_twolevel_exact_when_supers_cover(spark, tmp_path, monkeypatch)
     forced 'matmul' AND the registered oracle byte-for-byte (the r10
     order-#2 equality pin)."""
     _write_corpus(7, tmp_path)
-    monkeypatch.setenv("SPARK_GRAFT_SEMDEDUP", "matmul")
+    _force_path(monkeypatch, "matmul")
     exact = sorted(
         tuple(map(str, r))
         for r in registry.QUERIES["dedup_semdedup_cells"](
             spark, str(tmp_path)
         ).collect()
     )
-    monkeypatch.setenv("SPARK_GRAFT_SEMDEDUP", "twolevel")
-    monkeypatch.setenv("SPARK_GRAFT_SEMDEDUP_SUPER", "100000")
+    _force_path(monkeypatch, "twolevel")
+    monkeypatch.setattr(llm, "_SEMDEDUP_SUPER_MIN", 100000)
     got = sorted(
         tuple(map(str, r))
         for r in registry.QUERIES["dedup_semdedup_cells"](
@@ -114,8 +124,7 @@ def test_semdedup_twolevel_properties(spark, tmp_path, monkeypatch):
     removed_id (the lower-id-wins rule), (4) the assignment stage maps
     every vector to exactly one valid seed cell."""
     _write_corpus(11, tmp_path)
-    monkeypatch.setenv("SPARK_GRAFT_SEMDEDUP", "twolevel")
-    monkeypatch.delenv("SPARK_GRAFT_SEMDEDUP_SUPER", raising=False)
+    _force_path(monkeypatch, "twolevel")
     q = registry.QUERIES["dedup_semdedup_cells"]
     r1 = sorted(tuple(r) for r in q(spark, str(tmp_path)).collect())
     r2 = sorted(tuple(r) for r in q(spark, str(tmp_path)).collect())

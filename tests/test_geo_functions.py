@@ -184,31 +184,6 @@ def test_geo_knn_dispatch_is_broadcast_at_driver_scale(spark, sf_dir):
     assert "BroadcastNestedLoopJoin" in plan
 
 
-def test_geo_knn_env_typo_raises(spark, sf_dir, monkeypatch):
-    """An unrecognized SPARK_GRAFT_GEO_KNN value (e.g. the typo 'GRID')
-    must raise, not silently fall back to the size dispatch and mask a
-    misconfigured stress re-measurement (judge r8 advice #3)."""
-    import pytest as _pytest
-
-    from duckdb_postgis_spark.operators import geo
-
-    monkeypatch.setenv("SPARK_GRAFT_GEO_KNN", "GRID")
-    with _pytest.raises(ValueError, match="SPARK_GRAFT_GEO_KNN"):
-        geo.geo_knn_join(spark, sf_dir)
-
-
-def test_semdedup_env_typo_raises(spark, sf_dir, monkeypatch):
-    """Same contract for SPARK_GRAFT_SEMDEDUP: a typo must not silently
-    change the assignment plan."""
-    import pytest as _pytest
-
-    from duckdb_postgis_spark.operators import llm
-
-    monkeypatch.setenv("SPARK_GRAFT_SEMDEDUP", "MATMUL")
-    with _pytest.raises(ValueError, match="SPARK_GRAFT_SEMDEDUP"):
-        llm.dedup_semdedup_cells(spark, sf_dir)
-
-
 def test_knn_exact_warns_past_ann_handoff(spark, sf_dir, monkeypatch):
     """knn_cosine_topk is exact O(n^2) by definition; past the documented
     ANN-handoff size it must WARN (naming the ANN family) but still build

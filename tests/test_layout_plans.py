@@ -342,6 +342,34 @@ def test_publish_racing_threads_publish_one_copy(tmp_path):
         assert os.listdir(os.path.dirname(path)) == ["artifact"]
 
 
+def test_token_tracks_parts_of_directory_tables(tmp_path):
+    """A directory-shaped table keys on its parts: rewriting one part in
+    place leaves the directory's own stat unchanged (its mtime is
+    restored here), yet the token must change.  A file-shaped table keeps
+    the ``name:size:mtime_ns`` spelling existing layout names carry."""
+    import hashlib
+    import os
+
+    from duckdb_postgis_spark.plans.layout import _token
+
+    table = tmp_path / "documents.parquet"
+    table.mkdir()
+    part = table / "part-0.parquet"
+    part.write_bytes(b"a" * 64)
+    dir_st = os.stat(table)
+    before = _token(str(tmp_path), "documents")
+    part.write_bytes(b"b" * 128)
+    os.utime(table, ns=(dir_st.st_atime_ns, dir_st.st_mtime_ns))
+    assert os.stat(table).st_mtime_ns == dir_st.st_mtime_ns
+    assert _token(str(tmp_path), "documents") != before
+
+    file_table = tmp_path / "orders.parquet"
+    file_table.write_bytes(b"x")
+    st = os.stat(file_table)
+    sig = f"{tmp_path}|orders:{st.st_size}:{st.st_mtime_ns}"
+    assert _token(str(tmp_path), "orders") == hashlib.md5(sig.encode()).hexdigest()[:16]
+
+
 def test_zorder_layout_skips_most_files(spark):
     """The Z-order clustering property itself: each output file's
     (user_id, ts) bounding rectangle is tight, so the query's rectangle
@@ -409,23 +437,25 @@ def test_delete_vectors_sidecar_not_rewrite(spark, sf_dir):
     assert not any(f.startswith(f"{root}/deletes/") for f in m3["files"])
 
 
+def _doc_ids(df) -> set[int]:
+    return {r["doc_id"] for r in df.select("doc_id").collect()}
+
+
 def test_delete_vectors_time_travel_isolation(spark, sf_dir):
-    """v2 read must be byte-identical to the plain snapshot read (old
-    snapshots cannot see younger delete vectors); v3 must drop exactly
-    the doc_id % 7 == 3 rows and nothing else."""
+    """v2 must still see every document (old snapshots cannot see
+    younger delete vectors); v3 must drop exactly the doc_id % 7 == 3
+    rows and nothing else.  Both memberships come from the predicate
+    over the base table, not from another snapshot read."""
     from duckdb_postgis_spark.plans.layout import (
         ensure_delete_vectors,
         read_snapshot,
-        read_snapshot_mor,
     )
 
     root = ensure_delete_vectors(spark, sf_dir)
-    v2_plain = {r["doc_id"] for r in read_snapshot(spark, root, 2).select("doc_id").collect()}
-    v2_mor = {r["doc_id"] for r in read_snapshot_mor(spark, root, 2).select("doc_id").collect()}
-    v3 = {r["doc_id"] for r in read_snapshot_mor(spark, root, 3).select("doc_id").collect()}
-    assert v2_mor == v2_plain
-    assert v3 == {d for d in v2_plain if d % 7 != 3}
-    assert any(d % 7 == 3 for d in v2_plain)  # the deletes are non-trivial
+    every = _doc_ids(spark.read.parquet(f"{sf_dir}/documents.parquet"))
+    assert _doc_ids(read_snapshot(spark, root, 2)) == every
+    assert _doc_ids(read_snapshot(spark, root, 3)) == {d for d in every if d % 7 != 3}
+    assert any(d % 7 == 3 for d in every)  # the deletes are non-trivial
 
 
 def test_delete_vectors_read_is_broadcast_anti(spark, sf_dir):
@@ -433,36 +463,34 @@ def test_delete_vectors_read_is_broadcast_anti(spark, sf_dir):
     LeftAnti join — O(|deletes|) moved, no exchange of the data side."""
     from duckdb_postgis_spark.plans.layout import (
         ensure_delete_vectors,
-        read_snapshot_mor,
+        read_snapshot,
     )
 
     root = ensure_delete_vectors(spark, sf_dir)
-    p = plan_of(read_snapshot_mor(spark, root, 3))
+    p = plan_of(read_snapshot(spark, root, 3))
     assert "BroadcastHashJoin" in p and "LeftAnti" in p, p
     data_side = p[: p.index("BroadcastExchange")]
     assert "hashpartitioning" not in data_side, p
 
 
 def test_equality_deletes_layered_after_positions(spark, sf_dir):
-    """v4 must drop the union of position-deleted rows and src1 rows; v3
-    read through the eq-aware reader must be identical to the plain MOR
-    read (older manifests carry no equality entry)."""
+    """v3 must see the position survivors only, src1 rows included (older
+    manifests carry no equality entry); v4 must drop the union of the
+    position-deleted rows and the src1 rows.  Both memberships come from
+    the predicates over the base table."""
     from duckdb_postgis_spark.plans.layout import (
         ensure_equality_deletes,
-        read_snapshot_mor,
-        read_snapshot_mor_eq,
+        read_snapshot,
     )
 
     root = ensure_equality_deletes(spark, sf_dir)
-    v3_plain = {r["doc_id"] for r in read_snapshot_mor(spark, root, 3).select("doc_id").collect()}
-    v3_eq = {r["doc_id"] for r in read_snapshot_mor_eq(spark, root, 3).select("doc_id").collect()}
-    assert v3_eq == v3_plain
-    v4 = read_snapshot_mor_eq(spark, root, 4)
-    rows = v4.select("doc_id", "source").collect()
-    assert all(r["source"] != "src1" for r in rows)
-    assert {r["doc_id"] for r in rows} == {
-        d for d in v3_plain
-    } - {r["doc_id"] for r in read_snapshot_mor(spark, root, 3).filter(F.col("source") == "src1").select("doc_id").collect()}
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    survivors = docs.filter(F.col("doc_id") % 7 != 3)
+    v3 = _doc_ids(read_snapshot(spark, root, 3))
+    assert v3 == _doc_ids(survivors)
+    src1 = _doc_ids(survivors.filter(F.col("source") == "src1"))
+    assert src1 and src1 <= v3  # the equality deletes are non-trivial
+    assert _doc_ids(read_snapshot(spark, root, 4)) == v3 - src1
 
 
 def test_manifest_writes_are_atomic(tmp_path):

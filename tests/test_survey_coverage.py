@@ -147,3 +147,32 @@ def test_oracle_coverage_floor():
     # booleans (the agg_approx_distinct pattern; see llm._pin_recall)
     rows_only = set(registry.QUERIES) - set(registry.ORACLES)
     assert not rows_only, f"unexpected rows-only queries: {rows_only}"
+
+
+def test_env_knob_inventory():
+    """Every environment variable the package reads, each by literal
+    name.  A new knob has to show up as an edit to this set; an env
+    access without a literal name fails the scan."""
+    import re
+    from pathlib import Path
+
+    import duckdb_postgis_spark
+
+    read = re.compile(
+        r"""\b(?:environ(?:\.get)?\s*[(\[]|getenv\s*\()\s*["']([A-Za-z0-9_]+)["']"""
+    )
+    access = re.compile(r"\b(?:environ|getenv)\b")
+    knobs = set()
+    for py in Path(duckdb_postgis_spark.__file__).parent.rglob("*.py"):
+        src = py.read_text()
+        names = read.findall(src)
+        assert len(names) == len(access.findall(src)), f"{py}: unnamed env access"
+        knobs.update(names)
+    assert knobs == {
+        "SPARK_GRAFT_CPUS",
+        "SPARK_MASTER",
+        "SPARK_SHUFFLE_PARTITIONS",
+        "SPARK_GRAFT_STREAM_CKPT_DIR",
+        "SPARK_GRAFT_STREAM_TIMEOUT",
+        "SPARK_GRAFT_ALLOW_QUADRATIC",
+    }
