@@ -2,9 +2,12 @@
 
 Mirrors the reference's single materialized table ``data``
 (``core_processor.rs:391-428``) generalized to a multi-table catalog.
-Parquet is self-describing, so like the reference's ``read_parquet`` path
-(``core_processor.rs:419-424``) no schema is declared — Spark's vectorized
-parquet reader supplies column pruning + predicate pushdown for free.
+Parquet is self-describing: like the reference, which takes a file's
+schema from its footer in its own process (``core_processor.rs:421``),
+``read_parquet`` reads the footer on the driver and declares the schema
+it holds, so registering a table launches no Spark job.  Spark's
+vectorized parquet reader still supplies column pruning + predicate
+pushdown.
 
 ``events.ts`` has shipped in two physical encodings across driver rounds
 (int64 nanos / TIMESTAMP(NANOS), then TIMESTAMP(MICROS)).  The loader
@@ -23,7 +26,12 @@ from functools import lru_cache
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, TimestampNTZType, TimestampType
+from pyspark.sql.types import (
+    LongType,
+    TimestampNTZType,
+    TimestampType,
+    _parse_datatype_json_string,
+)
 
 TABLES = (
     "region",
@@ -192,9 +200,9 @@ def rebuild_events_ts(df: DataFrame) -> DataFrame:
 #: size+mtime).  A base relation's DataFrame is just an analyzed logical
 #: plan — reusing it does NOT reuse any execution state (each downstream
 #: query builds a fresh physical plan → fresh RDDs → full re-execution),
-#: it only skips the repeated py4j read + parquet schema fetch (~30-60 ms
-#: per table per call).  This mirrors the DuckDB oracle setup, which
-#: registers its views over the same files once per session.  The
+#: it only skips the repeated py4j reader calls and driver-side footer
+#: read (a few ms per table per call).  This mirrors the DuckDB oracle
+#: setup, which registers its views over the same files once per session.  The
 #: size/mtime key drops the entry if the file is rewritten in place, the
 #: same staleness rule as the events-ts probe cache.
 _TABLE_CACHE: dict[tuple, DataFrame] = {}
@@ -236,6 +244,88 @@ def _table_num_rows_cached(path: str, _sig: tuple) -> int:
     return sum(frag.metadata.num_rows for frag in ds.fragments)
 
 
+def _hidden(name: str) -> bool:
+    """Spark's listing filter (``InMemoryFileIndex.shouldFilterOutPathName``):
+    names starting with ``_`` (unless a ``k=v`` partition directory) or
+    ``.`` and in-flight ``._COPYING_`` files are skipped; the Parquet
+    summary files ``_common_metadata`` / ``_metadata`` are kept."""
+    if name.startswith(("_common_metadata", "_metadata")):
+        return False
+    return (
+        (name.startswith("_") and "=" not in name)
+        or name.startswith(".")
+        or name.endswith("._COPYING_")
+    )
+
+
+def _schema_file(spark: SparkSession, conf, paths: tuple[str, ...]):
+    """The one file whose footer Spark's inference reads when
+    ``mergeSchema`` is off (``ParquetUtils.inferSchema``): over every leaf
+    file of every path, sorted by path string, a ``_common_metadata``
+    summary, else a ``_metadata`` summary, else the first data file.
+    Listed through each path's Hadoop ``FileSystem`` (globs expanded, as
+    the reader does), so any URI Spark reads works.  None when there is
+    no file."""
+    jvm = spark._jvm
+    leaves: dict[str, object] = {}
+
+    def walk(fs, status, root: bool) -> None:
+        path = status.getPath()
+        text = path.toString()
+        if not root and _hidden(text.rsplit("/", 1)[-1]):
+            return
+        if not status.isDirectory():
+            leaves[text] = path
+            return
+        for child in fs.listStatus(path):
+            walk(fs, child, False)
+
+    for p in paths:
+        jpath = jvm.org.apache.hadoop.fs.Path(p)
+        fs = jpath.getFileSystem(conf)
+        for status in fs.globStatus(jpath) or []:
+            walk(fs, status, True)
+    summaries = ("_common_metadata", "_metadata")
+    name = {t: t.rsplit("/", 1)[-1] for t in sorted(leaves)}
+    picks = [t for s in summaries for t in name if name[t] == s]
+    picks += [t for t in name if name[t] not in summaries]
+    return leaves[picks[0]] if picks else None
+
+
+def read_parquet(spark: SparkSession, *paths: str) -> DataFrame:
+    """``spark.read.parquet(*paths)`` without the schema-inference job.
+
+    Spark infers a parquet schema by reading one footer inside a one-task
+    job, on every read.  This reads the same footer on the driver and
+    converts it with the function that job runs
+    (``ParquetFileFormat.readSchemaFromFooter`` with a
+    ``ParquetToSparkSchemaConverter`` built from the session's current
+    SQLConf, so ``spark.sql.legacy.parquet.nanosAsLong`` and Spark's
+    embedded row metadata apply), then declares it to the reader.  The
+    schema, plan and rows are the inferred read's; partition columns are
+    still inferred from the directory names.  With no file to read (a
+    missing path, an empty directory) it is Spark's own inferred read, so
+    errors stay Spark's.  Reads that need every footer (``mergeSchema``)
+    do not belong here."""
+    state = spark._jsparkSession.sessionState()
+    conf = state.newHadoopConf()
+    path = _schema_file(spark, conf, paths)
+    if path is None:
+        return spark.read.parquet(*paths)
+    parquet = spark._jvm.org.apache.parquet
+    metadata = parquet.hadoop.ParquetFileReader.readFooter(
+        conf, path, parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+    )
+    spark_parquet = spark._jvm.org.apache.spark.sql.execution.datasources.parquet
+    schema = spark_parquet.ParquetFileFormat.readSchemaFromFooter(
+        parquet.hadoop.Footer(path, metadata),
+        spark_parquet.ParquetToSparkSchemaConverter(state.conf()),
+    )
+    return spark.read.schema(_parse_datatype_json_string(schema.json())).parquet(
+        *paths
+    )
+
+
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = f"{sf_dir}/{name}.parquet"
     try:
@@ -253,9 +343,9 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         _probe_events_ts(path)  # loud sanity gate, cached per path
         # harmless when ts is a real timestamp; required for legacy nanos
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = rebuild_events_ts(spark.read.parquet(path))
+        df = rebuild_events_ts(read_parquet(spark, path))
     else:
-        df = spark.read.parquet(path)
+        df = read_parquet(spark, path)
     _TABLE_CACHE[key] = df
     return df
 

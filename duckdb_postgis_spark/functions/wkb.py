@@ -18,6 +18,7 @@ a coordinate list, a ring list, or a list of child geometries.
 from __future__ import annotations
 
 import math
+import re
 import struct
 
 _EWKB_Z = 0x80000000
@@ -288,3 +289,95 @@ def _coords_wkt(coords) -> str:
 
 def _rings_wkt(rings) -> str:
     return "(" + ", ".join(_coords_wkt(r) for r in rings) + ")"
+
+
+# --------------------------------------------------------------------------
+# WKT decode (the inverse of to_wkt; ST_GeomFromText)
+# --------------------------------------------------------------------------
+_WKT_TOKEN = re.compile(r"\s*([A-Za-z]+|[-+0-9.][-+0-9.eE]*|[(),])")
+_WKT_KINDS = {k.upper(): k for k in _KINDS.values()}
+
+
+def from_wkt(text: str) -> Geom:
+    """Parse WKT of the seven standard types — what ``to_wkt`` emits —
+    back into a Geom.  Tags are case-insensitive, an EWKT ``SRID=n;``
+    prefix is skipped, and Z/M ordinates (``POINT Z (1 2 3)``,
+    ``POINTZ (1 2 3)``) are dropped to 2D like ``wkb_decode``; MULTIPOINT
+    members may be bare or parenthesized.  Raises ``ValueError`` on
+    anything else (EMPTY included)."""
+    body = re.sub(r"^\s*SRID=\d+;", "", text, flags=re.IGNORECASE)
+    toks, pos = [], 0
+    while pos < len(body.rstrip()):
+        m = _WKT_TOKEN.match(body, pos)
+        if m is None:
+            raise ValueError(f"bad WKT near {body[pos:pos + 20]!r}")
+        toks.append(m.group(1))
+        pos = m.end()
+    toks.reverse()  # pop() from the end
+
+    def take(want: str | None = None) -> str:
+        if not toks:
+            raise ValueError("truncated WKT")
+        tok = toks.pop()
+        if want is not None and tok != want:
+            raise ValueError(f"expected {want!r} in WKT, got {tok!r}")
+        return tok
+
+    def listed(item) -> list:
+        take("(")
+        out = [item()]
+        while (sep := take()) == ",":
+            out.append(item())
+        if sep != ")":
+            raise ValueError(f"expected ',' or ')' in WKT, got {sep!r}")
+        return out
+
+    def coord() -> tuple[float, float]:
+        vals = []
+        while toks and toks[-1] not in ("(", ")", ","):
+            vals.append(float(take()))
+        if not 2 <= len(vals) <= 4:
+            raise ValueError(f"WKT coordinate with {len(vals)} ordinates")
+        return (vals[0], vals[1])
+
+    def coords() -> list[tuple[float, float]]:
+        return listed(coord)
+
+    def rings() -> list[list[tuple[float, float]]]:
+        return listed(coords)
+
+    def point() -> tuple[float, float]:
+        take("(")
+        pt = coord()
+        take(")")
+        return pt
+
+    def member_point() -> Geom:
+        return ("Point", point() if toks[-1:] == ["("] else coord())
+
+    def geom() -> Geom:
+        # the dimension tag may be fused (POINTZ) or separate (POINT Z)
+        tag = re.fullmatch(r"([A-Z]+?)(ZM|Z|M)?", take().upper())
+        kind = _WKT_KINDS.get(tag.group(1)) if tag else None
+        if kind is None:
+            raise ValueError(f"unsupported WKT geometry in {text[:40]!r}")
+        if toks and toks[-1].upper() in ("Z", "M", "ZM"):
+            take()
+        if kind == "Point":
+            return (kind, point())
+        if kind == "LineString":
+            return (kind, coords())
+        if kind == "Polygon":
+            return (kind, rings())
+        if kind == "MultiPoint":
+            return (kind, listed(member_point))
+        if kind == "MultiLineString":
+            return (kind, [("LineString", c) for c in listed(coords)])
+        if kind == "MultiPolygon":
+            return (kind, [("Polygon", r) for r in listed(rings)])
+        return (kind, listed(geom))
+
+    g = geom()
+    if toks:
+        raise ValueError(f"trailing text after WKT geometry in {text[:40]!r}")
+    return g

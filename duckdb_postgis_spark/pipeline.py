@@ -27,7 +27,6 @@ from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 
 from duckdb_postgis_spark.functions.geo import (
     classify_crs_from_ranges,
-    parse_wkt_point,
     probe_geometry_encoding,
     transform_xy,
     wkt_point,
@@ -214,11 +213,17 @@ def transform_geom_columns(
     """``SELECT * EXCLUDE(geoms), ST_AsText(ST_Force2D(ST_Transform(...)))``
     (geo_strategy.rs:256-311): every geometry column becomes a 2D WKT
     EPSG:4326 ``<col>_wkt`` in one Arrow-batched pass; original geometry
-    columns are dropped. Full geometry shape is preserved — WKB of any
-    standard type decodes, reprojects coordinate-by-coordinate and re-emits
-    as WKT (functions/wkb.py); unparseable values become NULL like the
-    Postgres-side safe_geom_from_text (geo_strategy.rs:373-381)."""
-    from duckdb_postgis_spark.functions.wkb import to_wkt, transform_geom, wkb_decode
+    columns are dropped. Full geometry shape is preserved — WKB (bytes or
+    hex) or WKT text of any standard type decodes, reprojects
+    coordinate-by-coordinate and re-emits as WKT (functions/wkb.py);
+    unparseable values become NULL like the Postgres-side
+    safe_geom_from_text (geo_strategy.rs:373-381)."""
+    from duckdb_postgis_spark.functions.wkb import (
+        from_wkt,
+        to_wkt,
+        transform_geom,
+        wkb_decode,
+    )
 
     def convert(it):
         import pandas as pd
@@ -234,10 +239,10 @@ def transform_geom_columns(
                 try:
                     geom = wkb_decode(bytes.fromhex(val.strip()))
                 except Exception:
-                    xy = parse_wkt_point(val)
-                    if xy is None:
+                    try:
+                        geom = from_wkt(val)
+                    except ValueError:
                         return None
-                    geom = ("Point", xy)
             if geom is None:
                 return None
             if src_crs != _TARGET_CRS:

@@ -41,7 +41,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from duckdb_postgis_spark.catalog import _staleness_sig, table
+from duckdb_postgis_spark.catalog import _staleness_sig, read_parquet, table
 from duckdb_postgis_spark.functions.num import dsum, sql_dsum
 from duckdb_postgis_spark.registry import query
 from duckdb_postgis_spark.session import session_conf
@@ -208,7 +208,7 @@ def ensure_events_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     publish(path, build)
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)
 
 
 @query(
@@ -310,7 +310,7 @@ def ensure_training_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     publish(path, build)
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)
 
 
 @query(
@@ -384,7 +384,7 @@ def ensure_compacted_docs(spark: SparkSession, sf_dir: str) -> str:
 
     def build(tmp: str) -> None:
         (
-            spark.read.parquet(frag)
+            read_parquet(spark, frag)
             .repartition("lang")
             .write.partitionBy("lang")
             .mode("overwrite")
@@ -415,7 +415,7 @@ def maintenance_compact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame
     shrinkage is asserted in tests/test_layout_plans.py."""
     path = ensure_compacted_docs(spark, sf_dir)
     return (
-        spark.read.parquet(path)
+        read_parquet(spark, path)
         .groupBy("lang")
         .agg(
             F.count("*").alias("n_docs"),
@@ -595,7 +595,7 @@ def _similarity_search_ivf_pruned_approx(
         return pd.Series(M @ Q)
 
     return (
-        spark.read.parquet(path)
+        read_parquet(spark, path)
         .filter(F.col("cell").isin(probe_cells) & (F.col("vec_id") != 0))
         .withColumn("cosine_raw", qcos("embedding"))
         .orderBy(F.col("cosine_raw").desc(), "vec_id")
@@ -704,7 +704,7 @@ def read_snapshot(spark: SparkSession, root: str, version: int) -> DataFrame:
     time travel never sees it.  A manifest with neither entry is a bare
     scan."""
     manifest = _manifest(root, version)
-    df = spark.read.parquet(*manifest["files"])
+    df = read_parquet(spark, *manifest["files"])
     dv_dir = manifest.get("delete_vectors")
     if dv_dir:
         with_meta = df.select(
@@ -712,7 +712,7 @@ def read_snapshot(spark: SparkSession, root: str, version: int) -> DataFrame:
             F.col("_metadata.file_path").alias("_fp"),
             F.col("_metadata.row_index").alias("_ri"),
         )
-        dv = spark.read.parquet(dv_dir).select(
+        dv = read_parquet(spark, dv_dir).select(
             F.col("file_path").alias("_fp"), F.col("row_index").alias("_ri")
         )
         df = with_meta.join(F.broadcast(dv), ["_fp", "_ri"], "left_anti").drop(
@@ -720,7 +720,7 @@ def read_snapshot(spark: SparkSession, root: str, version: int) -> DataFrame:
         )
     eq = manifest.get("equality_deletes")
     if eq:
-        keys = spark.read.parquet(eq["path"])
+        keys = read_parquet(spark, eq["path"])
         df = df.join(F.broadcast(keys), eq["keys"], "left_anti")
     return df
 
@@ -905,7 +905,7 @@ def events_zorder_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     reach the scan as PushedFilters).  Values oracle-checked against the
     unclustered original."""
     path = ensure_events_zorder(spark, sf_dir)
-    ev = spark.read.parquet(path)
+    ev = read_parquet(spark, path)
     return (
         ev.filter(
             (F.col("user_id").between(10, 19))
@@ -1070,7 +1070,7 @@ def lakehouse_manifest_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     v1 = set(_manifest(root, 1)["files"])
     v2 = _manifest(root, 2)["files"]
     added = sorted(set(v2) - v1)
-    delta = spark.read.parquet(*added)
+    delta = read_parquet(spark, *added)
     return (
         delta.groupBy("lang")
         .agg(
@@ -1200,7 +1200,7 @@ def maintenance_vacuum_orphans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def digest(files: list[str], status: str) -> DataFrame:
         return (
-            spark.read.parquet(*files)
+            read_parquet(spark, *files)
             .agg(
                 F.count(F.lit(1)).alias("n_rows"),
                 F.sum("n_chars").alias("total_chars"),
@@ -1237,7 +1237,7 @@ def ensure_delete_vectors(spark: SparkSession, sf_dir: str) -> str:
     def delete_positions(prev: dict) -> dict:
         dv_dir = f"{root}/deletes/dv-3"
         _write_parts(
-            spark.read.parquet(*prev["files"])
+            read_parquet(spark, *prev["files"])
             .select(
                 F.col("doc_id"),
                 F.col("_metadata.file_path").alias("file_path"),
@@ -1502,7 +1502,7 @@ def maintenance_expire_snapshots(spark: SparkSession, sf_dir: str) -> DataFrame:
         for v in versions
     ]
     parts.append(
-        digest(spark.read.parquet(*deletable), "deletable-data", "reclaimable")
+        digest(read_parquet(spark, *deletable), "deletable-data", "reclaimable")
     )
     out = parts[0]
     for p in parts[1:]:
@@ -1640,4 +1640,4 @@ def _manifest_pruned_events(
     keep, _total = manifest_pruned_paths(root, "user_id", lo, hi)
     if not keep:
         keep = [_manifest(root, "stats")["files"][0]["path"]]
-    return spark.read.parquet(*keep).filter(F.col("user_id").between(lo, hi))
+    return read_parquet(spark, *keep).filter(F.col("user_id").between(lo, hi))

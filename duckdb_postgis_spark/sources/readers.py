@@ -3,11 +3,11 @@ core_processor.rs:391-428, re-expressed per format).
 
 Distributed formats (Parquet, CSV, GeoJSON) read through Spark's native
 sources — pushdown/pruning/splitting apply, so they scale to cluster-sized
-inputs. Driver-side formats (GeoPackage via stdlib sqlite3, zipped point
-Shapefiles via a minimal pure-python codec, Excel gated on openpyxl) are
-ingested on the driver then parallelized — matching the reference's own
-profile, where these arrive as single small files; for 100 TB geo data,
-pre-convert to (geo)parquet.
+inputs. Driver-side formats (GeoPackage via stdlib sqlite3, zipped
+Shapefiles via a minimal pure-python codec, Excel via stdlib zip/XML or a
+BIFF8 walk) are parsed on the driver into an Arrow-backed local relation —
+matching the reference's own profile, where these arrive as single small
+files; for 100 TB geo data, pre-convert to (geo)parquet.
 """
 
 from __future__ import annotations
@@ -22,6 +22,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from duckdb_postgis_spark.catalog import read_parquet
 from duckdb_postgis_spark.session import keep, release
 from duckdb_postgis_spark.sources.sniffer import (
     FileType,
@@ -36,7 +37,7 @@ def read_file(
     """Dispatch mirroring core_processor.rs:391-428."""
     ft = file_type or determine_file_type(path)
     if ft is FileType.PARQUET:
-        return spark.read.parquet(path)
+        return read_parquet(spark, path)
     if ft is FileType.CSV:
         return read_csv(spark, path)
     if ft is FileType.GEOJSON:
@@ -161,6 +162,32 @@ def _has_field(df: DataFrame, field: str) -> bool:
         return False
 
 
+def _local_frame(spark: SparkSession, records: list[dict]) -> DataFrame:
+    """Driver-built rows as an Arrow-backed local relation.
+
+    ``createDataFrame(list_of_dicts)`` plans a ``Scan ExistingRDD`` whose
+    pickled rows every query over the frame decodes again; an Arrow table
+    plans a ``LocalTableScan``.  Columns come in the order PySpark's dict
+    inference gives them (each row's keys sorted, new keys appended), and
+    the five Arrow types below map to the Spark types that inference
+    picks, all nullable (a column mixing ints and floats, which that
+    inference rejects, becomes double).  Any other column — text mixed
+    with other values, which PySpark widens to string, an all-NULL
+    column, which it refuses, or a type whose mapping differs — sends the
+    rows through PySpark's own inference as before."""
+    import pyarrow as pa
+
+    keys = dict.fromkeys(k for r in records for k in sorted(r))
+    try:
+        table = pa.table({k: pa.array([r.get(k) for r in records]) for k in keys})
+    except (pa.ArrowException, OverflowError):
+        return spark.createDataFrame(records)
+    same = (pa.int64(), pa.float64(), pa.string(), pa.binary(), pa.bool_())
+    if not all(t in same for t in table.schema.types):
+        return spark.createDataFrame(records)
+    return spark.createDataFrame(table)
+
+
 # --------------------------------------------------------------------------
 # GeoPackage (SQLite container) — stdlib sqlite3, no GDAL
 # --------------------------------------------------------------------------
@@ -202,7 +229,9 @@ def read_geopackage(
         if epsg is not None:
             rec["crs_epsg"] = epsg
         records.append(rec)
-    return spark.createDataFrame(records) if records else spark.createDataFrame([], schema=", ".join(f"`{c}` string" for c in cols))
+    if not records:
+        return spark.createDataFrame([], schema=", ".join(f"`{c}` string" for c in cols))
+    return _local_frame(spark, records)
 
 
 def _gpkg_epsg(con: sqlite3.Connection, tbl: str) -> str | None:
@@ -284,7 +313,7 @@ def read_zipped_shapefile(spark: SparkSession, zip_path: str) -> DataFrame:
         return spark.createDataFrame(
             [], schema="x double, y double, geometry_wkb binary, crs_epsg string"
         )
-    return spark.createDataFrame(records)
+    return _local_frame(spark, records)
 
 
 def _parse_shp_geoms(shp: bytes) -> list[bytes | None]:
@@ -504,8 +533,10 @@ def read_excel(spark: SparkSession, path: str) -> DataFrame:
             [], schema=", ".join(f"`{c}` string" for c in header) or "c0 string"
         )
     # both formats store every number as a double; cells that happened to
-    # be integral decoded as int — re-widen any column that mixes both so
-    # Spark's schema inference sees one type per column
+    # be integral decoded as int — re-widen any column that mixes both.
+    # Arrow would widen them itself, but a column that also holds text
+    # falls back to PySpark's inference, whose string form of 2 is "2"
+    # and of 2.0 is "2.0"
     for i in range(len(header)):
         vals = [row[i] for row in data]
         if any(isinstance(v, float) for v in vals) and any(
@@ -514,9 +545,9 @@ def read_excel(spark: SparkSession, path: str) -> DataFrame:
             for row in data:
                 if type(row[i]) is int:
                     row[i] = float(row[i])
-    return spark.createDataFrame(
-        [dict(zip(header, row)) for row in data]
-    ).select(*header)
+    return _local_frame(spark, [dict(zip(header, row)) for row in data]).select(
+        *header
+    )
 
 
 _XLSX_NS = "{http://schemas.openxmlformats.org/spreadsheetml/2006/main}"

@@ -25,7 +25,11 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from duckdb_postgis_spark.catalog import _probe_events_ts, rebuild_events_ts
+from duckdb_postgis_spark.catalog import (
+    _probe_events_ts,
+    read_parquet,
+    rebuild_events_ts,
+)
 from duckdb_postgis_spark.functions.num import dsum, sql_dsum
 from duckdb_postgis_spark.operators.relational import (
     _CMS_D,
@@ -52,7 +56,8 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = f"{sf_dir}/events.parquet"
     _probe_events_ts(path)  # loud min/max sanity gate, cached per path
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = spark.read.parquet(path).schema  # footer-only, no scan
+    # driver-side footer read: no scan and no Spark job
+    raw_schema = read_parquet(spark, path).schema
     raw = (
         spark.readStream.schema(raw_schema)
         .option("maxFilesPerTrigger", 1)
@@ -815,7 +820,7 @@ def q_stream_upsert_live(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def merge(batch: DataFrame, batch_id: int) -> None:
         s = batch.sparkSession
-        snap = s.read.parquet(paths[state["cur"]])
+        snap = read_parquet(s, paths[state["cur"]])
         merged = upsert_merge(snap, batch)
         nxt = 1 - state["cur"]
         merged.write.mode("overwrite").parquet(paths[nxt])
@@ -835,7 +840,7 @@ def q_stream_upsert_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.read.parquet(paths[state["cur"]])
+    return read_parquet(spark, paths[state["cur"]])
 
 
 # --------------------------------------------------------------------------

@@ -28,9 +28,11 @@ def _fast_tier_skips(item) -> bool:
     cs = getattr(item, "callspec", None)
     if cs is None:
         return False
-    seed = cs.params.get("seed")
-    if isinstance(seed, int) and seed >= _FAST_SEEDS:
-        return True
+    seeded = item.get_closest_marker("seeded")
+    if seeded is not None:
+        seed = cs.params.get(seeded.args[0])
+        if isinstance(seed, int) and seed >= _FAST_SEEDS:
+            return True
     if item.fspath.basename == "test_oracle_parity.py":
         name = cs.params.get("name")
         if isinstance(name, str) and name not in _ALWAYS_FAST_PARITY:
@@ -52,10 +54,11 @@ def pytest_collection_modifyitems(config, items):
     the driver's verify window (the full ~66-minute suite was cut off at
     ~33% in VERIFY_r13, leaving tests_ok unverifiable — r13 verdict order
     #2).  Deselected by policy: @pytest.mark.slow items, fuzz seeds ≥
-    _FAST_SEEDS (every seeded family keeps its first corpus, seed 0, as
-    smoke coverage), all but a deterministic 1-in-8 name-hash spread of
-    the oracle-parity cases (the _ALWAYS_FAST_PARITY queries always
-    stay), and all but a 1-in-4 name-hash spread of the plan-lint cases.
+    _FAST_SEEDS of every family marked @pytest.mark.seeded(argname)
+    (each keeps its first corpus, seed 0, as smoke coverage), all but a
+    deterministic 1-in-8 name-hash spread of the oracle-parity cases (the
+    _ALWAYS_FAST_PARITY queries always stay), and all but a 1-in-4
+    name-hash spread of the plan-lint cases.
     The FULL suite remains the round-close gate: SPARK_GRAFT_FULL_TESTS=1
     disables all deselection."""
     if os.environ.get("SPARK_GRAFT_FULL_TESTS"):

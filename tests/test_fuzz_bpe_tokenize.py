@@ -30,6 +30,8 @@ import pytest
 from duckdb_postgis_spark import registry
 from duckdb_postgis_spark.operators.llm import _BPE_VOCAB
 
+pytestmark = pytest.mark.seeded("seed")
+
 registry.load_all()
 
 SEEDS = range(40)

@@ -23,6 +23,8 @@ import pytest
 
 from duckdb_postgis_spark.operators import llm
 
+pytestmark = pytest.mark.seeded("seed")
+
 SEEDS = range(40)
 EXACT_N = 120  # lowered threshold: seeds above it take the banded branch
 

@@ -17,6 +17,8 @@ import random
 
 import pytest
 
+pytestmark = pytest.mark.seeded("seed")
+
 
 def _corpus(seed: int):
     rng = random.Random(8000 + seed)

@@ -29,6 +29,8 @@ import pytest
 
 from duckdb_postgis_spark import registry
 
+pytestmark = pytest.mark.seeded("seed")
+
 registry.load_all()
 
 SEEDS = range(40)

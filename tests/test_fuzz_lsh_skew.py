@@ -25,6 +25,8 @@ from pyspark.sql import functions as F
 
 from duckdb_postgis_spark.operators import llm
 
+pytestmark = pytest.mark.seeded("seed")
+
 
 def _docs_df(spark, texts):
     return spark.createDataFrame(

@@ -29,6 +29,8 @@ from duckdb_postgis_spark.plans.layout import (
     manifest_pruned_paths,
 )
 
+pytestmark = pytest.mark.seeded("seed")
+
 SEEDS = range(40)
 
 

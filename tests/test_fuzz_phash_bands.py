@@ -22,6 +22,8 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
+pytestmark = pytest.mark.seeded("seed")
+
 
 def _bands(bits: np.ndarray) -> list[int]:
     """The operator's band packer: 4 bands of 16 little-endian bits."""

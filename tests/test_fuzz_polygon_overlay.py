@@ -28,6 +28,8 @@ import pytest
 
 from duckdb_postgis_spark.operators import geo
 
+pytestmark = pytest.mark.seeded("seed")
+
 SEEDS = range(40)
 
 

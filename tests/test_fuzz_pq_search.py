@@ -25,6 +25,8 @@ import pytest
 
 from duckdb_postgis_spark.operators import llm
 
+pytestmark = pytest.mark.seeded("seed")
+
 SEEDS = range(40)
 
 

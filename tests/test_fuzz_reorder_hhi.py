@@ -25,6 +25,8 @@ import pytest
 
 from duckdb_postgis_spark import registry
 
+pytestmark = pytest.mark.seeded("seed")
+
 registry.load_all()
 
 _T0 = dt.datetime(2024, 10, 1, 0, 0, 0)

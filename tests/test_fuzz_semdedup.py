@@ -25,6 +25,8 @@ import pytest
 from duckdb_postgis_spark import registry
 from duckdb_postgis_spark.operators import llm
 
+pytestmark = pytest.mark.seeded("seed")
+
 registry.load_all()
 
 SEEDS = range(40)

@@ -38,6 +38,8 @@ from pyspark.sql import functions as F
 
 from duckdb_postgis_spark.streaming.streams import run_available_now
 
+pytestmark = pytest.mark.seeded("seed")
+
 _EPOCH = dt.datetime(2024, 3, 1)
 
 

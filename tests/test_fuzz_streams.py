@@ -30,6 +30,8 @@ from duckdb_postgis_spark.streaming.streams import (
 )
 from tests.oracle_harness import normalize, run_oracle
 
+pytestmark = pytest.mark.seeded("seed")
+
 SEEDS = 12
 
 

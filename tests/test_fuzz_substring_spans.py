@@ -23,6 +23,8 @@ import pytest
 from duckdb_postgis_spark import registry
 from duckdb_postgis_spark.operators import training
 
+pytestmark = pytest.mark.seeded("seed")
+
 registry.load_all()
 
 SEEDS = range(40)

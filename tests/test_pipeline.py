@@ -430,3 +430,44 @@ def test_geojson_all_geometry_types_to_wkt(spark, tmp_path):
     assert rows["pt"] == "POINT (121.123456 31.2304)"
     assert rows["line"] == "LINESTRING (0 0, 1.5 2.25)"
     assert rows["poly"] == "POLYGON ((0 0, 0 2, 2 2, 2 0, 0 0))"
+
+
+def test_geojson_non_point_wkt_survives_process_file(spark, tmp_path):
+    """process_file's WKT column equals the reader's geometry_wkt for every
+    geometry type of a lon/lat GeoJSON (EPSG:4326 in and out), not only
+    for points."""
+    import json
+
+    from duckdb_postgis_spark.sources.readers import read_geojson
+
+    ring = [[-0.2, 51.4], [-0.1, 51.4], [-0.1, 51.5], [-0.2, 51.4]]
+    geoms = [
+        {"type": "Point", "coordinates": [-0.1275, 51.50722]},
+        {"type": "LineString", "coordinates": [[-0.2, 51.4], [-0.1, 51.45]]},
+        {"type": "Polygon", "coordinates": [ring]},
+        {"type": "MultiPoint", "coordinates": [[-0.2, 51.4], [-0.15, 51.45]]},
+        {"type": "MultiLineString", "coordinates": [ring[:2], ring[1:3]]},
+        {"type": "MultiPolygon", "coordinates": [[ring], [ring]]},
+        {
+            "type": "GeometryCollection",
+            "geometries": [
+                {"type": "Point", "coordinates": [-0.12, 51.5]},
+                {"type": "LineString", "coordinates": ring[:3]},
+            ],
+        },
+    ]
+    fc = {
+        "type": "FeatureCollection",
+        "features": [
+            {"type": "Feature", "properties": {"id": i}, "geometry": g}
+            for i, g in enumerate(geoms)
+        ],
+    }
+    p = tmp_path / "mixed.geojson"
+    p.write_text(json.dumps(fc))
+    want = {r["id"]: r["geometry_wkt"] for r in read_geojson(spark, str(p)).collect()}
+    res = process_file(spark, str(p))
+    assert res.source_crs == "4326"
+    got = {r["id"]: r["geometry_wkt_wkt"] for r in res.dataframe.collect()}
+    assert None not in want.values()
+    assert got == want

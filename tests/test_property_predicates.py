@@ -18,6 +18,8 @@ from duckdb_postgis_spark.catalog import table
 from duckdb_postgis_spark.functions.num import dsum, sql_dsum
 from tests.oracle_harness import normalize, run_oracle
 
+pytestmark = pytest.mark.seeded("seed")
+
 
 def _gen_clauses(rng: random.Random):
     """Yield (spark_col, sql_text) pairs built from one random choice."""

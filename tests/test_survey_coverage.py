@@ -176,3 +176,52 @@ def test_env_knob_inventory():
         "SPARK_GRAFT_STREAM_TIMEOUT",
         "SPARK_GRAFT_ALLOW_QUADRATIC",
     }
+
+
+def test_parquet_read_site_inventory():
+    """Every batch parquet read in the package goes through
+    ``catalog.read_parquet``, which declares the footer's schema so the
+    read launches no inference job.  The only reads left on Spark's own
+    inference: the helper's no-file fallback, ``catalog.table``'s
+    PATH_NOT_FOUND fallback and the ``mergeSchema`` read, which needs
+    every footer.  Each site is (file, enclosing function, the reader
+    calls between ``.read`` and ``.parquet``)."""
+    import ast
+    from pathlib import Path
+
+    import duckdb_postgis_spark
+
+    class Reads(ast.NodeVisitor):
+        def __init__(self, rel: str):
+            self.rel, self.fn, self.sites = rel, "<module>", []
+
+        def visit_FunctionDef(self, node):
+            outer, self.fn = self.fn, node.name
+            self.generic_visit(node)
+            self.fn = outer
+
+        def visit_Call(self, node):
+            f = node.func
+            if isinstance(f, ast.Attribute) and f.attr == "parquet":
+                chain, inner = [], f.value
+                while isinstance(inner, ast.Call):
+                    if not isinstance(inner.func, ast.Attribute):
+                        break
+                    chain.insert(0, inner.func.attr)
+                    inner = inner.func.value
+                if isinstance(inner, ast.Attribute) and inner.attr == "read":
+                    self.sites.append((self.rel, self.fn, tuple(chain)))
+            self.generic_visit(node)
+
+    root = Path(duckdb_postgis_spark.__file__).parent
+    sites = []
+    for py in root.rglob("*.py"):
+        v = Reads(py.relative_to(root).as_posix())
+        v.visit(ast.parse(py.read_text()))
+        sites += v.sites
+    assert sorted(sites) == [
+        ("catalog.py", "read_parquet", ()),
+        ("catalog.py", "read_parquet", ("schema",)),
+        ("catalog.py", "table", ()),
+        ("plans/layout.py", "schema_evolution_read", ("option",)),
+    ]

@@ -13,6 +13,7 @@ import pytest
 
 from duckdb_postgis_spark.functions.wkb import (
     centroid,
+    from_wkt,
     to_wkt,
     transform_geom,
     wkb_decode,
@@ -117,6 +118,59 @@ def test_wkt_rejects_non_finite():
 
 # --------------------------------------------------------------------------
 # hypothesis fuzz: WKB encode/decode round-trips for arbitrary coordinates
+_SQ = [(0.5, 0.0), (10.25, 0.0), (10.25, 10.0), (0.5, 10.0), (0.5, 0.0)]
+_HOLE = [(2.0, 2.0), (4.0, 2.0), (4.0, 4.0), (2.0, 2.0)]
+_GEOMS = [
+    ("Point", (-0.1275, 51.50722)),
+    ("LineString", [(0.0, 0.0), (1.5, 2.25), (-3e-07, 1e21)]),
+    ("Polygon", [_SQ, _HOLE]),
+    ("MultiPoint", [("Point", (1.0, 2.0)), ("Point", (3.5, -4.0))]),
+    ("MultiLineString", [("LineString", _SQ[:2]), ("LineString", _HOLE)]),
+    ("MultiPolygon", [("Polygon", [_SQ, _HOLE]), ("Polygon", [_HOLE])]),
+    (
+        "GeometryCollection",
+        [
+            ("Point", (1.0, 2.0)),
+            ("Polygon", [_SQ]),
+            ("MultiPoint", [("Point", (0.0, 0.0))]),
+        ],
+    ),
+]
+
+
+@pytest.mark.parametrize("g", _GEOMS, ids=[g[0] for g in _GEOMS])
+def test_from_wkt_inverts_to_wkt(g):
+    wkt = to_wkt(g)
+    assert to_wkt(from_wkt(wkt)) == wkt
+    assert from_wkt(wkt) == g
+
+
+def test_from_wkt_accepted_spellings():
+    assert from_wkt("point(1 2)") == ("Point", (1.0, 2.0))
+    assert from_wkt("SRID=27700;POINT Z (1 2 3)") == ("Point", (1.0, 2.0))
+    assert from_wkt("LINESTRINGM (0 0 7, 1 1 8)") == (
+        "LineString",
+        [(0.0, 0.0), (1.0, 1.0)],
+    )
+    assert from_wkt("MULTIPOINT ((1 2), (3 4))") == from_wkt("MULTIPOINT (1 2, 3 4)")
+
+
+@pytest.mark.parametrize(
+    "text",
+    [
+        "POINT EMPTY",
+        "POINT (1)",
+        "POINT (1 2) x",
+        "POLYGON ((0 0, 1 1)",
+        "CIRCLE (0 0)",
+        "",
+    ],
+)
+def test_from_wkt_rejects(text):
+    with pytest.raises(ValueError):
+        from_wkt(text)
+
+
 # --------------------------------------------------------------------------
 from hypothesis import given, settings
 from hypothesis import strategies as st
