@@ -1,4 +1,7 @@
-"""Exact-arithmetic helpers for DuckDB-oracle value-hash parity.
+"""Exact-arithmetic expressions for DuckDB-oracle value-hash parity.
+
+Each expression is written once, as SQL text that both engines parse: the
+oracle embeds it in its query, the Spark side wraps it in ``F.expr``.
 
 Problem: ``SUM(double)`` accumulates rounding error whose low bits depend on
 partition/accumulation order, so Spark and DuckDB disagree in the last few
@@ -19,49 +22,32 @@ Averages are expressed as exact-sum / count in ONE double division:
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
 MONEY = "decimal(18,2)"
 
 
-def dec(col: Column | str, scale: int = 2) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return c.cast(f"decimal(18,{scale})")
+def sql_dsum(expr: str) -> str:
+    """Exact sum of a money double, surfaced as double."""
+    return f"CAST(SUM(CAST({expr} AS DECIMAL(18,2))) AS DOUBLE)"
 
 
-def dsum(col: Column | str, scale: int = 2) -> Column:
-    """Exact sum of a fixed-point double column, surfaced as double."""
-    return F.sum(dec(col, scale)).cast("double")
-
-
-def davg(col: Column | str, scale: int = 2) -> Column:
+def sql_davg(expr: str) -> str:
     """Exact-sum / count average — deterministic double on both engines."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.sum(dec(c, scale)).cast("double") / F.count(c)
-
-
-def sql_dsum(expr: str, scale: int = 2) -> str:
-    return f"CAST(SUM(CAST({expr} AS DECIMAL(18,{scale}))) AS DOUBLE)"
-
-
-def sql_davg(expr: str, scale: int = 2) -> str:
-    return f"CAST(SUM(CAST({expr} AS DECIMAL(18,{scale}))) AS DOUBLE) / COUNT({expr})"
+    return f"CAST(SUM(CAST({expr} AS DECIMAL(18,2))) AS DOUBLE) / COUNT({expr})"
 
 
 # --------------------------------------------------------------------------
-# Long-domain exact money arithmetic (round 6) — same bit-exact cross-engine
+# Long-domain exact money arithmetic — same bit-exact cross-engine
 # guarantee as the DECIMAL convention above, but the hot path stays on the
 # JVM's 64-bit integer fast lane instead of BigDecimal.
 #
 # Why: Spark's Decimal is long-backed only up to precision 18; every product
 # or SUM that widens past 18 digits falls off whole-stage codegen's compact
 # representation into per-row java.math.BigDecimal — measured 2-4× slower on
-# the TPC-H Q1 shape at sf0.1.  ``cents`` maps a k-decimal-digit money
+# the TPC-H Q1 shape at sf0.1.  ``sql_cents`` maps a 2-decimal-digit money
 # double to its exact integer representation: the stored double is the
-# nearest double to n/10^k, so x*10^k lands within ~1e-9 of the integer n
-# and FLOOR(x*10^k + 0.5) recovers n exactly (positive or negative, incl.
-# the exactly-representable quarters where x*10^k == n precisely).  Both
+# nearest double to n/100, so x*100 lands within ~1e-9 of the integer n
+# and FLOOR(x*100 + 0.5) recovers n exactly (positive or negative, incl.
+# the exactly-representable quarters where x*100 == n precisely).  Both
 # engines evaluate the identical IEEE expression → identical longs →
 # exact integer SUMs → the final double division is the same nearest-even
 # rounding on both sides.  No tolerance needed, same as the DECIMAL path.
@@ -77,56 +63,55 @@ def sql_davg(expr: str, scale: int = 2) -> str:
 _SPLIT_RADIX = 1 << 20
 
 
-def cents(col: Column | str, scale: int = 2) -> Column:
-    """Exact integer (long) representation of a fixed-point money double."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.floor(c * F.lit(float(10**scale)) + F.lit(0.5))
+def sql_cents(expr: str) -> str:
+    """Exact integer (long) representation of a money double."""
+    return f"CAST(FLOOR({expr} * 100.0 + 0.5) AS BIGINT)"
 
 
-def sql_cents(expr: str, scale: int = 2) -> str:
-    return f"CAST(FLOOR({expr} * {float(10 ** scale)} + 0.5) AS BIGINT)"
+def sql_lsum(expr: str) -> str:
+    """Exact sum of a money double via long cents, as double."""
+    return f"(CAST(SUM({sql_cents(expr)}) AS DOUBLE) / 100.0)"
 
 
-def lsum(col: Column | str, scale: int = 2) -> Column:
-    """Exact sum of a fixed-point double column via long cents, as double."""
-    return F.sum(cents(col, scale)).cast("double") / F.lit(float(10**scale))
-
-
-def sql_lsum(expr: str, scale: int = 2) -> str:
-    return f"(CAST(SUM({sql_cents(expr, scale)}) AS DOUBLE) / {float(10 ** scale)})"
-
-
-def lavg(col: Column | str, scale: int = 2) -> Column:
+def sql_lavg(expr: str) -> str:
     """Exact-sum / count average on the long fast path."""
-    c = F.col(col) if isinstance(col, str) else col
-    return (
-        F.sum(cents(c, scale)).cast("double") / F.lit(float(10**scale)) / F.count(c)
-    )
-
-
-def sql_lavg(expr: str, scale: int = 2) -> str:
-    return (
-        f"(CAST(SUM({sql_cents(expr, scale)}) AS DOUBLE)"
-        f" / {float(10 ** scale)} / COUNT({expr}))"
-    )
-
-
-def lsum_split(prod: Column, divisor: float) -> Column:
-    """Exact sum of a long-typed product column whose per-row magnitude
-    would overflow a single long SUM at large SF: two long SUMs over the
-    2^20-radix hi/lo split, recombined exactly in DECIMAL(38,0) at the
-    output-row level, surfaced as double / ``divisor``."""
-    hi = F.sum(F.floor(prod / F.lit(_SPLIT_RADIX)))
-    lo = F.sum(prod - F.floor(prod / F.lit(_SPLIT_RADIX)) * F.lit(_SPLIT_RADIX))
-    total = hi.cast("decimal(38,0)") * F.lit(_SPLIT_RADIX) + lo.cast("decimal(38,0)")
-    return (total.cast("double") / F.lit(divisor))
+    return f"(CAST(SUM({sql_cents(expr)}) AS DOUBLE) / 100.0 / COUNT({expr}))"
 
 
 def sql_lsum_split(prod: str, divisor: float) -> str:
+    """Exact sum of a long-typed product whose per-row magnitude would
+    overflow a single long SUM at large SF: two long SUMs over the
+    2^20-radix hi/lo split, recombined exactly in DECIMAL(38,0) at the
+    output-row level, surfaced as double / ``divisor``."""
     r = _SPLIT_RADIX
     hi = f"SUM(CAST(FLOOR(({prod}) / {r}) AS BIGINT))"
     lo = f"SUM(({prod}) - CAST(FLOOR(({prod}) / {r}) AS BIGINT) * {r})"
     return (
         f"(CAST(CAST({hi} AS DECIMAL(38,0)) * {r}"
         f" + CAST({lo} AS DECIMAL(38,0)) AS DOUBLE) / {divisor})"
+    )
+
+
+# --------------------------------------------------------------------------
+# Vector folds (Spark SQL).  Σx² and Σaᵢbᵢ are sequential left folds: the
+# one reduction order that matches DuckDB's list_sum(list_transform(...))
+# and list_dot_product bit-for-bit.  A pairwise or tree sum rounds
+# differently in the last bits, so a norm or cosine would drift from the
+# oracle.  The oracle keeps its own DuckDB spelling; these are the only
+# Spark spellings.
+# --------------------------------------------------------------------------
+def spark_sumsq(col: str) -> str:
+    """Σx² over an array column, as a double."""
+    return (
+        f"aggregate(transform({col}, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), "
+        "CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"
+    )
+
+
+def spark_dot(a: str, b: str) -> str:
+    """Σaᵢbᵢ over two array columns, as a double."""
+    return (
+        f"aggregate(zip_with({a}, {b}, "
+        "(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
+        "CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"
     )

@@ -164,7 +164,7 @@ def incremental_agg_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     is never re-read (here both sides derive from one table to keep the
     oracle self-contained, but the hist branch stands in for a stored
     aggregate snapshot)."""
-    from duckdb_postgis_spark.functions.num import dec
+    from duckdb_postgis_spark.functions.num import MONEY
 
     ev = table(spark, sf_dir, "events")
     split = F.lit("2024-01-15 00:00:00").cast("timestamp")
@@ -174,7 +174,7 @@ def incremental_agg_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.date_trunc("day", "ts").alias("day"), "event_type"
         ).agg(
             F.count("*").alias("n"),
-            F.sum(dec("value")).alias("s"),  # stays DECIMAL: exact merge
+            F.sum(F.col("value").cast(MONEY)).alias("s"),  # stays DECIMAL: exact merge
             F.min("value").alias("mn"),
             F.max("value").alias("mx"),
         )

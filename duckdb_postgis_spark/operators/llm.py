@@ -6,8 +6,9 @@ designed so the same plan shape survives 100 TB.
 
 Determinism convention for oracles: all hashing uses md5 (identical hex on
 Spark and DuckDB), all ratios are exact-integer divisions surfaced as double,
-all float aggregates follow functions/num.py, and cosine values are rounded
-to 6 dp AFTER identical-formula computation on both engines.
+all float aggregates and vector folds are the SQL text in functions/num.py
+(``F.expr`` on the Spark side), and cosine values are rounded to 6 dp AFTER
+identical-formula computation on both engines.
 """
 
 from __future__ import annotations
@@ -26,7 +27,7 @@ from pyspark.sql.types import (
 )
 
 from duckdb_postgis_spark.catalog import table
-from duckdb_postgis_spark.functions.num import dsum, sql_dsum
+from duckdb_postgis_spark.functions.num import spark_dot, spark_sumsq, sql_dsum
 from duckdb_postgis_spark.functions.order import sorted_small
 from duckdb_postgis_spark.registry import query
 from duckdb_postgis_spark.session import keep, release
@@ -804,11 +805,7 @@ def embed_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """L2-normalize embeddings (SURVEY L5) — JVM-side higher-order fold, no
     Python. Scale: narrow map over the vector column, no shuffle."""
     emb = table(spark, sf_dir, "embeddings")
-    sumsq = F.aggregate(
-        F.transform("embedding", lambda x: x.cast("double") * x.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    sumsq = F.expr(spark_sumsq("embedding"))
     norm = F.sqrt(sumsq)
     return emb.select(
         "vec_id",
@@ -827,27 +824,9 @@ _SQL_COS = (
 )
 
 
-def _sumsq(col) -> F.Column:
-    """Σx² as a sequential left fold — the ONE reduction-order shape that
-    matches DuckDB's list arithmetic bit-for-bit (cross-engine float
-    contract; see _SQL_COS).  New operators must use this helper rather
-    than re-declaring the lambda, so the IEEE op order can never drift
-    per copy."""
-    return F.aggregate(
-        F.transform(col, lambda x: x.cast("double") * x.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def _dot(a, b) -> F.Column:
-    """Σaᵢbᵢ as a sequential left fold over zip_with — same contract as
-    _sumsq."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+def _spark_cos(a: str, b: str) -> str:
+    """Spark twin of _SQL_COS over array columns ``a`` and ``b``."""
+    return f"{spark_dot(a, b)} / (sqrt({spark_sumsq(a)}) * sqrt({spark_sumsq(b)}))"
 
 
 @query(
@@ -1242,26 +1221,16 @@ def _dedup_cos_pairs(
     # fix — computing sqrt(sumsq) per candidate pair is n² redundant folds
     # in the all-pairs branch); sqrt-then-multiply keeps the identical
     # IEEE op order as the oracle's sqrt(..)*sqrt(..)
-    sumsq = lambda c: F.aggregate(  # noqa: E731
-        F.transform(c, lambda x: x.cast("double") * x.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    dot = F.aggregate(
-        F.zip_with("va", "vb", lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    cos = dot / (F.col("na") * F.col("nb"))
+    cos = F.expr(spark_dot("va", "vb")) / (F.col("na") * F.col("nb"))
     av = emb.select(
         F.col("vec_id").alias("a_id"),
         F.col("embedding").alias("va"),
-        F.sqrt(sumsq("embedding")).alias("na"),
+        F.sqrt(F.expr(spark_sumsq("embedding"))).alias("na"),
     )
     bv = emb.select(
         F.col("vec_id").alias("b_id"),
         F.col("embedding").alias("vb"),
-        F.sqrt(sumsq("embedding")).alias("nb"),
+        F.sqrt(F.expr(spark_sumsq("embedding"))).alias("nb"),
     )
     return (
         cand.join(av, "a_id")
@@ -1577,9 +1546,7 @@ def dedup_semdedup_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
         assigned = emb.select("vec_id", cell_of("embedding").alias("cell"))
     else:
         seeds = F.broadcast(seed_frame)
-        c = _dot("embedding", "se") / (
-            F.sqrt(_sumsq("embedding")) * F.sqrt(_sumsq("se"))
-        )
+        c = F.expr(_spark_cos("embedding", "se"))
         # argmax as a partial-aggregating max_by over (c, -seed_id) — struct
         # ordering is lexicographic, so max picks highest cosine then LOWEST
         # seed id, exactly the oracle's ROW_NUMBER() ... ORDER BY c DESC,
@@ -1611,17 +1578,19 @@ def dedup_semdedup_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     av = emb.select(
         F.col("vec_id").alias("a_id"),
         F.col("embedding").alias("va"),
-        F.sqrt(_sumsq("embedding")).alias("na"),
+        F.sqrt(F.expr(spark_sumsq("embedding"))).alias("na"),
     )
     bv = emb.select(
         F.col("vec_id").alias("b_id"),
         F.col("embedding").alias("vb"),
-        F.sqrt(_sumsq("embedding")).alias("nb"),
+        F.sqrt(F.expr(spark_sumsq("embedding"))).alias("nb"),
     )
     return (
         pairs.join(av, "a_id")
         .join(bv, "b_id")
-        .filter(_dot("va", "vb") / (F.col("na") * F.col("nb")) >= _SEMDEDUP_TAU)
+        .filter(
+            F.expr(spark_dot("va", "vb")) / (F.col("na") * F.col("nb")) >= _SEMDEDUP_TAU
+        )
         .groupBy(F.col("b_id").alias("removed_id"), F.col("cell").alias("cell_seed"))
         .agg(F.min("a_id").alias("keep_id"))
         .select("removed_id", "keep_id", "cell_seed")
@@ -1657,18 +1626,7 @@ def similarity_search_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     serving pattern — broadcast tiny side, one pass over the corpus."""
     emb = table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qe"))
-    # ONE F.expr SQL string instead of lambda-built higher-order Columns
-    # (r14, the dedup_simhash build treatment — VERDICT order #7): the
-    # lambda form costs dozens of py4j round trips PER FUNNEL BUILD and
-    # this exact arm is built by all seven similarity_search_* variants
-    # plus knn paths; the SQL parses server-side in one call.  Identical
-    # expression tree (same casts, same fold order) ⇒ bit-identical cosine.
-    _ss = "aggregate(transform({c}, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"
-    cos = F.expr(
-        "aggregate(zip_with(qe, embedding, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
-        "CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"
-        f" / (sqrt({_ss.format(c='qe')}) * sqrt({_ss.format(c='embedding')}))"
-    )
+    cos = F.expr(_spark_cos("qe", "embedding"))
     return (
         emb.filter(F.col("vec_id") != 0)
         .crossJoin(F.broadcast(q))
@@ -1721,11 +1679,7 @@ def multimodal_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     (bucketing) → zero-shuffle join; here AQE picks broadcast."""
     docs = table(spark, sf_dir, "documents")
     emb = table(spark, sf_dir, "embeddings")
-    sumsq = F.aggregate(
-        F.transform("embedding", lambda x: x.cast("double") * x.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    sumsq = F.expr(spark_sumsq("embedding"))
     return (
         docs.join(emb, docs.doc_id == emb.vec_id)
         .select(
@@ -2116,10 +2070,7 @@ def _knn_ivf_lsh_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     except (TypeError, ValueError):
         shuffle_n = 0  # "auto" under AQE — the _minhash_signatures convention
     nparts = max(shuffle_n, spark.sparkContext.defaultParallelism)
-    sumsq = F.expr(  # F.expr string build, same tree as the lambda form
-        "aggregate(transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), "
-        "CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"
-    )
+    sumsq = F.expr(spark_sumsq("embedding"))
     # nrm is attached before _bucketize, but the optimizer does not keep
     # it there: the executed plan (plans/r14/knn_ivf_lsh_after.txt, node
     # 22) evaluates the SQRT fold in a Project ABOVE the posexplode
@@ -2144,9 +2095,7 @@ def _knn_ivf_lsh_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
         ["embedding", "nrm"],
         "struct(least(a.vec_id, b.vec_id) AS a_id, "
         "greatest(a.vec_id, b.vec_id) AS b_id, "
-        "aggregate(zip_with(a.embedding, b.embedding, "
-        "(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
-        "CAST(0.0 AS DOUBLE), (acc, v) -> acc + v) "
+        f"{spark_dot('a.embedding', 'b.embedding')} "
         "/ (a.nrm * b.nrm) AS cosine_raw)",
         n,
         pin_width=True,
@@ -2956,11 +2905,7 @@ def _similarity_search_quantized_approx(spark: SparkSession, sf_dir: str) -> Dat
     q_sum = F.aggregate(
         F.transform("qe", lambda x: x.cast("double")), F.lit(0.0), lambda a, x: a + x
     )
-    qc_dot = F.aggregate(
-        F.zip_with("qe", "codes", lambda x, c: x.cast("double") * c.cast("double")),
-        F.lit(0.0),
-        lambda a, x: a + x,
-    )
+    qc_dot = F.expr(spark_dot("qe", "codes"))
     approx_dot = F.col("q_min") * q_sum + F.col("scale") * qc_dot
     # dequantized norm, computable from codes alone at serving time
     deq_norm = F.sqrt(
@@ -2974,13 +2919,7 @@ def _similarity_search_quantized_approx(spark: SparkSession, sf_dir: str) -> Dat
             lambda a, x: a + x,
         )
     )
-    q_norm = F.sqrt(
-        F.aggregate(
-            F.transform("qe", lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda a, x: a + x,
-        )
-    )
+    q_norm = F.sqrt(F.expr(spark_sumsq("qe")))
     cand = (
         quant.withColumn("approx_cos", approx_dot / (q_norm * deq_norm))
         .orderBy(F.col("approx_cos").desc(), "vec_id")
@@ -2988,17 +2927,7 @@ def _similarity_search_quantized_approx(spark: SparkSession, sf_dir: str) -> Dat
         .select("vec_id")
     )
     # exact re-rank of the surviving candidates only
-    dot = F.aggregate(
-        F.zip_with("qe", "embedding", lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda a, x: a + x,
-    )
-    sumsq = lambda c: F.aggregate(  # noqa: E731
-        F.transform(c, lambda x: x.cast("double") * x.cast("double")),
-        F.lit(0.0),
-        lambda a, x: a + x,
-    )
-    cos = dot / (F.sqrt(sumsq("qe")) * F.sqrt(sumsq("embedding")))
+    cos = F.expr(_spark_cos("qe", "embedding"))
     return (
         corpus.join(F.broadcast(cand), "vec_id")
         .crossJoin(F.broadcast(q))
@@ -3153,9 +3082,7 @@ def _similarity_search_pq_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id")
     )
     q = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qe"))
-    cos = _dot("qe", "embedding") / (
-        F.sqrt(_sumsq("qe")) * F.sqrt(_sumsq("embedding"))
-    )
+    cos = F.expr(_spark_cos("qe", "embedding"))
     return (
         emb.filter(F.col("vec_id") != 0)
         .join(F.broadcast(cand), "vec_id")
@@ -3350,11 +3277,7 @@ def embed_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     cos_wv = sum(a * b for a, b in zip(w, v)) / wnorm  # v is unit
     unit_norm_ok = abs(math.sqrt(sum(x * x for x in v)) - 1.0) < 1e-9
 
-    rowsq = F.aggregate(
-        F.transform("embedding", lambda x: x.cast("double") * x.cast("double")),
-        F.lit(0.0),
-        lambda a, x: a + x,
-    )
+    rowsq = F.expr(spark_sumsq("embedding"))
     # round in DECIMAL space (exact, associative, half-up on both engines)
     # BEFORE the double cast so the only float conversion is of a
     # 6-fraction-digit decimal — correctly rounded identically everywhere
@@ -4175,17 +4098,7 @@ def similarity_search_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(docs, emb.vec_id == docs.doc_id)
         .filter((F.col("lang") == "en") & (F.col("n_chars") >= 200))
     )
-    sumsq = lambda c: F.aggregate(  # noqa: E731
-        F.transform(c, lambda x: x.cast("double") * x.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    dot = F.aggregate(
-        F.zip_with("qe", "embedding", lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    cos = dot / (F.sqrt(sumsq("qe")) * F.sqrt(sumsq("embedding")))
+    cos = F.expr(_spark_cos("qe", "embedding"))
     return (
         cand.crossJoin(F.broadcast(q))
         .withColumn("cosine_raw", cos)
@@ -4629,7 +4542,9 @@ def ensure_embedding_index(spark: SparkSession, sf_dir: str):
         )
         write_bucketed(
             corpus.select(
-                "vec_id", "embedding", F.sqrt(_sumsq("embedding")).alias("norm")
+                "vec_id",
+                "embedding",
+                F.sqrt(F.expr(spark_sumsq("embedding"))).alias("norm"),
             ),
             vt,
             ("vec_id",),
@@ -4665,14 +4580,14 @@ def _embed_probe(
     av = delta.select(
         F.col("vec_id").alias("new_id"),
         F.col("embedding").alias("va"),
-        F.sqrt(_sumsq("embedding")).alias("na"),
+        F.sqrt(F.expr(spark_sumsq("embedding"))).alias("na"),
     )
     bv = vecs_idx.select(
         F.col("vec_id").alias("idx_id"),
         F.col("embedding").alias("vb"),
         F.col("norm").alias("nb"),
     )
-    cos = _dot("va", "vb") / (F.col("na") * F.col("nb"))
+    cos = F.expr(spark_dot("va", "vb")) / (F.col("na") * F.col("nb"))
     return (
         cand.join(av, "new_id")
         .join(bv, "idx_id")
@@ -4764,7 +4679,9 @@ def ensure_embedding_index2(spark: SparkSession, sf_dir: str):
         )
         write_bucketed(
             accepted.select(
-                "vec_id", "embedding", F.sqrt(_sumsq("embedding")).alias("norm")
+                "vec_id",
+                "embedding",
+                F.sqrt(F.expr(spark_sumsq("embedding"))).alias("norm"),
             ),
             vt,
             ("vec_id",),

@@ -3,7 +3,8 @@
 The reference delegates its whole relational surface to DuckDB's general SQL
 engine (``core_processor.rs:391-438``); these queries re-declare that surface
 on Spark DataFrame/Catalyst.  Every query is registered with a DuckDB oracle
-(same column names, exact-arithmetic money aggregates per functions/num.py).
+(same column names; exact-arithmetic money aggregates are the SQL text in
+functions/num.py, parsed on the Spark side with ``F.expr``).
 
 Scale notes are attached per-query: each states the expected physical plan at
 100 TB (broadcast vs shuffle, pushdown, AQE reliance) — the test suite
@@ -17,13 +18,8 @@ from pyspark.sql import functions as F
 
 from duckdb_postgis_spark.catalog import register_views, table, table_num_rows
 from duckdb_postgis_spark.functions.num import (
-    cents,
-    davg,
-    dec,
-    dsum,
-    lavg,
-    lsum,
-    lsum_split,
+    MONEY,
+    spark_sumsq,
     sql_cents,
     sql_davg,
     sql_dsum,
@@ -125,19 +121,17 @@ def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     sums are hi/lo-split so the plan survives SF-100k row counts without
     wrapping a 64-bit accumulator."""
     li = table(spark, sf_dir, "lineitem")
-    disc_price = cents("l_extendedprice") * (F.lit(100) - cents("l_discount"))
-    charge = disc_price * (F.lit(100) + cents("l_tax"))
     return (
         li.filter(F.col("l_shipdate") <= F.lit("1998-09-02 00:00:00").cast("timestamp"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
-            lsum("l_quantity").alias("sum_qty"),
-            lsum("l_extendedprice").alias("sum_base_price"),
-            lsum_split(disc_price, 1e4).alias("sum_disc_price"),
-            lsum_split(charge, 1e6).alias("sum_charge"),
-            lavg("l_quantity").alias("avg_qty"),
-            lavg("l_extendedprice").alias("avg_price"),
-            lavg("l_discount").alias("avg_disc"),
+            F.expr(sql_lsum("l_quantity")).alias("sum_qty"),
+            F.expr(sql_lsum("l_extendedprice")).alias("sum_base_price"),
+            F.expr(sql_lsum_split(_Q1_DISC_PRICE, 1e4)).alias("sum_disc_price"),
+            F.expr(sql_lsum_split(_Q1_CHARGE, 1e6)).alias("sum_charge"),
+            F.expr(sql_lavg("l_quantity")).alias("avg_qty"),
+            F.expr(sql_lavg("l_extendedprice")).alias("avg_price"),
+            F.expr(sql_lavg("l_discount")).alias("avg_disc"),
             F.count("*").alias("count_order"),
         )
         .transform(sorted_small, "l_returnflag", "l_linestatus")
@@ -169,7 +163,7 @@ def join_inner_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("o_orderpriority")
         .agg(
             F.count("*").alias("n_lineitems"),
-            dsum("l_extendedprice").alias("sum_price"),
+            F.expr(sql_dsum("l_extendedprice")).alias("sum_price"),
         )
         .orderBy("o_orderpriority")
     )
@@ -209,9 +203,12 @@ def join_broadcast_4way(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(nation, F.col("c_nationkey") == F.col("n_nationkey"))
         .join(region, F.col("n_regionkey") == F.col("r_regionkey"))
         .groupBy("r_name", "n_name")
-        # lsum: long-cents exact sum (num.py) — keeps the post-join agg in
+        # sql_lsum: long-cents exact sum — keeps the post-join agg in
         # whole-stage codegen instead of BigDecimal
-        .agg(F.count("*").alias("n_orders"), lsum("o_totalprice").alias("revenue"))
+        .agg(
+            F.count("*").alias("n_orders"),
+            F.expr(sql_lsum("o_totalprice")).alias("revenue"),
+        )
         .orderBy("r_name", "n_name")
     )
 
@@ -1183,7 +1180,7 @@ def grouping_sets_cube_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg) then one shuffle of ~4×|groups| rows — constant for 6 groups."""
     li = table(spark, sf_dir, "lineitem")
     return li.cube("l_returnflag", "l_linestatus").agg(
-        F.count("*").alias("n"), dsum("l_quantity").alias("sum_qty")
+        F.count("*").alias("n"), F.expr(sql_dsum("l_quantity")).alias("sum_qty")
     )
 
 
@@ -1270,7 +1267,10 @@ def window_analytic(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_totalprice",
         F.lag("o_totalprice").over(w).alias("prev_price"),
         F.lead("o_totalprice").over(w).alias("next_price"),
-        F.sum(dec("o_totalprice")).over(wf).cast("double").alias("running_spend"),
+        F.sum(F.col("o_totalprice").cast(MONEY))
+        .over(wf)
+        .cast("double")
+        .alias("running_spend"),
     )
 
 
@@ -1389,11 +1389,7 @@ def array_map_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     size / element_at / transform+aggregate fold. Stays entirely JVM-side —
     no Python UDF. Scale: narrow map, no shuffle."""
     emb = table(spark, sf_dir, "embeddings")
-    sumsq = F.aggregate(
-        F.transform(F.col("embedding"), lambda x: x.cast("double") * x.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    sumsq = F.expr(spark_sumsq("embedding"))
     return emb.select(
         "vec_id",
         F.size("embedding").alias("dim"),
@@ -1422,7 +1418,7 @@ def json_extract_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.get_json_object("props", "$.k").cast("int").alias("k"), "value"
         )
         .groupBy("k")
-        .agg(F.count("*").alias("n"), dsum("value").alias("sum_value"))
+        .agg(F.count("*").alias("n"), F.expr(sql_dsum("value")).alias("sum_value"))
         .orderBy("k")
     )
 
@@ -1873,7 +1869,7 @@ def events_gap_fill_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = table(spark, sf_dir, "events").filter(F.col("user_id") % 31 == 0)
     hourly = ev.groupBy(
         "user_id", F.date_trunc("hour", "ts").alias("hour")
-    ).agg(F.count("*").alias("n"), davg("value").alias("hr_avg"))
+    ).agg(F.count("*").alias("n"), F.expr(sql_davg("value")).alias("hr_avg"))
     span = ev.groupBy("user_id").agg(
         F.date_trunc("hour", F.min("ts")).alias("h0"),
         F.date_trunc("hour", F.max("ts")).alias("h1"),
@@ -1938,7 +1934,10 @@ def window_trailing_range(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         "event_id",
         "ts",
-        F.sum(dec("value")).over(w).cast("double").alias("trail_7d_value"),
+        F.sum(F.col("value").cast(MONEY))
+        .over(w)
+        .cast("double")
+        .alias("trail_7d_value"),
         F.count(F.lit(1)).over(w).alias("trail_7d_n"),
     )
 
@@ -2018,7 +2017,10 @@ def join_skew_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (ev_salted.salt == cust_rep.salt),
         )
         .groupBy("c_mktsegment")
-        .agg(F.count("*").alias("n_events"), dsum("value").alias("sum_value"))
+        .agg(
+            F.count("*").alias("n_events"),
+            F.expr(sql_dsum("value")).alias("sum_value"),
+        )
         .orderBy("c_mktsegment")
     )
 
@@ -2138,7 +2140,7 @@ def agg_corr_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: a plain partial-agg groupBy — the decimal moments combine
     associatively, so the map-side combine works exactly like sum()."""
     li = table(spark, sf_dir, "lineitem")
-    q, p = dec("l_quantity"), dec("l_extendedprice")
+    q, p = F.col("l_quantity").cast(MONEY), F.col("l_extendedprice").cast(MONEY)
     m = li.groupBy("l_returnflag").agg(
         F.count("*").alias("n"),
         F.sum(q).cast("double").alias("sx"),
@@ -2359,7 +2361,7 @@ def sessionize_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("ts").alias("session_start"),
             F.max("ts").alias("last_event"),
             F.count("*").alias("n_events"),
-            dsum("value").alias("session_value"),
+            F.expr(sql_dsum("value")).alias("session_value"),
         )
     )
 
@@ -3104,7 +3106,10 @@ def events_attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame
     )
     return (
         attributed.groupBy("channel")
-        .agg(F.count("*").alias("n_conversions"), dsum("value").alias("revenue"))
+        .agg(
+            F.count("*").alias("n_conversions"),
+            F.expr(sql_dsum("value")).alias("revenue"),
+        )
         .transform(sorted_small, "channel")
     )
 
@@ -3641,7 +3646,7 @@ def events_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("rec_days"),
             F.count("*").alias("freq"),
-            F.sum(cents("value")).alias("mon_cents"),
+            F.sum(F.expr(sql_cents("value"))).alias("mon_cents"),
         )
     )
     qs = lambda c: F.expr(f"percentile({c}, array(0.25, 0.5, 0.75))")  # noqa: E731
@@ -3723,7 +3728,7 @@ def window_moving_median(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("ts", "event_id")
         .rowsBetween(-4, Window.currentRow)
     )
-    arr = F.sort_array(F.collect_list(cents("value")).over(w5))
+    arr = F.sort_array(F.collect_list(F.expr(sql_cents("value"))).over(w5))
     v = ev.select("user_id", "event_id", "ts", "value", arr.alias("arr"))
     n = F.size("arr")
     med_x2 = F.element_at("arr", ((n + 1) / 2).cast("int")) + F.element_at(
@@ -3785,7 +3790,7 @@ def events_value_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("value").isNotNull() & (F.col("value") > 0)
     )
     per_user = ev.groupBy("event_type", "user_id").agg(
-        F.sum(cents("value")).alias("ucents")
+        F.sum(F.expr(sql_cents("value"))).alias("ucents")
     )
     w = Window.partitionBy("event_type").orderBy(
         F.col("ucents").desc(), F.col("user_id")
@@ -4274,7 +4279,7 @@ def pipeline_events_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_trunc("day", F.min("ts")).alias("day"),
         F.count("*").alias("n_events"),
         F.sum(F.when(is_p, 1).otherwise(0)).alias("n_purchases"),
-        F.sum(F.when(is_p, dec("value"))).alias("rev"),
+        F.sum(F.when(is_p, F.col("value").cast(MONEY))).alias("rev"),
     )
     return (
         sess.groupBy("day")
@@ -4399,7 +4404,7 @@ def orders_supplier_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
     rev = (
         li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
         .groupBy("p_type", "l_suppkey")
-        .agg(F.sum(cents("l_extendedprice")).alias("cents"))
+        .agg(F.sum(F.expr(sql_cents("l_extendedprice"))).alias("cents"))
     )
     shares = rev.withColumn(
         "share_ppm",

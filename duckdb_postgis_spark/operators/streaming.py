@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from duckdb_postgis_spark.catalog import table
-from duckdb_postgis_spark.functions.num import dsum, sql_dsum
+from duckdb_postgis_spark.functions.num import sql_dsum
 from duckdb_postgis_spark.functions.order import sorted_small
 from duckdb_postgis_spark.registry import query
 
@@ -39,7 +39,7 @@ def stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = table(spark, sf_dir, "events")
     return (
         ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count("*").alias("n"), dsum("value").alias("sum_value"))
+        .agg(F.count("*").alias("n"), F.expr(sql_dsum("value")).alias("sum_value"))
         .select(F.col("w.start").alias("win_start"), "event_type", "n", "sum_value")
         .transform(sorted_small, "win_start", "event_type")
     )

@@ -42,7 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from duckdb_postgis_spark.catalog import _staleness_sig, read_parquet, table
-from duckdb_postgis_spark.functions.num import dsum, sql_dsum
+from duckdb_postgis_spark.functions.num import sql_dsum
 from duckdb_postgis_spark.registry import query
 from duckdb_postgis_spark.session import session_conf
 
@@ -230,7 +230,7 @@ def events_partition_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         ev.filter(F.col("event_date") == F.lit("2024-01-15").cast("date"))
         .groupBy("event_type")
-        .agg(F.count("*").alias("n"), dsum("value").alias("sum_value"))
+        .agg(F.count("*").alias("n"), F.expr(sql_dsum("value")).alias("sum_value"))
         .orderBy("event_type")
     )
 
@@ -277,7 +277,10 @@ def join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.hint("merge")
         .join(od, li.l_orderkey == od.o_orderkey)
         .groupBy("o_orderpriority")
-        .agg(F.count("*").alias("n_items"), dsum("l_extendedprice").alias("revenue"))
+        .agg(
+            F.count("*").alias("n_items"),
+            F.expr(sql_dsum("l_extendedprice")).alias("revenue"),
+        )
         .orderBy("o_orderpriority")
     )
 
@@ -913,7 +916,7 @@ def events_zorder_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("ts") < F.lit("2024-01-13 00:00:00").cast("timestamp"))
         )
         .groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("n"), dsum("value").alias("sum_value"))
+        .agg(F.count(F.lit(1)).alias("n"), F.expr(sql_dsum("value")).alias("sum_value"))
         .orderBy("event_type")
     )
 
@@ -1621,7 +1624,7 @@ def lakehouse_manifest_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFram
         .agg(
             F.count(F.lit(1)).alias("n"),
             F.sum("event_id").cast("long").alias("id_sum"),
-            dsum("value").alias("sum_value"),
+            F.expr(sql_dsum("value")).alias("sum_value"),
         )
         .orderBy("event_type")
     )

@@ -3,8 +3,8 @@
 Every operator from SURVEY.md §2.8-2.11 registers itself here with an
 optional DuckDB oracle SQL twin.  The driver runs both sides at sf0.01 and
 compares row-count + schema + order-insensitive value hash, so the contract
-is: *identical column names, identical values* (see functions/num.py for the
-exact-arithmetic conventions that make float values match bit-for-bit).
+is: *identical column names, identical values* (functions/num.py holds the
+exact-arithmetic SQL text that makes float values match bit-for-bit).
 """
 
 from __future__ import annotations
@@ -19,51 +19,11 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
 
-# The driver's correctness harness verifies only the FIRST 50 entries of
-# queries() (CORRECTNESS_r01 cut at exactly entry 50 in registration order),
-# so dict order is part of the external contract.  PRIORITY pins the window.
-#
-# Rotation history (rounds 7-10: the per-round windows, displacement
-# rationales, and (a0a)-(a0q) batch notes) lives in git — see the r7-r10
-# revisions of this file; each round's CORRECTNESS_r{N}.json records the
-# executed window's verdicts.  The invariant throughout: oldest-verdict-
-# first refreshes, displaced only by first-verdict additions and
-# changed-code re-entries (changed code outranks refreshes).
-#
-# ROUND-13 ROTATION: rotated out (50/50 green, CORRECTNESS_r13); its
-# window arithmetic (18 + 13 + 19) and displacement notes live in the r13
-# revision of this file.
-#
-# ROUND-14 ROTATION (this window): CORRECTNESS_r13 came back 50/50 green,
-# so all r13 slots rotate out with verdicts standing.  The r13 VERDICT's
-# order #1 overrides the staleness plan: the r13 optimization sessions
-# rewrote 24 query paths AFTER the window was frozen by the build half,
-# so those 24 lead (changed-code-outranks-refreshes applied
-# retroactively).  The arithmetic (24 + 21 + 5 = 50):
-#   (a1) the 24 r13-rewritten-but-driver-unverified queries, in the
-#        verdict's listing order (their r13 evidence was the builder's
-#        replica + pytest only; several were rewritten AGAIN this round —
-#        dedup_minhash_lsh/knn_ivf_lsh got the salt-segment skew guard,
-#        similarity_search_ann shares the _bucketize projection change);
-#   (a2) 21 r14 changed-code re-entries: multimodal_image_features (dims
-#        asserts in its kernel; phash twin is already in (a1));
-#        dedup_verify_levenshtein (consumes the skew-guarded minhash pair
-#        set; its cluster/survivorship siblings are in (a1));
-#        agg_approx_percentiles (sketch accuracy retuned);
-#        the 15 stream_*_live/join replays (run_available_now's
-#        state-partition pin became env-overridable — default unchanged,
-#        but changed code outranks refreshes, the text_bpe_tokenize
-#        precedent); and similarity_search_query + _filtered + _binary
-#        (the shared exact-arm cosine moved to an F.expr string build —
-#        bit-identical values, but changed code);
-#   (b)  5 slots to the stalest r9-era verdicts in registration order
-#        (the r13 plan's (b) list head): distinct_dedup_exact,
-#        agg_skew_salted, join_range_bucketed, events_multigrain_rollup,
-#        events_gap_fill_locf.
-#   The remaining r9-era tail (window_trailing_range onward) and the
-#   r10 refreshes carry to r15.
+# The driver verifies the first DRIVER_WINDOW entries of queries(), in
+# order, so dict order is part of the external contract.  PRIORITY pins that
+# window: changed code outranks refreshes of the oldest verdicts.
 PRIORITY: tuple[str, ...] = (
-    # -- (a1) r13-rewritten, driver-unverified (verdict order #1) ----------
+    # -- changed code, not yet driver-verified ----------------------------
     "dedup_minhash_lsh",
     "agg_approx_distinct",
     "geo_knn_join",
@@ -88,7 +48,7 @@ PRIORITY: tuple[str, ...] = (
     "multimodal_phash_dedup",
     "text_bpe_train",
     "text_bpe_train_apply",
-    # -- (a2) r14 changed code (changed code outranks refreshes) ----------
+    # -- changed code ------------------------------------------------------
     "multimodal_image_features",
     "dedup_verify_levenshtein",
     "agg_approx_percentiles",
@@ -110,7 +70,7 @@ PRIORITY: tuple[str, ...] = (
     "similarity_search_query",
     "similarity_search_filtered",
     "similarity_search_binary",
-    # -- (b) stalest r9-era verdicts, registration order -------------------
+    # -- oldest verdicts, registration order -------------------------------
     "distinct_dedup_exact",
     "agg_skew_salted",
     "join_range_bucketed",

@@ -30,7 +30,7 @@ from duckdb_postgis_spark.catalog import (
     read_parquet,
     rebuild_events_ts,
 )
-from duckdb_postgis_spark.functions.num import dsum, sql_dsum
+from duckdb_postgis_spark.functions.num import sql_dsum
 from duckdb_postgis_spark.operators.relational import (
     _CMS_D,
     _QH_BINS,
@@ -81,7 +81,7 @@ def stream_tumbling_live(events: DataFrame) -> DataFrame:
     return (
         events.withWatermark("ts", "10 minutes")
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count("*").alias("n"), dsum("value").alias("sum_value"))
+        .agg(F.count("*").alias("n"), F.expr(sql_dsum("value")).alias("sum_value"))
         .select(F.col("w.start").alias("win_start"), "event_type", "n", "sum_value")
     )
 
@@ -627,7 +627,7 @@ def q_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = (
         joined.withWatermark("ts", "10 minutes")
         .groupBy(F.window("ts", "1 hour").alias("w"), "c_mktsegment")
-        .agg(F.count("*").alias("n"), dsum("value").alias("sum_value"))
+        .agg(F.count("*").alias("n"), F.expr(sql_dsum("value")).alias("sum_value"))
         .select(F.col("w.start").alias("win_start"), "c_mktsegment", "n", "sum_value")
     )
     return run_available_now(agg, "q_static_join", "update").orderBy(

@@ -1,81 +1,80 @@
-"""Capture .explain("formatted") for named queries into plans/r14/.
+"""Dump normalized ``explain("formatted")`` plans, one file per query.
 
 Usage:
-    python scripts/capture_plans.py before|after [name1 name2 ...]
+    python scripts/capture_plans.py OUT_DIR [name ...]
 
-Defaults to the 13 bench headliners.  Runs in the exact bench session
-(same confs as bench.py's make_session) on the optimized scan layout so
-the captured plans are the ones the benchmark executes.
+Builds every registered query (or only the named ones) on the oracle
+replica's data (sf0.01, ``SPARK_GRAFT_REPLICA_SF_DIR``) under the same plain
+``local[N]`` session ``driver_replica.py`` uses, and writes
+``OUT_DIR/<name>.txt``.  Ids that change from run to run are normalized so
+two checkouts can be compared with a plain ``diff -r``: expression ids,
+plan ids, RDD ids, lambda variable names, the derived-layout root, tmp
+paths and part-file UUIDs.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
+import traceback
 
-sys.path.insert(0, "/root/repo")
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.join(_ROOT, "scripts"))
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+from driver_replica import CHUNK, SF_DIR, make_session  # noqa: E402
 
-HEADLINE = [
-    "pricing_summary",
-    "join_broadcast_4way",
-    "window_rank_topn",
-    "sort_limit_topk",
-    "agg_distinct",
-    "stream_tumbling",
-    "text_stats",
-    "knn_cosine_topk",
-    "dedup_minhash_lsh",
-    "pipeline_training_e2e",
-    "events_ewma_trailing",
-    "sample_hard_negative_mining",
-    "graph_pagerank_bipartite",
+_NORMALIZE = [
+    (re.compile(r"#\d+"), "#"),
+    (re.compile(r"plan_id=\d+"), "plan_id=N"),
+    (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
+    (re.compile(r"\blambda \w+"), "lambda _"),
+    (re.compile(r"/tmp/duckdb_postgis_spark_layout"), "<LAYOUT>"),
+    (re.compile(r"/tmp/[\w.-]+"), "<TMP>"),
+    (re.compile(r"[0-9a-f]{8}(?:-[0-9a-f]{4}){3}-[0-9a-f]{12}"), "<UUID>"),
+    (re.compile(re.escape(_ROOT)), "<ROOT>"),
 ]
 
 
-def main() -> int:
-    tag = sys.argv[1] if len(sys.argv) > 1 else "before"
-    names = sys.argv[2:] or HEADLINE
+def normalize(plan: str) -> str:
+    for pat, repl in _NORMALIZE:
+        plan = pat.sub(repl, plan)
+    return plan
 
-    from pyspark.sql import SparkSession
+
+def main() -> int:
+    if len(sys.argv) < 2 or sys.argv[1].startswith("-"):
+        print(__doc__, file=sys.stderr)
+        return 2
+    out_dir, names = sys.argv[1], sys.argv[2:]
 
     from duckdb_postgis_spark import registry
-    from duckdb_postgis_spark.catalog import ensure_scan_layout
 
-    opt_dir, _ = ensure_scan_layout(SF_DIR)
-    spark = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("plan-capture")
-        .config("spark.driver.memory", "8g")
-        .config("spark.sql.adaptive.enabled", "false")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.files.maxPartitionBytes", "1048576")
-        .config("spark.sql.files.openCostInBytes", "32768")
-        .config("spark.sql.files.minPartitionNum", CPUS)
-        .config("spark.locality.wait", "0")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
-    out_dir = os.path.join(os.path.dirname(os.path.dirname(__file__)), "plans", "r14")
-    os.makedirs(out_dir, exist_ok=True)
     queries = registry.all_queries()
-    for name in names:
-        df = queries[name](spark, opt_dir)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
-        path = os.path.join(out_dir, f"{name}_{tag}.txt")
-        with open(path, "w") as fh:
-            fh.write(plan)
-        print(f"wrote {path} ({plan.count('Exchange')} Exchange refs)")
+    names = names or list(queries)
+    os.makedirs(out_dir, exist_ok=True)
+    spark = make_session("plan-capture")
+    spark.sparkContext.setLogLevel("ERROR")
+    failed: list[str] = []
+    for i, name in enumerate(names, 1):
+        if i > 1 and (i - 1) % CHUNK == 0:
+            spark.stop()
+            spark = make_session("plan-capture")
+            spark.sparkContext.setLogLevel("ERROR")
+        try:
+            df = queries[name](spark, SF_DIR)
+            plan = df._sc._jvm.PythonSQLUtils.explainString(
+                df._jdf.queryExecution(), "formatted"
+            )
+        except Exception:
+            failed.append(name)
+            plan = "BUILD FAILED\n" + traceback.format_exc(limit=0)
+        with open(os.path.join(out_dir, f"{name}.txt"), "w") as fh:
+            fh.write(normalize(plan))
+        print(f"[{i}/{len(names)}] {name}", flush=True)
     spark.stop()
-    return 0
+    print(f"wrote {len(names)} plans to {out_dir}; build failures: {failed}")
+    return 1 if failed else 0
 
 
 if __name__ == "__main__":

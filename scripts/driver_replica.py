@@ -19,8 +19,9 @@ import sys
 import time
 import traceback
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tests")
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _ROOT)
+sys.path.insert(0, os.path.join(_ROOT, "tests"))
 
 #: override with SPARK_GRAFT_REPLICA_SF_DIR to rehearse at another scale
 #: (round 6: a full sf0.1 sweep doubles as a perf-cliff check on the
@@ -37,27 +38,27 @@ SF_DIR = os.environ.get("SPARK_GRAFT_REPLICA_SF_DIR", "/root/testdata/sf0.01")
 CHUNK = int(os.environ.get("SPARK_GRAFT_REPLICA_CHUNK", "50"))
 
 
-def main() -> int:
+def make_session(app: str = "driver-replica"):
+    """A plain session, as the driver builds it: no custom confs.
+    SPARK_GRAFT_REPLICA_MASTER sets the master (default ``local[8]``).
+    SPARK_GRAFT_REPLICA_DRIVER_MEM optionally sets the heap for
+    beyond-driver-scale sweeps: at sf0.1 the heaviest distinct
+    aggregations legitimately exceed the 1 GiB default local heap during
+    spill (agg_approx_distinct OOMs a fresh plain session at sf0.1 and
+    runs fine at sf0.01)."""
     from pyspark.sql import SparkSession
 
+    master = os.environ.get("SPARK_GRAFT_REPLICA_MASTER", "local[8]")
+    b = SparkSession.builder.master(master).appName(app)
+    mem = os.environ.get("SPARK_GRAFT_REPLICA_DRIVER_MEM")
+    if mem:
+        b = b.config("spark.driver.memory", mem)
+    return b.getOrCreate()
+
+
+def main() -> int:
     from duckdb_postgis_spark import registry
     from oracle_harness import compare_query
-
-    def make_session():
-        # the driver builds its own session with no custom confs —
-        # replicate that.  SPARK_GRAFT_REPLICA_DRIVER_MEM optionally sets
-        # the heap for BEYOND-driver-scale sweeps: at sf0.1 (10× the
-        # driver's correctness scale) the heaviest distinct aggregations
-        # legitimately exceed the 1 GiB default local heap during
-        # spill (observed: agg_approx_distinct OOMs a fresh plain session
-        # at sf0.1, runs fine at the driver's sf0.01); any real deployment
-        # sizes executor memory, the driver never runs sf0.1 correctness.
-        master = os.environ.get("SPARK_GRAFT_REPLICA_MASTER", "local[8]")
-        b = SparkSession.builder.master(master).appName("driver-replica")
-        mem = os.environ.get("SPARK_GRAFT_REPLICA_DRIVER_MEM")
-        if mem:
-            b = b.config("spark.driver.memory", mem)
-        return b.getOrCreate()
 
     spark = make_session()
     queries = registry.all_queries()

@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from duckdb_postgis_spark.catalog import table
-from duckdb_postgis_spark.functions.num import cents, dsum, sql_cents, sql_dsum
+from duckdb_postgis_spark.functions.num import sql_cents, sql_dsum
 from tests.oracle_harness import normalize, run_oracle
 
 SEEDS_PER_CHUNK = 20
@@ -274,7 +274,9 @@ def _aggregate(rng: random.Random, df: DataFrame, sql_from: str, cols: dict,
 
     aggs = [(F.count(F.lit(1)).alias("n"), "COUNT(*) AS n")]
     if rng.random() < 0.7:
-        aggs.append((dsum(money).alias("s_money"), f"{sql_dsum(money)} AS s_money"))
+        aggs.append(
+            (F.expr(sql_dsum(money)).alias("s_money"), f"{sql_dsum(money)} AS s_money")
+        )
     if rng.random() < 0.6:
         aggs.append(
             (
@@ -291,7 +293,7 @@ def _aggregate(rng: random.Random, df: DataFrame, sql_from: str, cols: dict,
         if has_window == "running_sum":
             aggs.append(
                 (
-                    dsum("wval").alias("s_w"),
+                    F.expr(sql_dsum("wval")).alias("s_w"),
                     f"{sql_dsum('wval')} AS s_w",
                 )
             )
@@ -350,7 +352,7 @@ def _run_rollup(spark: SparkSession, sf_dir: str, seed: int) -> None:
 
     aggs = [
         (F.count(F.lit(1)).alias("n"), "COUNT(*) AS n"),
-        (dsum(money).alias("s_money"), f"{sql_dsum(money)} AS s_money"),
+        (F.expr(sql_dsum(money)).alias("s_money"), f"{sql_dsum(money)} AS s_money"),
     ]
     if rng.random() < 0.5:
         num = rng.choice(cols["num"])
@@ -390,7 +392,7 @@ def _run_reagg(spark: SparkSession, sf_dir: str, seed: int) -> None:
     orders = table(spark, sf_dir, "orders").filter(oc)
     inner = orders.groupBy("o_custkey").agg(
         F.count(F.lit(1)).alias("n_ord"),
-        dsum("o_totalprice").alias("tot"),
+        F.expr(sql_dsum("o_totalprice")).alias("tot"),
     )
     inner_sql = (
         f"SELECT o_custkey, COUNT(*) AS n_ord, "
@@ -422,7 +424,7 @@ def _run_reagg(spark: SparkSession, sf_dir: str, seed: int) -> None:
         (F.count(F.lit(1)).alias("n_cust"), "COUNT(*) AS n_cust"),
         # COUNT over the nullable inner aggregate — skips the no-order rows
         (F.count("n_ord").alias("n_with"), "COUNT(n_ord) AS n_with"),
-        (dsum("tot").alias("s_tot"), f"{sql_dsum('tot')} AS s_tot"),
+        (F.expr(sql_dsum("tot")).alias("s_tot"), f"{sql_dsum('tot')} AS s_tot"),
     ]
     if rng.random() < 0.5:
         aggs.append(
@@ -492,7 +494,7 @@ def _run_events(spark: SparkSession, sf_dir: str, seed: int) -> None:
         "event_type", F.date_trunc(grain, "ts").alias("g")
     ).agg(
         F.count(F.lit(1)).alias("c"),
-        dsum("value").alias("v"),
+        F.expr(sql_dsum("value")).alias("v"),
     )
     h_sql = (
         f"SELECT event_type, CAST(date_trunc('{grain}', ts) AS TIMESTAMP) AS g, "
@@ -526,7 +528,7 @@ def _run_events(spark: SparkSession, sf_dir: str, seed: int) -> None:
         (F.sum("c").cast("long").alias("n_events"), "CAST(SUM(c) AS BIGINT) AS n_events"),
         (F.min("c").cast("long").alias("mn_c"), "CAST(MIN(c) AS BIGINT) AS mn_c"),
         (F.max("c").cast("long").alias("mx_c"), "CAST(MAX(c) AS BIGINT) AS mx_c"),
-        (dsum("v").alias("s_v"), f"{sql_dsum('v')} AS s_v"),
+        (F.expr(sql_dsum("v")).alias("s_v"), f"{sql_dsum('v')} AS s_v"),
     ]
     if wfn != "none":
         aggs.append(
@@ -588,7 +590,7 @@ def _run_setop(spark: SparkSession, sf_dir: str, seed: int) -> None:
     # also compared — count per key catches bag-semantics drift directly)
     gdf = res.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(cents("l_quantity")).alias("s_qty_c"),
+        F.sum(F.expr(sql_cents("l_quantity"))).alias("s_qty_c"),
     )
     sql = (
         f"SELECT l_returnflag, COUNT(*) AS n, "
@@ -704,7 +706,7 @@ def _run_subquery_membership(spark: SparkSession, sf_dir: str, seed: int) -> Non
 
     gdf = kept.groupBy(cat).agg(
         F.count(F.lit(1)).alias("n"),
-        dsum(money).alias("s_money"),
+        F.expr(sql_dsum(money)).alias("s_money"),
     )
     sql = (
         f"SELECT {cat}, COUNT(*) AS n, {sql_dsum(money)} AS s_money "
@@ -816,7 +818,7 @@ def _run_window_frames(spark: SparkSession, sf_dir: str, seed: int) -> None:
     # exact decimal sum for money frames, BIGINT sum otherwise (values
     # bounded × row count ≪ 2^53/2^63 at test scale)
     if fn == "dsum":
-        vagg, vsql = dsum("wval").alias("v"), f"{sql_dsum('wval')} AS v"
+        vagg, vsql = F.expr(sql_dsum("wval")).alias("v"), f"{sql_dsum('wval')} AS v"
     else:
         vagg = F.sum("wval").cast("long").alias("v")
         vsql = "CAST(SUM(wval) AS BIGINT) AS v"
@@ -916,7 +918,7 @@ def _run_scalar_subquery(spark: SparkSession, sf_dir: str, seed: int) -> None:
 
     gdf = kept.groupBy(cat).agg(
         F.count(F.lit(1)).alias("n"),
-        dsum(money).alias("s_money"),
+        F.expr(sql_dsum(money)).alias("s_money"),
     )
     sql = (
         f"SELECT {cat}, COUNT(*) AS n, {sql_dsum(money)} AS s_money "
@@ -1375,7 +1377,7 @@ def _run_distinct_aggs(spark: SparkSession, sf_dir: str, seed: int) -> None:
         )
     if rng.random() < 0.6:  # mixed distinct + plain exact sum → Expand
         aggs.append(
-            (dsum(money).alias("s_money"), f"{sql_dsum(money)} AS s_money")
+            (F.expr(sql_dsum(money)).alias("s_money"), f"{sql_dsum(money)} AS s_money")
         )
 
     gdf = df.groupBy(gk).agg(*[c for c, _ in aggs])
@@ -1488,7 +1490,7 @@ def _run_topk_offset(spark: SparkSession, sf_dir: str, seed: int) -> None:
     money = cols["money"][0]
     gdf = out.agg(
         F.count(F.lit(1)).alias("n"),
-        dsum(money).alias("s_money"),
+        F.expr(sql_dsum(money)).alias("s_money"),
         F.sum(F.col(uniq[0])).alias("key_sum"),
     )
 
@@ -1547,7 +1549,7 @@ def _run_null_order(spark: SparkSession, sf_dir: str, seed: int) -> None:
     gdf = out.agg(
         F.count(F.lit(1)).alias("n"),
         F.count(F.expr(nk)).alias("n_nonnull"),
-        dsum(money).alias("s_money"),
+        F.expr(sql_dsum(money)).alias("s_money"),
     )
 
     d = "ASC" if asc else "DESC"

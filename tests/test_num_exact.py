@@ -1,23 +1,28 @@
-"""Exactness guarantees of the long-cents money convention (functions/num.py).
+"""Exactness guarantees of the SQL text in functions/num.py.
 
-The round-6 fast path rests on three claims, each proven here rather than
-assumed:
+The long-cents money path rests on three claims, each proven here rather
+than assumed:
 
-1. ``cents`` recovery: for any k-decimal-digit value n/10^k stored as its
-   nearest double, FLOOR(x*10^k + 0.5) == n exactly — positive, negative,
-   and the exactly-representable quarters included (hypothesis-swept).
-2. Engine mirror: the Spark ``cents``/``lsum``/``lsum_split`` columns and
-   their ``sql_*`` DuckDB twins produce bit-identical doubles on real
-   table data (the convention is only useful if BOTH sides land on the
-   same IEEE value).
-3. ``lsum_split`` == single-accumulator sum: the 2^20-radix hi/lo split
-   recombines to exactly the plain sum on data small enough for both to
-   be exact.
+1. ``sql_cents`` recovery: for any k-decimal-digit value n/10^k stored as
+   its nearest double, FLOOR(x*10^k + 0.5) == n exactly — positive,
+   negative, and the exactly-representable quarters included
+   (hypothesis-swept).
+2. Engine mirror: the same ``sql_cents``/``sql_lsum``/``sql_lsum_split``
+   text, parsed by Spark (``F.expr``) and by DuckDB, gives bit-identical
+   doubles on real table data (the convention is only useful if BOTH
+   sides land on the same IEEE value).
+3. ``sql_lsum_split`` == single-accumulator sum: the 2^20-radix hi/lo
+   split recombines to exactly the plain sum on data small enough for
+   both to be exact.
+
+The vector folds ``spark_sumsq``/``spark_dot`` are held to the same bar:
+equal, unrounded, to DuckDB's list arithmetic on every row.
 """
 
 from __future__ import annotations
 
 import math
+import os
 
 import duckdb
 from hypothesis import given, settings
@@ -26,15 +31,17 @@ from pyspark.sql import functions as F
 
 from duckdb_postgis_spark.catalog import table
 from duckdb_postgis_spark.functions.num import (
-    cents,
-    lavg,
-    lsum,
-    lsum_split,
+    spark_dot,
+    spark_sumsq,
     sql_cents,
     sql_lavg,
     sql_lsum,
     sql_lsum_split,
 )
+
+#: cents(l_extendedprice) * (100 - cents(l_discount)): the Q1 product whose
+#: sum needs the hi/lo split at large SF
+_PROD = f"({sql_cents('l_extendedprice')} * (100 - {sql_cents('l_discount')}))"
 
 
 # --------------------------------------------------------------------------
@@ -70,9 +77,9 @@ def test_lsum_lavg_mirror_duckdb_bitwise(spark, sf_dir):
     got = (
         li.groupBy("l_returnflag")
         .agg(
-            lsum("l_extendedprice").alias("s"),
-            lavg("l_extendedprice").alias("a"),
-            F.sum(cents("l_discount")).alias("c"),
+            F.expr(sql_lsum("l_extendedprice")).alias("s"),
+            F.expr(sql_lavg("l_extendedprice")).alias("a"),
+            F.sum(F.expr(sql_cents("l_discount"))).alias("c"),
         )
         .orderBy("l_returnflag")
         .collect()
@@ -97,12 +104,11 @@ def test_lsum_lavg_mirror_duckdb_bitwise(spark, sf_dir):
 
 def test_lsum_split_equals_plain_sum(spark, sf_dir):
     li = table(spark, sf_dir, "lineitem")
-    prod = cents("l_extendedprice") * (F.lit(100) - cents("l_discount"))
     got = (
         li.groupBy("l_returnflag")
         .agg(
-            lsum_split(prod, 1e4).alias("split"),
-            (F.sum(prod).cast("double") / F.lit(1e4)).alias("plain"),
+            F.expr(sql_lsum_split(_PROD, 1e4)).alias("split"),
+            (F.sum(F.expr(_PROD)).cast("double") / F.lit(1e4)).alias("plain"),
         )
         .collect()
     )
@@ -111,8 +117,8 @@ def test_lsum_split_equals_plain_sum(spark, sf_dir):
 
 
 # --------------------------------------------------------------------------
-# round 7: the EXTREME-scale paths (r6 verdict #9) — domain boundary of the
-# cents recovery, overflow of the single-accumulator sum that lsum_split
+# the EXTREME-scale paths — domain boundary of the cents recovery,
+# overflow of the single-accumulator sum that sql_lsum_split
 # exists to survive, and a seeded synthetic-table mirror fuzz at magnitudes
 # far beyond the driver testdata's.
 # --------------------------------------------------------------------------
@@ -142,7 +148,7 @@ def test_cents_recovery_cliff_documented():
 
 
 def test_lsum_split_survives_int64_sum_overflow(spark, tmp_path):
-    """The reason lsum_split exists: a product column whose single-
+    """The reason sql_lsum_split exists: a product column whose single-
     accumulator SUM(long) wraps a signed 64-bit.  300 rows of ~9.2e16
     sum to ~2.8e19 — 3× past 2^63-1 — so the plain sum is garbage
     (non-ANSI wraparound) while the 2^20-radix hi/lo split recombined in
@@ -159,7 +165,7 @@ def test_lsum_split_survives_int64_sum_overflow(spark, tmp_path):
 
     got = (
         spark.read.parquet(p)
-        .agg(lsum_split(F.col("prod"), 1e4).alias("split"))
+        .agg(F.expr(sql_lsum_split("prod", 1e4)).alias("split"))
         .collect()[0]
     )
     want_double = float(truth) / 1e4  # decimal→double, correctly rounded
@@ -179,12 +185,18 @@ def test_lsum_split_survives_int64_sum_overflow(spark, tmp_path):
     assert duck == got.split, (duck, got.split)
 
 
+def _at_scale(sql: str, scale: int) -> str:
+    """num's 2-digit money text with its 10^2 factor replaced by 10^scale."""
+    return sql.replace("100.0", repr(float(10**scale)))
+
+
 def test_fuzz_extreme_money_mirror(spark, tmp_path):
     """Seeded synthetic money tables at magnitudes the driver testdata
     never reaches (±1e13 at scales 0-6, sign-mixed, group-skewed):
-    lsum/lavg/cents must stay BITWISE identical between Spark and DuckDB
-    on every draw — the cross-engine convention, stressed to the edge of
-    its documented domain."""
+    the lsum/lavg/cents text, rescaled to each draw's digits, must stay
+    BITWISE identical between Spark and DuckDB on every draw — the
+    cross-engine convention, stressed to the edge of its documented
+    domain."""
     import random
 
     import pyarrow as pa
@@ -213,13 +225,16 @@ def test_fuzz_extreme_money_mirror(spark, tmp_path):
             ),
             p,
         )
+        s_sql = _at_scale(sql_lsum("v"), scale)
+        a_sql = _at_scale(sql_lavg("v"), scale)
+        c_sql = _at_scale(sql_cents("v"), scale)
         got = (
             spark.read.parquet(p)
             .groupBy("g")
             .agg(
-                lsum("v", scale).alias("s"),
-                lavg("v", scale).alias("a"),
-                F.sum(cents("v", scale)).alias("c"),
+                F.expr(s_sql).alias("s"),
+                F.expr(a_sql).alias("a"),
+                F.sum(F.expr(c_sql)).alias("c"),
             )
             .orderBy("g")
             .collect()
@@ -228,8 +243,8 @@ def test_fuzz_extreme_money_mirror(spark, tmp_path):
         con.execute(f"CREATE VIEW t AS SELECT * FROM read_parquet('{p}')")
         want = con.execute(
             f"""
-            SELECT g, {sql_lsum('v', scale)} AS s, {sql_lavg('v', scale)} AS a,
-                   CAST(SUM({sql_cents('v', scale)}) AS BIGINT) AS c
+            SELECT g, {s_sql} AS s, {a_sql} AS a,
+                   CAST(SUM({c_sql}) AS BIGINT) AS c
             FROM t GROUP BY g ORDER BY g
             """
         ).fetchall()
@@ -241,22 +256,56 @@ def test_fuzz_extreme_money_mirror(spark, tmp_path):
 
 def test_lsum_split_mirror_duckdb_bitwise(spark, sf_dir):
     li = table(spark, sf_dir, "lineitem")
-    prod = cents("l_extendedprice") * (F.lit(100) - cents("l_discount"))
-    prod_sql = (
-        f"({sql_cents('l_extendedprice')} * (100 - {sql_cents('l_discount')}))"
-    )
     got = (
         li.groupBy("l_returnflag")
-        .agg(lsum_split(prod, 1e4).alias("s"))
+        .agg(F.expr(sql_lsum_split(_PROD, 1e4)).alias("s"))
         .orderBy("l_returnflag")
         .collect()
     )
     want = _duck(
         sf_dir,
         f"""
-        SELECT l_returnflag, {sql_lsum_split(prod_sql, 1e4)} AS s
+        SELECT l_returnflag, {sql_lsum_split(_PROD, 1e4)} AS s
         FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag
         """,
     )
     for g, w in zip(got, want):
         assert g.s == w[1], (g.l_returnflag, g.s, w[1])
+
+
+def test_vector_folds_match_duckdb_unrounded(spark, sf_dir):
+    """spark_sumsq and spark_dot equal DuckDB's list_sum(list_transform(..))
+    and list_dot_product with ``==`` on every sf0.01 embedding — no
+    rounding, unlike the parity harness's 9-digit cell normalization, so
+    a last-bit drift in a norm or cosine fails here."""
+    sf01 = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    emb = table(spark, sf01, "embeddings")
+    q = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qe"))
+    got = {
+        r.vec_id: (r.ss, r.dot)
+        for r in emb.crossJoin(q)
+        .select(
+            "vec_id",
+            F.expr(spark_sumsq("embedding")).alias("ss"),
+            F.expr(spark_dot("qe", "embedding")).alias("dot"),
+        )
+        .collect()
+    }
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW embeddings AS SELECT * FROM "
+        f"read_parquet('{sf01}/embeddings.parquet')"
+    )
+    want = con.execute(
+        """
+        WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0)
+        SELECT e.vec_id,
+               list_sum(list_transform(CAST(e.embedding AS DOUBLE[]), x -> x * x)),
+               list_dot_product(CAST(q.qe AS DOUBLE[]), CAST(e.embedding AS DOUBLE[]))
+        FROM embeddings e CROSS JOIN q
+        """
+    ).fetchall()
+    con.close()
+    assert len(want) == len(got) > 0
+    bad = [(v, got[v], (ss, dot)) for v, ss, dot in want if got[v] != (ss, dot)]
+    assert not bad, bad[:5]

@@ -225,3 +225,104 @@ def test_parquet_read_site_inventory():
         ("catalog.py", "table", ()),
         ("plans/layout.py", "schema_evolution_read", ("option",)),
     ]
+
+
+def test_exact_fold_inventory():
+    """Σx² and Σaᵢbᵢ over double casts are spelled once, as SQL text in
+    ``functions/num.py`` (``spark_sumsq``/``spark_dot``).  Outside it, no
+    ``F.aggregate`` folds a transform/zip_with whose lambda multiplies two
+    double casts, and no string holds an ``aggregate(transform(`` or
+    ``aggregate(zip_with(`` that multiplies two ``DOUBLE`` casts.  The
+    remaining ``F.aggregate`` sites fold something else and are pinned by
+    (file, enclosing function)."""
+    import ast
+    import re
+    from pathlib import Path
+
+    import duckdb_postgis_spark
+
+    fold_text = re.compile(
+        r"aggregate\(\s*(?:transform|zip_with)\([^;]*?"
+        r"CAST\(\w+ AS DOUBLE\)\s*\*\s*CAST\(\w+ AS DOUBLE\)",
+        re.S,
+    )
+
+    def double_cast(e) -> bool:
+        return (
+            isinstance(e, ast.Call)
+            and isinstance(e.func, ast.Attribute)
+            and e.func.attr == "cast"
+            and [getattr(a, "value", None) for a in e.args] == ["double"]
+        )
+
+    def product_fold(call: ast.Call) -> bool:
+        arr = call.args[0] if call.args else None
+        if not (
+            isinstance(arr, ast.Call)
+            and isinstance(arr.func, ast.Attribute)
+            and arr.func.attr in ("transform", "zip_with")
+            and isinstance(arr.args[-1], ast.Lambda)
+        ):
+            return False
+        body = arr.args[-1].body
+        return (
+            isinstance(body, ast.BinOp)
+            and isinstance(body.op, ast.Mult)
+            and double_cast(body.left)
+            and double_cast(body.right)
+        )
+
+    class Folds(ast.NodeVisitor):
+        def __init__(self, rel: str):
+            self.rel, self.fn = rel, "<module>"
+            self.copies, self.others = [], []
+
+        def visit_FunctionDef(self, node):
+            outer, self.fn = self.fn, node.name
+            self.generic_visit(node)
+            self.fn = outer
+
+        def visit_Call(self, node):
+            f = node.func
+            if (
+                isinstance(f, ast.Attribute)
+                and f.attr == "aggregate"
+                and isinstance(f.value, ast.Name)
+                and f.value.id == "F"
+            ):
+                site = (self.rel, self.fn)
+                (self.copies if product_fold(node) else self.others).append(site)
+            self.generic_visit(node)
+
+        def visit_JoinedStr(self, node):
+            text = "".join(
+                v.value if isinstance(v, ast.Constant) else "{}" for v in node.values
+            )
+            if fold_text.search(text):
+                self.copies.append((self.rel, self.fn))
+
+        def visit_Constant(self, node):
+            if isinstance(node.value, str) and fold_text.search(node.value):
+                self.copies.append((self.rel, self.fn))
+
+    root = Path(duckdb_postgis_spark.__file__).parent
+    copies, others = [], []
+    for py in root.rglob("*.py"):
+        rel = py.relative_to(root).as_posix()
+        v = Folds(rel)
+        v.visit(ast.parse(py.read_text()))
+        if rel != "functions/num.py":
+            copies += v.copies
+        others += v.others
+    assert copies == [], f"use num.spark_sumsq/spark_dot instead: {sorted(copies)}"
+    assert sorted(others) == [
+        ("operators/llm.py", "_minhash_probe"),  # minhash band agreement
+        ("operators/llm.py", "_pca_pass"),  # x·v against a broadcast vector
+        ("operators/llm.py", "_similarity_search_pq_approx"),  # PQ LUT sum
+        ("operators/llm.py", "_similarity_search_quantized_approx"),  # q_sum
+        ("operators/llm.py", "_similarity_search_quantized_approx"),  # deq_norm
+        ("operators/llm.py", "dedup_minhash_lsh"),  # minhash band agreement
+        ("operators/llm.py", "embed_quantize_int8"),  # SQ8 checksum
+        ("operators/llm.py", "embed_quantize_int8"),  # SQ8 code sum
+        ("operators/multimodal.py", "multimodal_scene_cut"),  # byte sum
+    ]
