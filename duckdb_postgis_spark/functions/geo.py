@@ -3,20 +3,22 @@
 Ports the reference's geo semantics (reference file:line cited per function):
   - CRS range classifier thresholds    geo_strategy.rs:228-253
   - PRJ-text CRS sniff                 geo_strategy.rs:22-44
-  - WKB/hex/WKT probe ladder           geo_strategy.rs:105-183
   - EPSG:27700 / 3857 → 4326 transform geo_strategy.rs:283-291 (ST_Transform)
 
 The reference's CRS detector can only ever emit 4326, 27700, or 3857
 (geo_strategy.rs:228-253), so closed-form Transverse-Mercator (OSGB
 published constants) + Web-Mercator math covers the full reachable
-transform surface with no external library.
+transform surface with no external library.  Geometry values themselves
+(the WKB/hex/WKT probe ladder of geo_strategy.rs:105-183, WKB encode, WKT
+print) are parsed and written only in functions/wkb.py.
 """
 
 from __future__ import annotations
 
 import math
-import struct
 from dataclasses import dataclass
+
+from duckdb_postgis_spark.functions.wkb import wkb_encode
 
 # --------------------------------------------------------------------------
 # CRS inference — exact port of the reference decision ladder
@@ -69,76 +71,14 @@ def crs_from_prj_text(prj: str) -> str:
 
 
 # --------------------------------------------------------------------------
-# WKB point codec (little-endian, geometry type 1 = Point)
+# WKB point (the codec itself is functions/wkb.py)
 # --------------------------------------------------------------------------
-
-_WKB_POINT_LE = struct.Struct("<BIdd")
 
 
 def wkb_point_encode(x: float, y: float) -> bytes:
     """Serialize a 2D point as little-endian WKB (the interchange form the
     reference probes with ST_GeomFromWKB, geo_strategy.rs:140)."""
-    return _WKB_POINT_LE.pack(1, 1, x, y)
-
-
-def wkb_point_decode(wkb: bytes) -> tuple[float, float]:
-    """Parse a WKB point (either endianness)."""
-    if len(wkb) < 21:
-        raise ValueError("not a WKB point: too short")
-    order = wkb[0]
-    fmt = "<Idd" if order == 1 else ">Idd"
-    gtype, x, y = struct.unpack(fmt, wkb[1:21])
-    if gtype & 0xFF != 1:
-        raise ValueError(f"not a point geometry: type {gtype}")
-    return x, y
-
-
-def probe_geometry_encoding(value: object) -> tuple[str, float, float] | None:
-    """Probe ladder (geo_strategy.rs:105-183): WKB bytes → hex WKB → WKT
-    text, first that yields finite coordinates wins. Arbitrary geometry
-    types are probed by geometric centroid (the reference's ST_Centroid,
-    geo_strategy.rs:140,157,174 — functions/wkb.py). Returns
-    (encoding, x, y) or None."""
-    from duckdb_postgis_spark.functions.wkb import centroid, wkb_decode
-
-    if isinstance(value, (bytes, bytearray)):
-        try:
-            x, y = centroid(wkb_decode(bytes(value)))
-            if math.isfinite(x) and math.isfinite(y):
-                return ("wkb", x, y)
-        except (ValueError, struct.error, IndexError, ZeroDivisionError):
-            return None
-        return None
-    if isinstance(value, str):
-        s = value.strip()
-        try:
-            x, y = centroid(wkb_decode(bytes.fromhex(s)))
-            if math.isfinite(x) and math.isfinite(y):
-                return ("hexwkb", x, y)
-        except (ValueError, struct.error, IndexError, ZeroDivisionError):
-            pass
-        xy = parse_wkt_point(s)
-        if xy is not None and all(map(math.isfinite, xy)):
-            return ("wkt", xy[0], xy[1])
-    return None
-
-
-def parse_wkt_point(wkt: str) -> tuple[float, float] | None:
-    s = wkt.strip()
-    if not s.upper().startswith("POINT"):
-        return None
-    try:
-        body = s[s.index("(") + 1 : s.rindex(")")]
-        parts = body.split()
-        return float(parts[0]), float(parts[1])
-    except (ValueError, IndexError):
-        return None
-
-
-def wkt_point(x: float, y: float) -> str:
-    """2D WKT — the reference's canonical interchange form
-    (ST_AsText(ST_Force2D(...)), geo_strategy.rs:283-291)."""
-    return f"POINT ({x} {y})"
+    return wkb_encode(("Point", (x, y)))
 
 
 # --------------------------------------------------------------------------
@@ -193,7 +133,7 @@ def _tm_inverse_osgb36(easting: float, northing: float) -> tuple[float, float]:
     while True:
         phi = (northing - _N0 - M) / (a * _F0) + phi
         M = _meridional_arc(phi, ell)
-        if abs(northing - _N0 - M) < 1e-5:
+        if not abs(northing - _N0 - M) >= 1e-5:  # a NaN input stops too
             break
     sphi, cphi, tphi = math.sin(phi), math.cos(phi), math.tan(phi)
     nu = a * _F0 / math.sqrt(1 - e2 * sphi * sphi)

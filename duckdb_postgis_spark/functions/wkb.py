@@ -1,4 +1,5 @@
-"""Pure-Python WKB geometry codec: decode, Force2D, centroid, WKT encode.
+"""Pure-Python geometry codec: every geometry value is parsed, written and
+printed here (WKB/hex/WKT parse, WKB encode, Force2D, centroid, WKT print).
 
 The reference probes arbitrary geometries by centroid (``ST_Centroid``,
 geo_strategy.rs:140,157,174) and normalizes them to 2D WKT
@@ -34,6 +35,7 @@ _KINDS = {
     6: "MultiPolygon",
     7: "GeometryCollection",
 }
+_CODES = {kind: code for code, kind in _KINDS.items()}
 
 Geom = tuple[str, object]
 
@@ -102,13 +104,53 @@ def _decode_at(r: _Reader) -> tuple[Geom, _Reader]:
     return (kind, kids), r
 
 
+def wkb_encode(g: Geom) -> bytes:
+    """2D little-endian ISO WKB (ST_AsBinary); the inverse of ``wkb_decode``
+    on such input."""
+    kind, payload = g
+    if kind == "Point":
+        return struct.pack("<BIdd", 1, 1, *payload)
+    if kind == "LineString":
+        return struct.pack("<BI", 1, 2) + _coords_wkb(payload)
+    head = struct.pack("<BII", 1, _CODES[kind], len(payload))
+    if kind == "Polygon":
+        return head + b"".join(_coords_wkb(ring) for ring in payload)
+    return head + b"".join(wkb_encode(k) for k in payload)
+
+
+def _coords_wkb(coords) -> bytes:
+    flat = [v for p in coords for v in p]
+    return struct.pack(f"<I{len(flat)}d", len(coords), *flat)
+
+
+def parse_geometry(value: object) -> Geom | None:
+    """The probe ladder of geo_strategy.rs:105-183 (ST_GeomFromWKB, then
+    hex WKB, then ST_GeomFromText): bytes are read as WKB, a str as hex
+    WKB and failing that as WKT.  Returns None for anything that fails
+    to decode."""
+    try:
+        if isinstance(value, (bytes, bytearray)):
+            return wkb_decode(value)
+        if isinstance(value, str):
+            try:
+                return wkb_decode(bytes.fromhex(value.strip()))
+            except (ValueError, struct.error):
+                return from_wkt(value)
+    except (ValueError, struct.error, RecursionError):
+        pass
+    return None
+
+
 # --------------------------------------------------------------------------
 # centroid (matches ST_Centroid semantics: area > length > points)
 # --------------------------------------------------------------------------
 def centroid(g: Geom) -> tuple[float, float]:
+    """ST_Centroid; an empty geometry has the empty point's (NaN, NaN)."""
     kind, payload = g
     if kind == "Point":
         return payload  # type: ignore[return-value]
+    if not payload:
+        return (math.nan, math.nan)
     if kind == "LineString":
         return _line_centroid(payload)  # type: ignore[arg-type]
     if kind == "Polygon":
@@ -136,8 +178,8 @@ def _line_centroid_w(coords) -> tuple[float, float, float]:
         cx += (x1 + x2) / 2 * seg
         cy += (y1 + y2) / 2 * seg
         w += seg
-    if w == 0.0:  # degenerate: all vertices coincident
-        return coords[0][0], coords[0][1], 1.0
+    if w == 0.0:  # degenerate: all vertices coincident, or none
+        return (*coords[0], 1.0) if coords else (math.nan, math.nan, 0.0)
     return cx / w, cy / w, w
 
 
@@ -169,7 +211,7 @@ def _polygon_centroid_w(rings) -> tuple[float, float, float]:
         cy += y * a
         w += a
     if w == 0.0:
-        return _line_centroid_w(rings[0])
+        return _line_centroid_w(rings[0] if rings else [])
     return cx / w, cy / w, w
 
 

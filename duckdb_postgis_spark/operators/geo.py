@@ -23,6 +23,7 @@ from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from duckdb_postgis_spark.catalog import table, table_num_rows
 from duckdb_postgis_spark.registry import query
+from duckdb_postgis_spark.session import shuffle_width
 
 # Engine-identical synthetic coordinates: DECIMAL(·,1) keeps string rendering
 # byte-identical between Spark and DuckDB (x.5 doubles are exact in binary).
@@ -118,12 +119,14 @@ def geo_crs_infer_ranges(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def geo_wkb_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WKB probe-ladder round-trip (SURVEY G6; geo_strategy.rs:135-183):
-    encode each point as little-endian WKB, then decode via the probe ladder
-    back to coordinates. The oracle is the identity on the inputs — any codec
-    asymmetry fails the value hash. Arrow-batched mapInPandas (the geometry
-    hot path stays vectorized python, the reference's own design keeps
-    geometry row-scalar: SURVEY §4). Scale: narrow map, no shuffle."""
-    from duckdb_postgis_spark.functions.geo import probe_geometry_encoding, wkb_point_encode
+    encode each point as little-endian WKB, then decode it through the
+    probe ladder (``parse_geometry``) back to coordinates. The oracle is
+    the identity on the inputs — any codec asymmetry fails the value hash.
+    Arrow-batched mapInPandas (the geometry hot path stays vectorized
+    python, the reference's own design keeps geometry row-scalar: SURVEY
+    §4). Scale: narrow map, no shuffle."""
+    from duckdb_postgis_spark.functions.geo import wkb_point_encode
+    from duckdb_postgis_spark.functions.wkb import parse_geometry
 
     c = _coords(spark, sf_dir).select(
         "c_custkey", F.col("lon").cast("double"), F.col("lat").cast("double")
@@ -133,15 +136,15 @@ def geo_wkb_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         import pandas as pd
 
         for pdf in it:
-            wkbs = [
-                wkb_point_encode(x, y) for x, y in zip(pdf["lon"], pdf["lat"])
+            pts = [
+                parse_geometry(wkb_point_encode(x, y))[1]
+                for x, y in zip(pdf["lon"], pdf["lat"])
             ]
-            decoded = [probe_geometry_encoding(w) for w in wkbs]
             yield pd.DataFrame(
                 {
                     "c_custkey": pdf["c_custkey"],
-                    "x": [d[1] if d else None for d in decoded],
-                    "y": [d[2] if d else None for d in decoded],
+                    "x": [p[0] for p in pts],
+                    "y": [p[1] for p in pts],
                 }
             )
 
@@ -704,14 +707,10 @@ def _geo_knn_attach(cust: DataFrame, supp: DataFrame) -> DataFrame:
     tried first and REJECTED by measurement: higher-order-function
     lambdas evaluate interpreted (no whole-stage codegen), and 15 M
     interpreted haversines lose to the codegen'd window form ~1.6×."""
-    spark = cust.sparkSession
-    try:
-        shuffle_n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except (TypeError, ValueError):
-        shuffle_n = 0  # "auto" under AQE — the _minhash_signatures convention
-    n_part = max(shuffle_n, spark.sparkContext.defaultParallelism)
     return _knn_rank_top3(
-        cust.repartition(n_part, "c_custkey").crossJoin(F.broadcast(supp))
+        cust.repartition(shuffle_width(cust.sparkSession), "c_custkey").crossJoin(
+            F.broadcast(supp)
+        )
     )
 
 

@@ -30,7 +30,7 @@ from duckdb_postgis_spark.catalog import table
 from duckdb_postgis_spark.functions.num import spark_dot, spark_sumsq, sql_dsum
 from duckdb_postgis_spark.functions.order import sorted_small
 from duckdb_postgis_spark.registry import query
-from duckdb_postgis_spark.session import keep, release
+from duckdb_postgis_spark.session import keep, release, shuffle_width
 
 # --------------------------------------------------------------------------
 # L1 text stats
@@ -173,16 +173,11 @@ def _minhash_signatures(spark: SparkSession, docs: DataFrame) -> DataFrame:
     builder and the delta probe compute bit-identical signatures).
 
     Width-pinned: the 12-way md5 aggregate is the compute-heavy stage, so
-    its exchange is pinned to max(shuffle partitions, cores) — never
-    scan-split parallelism (measured in dedup_minhash_lsh: 2232 ms at
-    scan width vs 1201 ms pinned).  NO default arg on the conf get:
-    Spark 4 validates explicit defaults against the conf requirement."""
+    its exchange is pinned to max(shuffle partitions, cores)
+    (``session.shuffle_width``) — never scan-split parallelism (measured
+    in dedup_minhash_lsh: 2232 ms at scan width vs 1201 ms pinned)."""
     sh = _shingle_df(docs, 3, distinct=False)
-    try:
-        shuffle_n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except (TypeError, ValueError):
-        shuffle_n = 0
-    nparts = max(shuffle_n, spark.sparkContext.defaultParallelism)
+    nparts = shuffle_width(spark)
     mins = [
         F.min(F.md5(F.concat(F.lit(f"{s}:"), F.col("shingle")))).alias(f"_m{s}")
         for s in range(_MINHASH_SEEDS)
@@ -272,11 +267,7 @@ def _segment_lists(
     lists, the bounded-buffer aggregation both LSH candidate paths share.
     Width-pinned like _minhash_signatures (the exchange under the in-row
     pair expansion is the compute-heavy one)."""
-    try:
-        shuffle_n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except (TypeError, ValueError):
-        shuffle_n = 0  # "auto" under AQE
-    nparts = max(shuffle_n, spark.sparkContext.defaultParallelism)
+    nparts = shuffle_width(spark)
     nseg = _lsh_seg_count(n_rows)
     return (
         banded.withColumn(
@@ -316,13 +307,7 @@ def _segmented_bucket_pairs(
     if _lsh_seg_count(n_rows) == 1:
         src = banded
         if pin_width:  # the r13 knn width pin (its unsegmented plan, verbatim)
-            try:
-                shuffle_n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-            except (TypeError, ValueError):
-                shuffle_n = 0
-            src = banded.repartition(
-                max(shuffle_n, spark.sparkContext.defaultParallelism), *keys
-            )
+            src = banded.repartition(shuffle_width(spark), *keys)
         buckets = (
             src.groupBy(*keys)
             .agg(F.collect_list(F.struct(id_col, *payload_cols)).alias("ms"))
@@ -1199,12 +1184,7 @@ def _dedup_cos_pairs(
     # 6.9 s -> 3.0 s at sf0.1 from this pin; the explicit repartition on
     # the dedup keys satisfies dropDuplicates' clustering, so no second
     # exchange appears)
-    spark = emb.sparkSession
-    try:
-        shuffle_n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except (TypeError, ValueError):
-        shuffle_n = 0  # "auto" under AQE — the _minhash_signatures convention
-    nparts = max(shuffle_n, spark.sparkContext.defaultParallelism)
+    nparts = shuffle_width(emb.sparkSession)
     cand = (
         codes.alias("x")
         .join(
@@ -2065,11 +2045,7 @@ def _knn_ivf_lsh_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     buffer at ~_LSH_SEG_TARGET members regardless of cluster size."""
     emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     n, dim = _corpus_stats(f"{sf_dir}/embeddings.parquet")
-    try:
-        shuffle_n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except (TypeError, ValueError):
-        shuffle_n = 0  # "auto" under AQE — the _minhash_signatures convention
-    nparts = max(shuffle_n, spark.sparkContext.defaultParallelism)
+    nparts = shuffle_width(spark)
     sumsq = F.expr(spark_sumsq("embedding"))
     # nrm is attached before _bucketize, but the optimizer does not keep
     # it there: the executed plan (plans/r14/knn_ivf_lsh_after.txt, node

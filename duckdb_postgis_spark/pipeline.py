@@ -8,9 +8,9 @@ Reference lifecycle (core_processor.rs:97-117, strictly sequential):
 
 Ours: sniff (sources/sniffer) → format reader (sources/readers) → DataFrame
 (Catalyst replaces DuckDB's planner) → geometry detection over df.dtypes
-(functions/geo_detect) → CRS inference (probe ladder + range classifier on a
-LIMIT sample, functions/geo) → WKT transform columns (pandas UDF) → optional
-PostGIS write + DDL replay (sinks/postgis).
+(functions/geo_detect) → CRS inference (functions/wkb probe ladder + the
+functions/geo range classifier on a LIMIT sample) → WKT transform columns
+(pandas UDF) → optional PostGIS write + DDL replay (sinks/postgis).
 
 ``launch_process_file`` is aliased to ``process_file`` — README.md:39 of the
 reference documents a symbol that does not exist in its code (docs drift);
@@ -19,21 +19,24 @@ we expose both names.
 
 from __future__ import annotations
 
+import math
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType, StringType, StructField, StructType
+from pyspark.sql.types import StringType, StructField, StructType
 
-from duckdb_postgis_spark.functions.geo import (
-    classify_crs_from_ranges,
-    probe_geometry_encoding,
-    transform_xy,
-    wkt_point,
-)
+from duckdb_postgis_spark.functions.geo import classify_crs_from_ranges, transform_xy
 from duckdb_postgis_spark.functions.geo_detect import (
     find_coordinate_pair,
     find_geometry_columns,
+)
+from duckdb_postgis_spark.functions.wkb import (
+    Geom,
+    centroid,
+    parse_geometry,
+    to_wkt,
+    transform_geom,
 )
 from duckdb_postgis_spark.sources.sniffer import FileType, determine_file_type
 from duckdb_postgis_spark.sources.readers import read_file
@@ -142,26 +145,37 @@ def infer_crs_from_xy(df: DataFrame, x_col: str, y_col: str) -> str:
 
 
 def infer_crs_from_geometry(df: DataFrame, geom_col: str) -> str:
-    """Probe-ladder CRS inference (geo_strategy.rs:105-225): decode ≤10
-    geometry values (WKB → hex → WKT ladder), take centroid-ish coords,
-    classify ranges."""
+    """Probe-ladder CRS inference (geo_strategy.rs:105-225): parse ≤10
+    geometry values (``parse_geometry``: WKB → hex → WKT), take their
+    centroids (ST_Centroid), skip non-finite ones, classify ranges."""
     rows = (
         df.filter(F.col(geom_col).isNotNull()).select(geom_col).limit(_PROBE_ROWS).collect()
     )
-    xs, ys = [], []
-    for (val,) in rows:
-        probe = probe_geometry_encoding(val)
-        if probe is not None:
-            xs.append(probe[1])
-            ys.append(probe[2])
-    if not xs:
+    geoms = [g for (val,) in rows if (g := parse_geometry(val)) is not None]
+    pts = [c for c in map(centroid, geoms) if math.isfinite(c[0]) and math.isfinite(c[1])]
+    if not pts:
         return _TARGET_CRS
+    xs, ys = zip(*pts)
     return classify_crs_from_ranges(min(xs), max(xs), min(ys), max(ys))
 
 
 # --------------------------------------------------------------------------
 # transforms (GeoStrategy port)
 # --------------------------------------------------------------------------
+
+
+def _wkt_4326(geom: Geom | None, src_crs: str) -> str | None:
+    """ST_AsText(ST_Force2D(ST_Transform(geom))), the transform skipped
+    when the CRS already matches; NULL for a NULL geometry or a coordinate
+    that is, or reprojects to, a non-finite value."""
+    if geom is None:
+        return None
+    try:
+        if src_crs != _TARGET_CRS:
+            geom = transform_geom(geom, lambda x, y: transform_xy(x, y, src_crs, _TARGET_CRS))
+        return to_wkt(geom)
+    except (ValueError, ArithmeticError):
+        return None
 
 
 def synthesize_point_wkt(
@@ -186,15 +200,12 @@ def synthesize_point_wkt(
         )
 
     def reproject(it):
-        import pandas as pd
-
         for pdf in it:
-            wkts = []
-            for x, y in zip(pdf["__x"], pdf["__y"]):
-                lon, lat = transform_xy(float(x), float(y), src_crs, _TARGET_CRS)
-                wkts.append(wkt_point(lon, lat))
             res = pdf.drop(columns=["__x", "__y"])
-            res[out_col] = wkts
+            res[out_col] = [
+                _wkt_4326(("Point", (float(x), float(y))), src_crs)
+                for x, y in zip(pdf["__x"], pdf["__y"])
+            ]
             yield res
 
     tagged = filtered.withColumn("__x", F.col(x_col).cast("double")).withColumn(
@@ -213,49 +224,17 @@ def transform_geom_columns(
     """``SELECT * EXCLUDE(geoms), ST_AsText(ST_Force2D(ST_Transform(...)))``
     (geo_strategy.rs:256-311): every geometry column becomes a 2D WKT
     EPSG:4326 ``<col>_wkt`` in one Arrow-batched pass; original geometry
-    columns are dropped. Full geometry shape is preserved — WKB (bytes or
-    hex) or WKT text of any standard type decodes, reprojects
-    coordinate-by-coordinate and re-emits as WKT (functions/wkb.py);
-    unparseable values become NULL like the Postgres-side
-    safe_geom_from_text (geo_strategy.rs:373-381)."""
-    from duckdb_postgis_spark.functions.wkb import (
-        from_wkt,
-        to_wkt,
-        transform_geom,
-        wkb_decode,
-    )
+    columns are dropped. Full geometry shape is preserved: every value goes
+    through ``parse_geometry`` (WKB bytes, hex WKB or WKT text of any
+    standard type), reprojects coordinate-by-coordinate and re-emits as WKT
+    (functions/wkb.py). A value that does not parse, or has a non-finite
+    coordinate (a WKB ``POINT EMPTY`` is NaN NaN), becomes NULL like the
+    Postgres-side safe_geom_from_text (geo_strategy.rs:373-381)."""
 
     def convert(it):
-        import pandas as pd
-
-        def to_wkt_4326(val):
-            geom = None
-            if isinstance(val, (bytes, bytearray)):
-                try:
-                    geom = wkb_decode(bytes(val))
-                except Exception:
-                    return None
-            elif isinstance(val, str):
-                try:
-                    geom = wkb_decode(bytes.fromhex(val.strip()))
-                except Exception:
-                    try:
-                        geom = from_wkt(val)
-                    except ValueError:
-                        return None
-            if geom is None:
-                return None
-            if src_crs != _TARGET_CRS:
-                geom = transform_geom(
-                    geom, lambda x, y: transform_xy(x, y, src_crs, _TARGET_CRS)
-                )
-            return to_wkt(geom)
-
         for pdf in it:
             for g in geom_cols:
-                pdf[f"{g}_wkt"] = [
-                    to_wkt_4326(val) if val is not None else None for val in pdf[g]
-                ]
+                pdf[f"{g}_wkt"] = [_wkt_4326(parse_geometry(v), src_crs) for v in pdf[g]]
             yield pdf.drop(columns=list(geom_cols))
 
     keep = [f for f in df.schema.fields if f.name not in geom_cols]

@@ -24,6 +24,9 @@ ORACLES: dict[str, str] = {}
 # window: changed code outranks refreshes of the oldest verdicts.
 PRIORITY: tuple[str, ...] = (
     # -- changed code, not yet driver-verified ----------------------------
+    "geo_wkb_roundtrip",
+    "pipeline_geo_file_e2e",
+    "join_theta_range",
     "dedup_minhash_lsh",
     "agg_approx_distinct",
     "geo_knn_join",
@@ -73,9 +76,6 @@ PRIORITY: tuple[str, ...] = (
     # -- oldest verdicts, registration order -------------------------------
     "distinct_dedup_exact",
     "agg_skew_salted",
-    "join_range_bucketed",
-    "events_multigrain_rollup",
-    "events_gap_fill_locf",
 )
 DRIVER_WINDOW = 50
 

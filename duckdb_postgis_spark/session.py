@@ -72,6 +72,19 @@ def session_conf(spark: SparkSession, key: str, value: str) -> Iterator[None]:
             spark.conf.unset(key)
 
 
+def shuffle_width(spark: SparkSession) -> int:
+    """max(configured shuffle partitions, cores): the width a compute-heavy
+    exchange is pinned to, so it never runs with fewer tasks than cores
+    and on a cluster the configured width wins.  A non-integer conf
+    ("auto" under AQE) counts as 0.  NO default arg on the conf get:
+    Spark 4 validates explicit defaults against the conf requirement."""
+    try:
+        shuffle_n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    except (TypeError, ValueError):
+        shuffle_n = 0
+    return max(shuffle_n, spark.sparkContext.defaultParallelism)
+
+
 #: one-deep persist ledger: the frames each owner's previous call cached
 _LEDGER: dict[str, list[DataFrame]] = {}
 

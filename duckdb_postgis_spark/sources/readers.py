@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from duckdb_postgis_spark.catalog import read_parquet
+from duckdb_postgis_spark.functions.wkb import Geom
 from duckdb_postgis_spark.session import keep, release
 from duckdb_postgis_spark.sources.sniffer import (
     FileType,
@@ -199,9 +200,10 @@ def read_geopackage(
     """GeoPackage reader (reference: GDAL ``st_read``,
     core_processor.rs:393-398). A .gpkg is a SQLite database; the feature
     table is listed in ``gpkg_contents`` and geometry blobs carry a 'GP'
-    header followed by standard WKB — parsed with our WKB codec, surfaced as
-    ``<col>_wkb`` bytes plus x/y for points. Driver-side by design (small
-    files); at scale pre-convert to parquet."""
+    header followed by standard WKB. The header is stripped and the geometry
+    column keeps its name, holding the raw WKB bytes (parsed downstream by
+    functions/wkb.py), plus ``crs_epsg`` from the SRS tables. Driver-side
+    by design (small files); at scale pre-convert to parquet."""
     con = sqlite3.connect(path)
     try:
         cur = con.execute(
@@ -279,12 +281,12 @@ def read_zipped_shapefile(spark: SparkSession, zip_path: str) -> DataFrame:
     """Zipped-shapefile reader (reference: GDAL vsizip st_read,
     core_processor.rs:399-406 + member discovery :270-283). Pure-python
     parser for every ESRI shape class — Point(Z/M), MultiPoint(Z/M),
-    PolyLine(Z/M), Polygon(Z/M), Z/M forced to 2D — emitting standard WKB
-    (``geometry_wkb``) decodable by functions/wkb.py, centroid ``x``/``y``
-    probe columns, .dbf attributes, and ``crs_epsg`` from the .prj sniff
-    (geo_strategy.rs:22-44)."""
+    PolyLine(Z/M), Polygon(Z/M), MultiPatch, Z/M forced to 2D — emitting
+    standard WKB (``geometry_wkb``, written by functions/wkb.py), centroid
+    ``x``/``y`` probe columns, .dbf attributes, and ``crs_epsg`` from the
+    .prj sniff (geo_strategy.rs:22-44)."""
     from duckdb_postgis_spark.functions.geo import crs_from_prj_text
-    from duckdb_postgis_spark.functions.wkb import centroid, wkb_decode
+    from duckdb_postgis_spark.functions.wkb import centroid, wkb_encode
 
     shp_member = find_shapefile_path(zip_path)
     base = shp_member[: -len(".shp")]
@@ -297,16 +299,14 @@ def read_zipped_shapefile(spark: SparkSession, zip_path: str) -> DataFrame:
     attrs = _parse_dbf(dbf) if dbf else [{} for _ in geoms]
     epsg = crs_from_prj_text(prj) if prj else "4326"
     records = []
-    for wkb, a in zip(geoms, attrs):
+    for g, a in zip(geoms, attrs):
         rec = dict(a)
-        if wkb is None:  # Null shape (type 0)
+        if g is None:  # Null shape (type 0)
             rec["x"] = rec["y"] = None
             rec["geometry_wkb"] = None
         else:
-            cx, cy = centroid(wkb_decode(wkb))
-            rec["x"] = cx
-            rec["y"] = cy
-            rec["geometry_wkb"] = wkb
+            rec["x"], rec["y"] = centroid(g)
+            rec["geometry_wkb"] = wkb_encode(g)
         rec["crs_epsg"] = epsg
         records.append(rec)
     if not records:
@@ -316,37 +316,35 @@ def read_zipped_shapefile(spark: SparkSession, zip_path: str) -> DataFrame:
     return _local_frame(spark, records)
 
 
-def _parse_shp_geoms(shp: bytes) -> list[bytes | None]:
+def _parse_shp_geoms(shp: bytes) -> list[Geom | None]:
     """ESRI .shp main file: 100-byte header, then (record header, shape).
-    Returns one WKB geometry (or None for Null shapes) per record. Shape
+    Returns one geometry (or None for Null shapes) per record. Shape
     types (ESRI spec): 1/11/21 Point, 8/18/28 MultiPoint, 3/13/23 PolyLine,
     5/15/25 Polygon; the Z/M payloads trail the XY block and are skipped via
     the record length (Force2D, matching geo_strategy.rs:283-291)."""
-    out: list[bytes | None] = []
+    out: list[Geom | None] = []
     pos = 100
     n = len(shp)
     while pos + 8 <= n:
         (_recno, content_len) = struct.unpack(">ii", shp[pos : pos + 8])
         pos += 8
-        out.append(_shape_to_wkb(shp, pos))
+        out.append(_shape_to_geom(shp, pos))
         pos += content_len * 2  # content length is in 16-bit words
     return out
 
 
-def _shape_to_wkb(shp: bytes, pos: int) -> bytes | None:
+def _shape_to_geom(shp: bytes, pos: int) -> Geom | None:
     shape_type = struct.unpack("<i", shp[pos : pos + 4])[0]
     if shape_type == 0:
         return None
     if shape_type == 31:  # MultiPatch (round 7; GDAL's st_read reads these)
-        return _multipatch_to_wkb(shp, pos)
+        return _multipatch_to_geom(shp, pos)
     base = shape_type % 10  # 11→1 (PointZ), 23→3 (PolyLineM), ...
     if base == 1:  # Point
-        x, y = struct.unpack("<dd", shp[pos + 4 : pos + 20])
-        return _wkb_point(x, y)
+        return ("Point", struct.unpack("<dd", shp[pos + 4 : pos + 20]))
     if base == 8:  # MultiPoint: bbox, numPoints, points
         (npts,) = struct.unpack("<i", shp[pos + 36 : pos + 40])
-        pts = _read_xy(shp, pos + 40, npts)
-        return _wkb_header(4, npts) + b"".join(_wkb_point(x, y) for x, y in pts)
+        return ("MultiPoint", [("Point", p) for p in _read_xy(shp, pos + 40, npts)])
     if base in (3, 5):
         # PolyLine / Polygon: bbox, numParts, numPoints, parts, points
         nparts, npts = struct.unpack("<ii", shp[pos + 36 : pos + 44])
@@ -355,10 +353,8 @@ def _shape_to_wkb(shp: bytes, pos: int) -> bytes | None:
         bounds = parts + [npts]
         rings = [pts[bounds[i] : bounds[i + 1]] for i in range(nparts)]
         if base == 3:
-            lines = [_wkb_path(2, r) for r in rings]
-            if len(lines) == 1:
-                return lines[0]
-            return _wkb_header(5, len(lines)) + b"".join(lines)
+            lines = [("LineString", r) for r in rings]
+            return lines[0] if len(lines) == 1 else ("MultiLineString", lines)
         return _assemble_polygons(rings)
     raise ValueError(f"unsupported shapefile shape type {shape_type}")
 
@@ -368,8 +364,8 @@ def _shape_to_wkb(shp: bytes, pos: int) -> bytes | None:
 _MP_TRI_STRIP, _MP_TRI_FAN, _MP_OUTER, _MP_INNER, _MP_FIRST, _MP_RING = range(6)
 
 
-def _multipatch_to_wkb(shp: bytes, pos: int) -> bytes:
-    """MultiPatch (type 31) → 2D WKB MultiPolygon, the same surface
+def _multipatch_to_geom(shp: bytes, pos: int) -> Geom:
+    """MultiPatch (type 31) → 2D MultiPolygon, the same surface
     flattening GDAL's shapefile driver applies under Force2D
     (geo_strategy.rs:283-291 forces 2D anyway): triangle strips/fans
     explode into one triangle polygon each; OuterRing/FirstRing start a
@@ -420,11 +416,7 @@ def _multipatch_to_wkb(shp: bytes, pos: int) -> bytes:
             raise ValueError(f"unsupported MultiPatch part type {ptype}")
     if not polys:
         raise ValueError("MultiPatch record with no surface parts")
-    parts_wkb = [
-        struct.pack("<BII", 1, 3, len(p)) + b"".join(_ring_bytes(r) for r in p)
-        for p in polys
-    ]
-    return _wkb_header(6, len(parts_wkb)) + b"".join(parts_wkb)
+    return ("MultiPolygon", [("Polygon", p) for p in polys])
 
 
 def _read_xy(shp: bytes, pos: int, npts: int) -> list[tuple[float, float]]:
@@ -432,26 +424,7 @@ def _read_xy(shp: bytes, pos: int, npts: int) -> list[tuple[float, float]]:
     return [(vals[2 * i], vals[2 * i + 1]) for i in range(npts)]
 
 
-def _wkb_header(geom_type: int, count: int) -> bytes:
-    return struct.pack("<BII", 1, geom_type, count)
-
-
-def _wkb_point(x: float, y: float) -> bytes:
-    return struct.pack("<BIdd", 1, 1, x, y)
-
-
-def _wkb_path(geom_type: int, coords: list[tuple[float, float]]) -> bytes:
-    body = b"".join(struct.pack("<dd", x, y) for x, y in coords)
-    return _wkb_header(geom_type, len(coords)) + body
-
-
-def _ring_bytes(coords: list[tuple[float, float]]) -> bytes:
-    return struct.pack("<I", len(coords)) + b"".join(
-        struct.pack("<dd", x, y) for x, y in coords
-    )
-
-
-def _assemble_polygons(rings: list[list[tuple[float, float]]]) -> bytes:
+def _assemble_polygons(rings: list[list[tuple[float, float]]]) -> Geom:
     """SHP polygon rings: outer rings wind clockwise (negative shoelace
     area), holes counter-clockwise, holes follow their outer ring — the
     standard GDAL grouping heuristic."""
@@ -465,14 +438,8 @@ def _assemble_polygons(rings: list[list[tuple[float, float]]]) -> bytes:
         else:  # counter-clockwise → hole of the most recent outer
             polys[-1].append(ring)
     if len(polys) == 1:
-        return struct.pack("<BII", 1, 3, len(polys[0])) + b"".join(
-            _ring_bytes(r) for r in polys[0]
-        )
-    parts = [
-        struct.pack("<BII", 1, 3, len(p)) + b"".join(_ring_bytes(r) for r in p)
-        for p in polys
-    ]
-    return _wkb_header(6, len(parts)) + b"".join(parts)
+        return ("Polygon", polys[0])
+    return ("MultiPolygon", [("Polygon", p) for p in polys])
 
 
 def _parse_dbf(dbf: bytes) -> list[dict]:

@@ -4,6 +4,7 @@
 from __future__ import annotations
 
 import math
+import struct
 
 import pytest
 
@@ -11,14 +12,12 @@ from duckdb_postgis_spark.functions.geo import (
     bng_to_wgs84,
     classify_crs_from_ranges,
     crs_from_prj_text,
-    parse_wkt_point,
-    probe_geometry_encoding,
     webmercator_to_wgs84,
     wgs84_to_webmercator,
     wkb_point_encode,
-    wkb_point_decode,
     transform_xy,
 )
+from duckdb_postgis_spark.functions.wkb import parse_geometry
 from duckdb_postgis_spark.functions.geo_detect import (
     find_coordinate_pair,
     sanitize_geom_name,
@@ -85,35 +84,47 @@ def test_transform_dispatch():
     assert transform_xy(1.5, 52.0, "4326") == (1.5, 52.0)  # skip same-CRS
     with pytest.raises(ValueError):
         transform_xy(0, 0, "9999")
+    # a NaN (empty point) input ends the meridian-arc loop and stays NaN
+    assert all(map(math.isnan, transform_xy(math.nan, math.nan, "27700")))
 
 
-# --- WKB codec + probe ladder ---------------------------------------------
+# --- WKB point + probe ladder (functions/wkb.parse_geometry) -------------
 def test_wkb_roundtrip():
     b = wkb_point_encode(-1.5, 53.25)
-    assert wkb_point_decode(b) == (-1.5, 53.25)
+    assert b == struct.pack("<BIdd", 1, 1, -1.5, 53.25)
+    assert parse_geometry(b) == ("Point", (-1.5, 53.25))
 
 
 def test_probe_ladder_wkb_bytes():
-    assert probe_geometry_encoding(wkb_point_encode(1.0, 2.0)) == ("wkb", 1.0, 2.0)
+    assert parse_geometry(wkb_point_encode(1.0, 2.0)) == ("Point", (1.0, 2.0))
+    assert parse_geometry(bytearray(wkb_point_encode(1.0, 2.0))) == ("Point", (1.0, 2.0))
 
 
 def test_probe_ladder_hex():
     hx = wkb_point_encode(3.0, 4.0).hex()
-    assert probe_geometry_encoding(hx) == ("hexwkb", 3.0, 4.0)
+    assert parse_geometry(hx) == ("Point", (3.0, 4.0))
+    assert parse_geometry(f" {hx.upper()}\n") == ("Point", (3.0, 4.0))
 
 
 def test_probe_ladder_wkt():
-    assert probe_geometry_encoding("POINT (5 6)") == ("wkt", 5.0, 6.0)
+    assert parse_geometry("POINT (5 6)") == ("Point", (5.0, 6.0))
 
 
 def test_probe_ladder_garbage():
-    assert probe_geometry_encoding("not a geometry") is None
-    assert probe_geometry_encoding(b"\x00\x01") is None
+    assert parse_geometry("not a geometry") is None
+    assert parse_geometry(b"\x00\x01") is None
+    assert parse_geometry("") is None
+    assert parse_geometry(None) is None
+    assert parse_geometry(3.5) is None
 
 
 def test_parse_wkt_point():
-    assert parse_wkt_point("POINT (1.5 -2.5)") == (1.5, -2.5)
-    assert parse_wkt_point("LINESTRING (0 0, 1 1)") is None
+    # the ladder's WKT rung reads every standard type, not only POINT
+    assert parse_geometry("POINT (1.5 -2.5)") == ("Point", (1.5, -2.5))
+    assert parse_geometry("LINESTRING (0 0, 1 1)") == (
+        "LineString",
+        [(0.0, 0.0), (1.0, 1.0)],
+    )
 
 
 # --- coordinate-pair detection (core_processor.rs:213-267) ----------------

@@ -123,9 +123,9 @@ def test_gpkg_reader(spark, tmp_path):
     df = read_geopackage(spark, p)
     row = df.collect()[0]
     assert row["name"] == "a"
-    from duckdb_postgis_spark.functions.geo import wkb_point_decode
+    from duckdb_postgis_spark.functions.wkb import wkb_decode
 
-    assert wkb_point_decode(bytes(row["geom"])) == (-0.1, 51.5)
+    assert wkb_decode(bytes(row["geom"])) == ("Point", (-0.1, 51.5))
 
 
 def _write_min_xlsx(path, shared_strings, sheet_xml):
@@ -470,4 +470,110 @@ def test_geojson_non_point_wkt_survives_process_file(spark, tmp_path):
     assert res.source_crs == "4326"
     got = {r["id"]: r["geometry_wkt_wkt"] for r in res.dataframe.collect()}
     assert None not in want.values()
+    assert got == want
+
+
+def _bng_squares(n: int = 20) -> list[list[tuple[float, float]]]:
+    """n 100 m squares near (530000, 180000) in EPSG:27700 (central
+    London), each a closed ring."""
+    out = []
+    for i in range(n):
+        x0, y0 = 530000.0 + 250.0 * i, 180000.0 + 125.0 * i
+        out.append(
+            [(x0, y0), (x0 + 100, y0), (x0 + 100, y0 + 100), (x0, y0 + 100), (x0, y0)]
+        )
+    return out
+
+
+def _write_bng_polygons_geojson(stem: str) -> tuple[str, str]:
+    """Write the squares as a GeoJSON; return (file, output WKT column)."""
+    import json
+
+    feats = [
+        {
+            "type": "Feature",
+            "properties": {"id": i},
+            "geometry": {"type": "Polygon", "coordinates": [[list(p) for p in ring]]},
+        }
+        for i, ring in enumerate(_bng_squares())
+    ]
+    with open(f"{stem}.geojson", "w") as fh:
+        json.dump({"type": "FeatureCollection", "features": feats}, fh)
+    return f"{stem}.geojson", "geometry_wkt_wkt"
+
+
+def _write_bng_polygons_parquet(stem: str) -> tuple[str, str]:
+    """Write the squares as a parquet WKT ``geometry`` column; return
+    (file, output WKT column)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from duckdb_postgis_spark.functions.wkb import to_wkt
+
+    wkts = [to_wkt(("Polygon", [ring])) for ring in _bng_squares()]
+    pq.write_table(
+        pa.table({"id": list(range(len(wkts))), "geometry": wkts}), f"{stem}.parquet"
+    )
+    return f"{stem}.parquet", "geometry_wkt"
+
+
+@pytest.mark.parametrize(
+    "write",
+    [_write_bng_polygons_geojson, _write_bng_polygons_parquet],
+    ids=["geojson", "parquet_wkt"],
+)
+def test_non_point_wkt_probe_infers_bng(spark, tmp_path, write):
+    """The CRS probe parses WKT of every type, not only POINT: a file whose
+    probe sample holds only EPSG:27700 polygons is classified 27700 and
+    reprojected, not left in metres under a 4326 label."""
+    from duckdb_postgis_spark.functions.geo import transform_xy
+    from duckdb_postgis_spark.functions.wkb import centroid, parse_geometry
+
+    path, out_col = write(str(tmp_path / "bng_polygons"))
+    res = process_file(spark, path)
+    assert res.source_crs == "27700"
+    rows = {r["id"]: r[out_col] for r in res.dataframe.collect()}
+    assert len(rows) == 20 and None not in rows.values()
+    lon, lat = centroid(parse_geometry(rows[0]))
+    want = transform_xy(530050.0, 180050.0, "27700")
+    assert abs(lon - want[0]) < 1e-6 and abs(lat - want[1]) < 1e-6
+
+
+_LONLAT_PTS = [(-0.1275, 51.5072), (2.3522, 48.8566), (13.405, 52.52),
+               (-3.7038, 40.4168), (12.4964, 41.9028)]
+_BNG_PTS = [(530000.5, 180000.5), (460150.5, 452150.5), (538890.5, 177320.5),
+            (651409.5, 313177.5), (400000.5, 800000.5)]
+
+
+@pytest.mark.parametrize(
+    "crs, finite", [("4326", _LONLAT_PTS), ("27700", _BNG_PTS)], ids=["lonlat", "bng"]
+)
+def test_wkb_empty_point_becomes_null(spark, tmp_path, crs, finite):
+    """A WKB POINT EMPTY (NaN NaN, the standard encoding) in a geometry
+    column gives a NULL WKT for that row, reprojected or not; the job
+    completes and every other row converts as before."""
+    import math
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from duckdb_postgis_spark.functions.geo import transform_xy, wkb_point_encode
+
+    pts = finite[:2] + [(math.nan, math.nan)] + finite[2:]
+    path = str(tmp_path / "pts.parquet")
+    pq.write_table(
+        pa.table({
+            "id": list(range(len(pts))),
+            "geom": pa.array([wkb_point_encode(x, y) for x, y in pts], pa.binary()),
+        }),
+        path,
+    )
+    res = process_file(spark, path)
+    assert res.geom_columns == ["geom"]
+    assert res.source_crs == crs
+    got = {r["id"]: r["geom_wkt"] for r in res.dataframe.collect()}
+    want = {
+        i: None if i == 2 else "POINT ({} {})".format(*transform_xy(x, y, crs))
+        for i, (x, y) in enumerate(pts)
+    }
     assert got == want

@@ -305,34 +305,19 @@ def test_retention_cohorts_partial_agg(plans):
     assert "HashAggregate" in final and "Exchange" in final
 
 
-def test_theta_range_quadratic_guard(spark, sf_dir, monkeypatch):
-    """join_theta_range must auto-dispatch to the linear bucketed rewrite
-    past the measured quadratic boundary (r9, judge order #8) — same
-    values, bounded plan — not silently burn hours on the naive theta
-    form; SPARK_GRAFT_ALLOW_QUADRATIC=1 forces the naive form for
-    boundary re-measurement."""
+def test_theta_range_quadratic_guard(spark, sf_dir):
+    """join_theta_range runs the linear bucketed rewrite, never the naive
+    theta form (at 1 M events that did not finish in an hour).  Its
+    values stay checked against the DuckDB theta-join oracle by oracle
+    parity and scripts/driver_replica.py."""
     from duckdb_postgis_spark.operators import relational
 
-    monkeypatch.setenv("SPARK_GRAFT_ALLOW_QUADRATIC", "1")
-    naive = sorted(
-        map(tuple, relational.join_theta_range(spark, sf_dir).collect())
-    )
-    naive_plan = relational.join_theta_range(
+    plan = relational.join_theta_range(
         spark, sf_dir
     )._jdf.queryExecution().executedPlan().toString()
-    assert naive, "naive theta form returned no rows"
-
-    monkeypatch.setattr(relational, "_THETA_RANGE_MAX_ROWS", 1)
-    monkeypatch.delenv("SPARK_GRAFT_ALLOW_QUADRATIC", raising=False)
-    dispatched = relational.join_theta_range(spark, sf_dir)
-    plan = dispatched._jdf.queryExecution().executedPlan().toString()
-    # the dispatched plan is the bucketed equi-join: no band residual as
-    # a join CONDITION on a sort-merge range join; the bucket explode is
-    # its signature
+    # the bucketed equi-join: no band residual as a join CONDITION on a
+    # sort-merge range join; the bucket explode is its signature
     assert "explode" in plan.lower(), plan
-    assert sorted(map(tuple, dispatched.collect())) == naive
-    # and the forced naive plan is genuinely different (range theta join)
-    assert "explode" not in naive_plan.lower()
 
 
 def test_minhash_survives_unset_shuffle_conf(spark, sf_dir):

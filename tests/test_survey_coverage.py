@@ -174,7 +174,6 @@ def test_env_knob_inventory():
         "SPARK_SHUFFLE_PARTITIONS",
         "SPARK_GRAFT_STREAM_CKPT_DIR",
         "SPARK_GRAFT_STREAM_TIMEOUT",
-        "SPARK_GRAFT_ALLOW_QUADRATIC",
     }
 
 

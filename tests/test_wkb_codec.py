@@ -7,6 +7,7 @@ from DuckDB spatial (geo_strategy.rs:140,283).
 
 from __future__ import annotations
 
+import math
 import struct
 
 import pytest
@@ -14,9 +15,11 @@ import pytest
 from duckdb_postgis_spark.functions.wkb import (
     centroid,
     from_wkt,
+    parse_geometry,
     to_wkt,
     transform_geom,
     wkb_decode,
+    wkb_encode,
 )
 
 
@@ -85,11 +88,25 @@ def test_transform_applies_to_every_coordinate():
 
 
 def test_probe_ladder_uses_centroid_for_lines():
-    from duckdb_postgis_spark.functions.geo import probe_geometry_encoding
-
     wkb = _le(2, _coords([(0, 0), (10, 0)]))
-    assert probe_geometry_encoding(wkb) == ("wkb", 5.0, 0.0)
-    assert probe_geometry_encoding(wkb.hex()) == ("hexwkb", 5.0, 0.0)
+    assert centroid(parse_geometry(wkb)) == (5.0, 0.0)
+    assert centroid(parse_geometry(wkb.hex())) == (5.0, 0.0)
+    assert centroid(parse_geometry("LINESTRING (0 0, 10 0)")) == (5.0, 0.0)
+
+
+def test_centroid_of_empty_is_nan():
+    # ST_Centroid of an empty geometry is POINT EMPTY; the CRS probe skips it
+    empty_point = parse_geometry(struct.pack("<BIdd", 1, 1, math.nan, math.nan))
+    for g in (
+        empty_point,
+        ("LineString", []),
+        ("Polygon", []),
+        ("Polygon", [[]]),
+        ("MultiPoint", []),
+        ("MultiPolygon", [("Polygon", [])]),
+        ("GeometryCollection", []),
+    ):
+        assert not any(map(math.isfinite, centroid(g))), g
 
 
 def test_wkt_full_double_precision():
@@ -143,6 +160,7 @@ def test_from_wkt_inverts_to_wkt(g):
     wkt = to_wkt(g)
     assert to_wkt(from_wkt(wkt)) == wkt
     assert from_wkt(wkt) == g
+    assert wkb_decode(wkb_encode(g)) == g
 
 
 def test_from_wkt_accepted_spellings():
