@@ -304,10 +304,14 @@ def _fmt(v: float) -> str:
 
 
 def to_wkt(g: Geom) -> str:
-    """Canonical 2D WKT (the ST_AsText(ST_Force2D(..)) interchange form)."""
+    """Canonical 2D WKT (the ST_AsText(ST_Force2D(..)) interchange form).
+    A kind with no members prints ``<KIND> EMPTY``, as ST_AsText does; an
+    empty point (NaN NaN) raises like any non-finite coordinate."""
     kind, payload = g
     if kind == "Point":
         return f"POINT ({_fmt(payload[0])} {_fmt(payload[1])})"
+    if not payload:
+        return f"{kind.upper()} EMPTY"
     if kind == "LineString":
         return f"LINESTRING {_coords_wkt(payload)}"
     if kind == "Polygon":
@@ -345,8 +349,9 @@ def from_wkt(text: str) -> Geom:
     back into a Geom.  Tags are case-insensitive, an EWKT ``SRID=n;``
     prefix is skipped, and Z/M ordinates (``POINT Z (1 2 3)``,
     ``POINTZ (1 2 3)``) are dropped to 2D like ``wkb_decode``; MULTIPOINT
-    members may be bare or parenthesized.  Raises ``ValueError`` on
-    anything else (EMPTY included)."""
+    members may be bare or parenthesized; ``<KIND> EMPTY`` is the kind
+    with no members.  Raises ``ValueError`` on anything else (``POINT
+    EMPTY`` included)."""
     body = re.sub(r"^\s*SRID=\d+;", "", text, flags=re.IGNORECASE)
     toks, pos = [], 0
     while pos < len(body.rstrip()):
@@ -405,6 +410,9 @@ def from_wkt(text: str) -> Geom:
             raise ValueError(f"unsupported WKT geometry in {text[:40]!r}")
         if toks and toks[-1].upper() in ("Z", "M", "ZM"):
             take()
+        if kind != "Point" and toks and toks[-1].upper() == "EMPTY":
+            take()
+            return (kind, [])
         if kind == "Point":
             return (kind, point())
         if kind == "LineString":

@@ -4235,18 +4235,17 @@ def ensure_minhash_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket-wise with NO exchange and shuffles ONLY the delta side into
     the bucket layout — the shuffle over the corpus happened once at
     write time and is amortized over every nightly run (the
-    layout.write_bucketed convention shared with ensure_bucketed_table).
+    layout.ensure_tables convention shared with ensure_bucketed_table).
     Signatures come from the same _minhash_signatures pass
     dedup_minhash_lsh uses, so index and probe stay bit-identical."""
-    from duckdb_postgis_spark.plans.layout import _token, ensure_tables, write_bucketed
+    from duckdb_postgis_spark.plans.layout import _token, ensure_tables
 
-    def build(tbl: str) -> None:
+    def build(write) -> None:
         corpus = table(spark, sf_dir, "documents").filter(F.col("doc_id") % 10 != 0)
-        banded = _minhash_banded(_minhash_signatures(spark, corpus))
-        write_bucketed(banded, tbl, ("band", "bsig"), "overwrite")
+        write(_minhash_banded(_minhash_signatures(spark, corpus)))
 
     tbl = f"minhash_index_{_token(sf_dir, 'documents')}"
-    return ensure_tables(spark, (tbl,), build)[0]
+    return ensure_tables(spark, {tbl: ("band", "bsig")}, build)[0]
 
 
 def _minhash_probe(
@@ -4347,16 +4346,16 @@ def ensure_minhash_index2(spark: SparkSession, sf_dir: str) -> DataFrame:
     the nightly index-maintenance cost is O(|delta|) — never a corpus
     rewrite.  tests/test_fuzz_index_append.py pins that file-level claim
     by grouping the table's parquet files by write job and row-counting
-    each group.  The two-write build is committed by ensure_tables'
-    marker, so an interrupted build is dropped and rebuilt."""
-    from duckdb_postgis_spark.plans.layout import _token, ensure_tables, write_bucketed
+    each group.  ensure_tables publishes the table only after both
+    writes, so an interrupted build leaves nothing behind."""
+    from duckdb_postgis_spark.plans.layout import _token, ensure_tables
 
-    def build(tbl: str) -> None:
+    def build(write) -> None:
         idx = ensure_minhash_index(spark, sf_dir)
         # seed the v2 table with the standing index rows (a
         # bucket-preserving copy; at 100 TB this is the one-time index
         # clone a blue/green maintenance job pays, not a nightly cost)
-        write_bucketed(idx, tbl, ("band", "bsig"), "overwrite")
+        write(idx)
         # the nightly append — accepted = delta docs with NO band
         # collision against the standing index; only their rows land
         delta = table(spark, sf_dir, "documents").filter(F.col("doc_id") % 10 == 0)
@@ -4367,15 +4366,10 @@ def ensure_minhash_index2(spark: SparkSession, sf_dir: str) -> DataFrame:
             .distinct()
         )
         accepted = banded.join(rejected, "doc_id", "left_anti")
-        write_bucketed(
-            accepted.select("doc_id", "sig", "band", "bsig"),
-            tbl,
-            ("band", "bsig"),
-            "append",
-        )
+        write(accepted.select("doc_id", "sig", "band", "bsig"))
 
     tbl = f"minhash_index2_{_token(sf_dir, 'documents')}"
-    return ensure_tables(spark, (tbl,), build)[0]
+    return ensure_tables(spark, {tbl: ("band", "bsig")}, build)[0]
 
 
 #: shared by the append gate AND the compaction gate — compaction must be
@@ -4445,14 +4439,13 @@ def ensure_minhash_index_compacted(spark: SparkSession, sf_dir: str) -> DataFram
     nights every bucket-wise probe opens N files per bucket; compaction
     folds them back to one.  Content is byte-identical to the appended
     index (the registered query proves it by probe-result identity)."""
-    from duckdb_postgis_spark.plans.layout import _token, ensure_tables, write_bucketed
+    from duckdb_postgis_spark.plans.layout import _token, ensure_tables
 
-    def build(tbl: str) -> None:
-        idx2 = ensure_minhash_index2(spark, sf_dir)
-        write_bucketed(idx2, tbl, ("band", "bsig"), "overwrite")
+    def build(write) -> None:
+        write(ensure_minhash_index2(spark, sf_dir))
 
     tbl = f"minhash_index3_{_token(sf_dir, 'documents')}"
-    return ensure_tables(spark, (tbl,), build)[0]
+    return ensure_tables(spark, {tbl: ("band", "bsig")}, build)[0]
 
 
 @query("dedup_minhash_index_compact", oracle=_MINHASH_APPEND_ORACLE)
@@ -4480,7 +4473,7 @@ def dedup_minhash_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # incremental SEMANTIC dedup — the embedding twin of the minhash
 # probe -> append -> compact cycle.  Two warehouse tables per index
-# generation, committed by one ensure_tables marker:
+# generation, built by one ensure_tables call:
 #   * codes  — (vec_id, band, bucket) sign-LSH codes, bucketed on
 #     (band, bucket): the probe join reads it bucket-wise, no exchange;
 #   * vectors — (vec_id, embedding, norm), bucketed on vec_id: the exact
@@ -4493,12 +4486,16 @@ def dedup_minhash_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
 # as the oracle's sqrt(list_sum(...)), so the stored double is
 # bit-identical to a fresh computation).
 # --------------------------------------------------------------------------
-def _embed_index_names(sf_dir: str, gen: str) -> tuple[str, str]:
-    """(codes, vectors) table names of one index generation."""
+def _embed_index_tables(sf_dir: str, gen: str) -> dict[str, tuple[str, ...]]:
+    """The (codes, vectors) table names of one index generation, each
+    with its bucket keys."""
     from duckdb_postgis_spark.plans.layout import _token
 
     tok = _token(sf_dir, "embeddings")
-    return f"embed_index{gen}_codes_{tok}", f"embed_index{gen}_vecs_{tok}"
+    return {
+        f"embed_index{gen}_codes_{tok}": ("band", "bucket"),
+        f"embed_index{gen}_vecs_{tok}": ("vec_id",),
+    }
 
 
 def ensure_embedding_index(spark: SparkSession, sf_dir: str):
@@ -4507,27 +4504,22 @@ def ensure_embedding_index(spark: SparkSession, sf_dir: str):
     codes + a norms-precomputed vector store.  Bit width comes from the
     FULL corpus count (_embed_codes law) — a structural choice made once
     at build time, exactly how a production index pins its geometry."""
-    from duckdb_postgis_spark.plans.layout import ensure_tables, write_bucketed
+    from duckdb_postgis_spark.plans.layout import ensure_tables
 
     n, dim = _corpus_stats(f"{sf_dir}/embeddings.parquet")
 
-    def build(ct: str, vt: str) -> None:
+    def build(codes, vecs) -> None:
         corpus = table(spark, sf_dir, "embeddings").filter(F.col("vec_id") % 10 != 0)
-        write_bucketed(
-            _embed_codes(corpus, n, dim), ct, ("band", "bucket"), "overwrite"
-        )
-        write_bucketed(
+        codes(_embed_codes(corpus, n, dim))
+        vecs(
             corpus.select(
                 "vec_id",
                 "embedding",
                 F.sqrt(F.expr(spark_sumsq("embedding"))).alias("norm"),
-            ),
-            vt,
-            ("vec_id",),
-            "overwrite",
+            )
         )
 
-    return ensure_tables(spark, _embed_index_names(sf_dir, ""), build)
+    return ensure_tables(spark, _embed_index_tables(sf_dir, ""), build)
 
 
 def _embed_probe(
@@ -4630,19 +4622,20 @@ def ensure_embedding_index2(spark: SparkSession, sf_dir: str):
     probe's gate let through.  Both appends are REAL bucketed
     ``mode("append")`` writes into the same layouts: O(|accepted|) new
     rows land as fresh bucket files, the corpus files are untouched
-    (file-level pin in tests/test_fuzz_embed_index.py), and one marker
-    commits the four-write build (seed copy x2 + append x2) with the
-    crash recovery ensure_tables provides."""
-    from duckdb_postgis_spark.plans.layout import ensure_tables, write_bucketed
+    (file-level pin in tests/test_fuzz_embed_index.py), and
+    ensure_tables publishes each table only after all four writes (seed
+    copy x2 + append x2), so an interrupted build leaves nothing
+    behind."""
+    from duckdb_postgis_spark.plans.layout import ensure_tables
 
     n, dim = _corpus_stats(f"{sf_dir}/embeddings.parquet")
 
-    def build(ct: str, vt: str) -> None:
+    def build(codes, vecs) -> None:
         c1, v1 = ensure_embedding_index(spark, sf_dir)
         # seed: bucket-preserving copy of the standing generation (the
         # one-time blue/green clone, not a nightly cost)
-        write_bucketed(c1, ct, ("band", "bucket"), "overwrite")
-        write_bucketed(v1, vt, ("vec_id",), "overwrite")
+        codes(c1)
+        vecs(v1)
         # nightly append: accepted = delta with no verified index match
         delta = table(spark, sf_dir, "embeddings").filter(F.col("vec_id") % 10 == 0)
         rejected = (
@@ -4650,21 +4643,16 @@ def ensure_embedding_index2(spark: SparkSession, sf_dir: str):
             .withColumnRenamed("new_id", "vec_id")
         )
         accepted = delta.join(rejected, "vec_id", "left_anti")
-        write_bucketed(
-            _embed_codes(accepted, n, dim), ct, ("band", "bucket"), "append"
-        )
-        write_bucketed(
+        codes(_embed_codes(accepted, n, dim))
+        vecs(
             accepted.select(
                 "vec_id",
                 "embedding",
                 F.sqrt(F.expr(spark_sumsq("embedding"))).alias("norm"),
-            ),
-            vt,
-            ("vec_id",),
-            "append",
+            )
         )
 
-    return ensure_tables(spark, _embed_index_names(sf_dir, "2"), build)
+    return ensure_tables(spark, _embed_index_tables(sf_dir, "2"), build)
 
 
 #: shared by the append gate AND the compaction gate below — compaction
@@ -4768,14 +4756,14 @@ def ensure_embedding_index_compacted(spark: SparkSession, sf_dir: str):
     folds BOTH tables (codes and vectors) back to one file per bucket.
     Content is byte-identical to the appended generation (the registered
     query proves it by probe-result identity)."""
-    from duckdb_postgis_spark.plans.layout import ensure_tables, write_bucketed
+    from duckdb_postgis_spark.plans.layout import ensure_tables
 
-    def build(ct: str, vt: str) -> None:
+    def build(codes, vecs) -> None:
         c2, v2 = ensure_embedding_index2(spark, sf_dir)
-        write_bucketed(c2, ct, ("band", "bucket"), "overwrite")
-        write_bucketed(v2, vt, ("vec_id",), "overwrite")
+        codes(c2)
+        vecs(v2)
 
-    return ensure_tables(spark, _embed_index_names(sf_dir, "3"), build)
+    return ensure_tables(spark, _embed_index_tables(sf_dir, "3"), build)
 
 
 @query("dedup_embedding_index_compact", oracle=_EMBED_APPEND_ORACLE)

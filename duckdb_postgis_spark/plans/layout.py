@@ -13,19 +13,14 @@ Local testdata stands in for the cluster's object store: layouts are written
 once per scale factor under /tmp and reused. On a real deployment the same
 code targets the warehouse path; nothing else changes.
 
-Every derived layout is keyed by ``_token``.  File and directory
-artifacts (here, ``catalog.ensure_scan_layout`` and the generated pipeline
-inputs of ``operators/geo.py``) commit through ``publish``.  Two commits
-stay separate: ``ensure_tables``, because a catalog table's external
-location is fixed when it is written, so it cannot be built elsewhere and
-renamed; and the manifest family (``ensure_versioned_docs``, the
-delete-vector, equality-delete and compaction chain,
-``ensure_vacuum_layout``, ``ensure_manifest_stats_layout``), whose
-atomically written ``manifest-N.json`` is the Iceberg-style commit: its
-versions extend one root in place and list absolute file paths.  Every
-manifest is written by ``_write_json_atomic`` (each version of the chain
-through ``_commit_version``), loaded by ``_manifest`` and, for a
-snapshot, read by ``read_snapshot``.
+Every derived layout is keyed by ``_token``, and every persisted write
+publishes: it is built on ``publish``'s private sibling and appears under
+its final path in one rename (a directory) or link (a file).  The first
+writer wins, and nothing deletes or overwrites a path another process can
+see.  Bucketed warehouse tables (``ensure_tables``), the manifest family's
+data directories and each ``manifest-*.json`` all commit this way; a
+manifest is loaded by ``_manifest`` and, for a snapshot, read by
+``read_snapshot``.
 """
 
 from __future__ import annotations
@@ -95,17 +90,13 @@ def publish(path: str, build: Callable[[str], None]) -> bool:
             os.remove(tmp)
 
 
-def _write_json_atomic(path: str, obj: object) -> None:
-    """All-or-nothing manifest write: the manifest builders guard on
-    ``os.path.exists(manifest-N.json)``, so the file is written to a
-    sibling temp file and ``os.replace``-d in — the guard only ever sees a
-    complete manifest (Iceberg's metadata.json commit)."""
-    tmp = f"{path}.tmp"
-    with open(tmp, "w") as fh:
+def _write_json(path: str, obj: object) -> None:
+    """The one manifest writer, run as a ``publish`` build: the ``fsync``
+    makes the manifest durable before it is linked onto its final path."""
+    with open(path, "w") as fh:
         json.dump(obj, fh)
         fh.flush()
         os.fsync(fh.fileno())
-    os.replace(tmp, path)
 
 
 def _manifest(root: str, name: int | str) -> dict:
@@ -121,8 +112,10 @@ def _parquet_files(d: str) -> list[str]:
 
 
 def _write_parts(df: DataFrame, out: str) -> list[str]:
-    """Write ``df`` as one parquet part under ``out``; return its paths."""
-    df.coalesce(1).write.mode("overwrite").parquet(out)
+    """Publish ``df`` as one parquet part at ``out``; return the parts
+    there.  If another builder published ``out`` first, these are its
+    parts, which hold the same rows."""
+    publish(out, lambda tmp: df.coalesce(1).write.parquet(tmp))
     return _parquet_files(out)
 
 
@@ -130,59 +123,68 @@ def _commit_version(
     root: str, version: int, build: Callable[[dict], dict]
 ) -> None:
     """One step of the manifest version chain: unless
-    ``manifest-{version}.json`` exists, ``build(prev)`` writes the
+    ``manifest-{version}.json`` is published, ``build(prev)`` writes the
     version's new files and returns its manifest entries (``prev`` is the
     previous version's manifest; version 1 starts from no files), and the
-    manifest is committed with ``_write_json_atomic``."""
-    path = f"{root}/manifest-{version}.json"
-    if os.path.exists(path):
-        return
-    prev = _manifest(root, version - 1) if version > 1 else {"files": []}
-    _write_json_atomic(path, {"version": version, **build(prev)})
+    manifest is published."""
+
+    def write(tmp: str) -> None:
+        prev = _manifest(root, version - 1) if version > 1 else {"files": []}
+        _write_json(tmp, {"version": version, **build(prev)})
+
+    publish(f"{root}/manifest-{version}.json", write)
 
 
 #: bucket count of every bucketed warehouse table (facts and indexes)
 _BUCKETS = 8
-#: commit marker of an ensure_tables build (underscore-prefixed, so the
-#: parquet reader skips it)
-_BUILD_DONE = "_BUILD_DONE"
-
-
-def write_bucketed(
-    df: DataFrame, tbl: str, keys: tuple[str, ...], mode: str
-) -> None:
-    """One bucketed table write: _BUCKETS buckets, sorted on the bucket
-    keys, so every table (seed build, nightly append, compaction) keeps
-    the identical physical layout.  ``overwrite`` creates the EXTERNAL
-    table under _LAYOUT_ROOT; ``append`` adds new files per bucket to it
-    and leaves the existing files untouched."""
-    w = df.write.bucketBy(_BUCKETS, *keys).sortBy(*keys).mode(mode).format("parquet")
-    if mode == "overwrite":
-        w = w.option("path", f"{_LAYOUT_ROOT}/{tbl}")
-    w.saveAsTable(tbl)
 
 
 def ensure_tables(
-    spark: SparkSession, names: tuple[str, ...], build: Callable[..., None]
+    spark: SparkSession,
+    tables: dict[str, tuple[str, ...]],
+    build: Callable[..., None],
 ) -> tuple[DataFrame, ...]:
-    """Crash-safe ensure for the warehouse tables one ``build(*names)``
-    writes: a _BUILD_DONE marker in the first table's directory commits
-    all of them.  Tables found without it (one missing, or a build
-    interrupted between its writes) are dropped and rebuilt.  The rebuild
-    also clears each table DIRECTORY: the tables are EXTERNAL (explicit
-    ``path``), so ``DROP TABLE`` leaves their parquet files behind, and a
-    half-written directory must not leak rows into the next build."""
-    marker = f"{_LAYOUT_ROOT}/{names[0]}/{_BUILD_DONE}"
-    registered = all(spark.catalog.tableExists(t) for t in names)
-    if not (registered and os.path.exists(marker)):
-        for t in names:
-            if spark.catalog.tableExists(t):
-                spark.sql(f"DROP TABLE {t}")
-            shutil.rmtree(f"{_LAYOUT_ROOT}/{t}", ignore_errors=True)
-        build(*names)
-        with open(marker, "w") as fh:
-            fh.write("built\n")
-    return tuple(spark.table(t) for t in names)
+    """The bucketed warehouse tables ``{name: bucket keys}`` that
+    ``build(*writes)`` writes, one ``write(df)`` per table in order, each
+    published onto ``{_LAYOUT_ROOT}/{name}`` and registered as ``name``.
+
+    Each missing directory gets its own ``build`` call in which only its
+    writes land: _BUCKETS-bucket jobs sorted on the keys (seed build,
+    append and compaction share one layout) into a throwaway catalog
+    table on ``publish``'s sibling.  A published directory with no
+    catalog entry (a new process) is only registered; a rebuilt one
+    replaces its stale entry, so no cached file listing survives."""
+
+    def build_on(t: str, tmp: str) -> None:
+        name = os.path.basename(tmp).replace(".", "_")
+
+        def write(df: DataFrame) -> None:
+            w = df.write.bucketBy(_BUCKETS, *tables[t]).sortBy(*tables[t])
+            if os.path.isdir(tmp):
+                w.mode("append").saveAsTable(name, format="parquet")
+            else:
+                w.saveAsTable(name, format="parquet", path=tmp)
+
+        try:
+            build(*(write if u == t else (lambda df: None) for u in tables))
+        finally:
+            spark.sql(f"DROP TABLE IF EXISTS {name}")
+
+    missing = [t for t in tables if not os.path.isdir(f"{_LAYOUT_ROOT}/{t}")]
+    for t in missing:
+        publish(f"{_LAYOUT_ROOT}/{t}", lambda tmp: build_on(t, tmp))
+    for t, keys in tables.items():
+        if t in missing:
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
+        if not spark.catalog.tableExists(t):
+            path = f"{_LAYOUT_ROOT}/{t}"
+            ddl = read_parquet(spark, path).schema.toDDL()
+            k = ", ".join(keys)
+            spark.sql(
+                f"CREATE TABLE {t} ({ddl}) USING parquet CLUSTERED BY ({k}) "
+                f"SORTED BY ({k}) INTO {_BUCKETS} BUCKETS LOCATION '{path}'"
+            )
+    return tuple(spark.table(t) for t in tables)
 
 
 # --------------------------------------------------------------------------
@@ -203,7 +205,6 @@ def ensure_events_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn("event_date", F.to_date("ts"))
             .repartition("event_date")  # one output file per partition dir
             .write.partitionBy("event_date")
-            .mode("overwrite")
             .parquet(tmp)
         )
 
@@ -249,10 +250,9 @@ def ensure_bucketed_table(
     for a recurring 100 TB join pipeline."""
     tbl = f"{name}_b{_BUCKETS}_{_token(sf_dir, name)}"
 
-    def build(t: str) -> None:
-        write_bucketed(table(spark, sf_dir, name), t, (key,), "overwrite")
-
-    return ensure_tables(spark, (tbl,), build)[0]
+    return ensure_tables(
+        spark, {tbl: (key,)}, lambda write: write(table(spark, sf_dir, name))
+    )[0]
 
 
 @query(
@@ -308,7 +308,6 @@ def ensure_training_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
             .sortWithinPartitions("lang", "doc_id")
             .write.partitionBy("lang")
             .option("maxRecordsPerFile", 200)
-            .mode("overwrite")
             .parquet(tmp)
         )
 
@@ -365,7 +364,6 @@ def ensure_fragmented_docs(spark: SparkSession, sf_dir: str) -> str:
             .repartition("lang")
             .write.partitionBy("lang")
             .option("maxRecordsPerFile", 50)
-            .mode("overwrite")
             .parquet(tmp)
         )
 
@@ -390,7 +388,6 @@ def ensure_compacted_docs(spark: SparkSession, sf_dir: str) -> str:
             read_parquet(spark, frag)
             .repartition("lang")
             .write.partitionBy("lang")
-            .mode("overwrite")
             .parquet(tmp)
         )
 
@@ -449,8 +446,7 @@ def ensure_evolved_docs(spark: SparkSession, sf_dir: str) -> str:
             docs.filter(F.col("doc_id") % 2 == 0)
             .select("doc_id", "lang", "n_chars")
             .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(tmp)
+            .write.parquet(tmp)
         )
         (
             docs.filter(F.col("doc_id") % 2 == 1)
@@ -553,7 +549,6 @@ def ensure_embeddings_by_cell(spark: SparkSession, sf_dir: str):
             emb.withColumn("cell", cell_of("embedding"))
             .repartition("cell")
             .write.partitionBy("cell")
-            .mode("overwrite")
             .parquet(tmp)
         )
         np.save(f"{tmp}/_centroids.npy", C)
@@ -880,8 +875,7 @@ def ensure_events_zorder(spark: SparkSession, sf_dir: str) -> str:
             (
                 ev.repartitionByRange(16, "z")
                 .sortWithinPartitions("z")
-                .write.mode("overwrite")
-                .parquet(tmp)
+                .write.parquet(tmp)
             )
 
     publish(path, build)
@@ -1095,7 +1089,7 @@ def ensure_orc_copy(spark: SparkSession, sf_dir: str) -> str:
     path = f"{_LAYOUT_ROOT}/lineitem_orc_{_token(sf_dir, 'lineitem')}"
     publish(
         path,
-        lambda tmp: table(spark, sf_dir, "lineitem").write.mode("overwrite").orc(tmp),
+        lambda tmp: table(spark, sf_dir, "lineitem").write.orc(tmp),
     )
     return path
 
@@ -1152,13 +1146,16 @@ def ensure_vacuum_layout(spark: SparkSession, sf_dir: str) -> str:
     file was written (a failed/replaced commit) but never committed — the
     state VACUUM exists to clean up."""
     path = f"{_LAYOUT_ROOT}/docs_vacuum_{_token(sf_dir, 'documents')}"
-    if not os.path.exists(f"{path}/manifest-current.json"):
+
+    def build(tmp: str) -> None:
         docs = table(spark, sf_dir, "documents")
         live = _write_parts(
             docs.filter(F.col("doc_id") % 2 == 0), f"{path}/data/committed"
         )
         _write_parts(docs.filter(F.col("doc_id") % 2 == 1), f"{path}/data/orphaned")
-        _write_json_atomic(f"{path}/manifest-current.json", {"files": live})
+        _write_json(tmp, {"files": live})
+
+    publish(f"{path}/manifest-current.json", build)
     return path
 
 
@@ -1527,8 +1524,8 @@ def ensure_manifest_stats_layout(spark: SparkSession, sf_dir: str) -> str:
     — the write-side stats collection every Iceberg/Delta writer does.
     Stats come from the freshly written parquet FOOTERS (driver-side
     pyarrow walk, O(#files), paid once at write time like a real
-    writer's collect-stats step) and are committed atomically with
-    _write_json_atomic.
+    writer's collect-stats step) and are published with the
+    manifest.
 
     Z-order compounding: range clustering on ONE dimension gives tight
     per-file bounds on that dimension only; rewriting the same files in
@@ -1540,16 +1537,18 @@ def ensure_manifest_stats_layout(spark: SparkSession, sf_dir: str) -> str:
     import pyarrow.parquet as pq
 
     path = f"{_LAYOUT_ROOT}/events_manifest_stats_{_token(sf_dir, 'events')}"
-    if not os.path.exists(f"{path}/manifest-stats.json"):
+    data = f"{path}/data"
+
+    def build(tmp: str) -> None:
         ev = table(spark, sf_dir, "events")
-        (
-            ev.repartitionByRange(16, "user_id")
+        publish(
+            data,
+            lambda d: ev.repartitionByRange(16, "user_id")
             .sortWithinPartitions("user_id")
-            .write.mode("overwrite")
-            .parquet(f"{path}/data")
+            .write.parquet(d),
         )
         files = []
-        for f in _parquet_files(f"{path}/data"):
+        for f in _parquet_files(data):
             md = pq.ParquetFile(f).metadata
             stats: dict[str, dict[str, int]] = {}
             for rg in range(md.num_row_groups):
@@ -1565,9 +1564,9 @@ def ensure_manifest_stats_layout(spark: SparkSession, sf_dir: str) -> str:
                     cur["min"] = min(cur["min"], s.min)
                     cur["max"] = max(cur["max"], s.max)
             files.append({"path": f, "stats": stats})
-        _write_json_atomic(
-            f"{path}/manifest-stats.json", {"version": 1, "files": files}
-        )
+        _write_json(tmp, {"version": 1, "files": files})
+
+    publish(f"{path}/manifest-stats.json", build)
     return path
 
 

@@ -24,6 +24,16 @@ ORACLES: dict[str, str] = {}
 # window: changed code outranks refreshes of the oldest verdicts.
 PRIORITY: tuple[str, ...] = (
     # -- changed code, not yet driver-verified ----------------------------
+    "join_bucketed_colocated",
+    "dedup_incremental_minhash",
+    "dedup_minhash_index_append",
+    "dedup_minhash_index_compact",
+    "dedup_incremental_embedding",
+    "dedup_embedding_index_append",
+    "dedup_embedding_index_compact",
+    "lakehouse_compact_deletes",
+    "maintenance_vacuum_orphans",
+    "lakehouse_manifest_pruned_scan",
     "geo_wkb_roundtrip",
     "pipeline_geo_file_e2e",
     "join_theta_range",
@@ -65,17 +75,6 @@ PRIORITY: tuple[str, ...] = (
     "stream_user_state",
     "stream_static_join",
     "stream_stream_join",
-    "stream_upsert_live",
-    "stream_stream_left_outer",
-    "stream_chained_dedup_agg",
-    "stream_quantile_hist_live",
-    "stream_rate_limit_live",
-    "similarity_search_query",
-    "similarity_search_filtered",
-    "similarity_search_binary",
-    # -- oldest verdicts, registration order -------------------------------
-    "distinct_dedup_exact",
-    "agg_skew_salted",
 )
 DRIVER_WINDOW = 50
 

@@ -21,8 +21,8 @@ of the shared codes law is fuzzed by family 24 (test_fuzz_cos_dedup) and
 exercised end-to-end for these two operators by the /tmp/sf1_stress
 replica (20 000 vectors, bits > 0, hash-green r13).  Each seed's tmp dir
 gets fresh index tables (the layout token keys on path+mtime), so the
-marker-committed two-table build runs for real every seed; the
-crash-recovery and O(|accepted|) file-level pins are directed tests.
+published two-table build runs for real every seed; the crash-recovery
+and O(|accepted|) file-level pins are directed tests.
 """
 
 from __future__ import annotations
@@ -189,81 +189,51 @@ def test_append_cost_is_delta_sized(spark, tmp_path):
     assert v2.count() == n_v1 + 3
 
 
-def test_interrupted_build_recovers(spark, tmp_path):
-    """Marker-committed two-table crash recovery (layout.ensure_tables):
-    a missing marker, a half-dropped pair, stale files in either external
-    directory, or a build that raises between its writes must all rebuild
-    both tables completely."""
+def test_interrupted_build_recovers(spark, tmp_path, monkeypatch):
+    """Publish-contract pin for two-table builds (layout.ensure_tables):
+    a build that raises between its writes leaves no table directory, no
+    catalog entry and no sibling, and the next call builds both tables
+    completely.  Wiping one or both directories of a live generation
+    rebuilds exactly what is missing, with unchanged rows."""
     import shutil
 
     from duckdb_postgis_spark.operators.llm import ensure_embedding_index2
-    from duckdb_postgis_spark.plans.layout import (
-        _LAYOUT_ROOT,
-        _token,
-        ensure_tables,
-        write_bucketed,
-    )
+    from duckdb_postgis_spark.plans import layout
 
+    root = tmp_path / "layout"
+    monkeypatch.setattr(layout, "_LAYOUT_ROOT", str(root))
     _write_embeddings(_directed_rows(), tmp_path)
-    tok = _token(str(tmp_path), "embeddings")
+    tok = layout._token(str(tmp_path), "embeddings")
+
+    # the shared helper: a build that dies after its first write
+    # publishes nothing, and the next call builds BOTH tables
+    tables = {f"ensure_a_{tok}": ("band",), f"ensure_b_{tok}": ("vec_id",)}
+    rows = spark.range(40).selectExpr("id AS vec_id", "id % 5 AS band")
+
+    def crash(a, b) -> None:
+        a(rows)
+        assert [f for f in root.iterdir() if ".tmp." in f.name]  # a's sibling
+        raise RuntimeError("interrupted build")
+
+    with pytest.raises(RuntimeError, match="interrupted build"):
+        layout.ensure_tables(spark, tables, crash)
+    assert list(root.iterdir()) == []
+    assert not [t.name for t in spark.catalog.listTables() if tok in t.name]
+    ta, tb = layout.ensure_tables(spark, tables, lambda a, b: (a(rows), b(rows)))
+    assert (ta.count(), tb.count()) == (40, 40)
+    assert sorted(f.name for f in root.iterdir()) == sorted(tables)
+
+    # a real generation: one wiped directory, then both
     ct, vt = f"embed_index2_codes_{tok}", f"embed_index2_vecs_{tok}"
     c2, v2 = ensure_embedding_index2(spark, str(tmp_path))
     n_c, n_v = c2.count(), v2.count()
-
-    # state 1: crash before the marker (tables live, marker gone)
-    os.remove(f"{_LAYOUT_ROOT}/{ct}/_BUILD_DONE")
-    c2b, v2b = ensure_embedding_index2(spark, str(tmp_path))
-    assert (c2b.count(), v2b.count()) == (n_c, n_v)
-    assert os.path.exists(f"{_LAYOUT_ROOT}/{ct}/_BUILD_DONE")
-
-    # state 2: half-dropped pair with stale files + stale marker
-    spark.sql(f"DROP TABLE {vt}")
-    assert os.listdir(f"{_LAYOUT_ROOT}/{vt}"), "external drop must leave files"
-    c2c, v2c = ensure_embedding_index2(spark, str(tmp_path))
-    assert (c2c.count(), v2c.count()) == (n_c, n_v)
-    _compare(spark, tmp_path, "dedup_embedding_index_append", "interrupted")
-
-    # belt-and-braces: both directories wiped entirely
-    for t in (ct, vt):
-        spark.sql(f"DROP TABLE {t}")
-        shutil.rmtree(f"{_LAYOUT_ROOT}/{t}", ignore_errors=True)
-    c2d, v2d = ensure_embedding_index2(spark, str(tmp_path))
-    assert (c2d.count(), v2d.count()) == (n_c, n_v)
-
-    # the shared helper itself: a two-table build that dies after its
-    # first write commits nothing, and the next call rebuilds BOTH tables
-    names = (f"ensure_a_{tok}", f"ensure_b_{tok}")
-    marker = f"{_LAYOUT_ROOT}/{names[0]}/_BUILD_DONE"
-    rows = spark.range(40).selectExpr("id AS vec_id", "id % 5 AS band")
-
-    def build(a: str, b: str, crash: bool = False) -> None:
-        write_bucketed(rows, a, ("band",), "overwrite")
-        if crash:
-            raise RuntimeError("interrupted build")
-        write_bucketed(rows, b, ("vec_id",), "overwrite")
-
-    def assert_complete() -> None:
-        ta, tb = ensure_tables(spark, names, build)
-        assert (ta.count(), tb.count()) == (40, 40)
-        assert os.path.exists(marker)
-
-    with pytest.raises(RuntimeError):
-        ensure_tables(spark, names, lambda a, b: build(a, b, crash=True))
-    assert not os.path.exists(marker)
-    assert_complete()
-
-    # catalog entries dropped, a stray part file left behind: its rows
-    # must not leak into the rebuilt table
-    part = next(
-        f for f in os.listdir(f"{_LAYOUT_ROOT}/{names[0]}") if f.endswith(".parquet")
-    )
-    for t in names:
-        spark.sql(f"DROP TABLE {t}")
-    shutil.copy(
-        f"{_LAYOUT_ROOT}/{names[0]}/{part}",
-        f"{_LAYOUT_ROOT}/{names[1]}/part-00000-stray_00003.c000.snappy.parquet",
-    )
-    assert_complete()
+    for wiped in ((vt,), (ct, vt)):
+        for t in wiped:
+            shutil.rmtree(root / t)
+        c2b, v2b = ensure_embedding_index2(spark, str(tmp_path))
+        assert (c2b.count(), v2b.count()) == (n_c, n_v)
+        _compare(spark, tmp_path, "dedup_embedding_index_append", wiped)
+    assert not [f for f in root.iterdir() if ".tmp." in f.name]
 
 
 def test_probe_plan_is_index_colocated(spark, tmp_path):

@@ -261,41 +261,44 @@ def test_index_compaction_folds_bucket_files(spark, tmp_path):
     assert sorted(map(tuple, out)) == sorted(map(tuple, base))
 
 
-def test_interrupted_build_recovers(spark, tmp_path):
-    """Crash-recovery pin for the two-write (seed + append) build: the
-    index table is EXTERNAL, so a recovery DROP TABLE leaves its parquet
-    files on disk, and a build that stopped after the seed write must
-    not be served as complete.  Simulate the two interrupted states and
-    assert the builder self-heals in both:
-
-    1. crash between step-1 seed write and the _BUILD_DONE marker
-       (table registered, marker missing, files on disk);
-    2. crash between the recovery DROP and the rebuild (table gone,
-       stale files AND stale marker on disk).
-    """
+def test_interrupted_build_recovers(spark, tmp_path, monkeypatch):
+    """Publish-contract pin for the two-write (seed + append) build: a
+    build that raises after its seed write leaves no table directory, no
+    catalog entry (the table's or the build's throwaway one) and no
+    sibling, and the next call builds completely.  A directory wiped
+    under a live catalog entry rebuilds, and the stale entry is replaced
+    (the rebuilt table reads without FILE_NOT_EXIST)."""
     import os
     import shutil
 
-    from duckdb_postgis_spark.operators.llm import ensure_minhash_index2
-    from duckdb_postgis_spark.plans.layout import _LAYOUT_ROOT, _token
+    from duckdb_postgis_spark.operators import llm
+    from duckdb_postgis_spark.plans import layout
 
+    root = str(tmp_path / "layout")
+    monkeypatch.setattr(layout, "_LAYOUT_ROOT", root)
     _write_rows(_directed_rows(), tmp_path)
-    tbl = f"minhash_index2_{_token(str(tmp_path), 'documents')}"
-    tbl_dir = f"{_LAYOUT_ROOT}/{tbl}"
-    n_full = ensure_minhash_index2(spark, str(tmp_path)).count()
+    tbl = f"minhash_index2_{layout._token(str(tmp_path), 'documents')}"
+    n_v1 = llm.ensure_minhash_index(spark, str(tmp_path)).count()
+    published = sorted(os.listdir(root))
+    seen = []
 
-    # state 1: marker missing, table registered, directory non-empty
-    os.remove(f"{tbl_dir}/_BUILD_DONE")
-    assert ensure_minhash_index2(spark, str(tmp_path)).count() == n_full
-    assert os.path.exists(f"{tbl_dir}/_BUILD_DONE")
+    def interrupted(*_args):
+        seen.extend(os.listdir(root))
+        raise RuntimeError("interrupted build")
 
-    # state 2: table dropped mid-recovery, stale files + stale marker
-    spark.sql(f"DROP TABLE {tbl}")
-    assert os.listdir(tbl_dir), "external drop must leave files for this test"
-    assert ensure_minhash_index2(spark, str(tmp_path)).count() == n_full
+    with monkeypatch.context() as m:
+        m.setattr(llm, "_minhash_signatures", interrupted)
+        with pytest.raises(RuntimeError, match="interrupted build"):
+            llm.ensure_minhash_index2(spark, str(tmp_path))
+    assert any(f.startswith(f"{tbl}.tmp.") for f in seen), seen  # seed written
+    assert sorted(os.listdir(root)) == published
+    assert not [t.name for t in spark.catalog.listTables() if t.name.startswith(tbl)]
+
+    n_full = llm.ensure_minhash_index2(spark, str(tmp_path)).count()
+    assert n_full == n_v1 + 9
+    assert sorted(os.listdir(root)) == sorted([*published, tbl])
     _compare(spark, tmp_path, "interrupted")
 
-    # belt-and-braces: a fully deleted directory also rebuilds
-    spark.sql(f"DROP TABLE {tbl}")
-    shutil.rmtree(tbl_dir, ignore_errors=True)
-    assert ensure_minhash_index2(spark, str(tmp_path)).count() == n_full
+    shutil.rmtree(f"{root}/{tbl}")
+    assert llm.ensure_minhash_index2(spark, str(tmp_path)).count() == n_full
+    _compare(spark, tmp_path, "wiped")

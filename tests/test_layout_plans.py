@@ -342,6 +342,73 @@ def test_publish_racing_threads_publish_one_copy(tmp_path):
         assert os.listdir(os.path.dirname(path)) == ["artifact"]
 
 
+
+def test_second_process_registers_published_table(spark, tmp_path, monkeypatch):
+    """What a second process sees: a published table directory with no
+    catalog entry, next to another builder's in-flight sibling.
+    ensure_tables registers the directory without calling ``build`` or
+    launching a Spark job, touches neither directory, and serves the
+    original rows from a bucketed scan."""
+    import os
+    import shutil
+    import uuid
+
+    from duckdb_postgis_spark.plans import layout
+
+    root = tmp_path / "layout"
+    monkeypatch.setattr(layout, "_LAYOUT_ROOT", str(root))
+    t = f"second_process_{uuid.uuid4().hex[:8]}"
+    rows = spark.range(40).selectExpr("id AS k", "id * 3 AS v")
+    (df,) = layout.ensure_tables(spark, {t: ("k",)}, lambda write: write(rows))
+    want = sorted(map(tuple, df.collect()))
+    spark.sql(f"DROP TABLE {t}")  # a new session's catalog has no entry
+    sibling = root / f"{t}.tmp.{os.getpid() + 1}.0123abcd"
+    sibling.mkdir()
+    part = next(f for f in os.listdir(root / t) if f.endswith(".parquet"))
+    shutil.copy(root / t / part, sibling / part)
+
+    def files() -> dict[str, int]:
+        return {
+            str(f): f.stat().st_mtime_ns for d in (root / t, sibling) for f in d.iterdir()
+        }
+
+    before, calls = files(), []
+    sc = spark.sparkContext
+    group = "ensure-tables-second-process"
+    sc.setJobGroup(group, "ensure_tables")
+    try:
+        (df,) = layout.ensure_tables(spark, {t: ("k",)}, calls.append)
+        _ = df.schema
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert calls == []
+    assert files() == before
+    assert sorted(map(tuple, df.collect())) == want
+    p = plan_of(df.groupBy("k").count())
+    assert "Bucketed: true" in p and "hashpartitioning(k" not in p, p
+
+
+def test_write_parts_keeps_a_published_winner(spark, tmp_path):
+    """A manifest build that loses the race for a data directory lists
+    the winner's parts (same rows) and deletes or rewrites none of them."""
+    import os
+
+    from duckdb_postgis_spark.plans.layout import _write_parts
+
+    out = str(tmp_path / "root" / "data" / "add-1")
+    df = spark.range(30).toDF("doc_id")
+    winner = _write_parts(df, out)
+
+    def files() -> dict[str, int]:
+        return {f: os.stat(f"{out}/{f}").st_mtime_ns for f in os.listdir(out)}
+
+    before = files()
+    assert _write_parts(df.filter("doc_id < 0"), out) == winner
+    assert files() == before
+    assert os.listdir(os.path.dirname(out)) == ["add-1"]
+    assert spark.read.parquet(*winner).count() == 30
+
 def test_token_tracks_parts_of_directory_tables(tmp_path):
     """A directory-shaped table keys on its parts: rewriting one part in
     place leaves the directory's own stat unchanged (its mtime is
@@ -494,30 +561,43 @@ def test_equality_deletes_layered_after_positions(spark, sf_dir):
 
 
 def test_manifest_writes_are_atomic(tmp_path):
-    """r12 ADVICE pin: every manifest write goes through
-    _write_json_atomic (temp file + os.replace), so the exists() guard
-    can never observe a truncated manifest.  Checks the helper's
-    contract directly — complete content, no leftover .tmp, and safe
-    replace over an existing (e.g. previously truncated) file."""
-    import json
+    """Every manifest is published: the one JSON writer (``_write_json``)
+    builds it on a private sibling and ``publish`` links it onto its path,
+    so a reader never sees a partial manifest and an existing one is
+    never replaced.  No other commit is left in layout.py: no
+    ``os.replace``, no overwrite write, no marker, and ``publish`` is the
+    only code that renames or links."""
+    import inspect
     import os
 
-    from duckdb_postgis_spark.plans.layout import _write_json_atomic
-
-    target = tmp_path / "manifest-1.json"
-    # simulate a pre-fix truncated manifest left by a crashed writer
-    target.write_text('{"version": 1, "fil')
-    _write_json_atomic(str(target), {"version": 1, "files": ["a", "b"]})
-    assert json.load(open(target)) == {"version": 1, "files": ["a", "b"]}
-    assert not os.path.exists(f"{target}.tmp")
-    # and no writer in layout.py bypasses the helper anymore
-    import inspect
+    import pytest
 
     from duckdb_postgis_spark.plans import layout
 
+    root = str(tmp_path)
+    layout._commit_version(root, 1, lambda prev: {"files": [*prev["files"], "a"]})
+    assert layout._manifest(root, 1) == {"version": 1, "files": ["a"]}
+    calls = []
+    layout._commit_version(root, 1, lambda prev: calls.append(prev) or {})
+    assert calls == [] and layout._manifest(root, 1) == {"version": 1, "files": ["a"]}
+
+    def crash(prev: dict) -> dict:
+        raise RuntimeError("interrupted")
+
+    with pytest.raises(RuntimeError, match="interrupted"):
+        layout._commit_version(root, 2, crash)
+    assert os.listdir(root) == ["manifest-1.json"]
+    layout._commit_version(root, 2, lambda prev: {"files": [*prev["files"], "b"]})
+    assert layout._manifest(root, 2) == {"version": 2, "files": ["a", "b"]}
+
     src = inspect.getsource(layout)
-    helper = inspect.getsource(layout._write_json_atomic)
-    assert src.count("json.dump(") == helper.count("json.dump(")
+    assert src.count("json.dump(") == 1
+    assert "json.dump(" in inspect.getsource(layout._write_json)
+    for gone in ("os.replace", 'mode("overwrite")', "_BUILD_DONE"):
+        assert gone not in src, gone
+    commit = inspect.getsource(layout.publish)
+    for move in ("os.rename", "os.link"):
+        assert src.count(move) == commit.count(move) > 0, move
 
 
 def test_manifest_pruned_scan_opens_only_matching_files(spark, sf_dir):

@@ -473,6 +473,30 @@ def test_geojson_non_point_wkt_survives_process_file(spark, tmp_path):
     assert got == want
 
 
+def test_geojson_empty_multipoint_prints_empty(spark, tmp_path):
+    """A feature whose MultiPoint has no coordinates keeps PostGIS's
+    ``ST_AsText`` spelling, ``MULTIPOINT EMPTY``, through process_file
+    (not NULL); the other feature converts as before."""
+    import json
+
+    geoms = [
+        {"type": "MultiPoint", "coordinates": []},
+        {"type": "Point", "coordinates": [-0.1275, 51.50722]},
+    ]
+    fc = {
+        "type": "FeatureCollection",
+        "features": [
+            {"type": "Feature", "properties": {"id": i}, "geometry": g}
+            for i, g in enumerate(geoms)
+        ],
+    }
+    p = tmp_path / "empty.geojson"
+    p.write_text(json.dumps(fc))
+    res = process_file(spark, str(p))
+    assert res.source_crs == "4326"
+    got = {r["id"]: r["geometry_wkt_wkt"] for r in res.dataframe.collect()}
+    assert got == {0: "MULTIPOINT EMPTY", 1: "POINT (-0.1275 51.50722)"}
+
 def _bng_squares(n: int = 20) -> list[list[tuple[float, float]]]:
     """n 100 m squares near (530000, 180000) in EPSG:27700 (central
     London), each a closed ring."""

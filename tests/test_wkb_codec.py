@@ -153,9 +153,24 @@ _GEOMS = [
         ],
     ),
 ]
+# every kind but Point has an EMPTY spelling (an empty point is NaN NaN)
+_EMPTY = [
+    (kind, [])
+    for kind in (
+        "LineString", "Polygon", "MultiPoint", "MultiLineString",
+        "MultiPolygon", "GeometryCollection",
+    )
+]
+_EMPTY_MEMBER = ("GeometryCollection", [("LineString", []), ("Point", (1.0, 2.0))])
 
 
-@pytest.mark.parametrize("g", _GEOMS, ids=[g[0] for g in _GEOMS])
+@pytest.mark.parametrize(
+    "g",
+    [*_GEOMS, *_EMPTY, _EMPTY_MEMBER],
+    ids=[g[0] for g in _GEOMS]
+    + [f"{g[0]}_empty" for g in _EMPTY]
+    + ["GeometryCollection_empty_member"],
+)
 def test_from_wkt_inverts_to_wkt(g):
     wkt = to_wkt(g)
     assert to_wkt(from_wkt(wkt)) == wkt
