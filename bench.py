@@ -136,24 +136,19 @@ def bench_sf1_shape(headline, queries, cpus) -> dict:
     d, _ = ensure_scan_layout(raw)
     build_sec = round(time.perf_counter() - t0, 2)
 
-    from pyspark.sql import SparkSession
+    from duckdb_postgis_spark.session import bench_conf, get_spark
 
     # 10× the data: wider shuffle, 8 MB splits (the 134 MiB lineitem fans
     # to ~17 scan tasks; the sf0.1 session's 1 MB splits would make 4000+
     # sub-ms tasks whose scheduling swamps the work)
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("duckdb-postgis-spark-bench-sf1")
-        .config("spark.sql.adaptive.enabled", "false")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.files.maxPartitionBytes", str(8 * 1024 * 1024))
-        .config("spark.sql.files.openCostInBytes", "32768")
-        .config("spark.sql.files.minPartitionNum", cpus)
-        .config("spark.locality.wait", "0")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+    spark = get_spark(
+        "duckdb-postgis-spark-bench-sf1",
+        f"local[{cpus}]",
+        conf={
+            **bench_conf(cpus),
+            "spark.sql.shuffle.partitions": "32",
+            "spark.sql.files.maxPartitionBytes": str(8 * 1024 * 1024),
+        },
     )
     spark.sparkContext.setLogLevel("ERROR")
     for name in headline:  # warm pass (page cache, codegen, broadcasts)
@@ -366,10 +361,9 @@ def bench_sf1_shape(headline, queries, cpus) -> dict:
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    from pyspark.sql import SparkSession
-
     from duckdb_postgis_spark import registry
     from duckdb_postgis_spark.catalog import load_tables
+    from duckdb_postgis_spark.session import bench_conf, get_spark
 
     # one-time scan-layout normalization (see module docstring); cached —
     # steady-state cost is zero, first-ever cost reported in the JSON.
@@ -378,36 +372,10 @@ def main() -> None:
 
     opt_dir, layout_sec = ensure_scan_layout(sf_dir)
 
-    # Bench session tuned for THIS data size (sub-GB): AQE's stage
-    # barriers only add latency at ms scale, an 8-way shuffle covers the
-    # tiny aggregate exchanges (sort-heavy operators pin their own shuffle
-    # width to core count), and 1 MB file splits let the multi-row-group
-    # layout fan each table scan across the cores (the cluster default of
-    # 128 MB would put a 10 MB table in ONE task).  At cluster scale the
-    # defaults in session.get_spark (AQE on, 128 MB splits, shuffle
-    # partitions ~ cores) apply instead.
-    def make_session() -> "SparkSession":
-        spark = (
-            SparkSession.builder.master(f"local[{cpus}]")
-            .appName("duckdb-postgis-spark-bench")
-            # the FIRST builder call launches the JVM and fixes the driver
-            # heap for the whole bench process — the sf1-shape section
-            # (10x data, single local JVM) needs more than the 1g default,
-            # and a later getOrCreate cannot raise it
-            .config("spark.driver.memory", "8g")
-            .config("spark.sql.adaptive.enabled", "false")
-            .config("spark.sql.shuffle.partitions", "8")
-            .config("spark.sql.session.timeZone", "UTC")
-            .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-            .config("spark.sql.files.maxPartitionBytes", "1048576")
-            .config("spark.sql.files.openCostInBytes", "32768")
-            # split small compute-heavy files (documents: ~0.5 MB holding
-            # a seconds-scale text stage) across cores — bytesPerCore
-            # from this floor, not the byte-size default
-            .config("spark.sql.files.minPartitionNum", cpus)
-            .config("spark.locality.wait", "0")
-            .config("spark.ui.enabled", "false")
-            .getOrCreate()
+    # Bench session tuned for THIS data size (session.bench_conf)
+    def make_session():
+        spark = get_spark(
+            "duckdb-postgis-spark-bench", f"local[{cpus}]", conf=bench_conf(cpus)
         )
         spark.sparkContext.setLogLevel("ERROR")
         # warm the OS page cache over the parquet files (BASELINE.md's

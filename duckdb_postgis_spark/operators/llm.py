@@ -300,8 +300,9 @@ def _segmented_bucket_pairs(
     xs × ys cross product — picked per row by an ``if``.  The join's two
     branches are the identical segment aggregation, so its exchange (and
     the whole signature/banding lineage below it) plans once and
-    ReuseExchange dedups it (plan-checked in plans/r14/; the first-cut
-    three-consumer union form measured ~+50% on dedup_minhash_lsh —
+    ReuseExchange dedups it (the executed plan shows the second branch
+    as a ReusedExchange; the first-cut three-consumer union form
+    measured ~+50% on dedup_minhash_lsh —
     the union branch defeated exchange reuse and re-ran the signature
     lineage, the exact r13 disease)."""
     if _lsh_seg_count(n_rows) == 1:
@@ -440,9 +441,9 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Bucket-grouped candidates (r13 OPTIMIZATION round, value-identical —
     guide §2.3/§2.4/§3): the r8-r12 shape formed candidates as a banded
-    SELF-JOIN on (band, bsig), and the executed plan (plans/r13/
-    dedup_minhash_lsh_before.txt, ops 8-10 vs 14-16) showed the dominant
-    stage — the 12-way md5-min SortAggregate (min over STRING cannot
+    SELF-JOIN on (band, bsig), and its executed plan (the same operator
+    run twice, once per join side) showed the dominant stage — the
+    12-way md5-min SortAggregate (min over STRING cannot
     hash-aggregate: immutable agg buffer, so each branch also pays a
     full sort of the shingle stream) — executing TWICE: ReuseExchange
     dedups only the shingle exchange, not the aggregation above it,
@@ -1983,8 +1984,8 @@ def _pin_recall(
     the ungrouped total count, and the output crossJoin); the consumers
     project different columns, so ReuseExchange could not dedup them and
     the expensive exact funnel (block matmul / full corpus scan) executed
-    three times per invocation — see operators (15)/(21)/(50) of
-    plans/r13/knn_ivf_lsh_before2.txt.  Now ONE broadcast left join marks
+    three times per invocation (three copies of the funnel in that
+    executed plan).  Now ONE broadcast left join marks
     each exact row hit/miss and a single-partition window computes
     (n_hit, n_exact) in the same pass, so exact and approx each execute
     exactly once BY CONSTRUCTION (no cache, no ledger).  Values are
@@ -2048,9 +2049,9 @@ def _knn_ivf_lsh_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     nparts = shuffle_width(spark)
     sumsq = F.expr(spark_sumsq("embedding"))
     # nrm is attached before _bucketize, but the optimizer does not keep
-    # it there: the executed plan (plans/r14/knn_ivf_lsh_after.txt, node
-    # 22) evaluates the SQRT fold in a Project ABOVE the posexplode
-    # Generate, once per (vector, band) row, not once per vector.  Same
+    # it there: the executed plan evaluates the SQRT fold in a Project
+    # ABOVE the posexplode Generate, once per (vector, band) row, not
+    # once per vector.  Same
     # expression, same double, so downstream cosines are bit-identical.
     withnorm = _bucketize(
         spark,
@@ -3487,8 +3488,8 @@ def text_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     statistic BM25 needs — dl plus the three per-term tfs as conditional
     count columns (guide §2.1: the r13-opt single-pass rewrite; the r10
     shape fanned the corpus tokenize into FOUR consumers — dl×2 via the
-    stats branch, tf, df — and plans/r13/text_bm25_search_before.txt shows
-    all four Generate nodes executing).  df/avgdl/N then derive from the
+    stats branch, tf, df — and that executed plan held all four
+    Generate nodes).  df/avgdl/N then derive from the
     |docs|-row frame (df_t = count of docs with tf_t>0 ≡ the old
     countDistinct(doc_id) — exact integers), riding as one broadcast 1-row
     aggregate; the final top-k is a distributed TakeOrderedAndProject
@@ -3988,8 +3989,8 @@ def text_collocation_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     tot = bgc.agg(F.sum("c_ab").alias("n_total"))
     # unigram slot counts DERIVE from the bigram counts (r13-opt, guide
     # §2.1/§2.3: the r10 shape re-ran the corpus bigram explode twice more
-    # inside a Union feeding this agg — 3 Generate nodes in
-    # plans/r13/text_collocation_pmi_before.txt; c(tok) = Σ c_ab over
+    # inside a Union feeding this agg — 3 Generate nodes in that
+    # executed plan; c(tok) = Σ c_ab over
     # bigrams with tok in that slot is the same exact integer, and the
     # union now moves |distinct bigrams| rows, not the corpus stream)
     uni = (

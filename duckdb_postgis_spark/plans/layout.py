@@ -625,8 +625,8 @@ def similarity_search_ivf_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     funnel 2× (both exceptAll branches), the exact full scan 3× (the
     _pin_recall fan-out), and trained the unpruned quantizer's centroids
     from scratch next to the layout's persisted identical ones — 18
-    parquet scans / 14 Python-boundary nodes in
-    plans/r13/similarity_search_ivf_pruned_before.txt.  Now: the exact
+    parquet scans / 14 Python-boundary nodes in that executed plan.
+    Now: the exact
     funnel runs once (_pin_recall's single-pass form), the mismatch
     count is ONE full outer join on the ≤10-row (vec_id, cosine) frames
     (rows are unique per side, so |symmetric difference| = count of

@@ -1,4 +1,4 @@
-"""SparkSession builder with scale-appropriate defaults.
+"""The one SparkSession builder, with scale-appropriate defaults.
 
 The reference opens an in-memory DuckDB per job (``core_processor.rs:67``);
 our equivalent of "the engine" is a configured SparkSession.  Defaults are
@@ -10,7 +10,7 @@ scale (AQE on, partition coalescing, broadcast threshold).
 from __future__ import annotations
 
 import os
-from collections.abc import Iterator
+from collections.abc import Iterator, Mapping
 from contextlib import contextmanager
 
 from py4j.protocol import Py4JError
@@ -21,8 +21,15 @@ def get_spark(
     app_name: str = "duckdb-postgis-spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
+    conf: Mapping[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or fetch) the engine session.
+    """Build (or fetch) a session: ``app_name`` on ``master`` with the
+    confs in ``conf``.  This is the repository's one session builder;
+    the bench passes ``bench_conf``, the driver replica an empty mapping
+    (a plain session, as the driver builds it).
+
+    Without ``conf`` the engine defaults apply (``shuffle_partitions``
+    sets their shuffle width):
 
     - AQE: runtime re-plan, partition coalescing, skew-join handling — the
       100 TB story relies on these instead of hand-tuned partition counts.
@@ -34,27 +41,64 @@ def get_spark(
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if master is None:
         master = os.environ.get("SPARK_MASTER", f"local[{cpus}]")
-    if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_SHUFFLE_PARTITIONS", cpus))
-    builder = (
+    if conf is None:
+        if shuffle_partitions is None:
+            shuffle_partitions = int(
+                os.environ.get("SPARK_SHUFFLE_PARTITIONS", cpus)
+            )
+        conf = {
+            "spark.sql.adaptive.enabled": "true",
+            "spark.sql.adaptive.coalescePartitions.enabled": "true",
+            "spark.sql.adaptive.skewJoin.enabled": "true",
+            "spark.sql.execution.arrow.pyspark.enabled": "true",
+            "spark.sql.shuffle.partitions": str(shuffle_partitions),
+            "spark.sql.session.timeZone": "UTC",
+            # INT96 (the legacy default) carries NO parquet min/max
+            # statistics, which silently disables timestamp
+            # row-group/file skipping on every table this engine writes;
+            # MICROS is the modern cross-engine encoding (matches the
+            # driver testdata)
+            "spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS",
+            "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+            "spark.driver.maxResultSize": "4g",
+            "spark.ui.enabled": "false",
+        }
+    return (
         SparkSession.builder.appName(app_name)
         .master(master)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.session.timeZone", "UTC")
-        # INT96 (the legacy default) carries NO parquet min/max statistics,
-        # which silently disables timestamp row-group/file skipping on
-        # every table this engine writes; MICROS is the modern
-        # cross-engine encoding (matches the driver testdata)
-        .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.maxResultSize", "4g")
-        .config("spark.ui.enabled", "false")
+        .config(map=dict(conf))
+        .getOrCreate()
     )
-    return builder.getOrCreate()
+
+
+def bench_conf(cpus: str) -> dict[str, str]:
+    """The bench session's confs, tuned for sub-GB data on ``local[cpus]``.
+
+    AQE's stage barriers only add latency at ms scale, an 8-way shuffle
+    covers the tiny aggregate exchanges (sort-heavy operators pin their
+    own shuffle width to core count), and 1 MB file splits let the
+    multi-row-group scan layout fan each table scan across the cores
+    (the 128 MB default would put a 10 MB table in ONE task).  At
+    cluster scale the engine defaults of ``get_spark`` apply instead."""
+    return {
+        # the FIRST session of a process launches the JVM and fixes the
+        # driver heap for the whole process: bench.py's sf1-shape section
+        # (10x data, single local JVM) needs more than the 1g default,
+        # and a later session cannot raise it
+        "spark.driver.memory": "8g",
+        "spark.sql.adaptive.enabled": "false",
+        "spark.sql.shuffle.partitions": "8",
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.sql.files.maxPartitionBytes": "1048576",
+        "spark.sql.files.openCostInBytes": "32768",
+        # split small compute-heavy files (documents: ~0.5 MB holding a
+        # seconds-scale text stage) across cores — bytesPerCore from
+        # this floor, not the byte-size default
+        "spark.sql.files.minPartitionNum": cpus,
+        "spark.locality.wait": "0",
+        "spark.ui.enabled": "false",
+    }
 
 
 @contextmanager

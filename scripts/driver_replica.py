@@ -46,14 +46,11 @@ def make_session(app: str = "driver-replica"):
     aggregations legitimately exceed the 1 GiB default local heap during
     spill (agg_approx_distinct OOMs a fresh plain session at sf0.1 and
     runs fine at sf0.01)."""
-    from pyspark.sql import SparkSession
+    from duckdb_postgis_spark.session import get_spark
 
     master = os.environ.get("SPARK_GRAFT_REPLICA_MASTER", "local[8]")
-    b = SparkSession.builder.master(master).appName(app)
     mem = os.environ.get("SPARK_GRAFT_REPLICA_DRIVER_MEM")
-    if mem:
-        b = b.config("spark.driver.memory", mem)
-    return b.getOrCreate()
+    return get_spark(app, master, conf={"spark.driver.memory": mem} if mem else {})
 
 
 def main() -> int:

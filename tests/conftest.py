@@ -72,6 +72,18 @@ def pytest_collection_modifyitems(config, items):
         config.hook.pytest_deselected(items=deselected)
 
 
+@pytest.fixture(scope="session", autouse=True)
+def _layout_root(tmp_path_factory):
+    """Derived layouts go under pytest's basetemp, so every run builds
+    its own once: no run reads layouts published by older code, and the
+    layouts of ``tmp_path`` corpora do not pile up in the shared root."""
+    from duckdb_postgis_spark.plans import layout
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(layout, "_LAYOUT_ROOT", str(tmp_path_factory.mktemp("layout")))
+        yield
+
+
 @pytest.fixture(scope="session")
 def spark():
     from duckdb_postgis_spark.session import get_spark

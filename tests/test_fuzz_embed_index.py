@@ -162,16 +162,16 @@ def test_append_cost_is_delta_sized(spark, tmp_path):
         ensure_embedding_index,
         ensure_embedding_index2,
     )
-    from duckdb_postgis_spark.plans.layout import _LAYOUT_ROOT, _token
+    from duckdb_postgis_spark.plans import layout
 
     _write_embeddings(_directed_rows(), tmp_path)
     c1, v1 = ensure_embedding_index(spark, str(tmp_path))
     n_c1, n_v1 = c1.count(), v1.count()
     c2, v2 = ensure_embedding_index2(spark, str(tmp_path))
-    tok = _token(str(tmp_path), "embeddings")
+    tok = layout._token(str(tmp_path), "embeddings")
 
     def job_counts(tbl: str) -> list[int]:
-        d = f"{_LAYOUT_ROOT}/{tbl}"
+        d = f"{layout._LAYOUT_ROOT}/{tbl}"
         by_job: dict[str, list[str]] = {}
         for f in os.listdir(d):
             if f.endswith(".parquet"):
@@ -255,16 +255,16 @@ def test_index_compaction_folds_bucket_files(spark, tmp_path):
         ensure_embedding_index2,
         ensure_embedding_index_compacted,
     )
-    from duckdb_postgis_spark.plans.layout import _LAYOUT_ROOT, _token
+    from duckdb_postgis_spark.plans import layout
 
     _write_embeddings(_directed_rows(), tmp_path)
     c2, v2 = ensure_embedding_index2(spark, str(tmp_path))
     c3, v3 = ensure_embedding_index_compacted(spark, str(tmp_path))
     assert (c3.count(), v3.count()) == (c2.count(), v2.count())
-    tok = _token(str(tmp_path), "embeddings")
+    tok = layout._token(str(tmp_path), "embeddings")
 
     def jobs(tbl: str) -> set[str]:
-        d = f"{_LAYOUT_ROOT}/{tbl}"
+        d = f"{layout._LAYOUT_ROOT}/{tbl}"
         return {
             f.split("-", 2)[2].split("_")[0]
             for f in os.listdir(d)

@@ -202,12 +202,13 @@ def test_append_cost_is_delta_sized(spark, tmp_path):
         ensure_minhash_index,
         ensure_minhash_index2,
     )
-    from duckdb_postgis_spark.plans.layout import _LAYOUT_ROOT, _token
+    from duckdb_postgis_spark.plans import layout
 
     _write_rows(_directed_rows(), tmp_path)
     n_v1 = ensure_minhash_index(spark, str(tmp_path)).count()
     idx2 = ensure_minhash_index2(spark, str(tmp_path))
-    tbl_dir = f"{_LAYOUT_ROOT}/minhash_index2_{_token(str(tmp_path), 'documents')}"
+    tok = layout._token(str(tmp_path), "documents")
+    tbl_dir = f"{layout._LAYOUT_ROOT}/minhash_index2_{tok}"
     by_job: dict[str, list[str]] = {}
     for f in os.listdir(tbl_dir):
         if f.endswith(".parquet"):
@@ -235,15 +236,17 @@ def test_index_compaction_folds_bucket_files(spark, tmp_path):
         ensure_minhash_index2,
         ensure_minhash_index_compacted,
     )
-    from duckdb_postgis_spark.plans.layout import _LAYOUT_ROOT, _token
+    from duckdb_postgis_spark.plans import layout
 
     _write_rows(_directed_rows(), tmp_path)
     n2 = ensure_minhash_index2(spark, str(tmp_path)).count()
     idx3 = ensure_minhash_index_compacted(spark, str(tmp_path))
     assert idx3.count() == n2
 
+    tok = layout._token(str(tmp_path), "documents")
+
     def jobs(tbl_prefix: str) -> set[str]:
-        d = f"{_LAYOUT_ROOT}/{tbl_prefix}_{_token(str(tmp_path), 'documents')}"
+        d = f"{layout._LAYOUT_ROOT}/{tbl_prefix}_{tok}"
         return {
             f.split("-", 2)[2].split("_")[0]
             for f in os.listdir(d)

@@ -56,9 +56,10 @@ def test_training_shards_layout(spark, sf_dir):
     from duckdb_postgis_spark.plans.layout import ensure_training_shards
 
     ensure_training_shards(spark, sf_dir)
-    from duckdb_postgis_spark.plans.layout import _LAYOUT_ROOT, _token
+    from duckdb_postgis_spark.plans import layout
 
-    path = f"{_LAYOUT_ROOT}/training_shards_{_token(sf_dir, 'documents')}"
+    tok = layout._token(sf_dir, "documents")
+    path = f"{layout._LAYOUT_ROOT}/training_shards_{tok}"
     lang_dirs = sorted(glob.glob(f"{path}/lang=*"))
     assert len(lang_dirs) == 5, lang_dirs
     for d in lang_dirs:

@@ -349,8 +349,8 @@ def test_minhash_lsh_bucket_grouped_candidates(plans):
     """r13: candidate pairs come from groupBy(band,bsig)+collect_list
     in-row expansion — ONE signature pass — not the banded self-join
     that re-ran the 12-way min-md5 SortAggregate on both join sides
-    (plans/r13/dedup_minhash_lsh_{before,after}.txt: 12 -> 4
-    SortAggregate blocks, corpus-wide BroadcastExchange gone)."""
+    (12 -> 4 SortAggregate blocks in the executed plan, corpus-wide
+    BroadcastExchange gone)."""
     p = plans("dedup_minhash_lsh")
     assert "collect_list" in p, "bucket-grouped candidate generation lost"
 
@@ -394,8 +394,7 @@ def test_bm25_tokenizes_corpus_once(plans):
     per-term tfs) compute in ONE conditional aggregation over a single
     tokenize pass; df/avgdl derive from the |docs|-row frame via a
     ReusedExchange.  The r10 shape fanned the corpus tokenize into FOUR
-    executing Generate nodes (dl x2 via the stats branch, tf, df —
-    plans/r13/text_bm25_search_{before,after}.txt)."""
+    executing Generate nodes (dl x2 via the stats branch, tf, df)."""
     p = plans("text_bm25_search")
     final_tree = p.split("== Initial Plan ==")[0].split("\n\n", 1)[0]
     assert final_tree.count("Generate") == 1, (
@@ -408,8 +407,7 @@ def test_pmi_explodes_bigrams_once(plans):
     counts (c(tok) = sum of c_ab over bigrams with tok in that slot), so
     the corpus bigram explode executes once and the uni/tot branches ride
     ReusedExchange.  The r10 shape re-ran the explode twice more inside
-    the Union feeding uni (plans/r13/text_collocation_pmi_{before,after}
-    .txt: 3 Generate nodes -> 1)."""
+    the Union feeding uni (3 Generate nodes in the executed plan -> 1)."""
     p = plans("text_collocation_pmi")
     final_tree = p.split("== Initial Plan ==")[0].split("\n\n", 1)[0]
     assert final_tree.count("Generate") == 1, (

@@ -325,3 +325,27 @@ def test_exact_fold_inventory():
         ("operators/llm.py", "embed_quantize_int8"),  # SQ8 code sum
         ("operators/multimodal.py", "multimodal_scene_cut"),  # byte sum
     ]
+
+
+def test_session_builder_inventory():
+    """``session.get_spark`` is the one SparkSession builder: outside
+    ``tests/`` (and the benchmark's ``.perfbench/`` outputs) no file
+    names ``SparkSession.builder`` except ``session.py``.  The bench, the
+    sweep and the driver replica pass their conf sets to it."""
+    import ast
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parent.parent
+    sites = []
+    for py in root.rglob("*.py"):
+        rel = py.relative_to(root)
+        if rel.parts[0] in ("tests", ".perfbench", ".git"):
+            continue
+        for node in ast.walk(ast.parse(py.read_text())):
+            if (
+                isinstance(node, ast.Attribute)
+                and node.attr == "builder"
+                and ast.unparse(node.value).endswith("SparkSession")
+            ):
+                sites.append(rel.as_posix())
+    assert sites == ["duckdb_postgis_spark/session.py"]
