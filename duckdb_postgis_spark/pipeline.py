@@ -10,7 +10,13 @@ Ours: sniff (sources/sniffer) → format reader (sources/readers) → DataFrame
 (Catalyst replaces DuckDB's planner) → geometry detection over df.dtypes
 (functions/geo_detect) → CRS inference (functions/wkb probe ladder + the
 functions/geo range classifier on a LIMIT sample) → WKT transform columns
-(pandas UDF) → optional PostGIS write + DDL replay (sinks/postgis).
+(JVM string synthesis for EPSG:4326 coordinate pairs, a pandas UDF
+otherwise) → optional PostGIS write + DDL replay (sinks/postgis).
+
+A CSV within one file split launches no Spark job before the write: the
+reader infers its schema on the driver and the CRS probes read the same
+driver-side parse (``readers.csv_probe``).  Other inputs run their
+probes' ``LIMIT`` queries as jobs.
 
 ``launch_process_file`` is aliased to ``process_file`` — README.md:39 of the
 reference documents a symbol that does not exist in its code (docs drift);
@@ -24,7 +30,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType, StructField, StructType
+from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 
 from duckdb_postgis_spark.functions.geo import classify_crs_from_ranges, transform_xy
 from duckdb_postgis_spark.functions.geo_detect import (
@@ -39,7 +45,7 @@ from duckdb_postgis_spark.functions.wkb import (
     transform_geom,
 )
 from duckdb_postgis_spark.sources.sniffer import FileType, determine_file_type
-from duckdb_postgis_spark.sources.readers import read_file
+from duckdb_postgis_spark.sources.readers import csv_probe, read_file
 from duckdb_postgis_spark.sinks.postgis import clean_table_name, write_to_postgis
 
 _PROBE_ROWS = 10  # the reference probes ≤10 rows (geo_strategy.rs:144,161,178)
@@ -125,7 +131,9 @@ def metadata_crs(df: DataFrame) -> str | None:
     st_read_meta-first ladder (geo_strategy.rs:55-103)."""
     if "crs_epsg" not in df.columns:
         return None
-    rows = df.filter(F.col("crs_epsg").isNotNull()).select("crs_epsg").limit(1).collect()
+    rows = csv_probe(df, ["crs_epsg"], 1)
+    if rows is None:
+        rows = df.filter(F.col("crs_epsg").isNotNull()).select("crs_epsg").limit(1).collect()
     return str(rows[0][0]) if rows else None
 
 
@@ -133,10 +141,12 @@ def infer_crs_from_xy(df: DataFrame, x_col: str, y_col: str) -> str:
     """Coordinate-range CRS inference on a probe sample
     (geo_strategy.rs:186-253): collect ≤10 non-null (x,y), fold min/max,
     classify by the reference's range ladder."""
-    probe = df.filter(F.col(x_col).isNotNull() & F.col(y_col).isNotNull()).select(
-        F.col(x_col).cast("double"), F.col(y_col).cast("double")
-    )
-    rows = probe.limit(_PROBE_ROWS).collect()
+    rows = csv_probe(df, [x_col, y_col], _PROBE_ROWS, DoubleType())
+    if rows is None:
+        probe = df.filter(F.col(x_col).isNotNull() & F.col(y_col).isNotNull()).select(
+            F.col(x_col).cast("double"), F.col(y_col).cast("double")
+        )
+        rows = probe.limit(_PROBE_ROWS).collect()
     xs = [r[0] for r in rows if r[0] is not None]
     ys = [r[1] for r in rows if r[1] is not None]
     if not xs or not ys:

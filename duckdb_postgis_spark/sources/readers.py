@@ -3,24 +3,40 @@ core_processor.rs:391-428, re-expressed per format).
 
 Distributed formats (Parquet, CSV, GeoJSON) read through Spark's native
 sources — pushdown/pruning/splitting apply, so they scale to cluster-sized
-inputs. Driver-side formats (GeoPackage via stdlib sqlite3, zipped
-Shapefiles via a minimal pure-python codec, Excel via stdlib zip/XML or a
-BIFF8 walk) are parsed on the driver into an Arrow-backed local relation —
-matching the reference's own profile, where these arrive as single small
-files; for 100 TB geo data, pre-convert to (geo)parquet.
+inputs.  Where Spark would launch a job only to infer the schema, the
+driver runs that job's code instead and declares the result: a parquet
+footer (``catalog.read_parquet``), and a CSV file no larger than one file
+split of the session, ``min(spark.sql.files.openCostInBytes,
+spark.sql.files.maxPartitionBytes)``, whose CRS probes then read the same
+driver-side lines (``read_csv``, ``csv_probe``); a larger CSV keeps
+Spark's inference jobs.
+
+Driver-side formats (GeoPackage via stdlib sqlite3, zipped Shapefiles via
+a minimal pure-python codec, Excel via stdlib zip/XML or a BIFF8 walk) are
+parsed on the driver into an Arrow-backed local relation — matching the
+reference's own profile, where these arrive as single small files; for
+100 TB geo data, pre-convert to (geo)parquet.
 """
 
 from __future__ import annotations
 
+import functools
 import io
 import sqlite3
 import struct
 import tempfile
+import weakref
 import zipfile
+from collections.abc import Iterator
+from contextlib import contextmanager
 from pathlib import Path
+from types import SimpleNamespace
 
-from pyspark.sql import DataFrame, SparkSession
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
+from pyspark.serializers import CPickleSerializer
+from pyspark.sql.types import DataType, StructField, StructType, _parse_datatype_json_string
 
 from duckdb_postgis_spark.catalog import read_parquet
 from duckdb_postgis_spark.functions.wkb import Geom
@@ -65,14 +81,333 @@ def read_jsonl(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.option("mode", "PERMISSIVE").json(path)
 
 
+#: ``read_csv``'s reader options; the driver-side parse builds its
+#: ``CSVOptions`` from the same map.  None of them sets ``multiLine``,
+#: ``lineSep``, ``encoding``, ``comment`` or ``samplingRatio``: Spark then
+#: reads a file as UTF-8 lines split at CR, LF or CRLF and infers from
+#: every line, which is what ``_SmallCsv`` reproduces.
+_CSV_OPTIONS = {"header": "true", "inferSchema": "true", "mode": "DROPMALFORMED"}
+
+#: Hadoop's glob metacharacters (``SparkHadoopUtil.isGlobPath``)
+_GLOB_CHARS = frozenset("{}[]*?\\")
+
+#: every small-file ``read_csv`` frame → its ``_SmallCsv``
+_SMALL_CSV: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
 def read_csv(spark: SparkSession, path: str) -> DataFrame:
     """CSV with header sniff + bad-row skip: Spark's DROPMALFORMED ≈ DuckDB
-    ``read_csv(ignore_errors=true, header=true)`` (core_processor.rs:413-418)."""
-    return (
-        spark.read.option("header", True)
-        .option("inferSchema", True)
-        .option("mode", "DROPMALFORMED")
-        .csv(path)
+    ``read_csv(ignore_errors=true, header=true)`` (core_processor.rs:413-418).
+
+    Spark infers a CSV schema with two jobs: one takes the first line,
+    one folds every line's tokens into column types.  A file no larger
+    than one file split of the session, ``min(spark.sql.files.
+    openCostInBytes, spark.sql.files.maxPartitionBytes)`` (4 MB by
+    default), is one task in each, so that task's code runs on the driver
+    instead (``_SmallCsv``) and the result is declared to the reader: the
+    schema, plan and rows are the inferred read's, and the frame's CRS
+    probes read the same lines (``csv_probe``).  Larger files, globs,
+    directories and compressed files keep Spark's distributed inference."""
+    reader = spark.read.options(**_CSV_OPTIONS)
+    small = _SmallCsv.open(spark, path)
+    if small is None:
+        return reader.csv(path)
+    df = reader.schema(small.schema).csv(path)
+    _SMALL_CSV[df] = small
+    return df
+
+
+def csv_probe(
+    df: DataFrame, columns: list[str], n: int, cast: DataType | None = None
+) -> list[Row] | None:
+    """For a small-file ``read_csv`` frame, the rows of
+    ``df.filter(<every column non-null>).select(*columns).limit(n)``,
+    each column cast to ``cast`` when one is given, computed from the
+    reader's driver-side parse without a Spark job.  None for
+    any other frame, and for a cast that Spark's analysis rejects (the
+    frame's own query raises it)."""
+    small = _SMALL_CSV.get(df)
+    return None if small is None else small.probe(columns, n, cast)
+
+
+class _SmallCsv:
+    """One single-split CSV file, parsed on the driver with the code
+    Spark's one task would run.
+
+    ``open`` reads the lines as the text source does (Hadoop's UTF-8 BOM
+    skip at the start of the file, CR/LF/CRLF line ends, the options'
+    charset).  ``schema`` is ``TextInputCSVDataSource.infer``'s: the first
+    line left by Spark SQL's ``trim`` (spaces only) is the header
+    (``CSVUtils.makeSafeHeader``), the other lines go through
+    ``CSVUtils.filterCommentAndEmpty`` and ``filterHeaderLine`` and the
+    univocity tokenizer of ``CSVOptions.asParserSettings``, and
+    ``CSVInferSchema.inferRowType`` folds them inside the JVM in one py4j
+    call, then ``mergeRowTypes`` and ``toStructFields``.  ``probe`` runs
+    the column-pruned parse of ``CSVFileFormat.buildReader``
+    (``UnivocityParser.parseIterator``), Spark's ``Cast`` and the
+    conversion ``collect`` pickles rows with."""
+
+    def __init__(self, spark: SparkSession, path: str, options, lines) -> None:
+        self.spark, self.path, self.options, self.lines = spark, path, options, lines
+        self.jschema = self._infer()
+        self.schema = _parse_datatype_json_string(self.jschema.json())
+
+    @classmethod
+    def open(cls, spark: SparkSession, path: str) -> _SmallCsv | None:
+        """The file's lines when ``path`` names one uncompressed file
+        within the split size; None otherwise (a missing path included,
+        so its error stays Spark's)."""
+        if _GLOB_CHARS & set(path):
+            return None
+        j = _jvm(spark.sparkContext._gateway)
+        state = spark._jsparkSession.sessionState()
+        conf, hconf = state.conf(), state.newHadoopConf()
+        p = j.Path(path)
+        fs = p.getFileSystem(hconf)
+        try:
+            status = fs.getFileStatus(p)
+        except Py4JJavaError:
+            return None
+        split = min(conf.filesOpenCostInBytes(), conf.filesMaxPartitionBytes())
+        if not status.isFile() or status.getLen() > split:
+            return None
+        if j.CompressionCodecFactory(hconf).getCodec(p) is not None:
+            return None
+        # the options as CSVFileFormat.getCsvOptions builds them
+        options = j.CSVOptions(
+            j.PythonUtils.toScalaMap(_CSV_OPTIONS),
+            conf.csvColumnPruning(),
+            conf.sessionLocalTimeZone(),
+            conf.columnNameOfCorruptRecord(),
+        )
+        reader = j.BufferedReader(
+            j.InputStreamReader(j.BOMInputStream(fs.open(p)), options.charset())
+        )
+        try:
+            lines = reader.lines().toList()
+        finally:
+            reader.close()
+        return cls(spark, path, options, lines)
+
+    def _infer(self):
+        j = _jvm(self.spark.sparkContext._gateway)
+        conf = self.spark._jsparkSession.sessionState().conf()
+        with _active(self.spark):
+            parser = j.CsvParser(self.options.asParserSettings())
+            first = self._first_line()
+            first_row = None if first is None else parser.parseLine(first)
+            if first_row is None:
+                return j.StructType()
+            header = j.CSVUtils.makeSafeHeader(
+                first_row, conf.caseSensitiveAnalysis(), self.options
+            )
+            body = j.CSVUtils.filterHeaderLine(
+                j.CSVUtils.filterCommentAndEmpty(j.scala(self.lines.iterator()), self.options),
+                first,
+                self.options,
+            )
+            infer = j.CSVInferSchema(self.options)
+            # RDD.aggregate: each partition folds from its own zero, and
+            # the driver merges the results into another
+            zero = j.nulls(len(header))
+            folded = (
+                j.stream(body)
+                .map(j.adapt(j.Function, j.parse_line.bindTo(parser)))
+                .reduce(
+                    j.nulls(len(header)),
+                    j.adapt(j.BiFunction, j.infer_row.bindTo(infer)),
+                    j.adapt(j.BinaryOperator, j.merge_rows.bindTo(infer)),
+                )
+            )
+            types = infer.mergeRowTypes(zero, folded)
+            return j.StructType(infer.toStructFields(types, header))
+
+    def _first_line(self) -> str | None:
+        """``CSVUtils.filterCommentAndEmpty(Dataset)``'s first line: the
+        first line that Spark SQL's ``trim`` (spaces only, unlike the
+        iterator filter's ``String.trim``) leaves non-empty and that is
+        not a comment."""
+        comment = self.options.comment() if self.options.isCommentSet() else None
+        for i in range(self.lines.size()):
+            line = self.lines.get(i)
+            if line.strip(" ") and not (comment and line.startswith(comment)):
+                return line
+        return None
+
+    def probe(self, columns: list[str], n: int, cast: DataType | None) -> list[Row] | None:
+        j = _jvm(self.spark.sparkContext._gateway)
+        jspark = self.spark._jsparkSession
+        conf = jspark.sessionState().conf()
+        required = StructType([f for f in self.schema.fields if f.name in set(columns)])
+        out = StructType(
+            [StructField(c, cast or required[c].dataType) for c in columns]
+        )
+        jrequired = jspark.parseDataType(required.json())
+        jout = jspark.parseDataType(out.json())
+        with _active(self.spark):
+            parser = j.UnivocityParser(self.jschema, jrequired, self.options)
+            pruned = self.options.isColumnPruningEnabled(jrequired)
+            checker = j.CSVHeaderChecker(
+                jrequired if pruned else self.jschema,
+                self.options,
+                f"CSV file: {self.path}",
+                True,
+            )
+            rows = j.UnivocityParser.parseIterator(
+                j.scala(self.lines.iterator()), parser, checker, jrequired
+            )
+            exprs = j.ArrayList()
+            for k, c in enumerate(columns):
+                i = required.names.index(c)
+                e = j.BoundReference(i, jrequired.apply(i).dataType(), True)
+                if cast is not None:
+                    tz = j.Some(conf.sessionLocalTimeZone())
+                    e = j.Cast(e, jout.apply(k).dataType(), tz, j.EvalMode.fromSQLConf(conf))
+                    if e.checkInputDataTypes().isFailure():
+                        return None  # the frame's analysis raises the error
+                exprs.add(e)
+            project = j.InterpretedUnsafeProjection.createProjection(
+                j.scala(exprs).toSeq()
+            )
+            # Dataset.collectToPython's row conversion
+            to_python = j.invoke.MethodHandles.insertArguments(
+                j.to_java, 1, j.args(jout, conf.pysparkBinaryAsBytes())
+            )
+            picked = (
+                j.stream(rows)
+                .filter(j.no_nulls)
+                .map(j.adapt(j.Function, j.apply1.bindTo(project)))
+                .map(j.adapt(j.Function, to_python))
+                .limit(n)
+                .toList()
+            )
+            return CPickleSerializer().loads(j.Pickler(True, False).dumps(picked))
+
+
+@contextmanager
+def _active(spark: SparkSession) -> Iterator[None]:
+    """Make ``spark`` the JVM thread's active session for the body: the
+    CSV parsers, ``CSVInferSchema`` and ``Cast`` read ``SQLConf.get``,
+    which is the session's conf inside Spark's own jobs."""
+    sessions = _jvm(spark.sparkContext._gateway).SparkSession
+    prev = sessions.getActiveSession()
+    sessions.setActiveSession(spark._jsparkSession)
+    try:
+        yield
+    finally:
+        if prev.isDefined():
+            sessions.setActiveSession(prev.get())
+        else:
+            sessions.clearActiveSession()
+
+
+@functools.lru_cache(maxsize=1)
+def _jvm(gateway) -> SimpleNamespace:
+    """The JVM classes and method handles of ``_SmallCsv``, looked up once
+    per gateway (a py4j class lookup costs several round trips).
+
+    Spark's functions become ``java.util.function`` instances through
+    ``MethodHandleProxies``, so a ``Stream`` map/reduce runs the whole
+    per-line loop inside the JVM: a py4j call per line would cost more
+    than the jobs it replaces."""
+    jvm = gateway.jvm
+    invoke = jvm.java.lang.invoke
+    lookup = invoke.MethodHandles.publicLookup()
+    cls = jvm.java.lang.Class.forName
+    obj, string = cls("java.lang.Object"), cls("java.lang.String")
+    strings = cls("[Ljava.lang.String;")
+    dtype = cls("org.apache.spark.sql.types.DataType")
+    dtypes = cls("[Lorg.apache.spark.sql.types.DataType;")
+    infer_schema = cls("org.apache.spark.sql.catalyst.csv.CSVInferSchema")
+    converters = jvm.scala.jdk.javaapi.CollectionConverters
+    spliterators = jvm.java.util.Spliterators
+    streams = jvm.java.util.stream.StreamSupport
+    null_type = jvm.org.apache.spark.sql.types.DataTypes.NullType
+
+    object_class, dtype_class = jvm.java.lang.Object, jvm.org.apache.spark.sql.types.DataType
+
+    def args(*values):
+        arr = gateway.new_array(object_class, len(values))
+        for i, v in enumerate(values):
+            arr[i] = v
+        return arr
+
+    def signature(rtype, *ptypes):
+        params = gateway.new_array(jvm.java.lang.Class, len(ptypes))
+        for i, t in enumerate(ptypes):
+            params[i] = t
+        return invoke.MethodType.methodType(rtype, params)
+
+    def method(owner, name, rtype, *ptypes):
+        return lookup.findVirtual(owner, name, signature(rtype, *ptypes))
+
+    def adapt(iface, handle):
+        return invoke.MethodHandleProxies.asInterfaceInstance(iface, handle)
+
+    # py4j passes no DataType[] as an Object[] argument, so Arrays.fill
+    # runs through a handle, which takes its arguments as a list
+    fill = lookup.findStatic(
+        cls("java.util.Arrays"),
+        "fill",
+        signature(jvm.java.lang.Void.TYPE, cls("[Ljava.lang.Object;"), obj),
+    )
+
+    def nulls(n):
+        arr = gateway.new_array(dtype_class, n)
+        fill.invokeWithArguments([arr, null_type])
+        return arr
+
+    def stream(scala_iterator):
+        it = spliterators.spliteratorUnknownSize(converters.asJava(scala_iterator), 0)
+        return streams.stream(it, False)
+
+    boolean = jvm.java.lang.Boolean.TYPE
+    any_null = method(cls("org.apache.spark.sql.catalyst.InternalRow"), "anyNull", boolean)
+    evaluate_python = jvm.org.apache.spark.sql.execution.python.EvaluatePython
+    evaluate_python.registerPicklers()
+    csv = jvm.org.apache.spark.sql.catalyst.csv
+    expressions = jvm.org.apache.spark.sql.catalyst.expressions
+    return SimpleNamespace(
+        invoke=invoke,
+        Function=cls("java.util.function.Function"),
+        BiFunction=cls("java.util.function.BiFunction"),
+        BinaryOperator=cls("java.util.function.BinaryOperator"),
+        parse_line=method(cls("com.univocity.parsers.csv.CsvParser"), "parseLine", strings, string),
+        infer_row=method(infer_schema, "inferRowType", dtypes, dtypes, strings),
+        merge_rows=method(infer_schema, "mergeRowTypes", dtypes, dtypes, dtypes),
+        apply1=method(cls("scala.Function1"), "apply", obj, obj),
+        to_java=lookup.findStatic(
+            cls("org.apache.spark.sql.execution.python.EvaluatePython"),
+            "toJava",
+            signature(obj, obj, dtype, boolean),
+        ),
+        no_nulls=adapt(cls("java.util.function.Predicate"), any_null).negate(),
+        args=args,
+        adapt=adapt,
+        nulls=nulls,
+        stream=stream,
+        scala=converters.asScala,
+        ArrayList=jvm.java.util.ArrayList,
+        BOMInputStream=jvm.org.apache.commons.io.input.BOMInputStream,
+        BoundReference=expressions.BoundReference,
+        BufferedReader=jvm.java.io.BufferedReader,
+        Cast=expressions.Cast,
+        CompressionCodecFactory=jvm.org.apache.hadoop.io.compress.CompressionCodecFactory,
+        CSVHeaderChecker=csv.CSVHeaderChecker,
+        CSVInferSchema=csv.CSVInferSchema,
+        CSVOptions=csv.CSVOptions,
+        CSVUtils=jvm.org.apache.spark.sql.execution.datasources.csv.CSVUtils,
+        CsvParser=jvm.com.univocity.parsers.csv.CsvParser,
+        EvalMode=expressions.EvalMode,
+        InputStreamReader=jvm.java.io.InputStreamReader,
+        InterpretedUnsafeProjection=expressions.InterpretedUnsafeProjection,
+        Path=jvm.org.apache.hadoop.fs.Path,
+        Pickler=jvm.net.razorvine.pickle.Pickler,
+        PythonUtils=jvm.org.apache.spark.api.python.PythonUtils,
+        SparkSession=jvm.org.apache.spark.sql.SparkSession,
+        Some=jvm.scala.Some,
+        StructType=jvm.org.apache.spark.sql.types.StructType,
+        UnivocityParser=csv.UnivocityParser,
     )
 
 
@@ -105,11 +440,11 @@ def read_geojson(spark: SparkSession, path: str) -> DataFrame:
         _geometry_as_string(raw.schema)
     ).json(path)
     feats = raw.select(F.explode("features").alias("f"))
-    props = feats.select("f.properties.*") if _has_field(feats, "f.properties") else None
-    geom_json = F.col("f.geometry").alias("geometry_json")
     cols = []
-    if props is not None:
-        cols = [F.col(f"f.properties.{c}").alias(c) for c in props.columns]
+    props = _struct_field(feats.schema["f"].dataType, "properties")
+    if props is not None and isinstance(props.dataType, StructType):
+        cols = [F.col(f"f.properties.{c}").alias(c) for c in props.dataType.names]
+    geom_json = F.col("f.geometry").alias("geometry_json")
     out = feats.select(*cols, geom_json)
     # pandas_udf registration needs a live session → wrap at call time
     wkt_udf = F.pandas_udf(_geojson_wkt_series, "string")
@@ -155,12 +490,13 @@ def _geometry_as_string(schema):
     return StructType(fields)
 
 
-def _has_field(df: DataFrame, field: str) -> bool:
-    try:
-        df.select(field)
-        return True
-    except Exception:
-        return False
+def _struct_field(dtype, name: str):
+    """``name``'s field of a struct type, matched case-insensitively as
+    Spark's default resolver matches a column path; None when there is
+    none."""
+    if not isinstance(dtype, StructType):
+        return None
+    return next((f for f in dtype.fields if f.name.lower() == name.lower()), None)
 
 
 def _local_frame(spark: SparkSession, records: list[dict]) -> DataFrame:
@@ -593,6 +929,7 @@ def _parse_xlsx(path: str) -> tuple[list[str], list[list]]:
 __all__ = [
     "read_file",
     "read_csv",
+    "csv_probe",
     "read_geojson",
     "read_geopackage",
     "read_zipped_shapefile",

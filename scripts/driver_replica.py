@@ -22,6 +22,11 @@ import traceback
 _ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _ROOT)
 sys.path.insert(0, os.path.join(_ROOT, "tests"))
+# Python workers import the package too, from whatever directory the
+# script runs in: they inherit PYTHONPATH when the JVM starts
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    filter(None, [_ROOT, os.environ.get("PYTHONPATH")])
+)
 
 #: override with SPARK_GRAFT_REPLICA_SF_DIR to rehearse at another scale
 #: (round 6: a full sf0.1 sweep doubles as a perf-cliff check on the

@@ -37,7 +37,13 @@ import sys
 import time
 import traceback
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _ROOT)
+# Python workers import the package too, from whatever directory the
+# script runs in: they inherit PYTHONPATH when the JVM starts
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    filter(None, [_ROOT, os.environ.get("PYTHONPATH")])
+)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")

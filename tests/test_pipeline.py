@@ -16,11 +16,18 @@ from duckdb_postgis_spark.sinks.postgis import (
 )
 
 
+#: the CSV files these tests write, by name (``tests/test_read_csv.py``
+#: reads each of them both ways)
+CSV_FILES = {
+    "cities.csv": "name,longitude,latitude\nLondon,-0.1276,51.5072\nParis,2.3522,48.8566\nNull,,\n",
+    "uk.csv": "site,Easting,Northing\nGreenwich,538890,177320\nYork,460150,452150\n",
+    "plain.csv": "id,name,amount\n1,a,10\n2,b,20\n",
+}
+
+
 def test_csv_with_lonlat(spark, tmp_path):
     p = tmp_path / "cities.csv"
-    p.write_text(
-        "name,longitude,latitude\nLondon,-0.1276,51.5072\nParis,2.3522,48.8566\nNull,,\n"
-    )
+    p.write_text(CSV_FILES["cities.csv"])
     res = process_file(spark, str(p))
     assert res.file_type == "CSV"
     assert res.coordinate_pair == ("longitude", "latitude")
@@ -34,7 +41,7 @@ def test_csv_with_lonlat(spark, tmp_path):
 
 def test_csv_with_bng_reprojects(spark, tmp_path):
     p = tmp_path / "uk.csv"
-    p.write_text("site,Easting,Northing\nGreenwich,538890,177320\nYork,460150,452150\n")
+    p.write_text(CSV_FILES["uk.csv"])
     res = process_file(spark, str(p))
     assert res.source_crs == "27700"
     wkt = res.dataframe.collect()[0]["geom_from_Easting_Northing_wkt"]
@@ -44,7 +51,7 @@ def test_csv_with_bng_reprojects(spark, tmp_path):
 
 def test_csv_no_coordinates_non_geo(spark, tmp_path):
     p = tmp_path / "plain.csv"
-    p.write_text("id,name,amount\n1,a,10\n2,b,20\n")
+    p.write_text(CSV_FILES["plain.csv"])
     res = process_file(spark, str(p))
     assert res.geom_columns == []
     assert res.dataframe.count() == 2
@@ -432,6 +439,25 @@ def test_geojson_all_geometry_types_to_wkt(spark, tmp_path):
     assert rows["poly"] == "POLYGON ((0 0, 0 2, 2 2, 2 0, 0 0))"
 
 
+def test_geojson_null_properties(spark, tmp_path):
+    """GeoJSON allows ``"properties": null``; JSON inference then types
+    the member as a string, which has no columns to flatten."""
+    import json
+
+    from duckdb_postgis_spark.sources.readers import read_geojson
+
+    point = {"type": "Point", "coordinates": [1.5, 2.5]}
+    fc = {
+        "type": "FeatureCollection",
+        "features": [{"type": "Feature", "properties": None, "geometry": point}],
+    }
+    p = tmp_path / "null_props.geojson"
+    p.write_text(json.dumps(fc))
+    df = read_geojson(spark, str(p))
+    assert df.columns == ["geometry_json", "geometry_wkt"]
+    assert [r["geometry_wkt"] for r in df.collect()] == ["POINT (1.5 2.5)"]
+
+
 def test_geojson_non_point_wkt_survives_process_file(spark, tmp_path):
     """process_file's WKT column equals the reader's geometry_wkt for every
     geometry type of a lon/lat GeoJSON (EPSG:4326 in and out), not only
@@ -601,3 +627,15 @@ def test_wkb_empty_point_becomes_null(spark, tmp_path, crs, finite):
         for i, (x, y) in enumerate(pts)
     }
     assert got == want
+
+
+def test_traced_layers_are_pipeline_functions():
+    """``perfbench/tracing.py`` wraps each of these names with ``getattr``
+    on the pipeline module: a renamed function would fail every traced
+    benchmark run."""
+    from perfbench.tracing import PIPELINE_LAYERS
+
+    from duckdb_postgis_spark import pipeline
+
+    for name in PIPELINE_LAYERS:
+        assert callable(vars(pipeline).get(name)), name

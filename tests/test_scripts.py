@@ -19,7 +19,9 @@ _RECORD = {
 }
 
 
-def _run(sf_dir: str, script: str, *args: str) -> subprocess.CompletedProcess:
+def _run(
+    sf_dir: str, script: str, *args: str, cwd: Path | None = None
+) -> subprocess.CompletedProcess:
     env = {
         **os.environ,
         "SPARK_GRAFT_CPUS": os.environ.get("SPARK_GRAFT_CPUS", "2"),
@@ -28,7 +30,7 @@ def _run(sf_dir: str, script: str, *args: str) -> subprocess.CompletedProcess:
     }
     return subprocess.run(
         [sys.executable, str(_SCRIPTS / script), *args],
-        env=env, capture_output=True, text=True, timeout=300,
+        env=env, capture_output=True, text=True, timeout=300, cwd=cwd,
     )
 
 
@@ -55,7 +57,14 @@ def test_driver_replica_hash_green(sf_dir):
 
 
 def test_capture_plans_writes_plan(sf_dir, tmp_path):
-    p = _run(sf_dir, "capture_plans.py", str(tmp_path), "pricing_summary")
+    """Run from a directory outside the repo: ``pipeline_geojson_e2e``'s
+    build runs a pandas UDF, whose Python worker must import the
+    package."""
+    out = tmp_path / "plans"
+    p = _run(
+        sf_dir, "capture_plans.py", str(out), "pricing_summary", "pipeline_geojson_e2e",
+        cwd=tmp_path,
+    )
     assert p.returncode == 0, p.stdout + p.stderr
-    plan = (tmp_path / "pricing_summary.txt").read_text()
-    assert "== Physical Plan ==" in plan
+    for name in ("pricing_summary", "pipeline_geojson_e2e"):
+        assert "== Physical Plan ==" in (out / f"{name}.txt").read_text(), name
