@@ -18,6 +18,8 @@ from __future__ import annotations
 import math
 from dataclasses import dataclass
 
+import numpy as np
+
 from duckdb_postgis_spark.functions.wkb import wkb_encode
 
 # --------------------------------------------------------------------------
@@ -107,73 +109,6 @@ _N0 = -100000.0
 _E0 = 400000.0
 
 
-def _meridional_arc(phi: float, ell: _Ellipsoid) -> float:
-    a, b = ell.a, ell.b
-    n = (a - b) / (a + b)
-    n2, n3 = n * n, n * n * n
-    dphi, sphi = phi - _LAT0, phi + _LAT0
-    return (
-        b
-        * _F0
-        * (
-            (1 + n + 1.25 * n2 + 1.25 * n3) * dphi
-            - (3 * n + 3 * n2 + 2.625 * n3) * math.sin(dphi) * math.cos(sphi)
-            + (1.875 * n2 + 1.875 * n3) * math.sin(2 * dphi) * math.cos(2 * sphi)
-            - (35.0 / 24.0) * n3 * math.sin(3 * dphi) * math.cos(3 * sphi)
-        )
-    )
-
-
-def _tm_inverse_osgb36(easting: float, northing: float) -> tuple[float, float]:
-    """BNG E/N → OSGB36 lat/lon (radians). Standard OS inverse TM series."""
-    ell = _AIRY
-    a, e2 = ell.a, ell.e2
-    phi = _LAT0
-    M = 0.0
-    while True:
-        phi = (northing - _N0 - M) / (a * _F0) + phi
-        M = _meridional_arc(phi, ell)
-        if not abs(northing - _N0 - M) >= 1e-5:  # a NaN input stops too
-            break
-    sphi, cphi, tphi = math.sin(phi), math.cos(phi), math.tan(phi)
-    nu = a * _F0 / math.sqrt(1 - e2 * sphi * sphi)
-    rho = a * _F0 * (1 - e2) / (1 - e2 * sphi * sphi) ** 1.5
-    eta2 = nu / rho - 1
-    t2, t4 = tphi * tphi, tphi**4
-    VII = tphi / (2 * rho * nu)
-    VIII = tphi / (24 * rho * nu**3) * (5 + 3 * t2 + eta2 - 9 * t2 * eta2)
-    IX = tphi / (720 * rho * nu**5) * (61 + 90 * t2 + 45 * t4)
-    X = 1.0 / (cphi * nu)
-    XI = 1.0 / (cphi * 6 * nu**3) * (nu / rho + 2 * t2)
-    XII = 1.0 / (cphi * 120 * nu**5) * (5 + 28 * t2 + 24 * t4)
-    XIIA = 1.0 / (cphi * 5040 * nu**7) * (61 + 662 * t2 + 1320 * t4 + 720 * t2**3)
-    dE = easting - _E0
-    lat = phi - VII * dE**2 + VIII * dE**4 - IX * dE**6
-    lon = _LON0 + X * dE - XI * dE**3 + XII * dE**5 - XIIA * dE**7
-    return lat, lon
-
-
-def _geodetic_to_cartesian(lat, lon, ell: _Ellipsoid):
-    sphi, cphi = math.sin(lat), math.cos(lat)
-    nu = ell.a / math.sqrt(1 - ell.e2 * sphi * sphi)
-    return (
-        nu * cphi * math.cos(lon),
-        nu * cphi * math.sin(lon),
-        nu * (1 - ell.e2) * sphi,
-    )
-
-
-def _cartesian_to_geodetic(x, y, z, ell: _Ellipsoid):
-    lon = math.atan2(y, x)
-    p = math.hypot(x, y)
-    lat = math.atan2(z, p * (1 - ell.e2))
-    for _ in range(8):
-        sphi = math.sin(lat)
-        nu = ell.a / math.sqrt(1 - ell.e2 * sphi * sphi)
-        lat = math.atan2(z + ell.e2 * nu * sphi, p)
-    return lat, lon
-
-
 # Helmert OSGB36 → WGS84 (published 7-parameter transformation, ~±3 m)
 _HELMERT = dict(
     tx=446.448,
@@ -186,44 +121,23 @@ _HELMERT = dict(
 )
 
 
-def osgb36_to_wgs84(lat: float, lon: float) -> tuple[float, float]:
-    """Datum shift OSGB36 → WGS84 via 7-param Helmert (radians in/out)."""
-    x, y, z = _geodetic_to_cartesian(lat, lon, _AIRY)
-    h = _HELMERT
-    x2 = h["tx"] + (1 + h["s"]) * x - h["rz"] * y + h["ry"] * z
-    y2 = h["ty"] + h["rz"] * x + (1 + h["s"]) * y - h["rx"] * z
-    z2 = h["tz"] - h["ry"] * x + h["rx"] * y + (1 + h["s"]) * z
-    return _cartesian_to_geodetic(x2, y2, z2, _WGS84)
-
-
-def bng_to_wgs84(easting: float, northing: float) -> tuple[float, float]:
-    """EPSG:27700 → EPSG:4326 (lon, lat degrees) — the ST_Transform path the
-    reference executes for British data (geo_strategy.rs:288)."""
-    lat36, lon36 = _tm_inverse_osgb36(easting, northing)
-    lat84, lon84 = osgb36_to_wgs84(lat36, lon36)
-    return math.degrees(lon84), math.degrees(lat84)
-
-
-def bng_to_wgs84_vec(easting, northing):
-    """Vectorized bng_to_wgs84 over NumPy arrays — the whole OSGB chain
-    (inverse TM series, Helmert datum shift, geodetic iteration) in array
-    ops (guide §4.2: batch math instead of a Python loop per row).
-
-    Float discipline: np.sin/cos/sqrt are bit-identical to math.* on this
-    build (measured); tan/atan2/power differ by ≤ a few ulp, which is
-    ~1e-16 relative against the query's ROUND(·, 6) output granularity
-    and the oracle's measured ≤1.5e-14 cross-engine residual.  The
-    registered query's input domain is FINITE (easting/northing are
-    p_partkey % 4000 / % 10000 lattices → ≤ 20000 distinct pairs at any
-    scale factor), and tests/test_geo_transform_vec.py proves the rounded
-    outputs equal the scalar path's over that ENTIRE domain, plus ulp-level
-    agreement of the raw radians.  The meridian-arc loop freezes each lane
-    at ITS convergence step (the mask), reproducing the scalar loop's
-    per-point iteration count exactly.  Returns (lon_deg, lat_deg)."""
-    import numpy as np
-
-    E = np.asarray(easting, dtype="float64")
-    N = np.asarray(northing, dtype="float64")
+def bng_to_wgs84(easting, northing):
+    """EPSG:27700 → EPSG:4326 (lon, lat degrees) over NumPy arrays — the
+    ST_Transform path the reference executes for British data
+    (geo_strategy.rs:288), and the only implementation of it here.  The
+    whole OSGB chain (inverse TM series, Helmert datum shift, geodetic
+    iteration) runs as array ops, one call per batch.  The meridian-arc
+    loop freezes each lane at its own convergence step (the mask), so a
+    point's output does not depend on the batch around it; a NaN input
+    ends its lane's loop and stays NaN.  tests/test_geo_transform_vec.py
+    checks the kernel against the DuckDB replay ``_bng_sql_oracle`` over
+    the whole input domain of geo_transform_27700_to_4326."""
+    # 1-D even for a scalar: numpy's scalar ``**`` (libm pow) and its array
+    # ``**`` differ by ulps, so a 0-d point would drift from the same point
+    # inside a batch
+    shape = np.shape(easting)
+    E = np.ravel(np.asarray(easting, dtype="float64"))
+    N = np.ravel(np.asarray(northing, dtype="float64"))
 
     # ---- inverse TM (OSGB36), per-lane-frozen meridian iteration ----
     a, e2 = _AIRY.a, _AIRY.e2
@@ -286,7 +200,7 @@ def bng_to_wgs84_vec(easting, northing):
         nu84 = _WGS84.a / np.sqrt(1 - _WGS84.e2 * s84 * s84)
         lat84 = np.arctan2(z2 + _WGS84.e2 * nu84 * s84, p)
     deg = 180.0 / math.pi
-    return lon84 * deg, lat84 * deg
+    return (lon84 * deg).reshape(shape), (lat84 * deg).reshape(shape)
 
 
 # --------------------------------------------------------------------------
@@ -296,10 +210,13 @@ def bng_to_wgs84_vec(easting, northing):
 _R_MAJOR = 6378137.0
 
 
-def webmercator_to_wgs84(x: float, y: float) -> tuple[float, float]:
-    lon = math.degrees(x / _R_MAJOR)
-    lat = math.degrees(2 * math.atan(math.exp(y / _R_MAJOR)) - math.pi / 2)
-    return lon, lat
+def webmercator_to_wgs84(x, y):
+    """EPSG:3857 → EPSG:4326 (lon, lat degrees) over NumPy arrays; a y
+    whose exponential overflows reprojects to NaN."""
+    e = np.exp(np.asarray(y, dtype="float64") / _R_MAJOR)
+    lon = np.degrees(np.asarray(x, dtype="float64") / _R_MAJOR)
+    lat = np.degrees(2 * np.arctan(e) - math.pi / 2)
+    return lon, np.where(np.isfinite(e), lat, math.nan)
 
 
 def wgs84_to_webmercator(lon: float, lat: float) -> tuple[float, float]:
@@ -308,15 +225,21 @@ def wgs84_to_webmercator(lon: float, lat: float) -> tuple[float, float]:
     return x, y
 
 
-def transform_xy(x: float, y: float, src: str, dst: str = "4326") -> tuple[float, float]:
+def transform_xy(x, y, src: str, dst: str = "4326"):
     """Dispatch mirroring the reachable ST_Transform surface
-    (geo_strategy.rs:281-291: skip when src == dst)."""
+    (geo_strategy.rs:281-291: skip when src == dst).  ``x``/``y`` are
+    arrays (one call per batch) or scalars; a scalar call returns a tuple
+    of Python floats."""
     if src == dst:
         return x, y
     if dst != "4326":
         raise ValueError(f"unsupported target CRS {dst}")
     if src == "27700":
-        return bng_to_wgs84(x, y)
-    if src == "3857":
-        return webmercator_to_wgs84(x, y)
-    raise ValueError(f"unsupported source CRS {src}")
+        lon, lat = bng_to_wgs84(x, y)
+    elif src == "3857":
+        lon, lat = webmercator_to_wgs84(x, y)
+    else:
+        raise ValueError(f"unsupported source CRS {src}")
+    if np.ndim(lon) == 0:
+        return float(lon), float(lat)
+    return lon, lat

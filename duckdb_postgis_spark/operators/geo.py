@@ -164,14 +164,14 @@ def geo_wkb_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 # G5 oracle: the OSGB36/WGS84 transform replayed in pure DuckDB SQL
 # --------------------------------------------------------------------------
 def _bng_sql_oracle() -> str:
-    """DuckDB replay of functions/geo.py's closed-form BNG→WGS84 chain
+    """DuckDB replay of the BNG→WGS84 kernel ``functions.geo.bng_to_wgs84``
     (DuckDB has no spatial extension offline, so the oracle IS the math):
     recursive-CTE meridian-arc convergence, the OS inverse-TM series, the
     7-param Helmert shift, and the 8-iteration geodetic loop — every
     constant embedded as the exact repr of the Python double, every
-    Python ``**`` rendered as ``pow()`` (both engines call the same
-    correctly-rounded libm).  Residual divergence measured ≤ 1.5e-14°,
-    five orders below the 1e-6 ROUND grid, so the value hash is stable."""
+    Python ``**`` rendered as ``pow()``.  Its ROUND(·, 6) output equals
+    the kernel's on all 20000 pairs of the query's input domain
+    (tests/test_geo_transform_vec.py), so the value hash is stable."""
     import math
 
     from duckdb_postgis_spark.functions.geo import (
@@ -307,22 +307,16 @@ def geo_transform_27700_to_4326(spark: SparkSession, sf_dir: str) -> DataFrame:
     in an Arrow-batched pandas UDF (SURVEY G5; the reference's ST_Transform
     path geo_strategy.rs:288 with always_xy). Synthetic E/N derived from part
     keys inside the BNG validity envelope [0,800000]×[0,1400000]
-    (geo_strategy.rs:237-243). Value-level oracle: the whole transform chain
-    is replayed in pure DuckDB SQL (_bng_sql_oracle — recursive-CTE
-    meridian arc, inverse-TM series, Helmert, geodetic iteration), ≤1.5e-14°
-    residual vs Python; accuracy additionally unit-tested against published
-    OS test points. Scale: vectorized python over Arrow batches.
-
-    r13 OPTIMIZATION (guide §4.2): the per-row bng_to_wgs84 loop (a full
-    inverse-TM + Helmert + geodetic-iteration chain per point, ~40
-    scalar transcendentals each) became ONE NumPy pass per Arrow batch
-    (bng_to_wgs84_vec).  Rounded outputs proven identical over the
-    query's ENTIRE possible input domain — easting/northing are
-    p_partkey % 4000 / % 10000 lattices, so all 20000 distinct pairs
-    were checked exhaustively: 0 mismatches after ROUND(·, 6), max raw
-    drift 2.8e-14° vs a 2.3e-11° minimum distance to any rounding
-    boundary (tests/test_geo_transform_vec.py pins this)."""
-    from duckdb_postgis_spark.functions.geo import bng_to_wgs84_vec
+    (geo_strategy.rs:237-243). Each Arrow batch is one call of the array
+    kernel ``functions.geo.bng_to_wgs84``, the package's only 27700 → 4326
+    implementation, which process_file uses too. Value-level oracle: the
+    whole chain replayed in pure DuckDB SQL (_bng_sql_oracle — recursive-CTE
+    meridian arc, inverse-TM series, Helmert, geodetic iteration).
+    easting/northing are p_partkey % 4000 / % 10000 lattices, so the input
+    domain is 20000 pairs at every scale; tests/test_geo_transform_vec.py
+    compares kernel and oracle on all of them after ROUND(·, 6). Accuracy
+    is unit-tested against published OS test points."""
+    from duckdb_postgis_spark.functions.geo import bng_to_wgs84
 
     p = table(spark, sf_dir, "part").select(
         "p_partkey",
@@ -336,7 +330,7 @@ def geo_transform_27700_to_4326(spark: SparkSession, sf_dir: str) -> DataFrame:
         for pdf in it:
             if len(pdf) == 0:
                 continue
-            lon, lat = bng_to_wgs84_vec(
+            lon, lat = bng_to_wgs84(
                 pdf["easting"].to_numpy(), pdf["northing"].to_numpy()
             )
             yield pd.DataFrame(

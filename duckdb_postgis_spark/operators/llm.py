@@ -868,40 +868,31 @@ def knn_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _corpus_stats(path: str) -> tuple[int, int]:
-    """(row_count, embedding_dim) from the parquet footer + one 1-row batch
-    — pure driver-side metadata, NO Spark job.  Replaces the per-invocation
-    ``emb.count()`` Spark action that made knn_cosine_topk a two-job query
-    (round-5 verdict order #4).  Cached on the table's STALENESS SIGNATURE
-    (r8 review fix — since the count now selects the candidate-rule bit
-    width in the cos-dedup/LSH operators while the DuckDB oracle recomputes
-    COUNT(*) live, a stale cached n after an in-place testdata rewrite
-    would silently desynchronize the two engines' plans; the (path, size,
-    mtime) key re-probes, the same rule as catalog.table_num_rows).  At
-    100 TB this is still O(#files) footer reads on the driver, the same
-    cost Spark's own scan planning already pays."""
+    """(row_count, embedding_dim) from parquet metadata and one 1-row
+    batch — driver-side, NO Spark job, so knn_cosine_topk stays a
+    single-job query.  The count is ``catalog.table_num_rows``; the dim
+    probe is cached on the same staleness signature, so an in-place
+    testdata rewrite re-probes both (the count picks the candidate-rule
+    bit width in the cos-dedup/LSH operators while the DuckDB oracle
+    recomputes COUNT(*) live, so a stale n would desynchronize the two
+    engines' plans)."""
     import os as _os
 
-    from duckdb_postgis_spark.catalog import _staleness_sig
+    from duckdb_postgis_spark.catalog import _staleness_sig, table_num_rows
 
-    st = _os.stat(path)
-    return _corpus_stats_cached(path, _staleness_sig(path, st))
+    sig = _staleness_sig(path, _os.stat(path))
+    return table_num_rows(path), _embedding_dim(path, sig)
 
 
 @functools.lru_cache(maxsize=32)
-def _corpus_stats_cached(path: str, _sig: tuple) -> tuple[int, int]:
+def _embedding_dim(path: str, _sig: tuple) -> int:
     import pyarrow.parquet as pq
 
-    ds = pq.ParquetDataset(path)
-    n = sum(frag.metadata.num_rows for frag in ds.fragments)
-    dim = 0
-    for frag in ds.fragments:
+    for frag in pq.ParquetDataset(path).fragments:
         for batch in frag.to_batches(batch_size=1, columns=["embedding"]):
             if batch.num_rows:
-                dim = len(batch.column(0)[0])
-                break
-        if dim:
-            break
-    return n, dim
+                return len(batch.column(0)[0])
+    return 0
 
 
 #: exact all-pairs knn warns (not raises) past this corpus size — the

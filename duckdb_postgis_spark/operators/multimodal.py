@@ -7,12 +7,12 @@ relational column, interpreted by scalar functions.  We generalize that to
 media: an opaque ``payload: binary`` column plus a typed metadata struct,
 processed by Arrow-batched ``mapInPandas`` stages.
 
-Container constraint: no PIL/librosa/av are installed, so the *codec* step is
-stubbed — ``decode_media_real`` raises ``NotImplementedError`` and the
-pipelines run a clearly-marked deterministic fake decode
-(``_fake_decode_frame``) instead.  Everything Spark-side is real and load-
-bearing: binary schema, Arrow batch shapes, partition balance, per-batch
-vectorized NumPy, explode of variable-length frame samples.
+Container constraint: no PIL/librosa/av are installed, so there is no codec
+step: the pipelines read each batch's payload bytes as an (n_rows,
+PAYLOAD_BYTES) uint8 matrix (``_payload_matrix``) and compute their features
+from those bytes.  Everything Spark-side is real and load-bearing: binary
+schema, Arrow batch shapes, partition balance, per-batch vectorized NumPy,
+explode of variable-length frame samples.
 
 Scale design (100 TB of media):
 - payloads live in parquet binary columns (or file pointers); the synth here
@@ -94,28 +94,6 @@ _MEDIA_CTE = f"""
       FROM documents
     )
 """
-
-
-# --------------------------------------------------------------------------
-# codec stub — the ONLY unimplemented piece, clearly marked
-# --------------------------------------------------------------------------
-def decode_media_real(payload: bytes, media_type: str):
-    """Real decode (JPEG/WAV/H.264 → arrays). STUB: the image/audio codecs
-    (PIL, librosa, av) are not in this container. The fake below exercises the
-    identical Spark plumbing (schema, batch shape, memory profile)."""
-    raise NotImplementedError(
-        "media codecs unavailable in this environment; "
-        "swap _fake_decode_frame for PIL.Image.open / librosa.load / av.open"
-    )
-
-
-def _fake_decode_frame(payload: bytes, width: int, height: int):
-    """Deterministic fake decode: tile payload bytes into an HxW uint8
-    'pixel' array — stands in for a codec, preserving dtype/shape semantics."""
-    import numpy as np
-
-    px = np.frombuffer(payload, dtype=np.uint8)
-    return np.resize(px, (height, width))
 
 
 def _payload_matrix(pdf: pd.DataFrame):

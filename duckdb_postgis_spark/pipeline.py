@@ -10,8 +10,11 @@ Ours: sniff (sources/sniffer) → format reader (sources/readers) → DataFrame
 (Catalyst replaces DuckDB's planner) → geometry detection over df.dtypes
 (functions/geo_detect) → CRS inference (functions/wkb probe ladder + the
 functions/geo range classifier on a LIMIT sample) → WKT transform columns
-(JVM string synthesis for EPSG:4326 coordinate pairs, a pandas UDF
-otherwise) → optional PostGIS write + DDL replay (sinks/postgis).
+(JVM string synthesis for EPSG:4326 coordinate pairs, otherwise a
+``mapInPandas`` that reprojects each Arrow batch with one
+``functions.geo.transform_xy`` call and prints it with
+``functions.wkb.to_wkt``) → optional PostGIS write + DDL replay
+(sinks/postgis).
 
 A CSV within one file split launches no Spark job before the write: the
 reader infers its schema on the driver and the CRS probes read the same
@@ -28,6 +31,7 @@ from __future__ import annotations
 import math
 from dataclasses import dataclass, field
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StringType, StructField, StructType
@@ -174,18 +178,37 @@ def infer_crs_from_geometry(df: DataFrame, geom_col: str) -> str:
 # --------------------------------------------------------------------------
 
 
-def _wkt_4326(geom: Geom | None, src_crs: str) -> str | None:
-    """ST_AsText(ST_Force2D(ST_Transform(geom))), the transform skipped
-    when the CRS already matches; NULL for a NULL geometry or a coordinate
-    that is, or reprojects to, a non-finite value."""
-    if geom is None:
-        return None
-    try:
-        if src_crs != _TARGET_CRS:
-            geom = transform_geom(geom, lambda x, y: transform_xy(x, y, src_crs, _TARGET_CRS))
-        return to_wkt(geom)
-    except (ValueError, ArithmeticError):
-        return None
+def _wkt_4326(geoms: list[Geom | None], src_crs: str) -> list[str | None]:
+    """ST_AsText(ST_Force2D(ST_Transform(geom))) over one Arrow batch: the
+    batch's coordinates are gathered, reprojected by one ``transform_xy``
+    call (skipped when the CRS already matches) and put back in place.
+    NULL for a NULL geometry, for a non-finite input or output coordinate,
+    and for every row when the source CRS is not supported."""
+    if src_crs != _TARGET_CRS:
+        xs: list[float] = []
+        ys: list[float] = []
+        for g in geoms:
+            if g is not None:
+                transform_geom(g, lambda x, y: (xs.append(x), ys.append(y)))
+        x, y = np.array(xs, dtype="float64"), np.array(ys, dtype="float64")
+        try:
+            with np.errstate(all="ignore"):
+                lon, lat = transform_xy(x, y, src_crs, _TARGET_CRS)
+        except ValueError:
+            return [None] * len(geoms)
+        lon = np.where(np.isfinite(x) & np.isfinite(y), lon, math.nan)
+        moved = zip(lon.tolist(), lat.tolist())
+        geoms = [
+            None if g is None else transform_geom(g, lambda x, y: next(moved))
+            for g in geoms
+        ]
+    out: list[str | None] = []
+    for g in geoms:
+        try:
+            out.append(None if g is None else to_wkt(g))
+        except ValueError:  # a non-finite coordinate
+            out.append(None)
+    return out
 
 
 def synthesize_point_wkt(
@@ -193,8 +216,9 @@ def synthesize_point_wkt(
 ) -> DataFrame:
     """Coordinate pair → ``<geom_name>_wkt`` POINT column, null-filtered
     (geo_strategy.rs:314-347). When src == 4326 this is pure JVM string
-    synthesis; otherwise a vectorized reprojection UDF runs first
-    (ST_Transform analog, skip-when-same-CRS per geo_strategy.rs:322-340)."""
+    synthesis; otherwise a ``mapInPandas`` reprojects each Arrow batch's
+    points with one kernel call (``_wkt_4326``; ST_Transform analog,
+    skip-when-same-CRS per geo_strategy.rs:322-340)."""
     out_col = f"{geom_name}_wkt"
     filtered = df.filter(F.col(x_col).isNotNull() & F.col(y_col).isNotNull())
     if src_crs == _TARGET_CRS:
@@ -212,10 +236,8 @@ def synthesize_point_wkt(
     def reproject(it):
         for pdf in it:
             res = pdf.drop(columns=["__x", "__y"])
-            res[out_col] = [
-                _wkt_4326(("Point", (float(x), float(y))), src_crs)
-                for x, y in zip(pdf["__x"], pdf["__y"])
-            ]
+            pts = zip(pdf["__x"].tolist(), pdf["__y"].tolist())
+            res[out_col] = _wkt_4326([("Point", p) for p in pts], src_crs)
             yield res
 
     tagged = filtered.withColumn("__x", F.col(x_col).cast("double")).withColumn(
@@ -236,15 +258,16 @@ def transform_geom_columns(
     EPSG:4326 ``<col>_wkt`` in one Arrow-batched pass; original geometry
     columns are dropped. Full geometry shape is preserved: every value goes
     through ``parse_geometry`` (WKB bytes, hex WKB or WKT text of any
-    standard type), reprojects coordinate-by-coordinate and re-emits as WKT
-    (functions/wkb.py). A value that does not parse, or has a non-finite
-    coordinate (a WKB ``POINT EMPTY`` is NaN NaN), becomes NULL like the
-    Postgres-side safe_geom_from_text (geo_strategy.rs:373-381)."""
+    standard type); each column of a batch reprojects with one kernel call
+    (``_wkt_4326``) and re-emits as WKT (functions/wkb.py). A value that
+    does not parse, or has a non-finite coordinate (a WKB ``POINT EMPTY``
+    is NaN NaN), becomes NULL like the Postgres-side safe_geom_from_text
+    (geo_strategy.rs:373-381)."""
 
     def convert(it):
         for pdf in it:
             for g in geom_cols:
-                pdf[f"{g}_wkt"] = [_wkt_4326(parse_geometry(v), src_crs) for v in pdf[g]]
+                pdf[f"{g}_wkt"] = _wkt_4326([parse_geometry(v) for v in pdf[g]], src_crs)
             yield pdf.drop(columns=list(geom_cols))
 
     keep = [f for f in df.schema.fields if f.name not in geom_cols]

@@ -121,11 +121,3 @@ def all_queries() -> dict[str, QueryFn]:
 def all_oracles() -> dict[str, str]:
     load_all()
     return _ordered(ORACLES)
-
-
-def describe() -> list[dict[str, Any]]:
-    load_all()
-    return [
-        {"name": n, "oracle": n in ORACLES, "doc": (f.__doc__ or "").strip().splitlines()[0] if f.__doc__ else ""}
-        for n, f in sorted(QUERIES.items())
-    ]

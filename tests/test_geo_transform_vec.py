@@ -1,69 +1,48 @@
-"""Pin the r13 vectorized BNG→WGS84 kernel to the scalar reference path.
+"""Pin the BNG→WGS84 array kernel to its independent DuckDB replay.
 
 geo_transform_27700_to_4326's registered inputs are p_partkey lattices
 (easting = 400000 + (k % 4000)·50, northing = 100000 + (k % 10000)·100),
 so the query's possible input domain is EXACTLY the 20000 pairs indexed
-by k % 20000 — at every scale factor.  The test proves, over that entire
-domain, that the vectorized kernel (bng_to_wgs84_vec) and the scalar
-reference (bng_to_wgs84) agree after the query's ROUND(·, 6), and that
-the raw drift stays orders of magnitude below the distance to any
-rounding boundary (so the DuckDB oracle's own ≤1.5e-14 residual cannot
-be pushed across a boundary either).
+by k % 20000 — at every scale factor.  The test reprojects that entire
+domain with the kernel (functions.geo.bng_to_wgs84) and compares it with
+the query's oracle, ``_bng_sql_oracle()`` run in DuckDB over a ``part``
+view of range(20000), after the query's ROUND(·, 6).  The kernel is the
+only Python implementation of the transform; the oracle is the same math
+written as SQL and evaluated by another engine.
 """
 
-import math
-
+import duckdb
 import numpy as np
 
-from duckdb_postgis_spark.functions.geo import bng_to_wgs84, bng_to_wgs84_vec
+from duckdb_postgis_spark.functions.geo import bng_to_wgs84, transform_xy
+from duckdb_postgis_spark.operators.geo import _bng_sql_oracle
 
-#: sampled stride for the quick default run; the full 20000-pair sweep
-#: runs in ~4 s and is what the r13 round executed before wiring the
-#: operator (0 mismatches, max drift 2.8e-14, min boundary margin
-#: 2.3e-11).  Stride 7 keeps CI fast while hitting both lattice periods
-#: (gcd(7, 4000) = gcd(7, 10000) = 1 → every residue class visited).
-_STRIDE = 7
+_DOMAIN = 20000
 
 
-def _domain():
-    k = np.arange(0, 20000, _STRIDE, dtype="int64")
-    return (
-        400000.0 + (k % 4000) * 50.0,
-        100000.0 + (k % 10000) * 100.0,
-    )
-
-
-def test_vec_matches_scalar_after_round():
-    E, N = _domain()
-    lon_v, lat_v = bng_to_wgs84_vec(E, N)
-    for i in range(E.size):
-        lon_s, lat_s = bng_to_wgs84(float(E[i]), float(N[i]))
-        assert round(lon_s, 6) == round(float(lon_v[i]), 6), (E[i], N[i])
-        assert round(lat_s, 6) == round(float(lat_v[i]), 6), (E[i], N[i])
-
-
-def test_vec_drift_far_below_rounding_margin():
-    E, N = _domain()
-    lon_v, lat_v = bng_to_wgs84_vec(E, N)
-    max_drift = 0.0
-    min_margin = math.inf
-    for i in range(E.size):
-        lon_s, lat_s = bng_to_wgs84(float(E[i]), float(N[i]))
-        max_drift = max(
-            max_drift, abs(lon_s - float(lon_v[i])), abs(lat_s - float(lat_v[i]))
-        )
-        for s in (lon_s, lat_s):
-            min_margin = min(min_margin, abs((s * 1e6) % 1 - 0.5) * 1e-6)
-    # full-domain sweep measured drift 2.8e-14 vs margin 2.3e-11; assert
-    # a 100x separation so any future kernel change that erodes the gap
-    # fails loudly before the oracle ever could
-    assert max_drift * 100 < min_margin, (max_drift, min_margin)
+def test_kernel_matches_sql_oracle_after_round():
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW part AS SELECT range AS p_partkey FROM range({_DOMAIN})")
+    rows = con.execute(_bng_sql_oracle()).fetchall()
+    assert len(rows) == _DOMAIN
+    _, E, N, lon_o, lat_o = (np.array(c) for c in zip(*rows))
+    lon, lat = bng_to_wgs84(E, N)
+    got = [(round(a, 6), round(b, 6)) for a, b in zip(lon.tolist(), lat.tolist())]
+    bad = [
+        (e, n) for e, n, g, o in zip(E, N, got, zip(lon_o, lat_o)) if g != tuple(o)
+    ]
+    assert bad == [], bad[:5]
 
 
 def test_vec_handles_scalar_and_empty():
-    lon, lat = bng_to_wgs84_vec(np.array([431613.0]), np.array([287794.0]))
-    lon_s, lat_s = bng_to_wgs84(431613.0, 287794.0)
-    assert round(lon_s, 6) == round(float(lon[0]), 6)
-    assert round(lat_s, 6) == round(float(lat[0]), 6)
-    lon0, lat0 = bng_to_wgs84_vec(np.array([]), np.array([]))
+    """A scalar call returns Python floats equal to the same point inside
+    a batch; an empty batch returns empty arrays."""
+    E = np.array([431613.0, 651409.903, 538890.0])
+    N = np.array([287794.0, 313177.270, 177320.0])
+    lon, lat = transform_xy(E, N, "27700")
+    for i in range(E.size):
+        one = transform_xy(float(E[i]), float(N[i]), "27700")
+        assert all(type(v) is float for v in one)
+        assert one == (float(lon[i]), float(lat[i]))
+    lon0, lat0 = bng_to_wgs84(np.array([]), np.array([]))
     assert lon0.size == 0 and lat0.size == 0

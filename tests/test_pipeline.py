@@ -366,36 +366,60 @@ def test_zipped_shapefile_multipatch_bare_rings(spark, tmp_path):
     )
 
 
+def _write_gpkg(path: str, srs: int, points: list[tuple[float, float] | None]) -> None:
+    """A one-layer GeoPackage ``pts`` whose gpkg_spatial_ref_sys declares
+    EPSG:``srs``; a None point is a NULL geometry."""
+    import sqlite3
+    import struct
+
+    con = sqlite3.connect(path)
+    con.execute("CREATE TABLE gpkg_contents (table_name TEXT, data_type TEXT, srs_id INTEGER)")
+    con.execute("INSERT INTO gpkg_contents VALUES ('pts', 'features', ?)", (srs,))
+    con.execute(
+        "CREATE TABLE gpkg_spatial_ref_sys (srs_id INTEGER, organization TEXT, organization_coordsys_id INTEGER)"
+    )
+    con.execute("INSERT INTO gpkg_spatial_ref_sys VALUES (?, 'EPSG', ?)", (srs, srs))
+    con.execute("CREATE TABLE gpkg_geometry_columns (table_name TEXT, column_name TEXT)")
+    con.execute("INSERT INTO gpkg_geometry_columns VALUES ('pts', 'geom')")
+    con.execute("CREATE TABLE pts (fid INTEGER, geom BLOB)")
+    for fid, pt in enumerate(points, start=1):
+        blob = None
+        if pt is not None:
+            wkb = struct.pack("<BIdd", 1, 1, *pt)
+            blob = b"GP\x00\x01" + srs.to_bytes(4, "little") + wkb
+        con.execute("INSERT INTO pts VALUES (?, ?)", (fid, blob))
+    con.commit()
+    con.close()
+
+
 def test_gpkg_srs_metadata_wins_over_range_inference(spark, tmp_path):
     """CRS from gpkg_contents.srs_id → gpkg_spatial_ref_sys (reference reads
     st_read_meta auth_code, geo_strategy.rs:55-70). The coords below LOOK
     like lon/lat (range inference would say 4326) but metadata says 27700 —
     metadata must win."""
-    import sqlite3
-
     from duckdb_postgis_spark.pipeline import process_file
 
     p = str(tmp_path / "meta.gpkg")
-    con = sqlite3.connect(p)
-    con.execute("CREATE TABLE gpkg_contents (table_name TEXT, data_type TEXT, srs_id INTEGER)")
-    con.execute("INSERT INTO gpkg_contents VALUES ('pts', 'features', 27700)")
-    con.execute(
-        "CREATE TABLE gpkg_spatial_ref_sys (srs_id INTEGER, organization TEXT, organization_coordsys_id INTEGER)"
-    )
-    con.execute("INSERT INTO gpkg_spatial_ref_sys VALUES (27700, 'EPSG', 27700)")
-    con.execute("CREATE TABLE gpkg_geometry_columns (table_name TEXT, column_name TEXT)")
-    con.execute("INSERT INTO gpkg_geometry_columns VALUES ('pts', 'geom')")
-    con.execute("CREATE TABLE pts (fid INTEGER, geom BLOB)")
-    import struct as _s
-
-    wkb = _s.pack("<BIdd", 1, 1, 0.5, 51.5)  # in-4326-range on purpose
-    con.execute(
-        "INSERT INTO pts VALUES (1, ?)", (b"GP\x00\x01" + (4326).to_bytes(4, "little") + wkb,)
-    )
-    con.commit()
-    con.close()
+    _write_gpkg(p, 27700, [(0.5, 51.5)])  # in-4326-range on purpose
     res = process_file(spark, p)
     assert res.source_crs == "27700"
+
+
+def test_gpkg_unsupported_srs_gives_null_wkt(spark, tmp_path):
+    """A source CRS that ``transform_xy`` rejects (EPSG:2154, Lambert-93)
+    fails the whole Arrow batch's reprojection: the job completes, the
+    metadata CRS is reported and every row keeps its place with a NULL
+    WKT."""
+    from duckdb_postgis_spark.pipeline import process_file
+
+    p = str(tmp_path / "lambert.gpkg")
+    _write_gpkg(p, 2154, [(652000.0, 6862000.0), None, (700000.0, 6600000.0)])
+    res = process_file(spark, p)
+    assert res.source_crs == "2154"
+    rows = res.dataframe.collect()
+    assert len(rows) == 3
+    wkt_cols = [f"{g}_wkt" for g in res.geom_columns]
+    assert wkt_cols and all(r[c] is None for r in rows for c in wkt_cols)
 
 
 def test_geojson_all_geometry_types_to_wkt(spark, tmp_path):

@@ -349,3 +349,59 @@ def test_session_builder_inventory():
             ):
                 sites.append(rel.as_posix())
     assert sites == ["duckdb_postgis_spark/session.py"]
+
+
+def test_reprojection_kernel_inventory():
+    """EPSG:27700 → 4326 is computed once in Python: the OSGB scale factor
+    ``_F0`` is read only by the array kernel (``functions/geo.py``
+    ``bng_to_wgs84``) and by its independent DuckDB replay
+    (``operators/geo.py`` ``_bng_sql_oracle``).  ``pipeline.py`` calls
+    ``transform_xy`` once per Arrow batch and geometry column: only from
+    the batch writer ``_wkt_4326``, outside any loop, comprehension or
+    lambda (a per-coordinate call would sit inside one)."""
+    import ast
+    from pathlib import Path
+
+    import duckdb_postgis_spark
+
+    per_item = (
+        ast.For, ast.While, ast.Lambda,
+        ast.ListComp, ast.SetComp, ast.DictComp, ast.GeneratorExp,
+    )
+
+    def sites(tree, hit) -> list[tuple[str, bool]]:
+        """(top-level def, inside a per-item construct) of each hit node."""
+        out = []
+        for top in tree.body:
+            name = getattr(top, "name", "<module>")
+            stack = [(top, False)]
+            while stack:
+                node, inner = stack.pop()
+                if hit(node):
+                    out.append((name, inner))
+                inner = inner or isinstance(node, per_item)
+                stack += [(c, inner) for c in ast.iter_child_nodes(node)]
+        return out
+
+    def reads_f0(node) -> bool:
+        if isinstance(node, ast.Name):
+            return node.id == "_F0" and isinstance(node.ctx, ast.Load)
+        return isinstance(node, ast.ImportFrom) and "_F0" in [a.name for a in node.names]
+
+    root = Path(duckdb_postgis_spark.__file__).parent
+    f0 = set()
+    for py in root.rglob("*.py"):
+        rel = py.relative_to(root).as_posix()
+        f0 |= {(rel, fn) for fn, _ in sites(ast.parse(py.read_text()), reads_f0)}
+    assert sorted(f0) == [
+        ("functions/geo.py", "bng_to_wgs84"),
+        ("operators/geo.py", "_bng_sql_oracle"),
+    ]
+
+    calls = sites(
+        ast.parse((root / "pipeline.py").read_text()),
+        lambda n: isinstance(n, ast.Call)
+        and isinstance(n.func, ast.Name)
+        and n.func.id == "transform_xy",
+    )
+    assert calls == [("_wkt_4326", False)]
