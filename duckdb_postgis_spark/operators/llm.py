@@ -17,7 +17,7 @@ import functools
 import math
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DoubleType,
@@ -213,6 +213,18 @@ def _minhash_banded(sig: DataFrame) -> DataFrame:
             )
         ).alias("band", "bsig"),
     )
+
+
+def _minhash_est_jaccard() -> Column:
+    """``est_jaccard`` of a candidate pair with signatures ``sig_a`` and
+    ``sig_b``: the share of the _MINHASH_SEEDS slots on which they agree,
+    rounded to 6 places (the oracle's ROUND(AVG(x.mh = y.mh), 6))."""
+    agree = F.aggregate(
+        F.zip_with("sig_a", "sig_b", lambda x, y: F.when(x == y, 1.0).otherwise(0.0)),
+        F.lit(0.0),
+        lambda acc, v: acc + v,
+    )
+    return F.round(agree / F.lit(float(_MINHASH_SEEDS)), 6).alias("est_jaccard")
 
 
 # --------------------------------------------------------------------------
@@ -498,16 +510,11 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         "a.sig AS sig_a, b.sig AS sig_b)",
         table_num_rows(f"{sf_dir}/documents.parquet"),
     )
-    agree = F.aggregate(
-        F.zip_with("sig_a", "sig_b", lambda x, y: F.when(x == y, 1.0).otherwise(0.0)),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
     return (
         pairs.select(
             "doc_a",
             "doc_b",
-            F.round(agree / F.lit(float(_MINHASH_SEEDS)), 6).alias("est_jaccard"),
+            _minhash_est_jaccard(),
         )
         .dropDuplicates(["doc_a", "doc_b"])
         .orderBy("doc_a", "doc_b")
@@ -1038,9 +1045,8 @@ def _block_pair_topk(
 # embedding-cosine near-dup (threshold form of L6), candidate-then-verify
 # --------------------------------------------------------------------------
 _SQL_COS_THRESH = 0.4
-#: LSH band count shared by the sign-LSH KNN family below and the banded
-#: cosine-dedup candidate rule (band/bit trade-off discussion at the
-#: "ANN scale path" section header)
+#: LSH band count of _embed_codes, the one banding rule of the cosine-dedup
+#: family and the ANN arms (see the "ANN scale path" section header)
 _LSH_BANDS = 16
 _LSH_BITS_MIN = 4
 #: below this corpus size the candidate rule degenerates to all-pairs
@@ -1098,20 +1104,25 @@ def _dedup_cos_oracle_sql(exact_n: int = _DEDUP_COS_EXACT_N) -> str:
     """
 
 
+def _dedup_bits(n: int, exact_n: int = _DEDUP_COS_EXACT_N) -> int:
+    """Band width of the dedup and embedding-index families (the oracle's
+    ``m`` CTE): 0 up to ``exact_n`` vectors, so candidates are all pairs,
+    then ⌈log2(n)⌉ − 7 with floor 1.  ``n`` is the FULL corpus count: the
+    width is a structural property of an index, chosen once at build."""
+    return 0 if n <= exact_n else max(1, math.ceil(math.log2(n)) - 7)
+
+
 def _embed_codes(
-    emb: DataFrame, n: int, dim: int, exact_n: int = _DEDUP_COS_EXACT_N
+    emb: DataFrame, bits: int, dim: int, carry: tuple[str, ...] = ()
 ) -> DataFrame:
-    """(vec_id, band, bucket) sign-LSH codes for any (vec_id, embedding)
-    frame — the Spark twin of the oracle's ``codes`` CTE
-    (_SQL_EMBED_CODES_TPL), factored out of _dedup_cos_pairs so the
-    corpus-wide dedup AND the incremental index family (build, probe,
-    append) all derive codes from the ONE expression and can never drift
-    (the _minhash_signatures convention).  ``n`` is the FULL corpus count
-    (bit width is a structural property of the index, chosen once at
-    build time); below ``exact_n`` bits = 0 and every vector lands in the
-    single (0, 0) cell — candidates degenerate to all pairs, keeping
-    driver-scale output exact."""
-    bits = 0 if n <= exact_n else max(1, math.ceil(math.log2(n)) - 7)
+    """(vec_id, *carry, band, bucket) sign-LSH codes for any (vec_id,
+    embedding) frame: the Spark twin of the oracle's ``codes`` CTE
+    (_SQL_EMBED_CODES_TPL) and the package's one producer of embedding
+    (band, bucket) codes.  Every dedup, index and ANN plan bands through
+    it, so no two of them can drift.  The caller picks ``bits`` by its own
+    width law (_dedup_bits or _lsh_bits); bits = 0 puts every vector in
+    the single (0, 0) cell.  ``carry`` columns ride along on every band
+    row."""
     bands = 1 if bits == 0 else _LSH_BANDS
     b = F.col("band")
     if bits == 0:
@@ -1127,10 +1138,9 @@ def _embed_codes(
             terms.append(F.when(diff > 0, F.lit(1 << i)).otherwise(F.lit(0)))
         bucket = functools.reduce(lambda x, y: x + y, terms)
     return emb.select(
-        "vec_id",
-        "embedding",
+        *dict.fromkeys(("vec_id", "embedding", *carry)),
         F.explode(F.sequence(F.lit(0), F.lit(bands - 1))).alias("band"),
-    ).select("vec_id", "band", bucket.alias("bucket"))
+    ).select("vec_id", *carry, "band", bucket.alias("bucket"))
 
 
 @query("dedup_embedding_cosine", oracle=_dedup_cos_oracle_sql())
@@ -1139,7 +1149,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     CANDIDATE-THEN-VERIFY (round 8; was a threshold-all-pairs theta join
     that could not finish at the sf1-shaped stress scale on either
     engine): candidates come from a banded component-difference-sign join
-    whose bit width grows with the corpus (the _lsh_bits law), then the
+    whose bit width grows with the corpus (the _dedup_bits law), then the
     exact JVM-side cosine verifies every candidate — the
     dedup_verify_levenshtein pattern.  The band rule is deterministic SQL
     arithmetic, so the DuckDB oracle replays it verbatim and the driver
@@ -1167,7 +1177,7 @@ def _dedup_cos_pairs(
     factored out so the differential fuzz family can drive it with random
     corpora and thresholds against _dedup_cos_oracle_sql on the same
     data."""
-    codes = _embed_codes(emb, n, dim, exact_n)
+    codes = _embed_codes(emb, _dedup_bits(n, exact_n), dim)
     # width-pinned candidate dedup (r13 OPTIMIZATION round, guide §2.5):
     # the exact-cosine verify downstream is one interpreted 64-element
     # fold PER CANDIDATE (2 M pairs at sf0.1) and inherits this
@@ -1883,81 +1893,30 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # ANN scale path: sign-LSH bucketed approximate KNN (IVF-style cell search)
 # --------------------------------------------------------------------------
-# Band/bit trade-off: collision prob for cosine s is 1-(1-p^bits)^bands with
-# p = 1-acos(s)/pi. The testdata embeddings are near-uniform (top pairs at
-# s~0.5), so recall needs many short bands (16x4 -> ~0.97 @ s=0.5). Real
-# corpora are clustered (near-dups at s>0.9, p>0.9) — there, more bits per
-# band shrink cells/candidates while the band count keeps recall; the bit
-# width is ADAPTIVE in the corpus size (see _lsh_bits), the plan shape is
-# size-independent.  (_LSH_BANDS/_LSH_BITS_MIN are defined at the
-# cosine-dedup section above, which shares them.)
+# One banding rule for every embedding plan: _embed_codes.  Bit i of band b
+# is sign(x_ci − x_cj) over two fixed components of the vector (see
+# _SQL_EMBED_CODES_TPL), and a vector's bucket in a band packs its bits.
+# Vectors that share a (band, bucket) cell are candidates; an exact cosine
+# re-ranks them.  The hyperplane family is FIXED (component differences),
+# not SimHash's random Gaussian one, so the SimHash collision law
+# p = 1 − acos(s)/π does not apply: recall is measured, not derived.  The
+# oracle-pinned recall flags (knn_ivf_lsh, similarity_search_ann) and
+# tests/test_ann.py check it at every shipped scale.  The ANN arms band at
+# _lsh_bits width; the dedup and index families at _dedup_bits width.
+# (_LSH_BANDS/_LSH_BITS_MIN are defined at the cosine-dedup section.)
 
 
 def _lsh_bits(n: int) -> int:
-    """Adaptive band width: bits ≈ ⌈log2(n)⌉ − 7 (floor 4).
+    """Band width of the ANN arms: ⌈log2(n)⌉ − 7, floor _LSH_BITS_MIN (4).
 
-    The r7 stress sweep MEASURED the law this encodes: candidate volume is
-    Σ C(bucket, 2) ≈ bands · n²/2^(bits+1), so a FIXED bit width makes the
-    "approximate" plan do more work than the exact block matmul once
-    n ≳ 2^(bits+something): at 20 k vectors and bits=4 the sweep observed
-    ~2×10⁸ candidates through scalar fold-dots — more pairs than the exact
-    path's BLAS matmul.  Growing bits with log2(n) pins the expected bucket
-    population (n/2^bits ≈ 128) and therefore candidates-per-vector
-    constant, which keeps the LSH path linear in n.  Recall: per-band
-    collision is p^bits (p = 1 − acos(s)/π), and at the corpus sizes where
-    bits rises above 4 the top pairs are ever-higher-cosine (max of more
-    samples; real corpora are clustered near-dups at s>0.9 where p>0.9, so
-    p^8 ≈ 0.43 and 16 bands give recall ≈ 1−(1−0.43)^16 ≈ 0.9999).  At
-    every driver/bench scale (n ≤ 2048 ⇒ bits = 4) behavior is bit-for-bit
-    the r7 plan, so the pinned recall floors and driver hashes are
-    unchanged; the adaptive width engages only beyond driver scale
-    (n = 20 k ⇒ bits = 8 ⇒ candidates ≈ 1/16 of the exact pair count)."""
+    Candidate volume is Σ C(bucket, 2) ≈ bands · n²/2^(bits+1), so a
+    fixed width makes the approximate plan do more pair work than the
+    exact block matmul once the corpus grows (measured at 20 k vectors and
+    4 bits: ~2×10⁸ candidates).  Growing bits with log2(n) keeps the
+    expected bucket population near n/2^bits ≈ 128, so candidates per
+    vector stay constant and the plan stays linear in n.  Every shipped
+    scale has n ≤ 2048, hence 4 bits."""
     return max(_LSH_BITS_MIN, math.ceil(math.log2(max(n, 2))) - 7)
-
-
-def _lsh_planes(dim: int, bits: int = _LSH_BITS_MIN):
-    """Deterministic random hyperplanes (seeded) — the 'coarse quantizer'.
-    bands x bits planes; a vector's band code = sign-bit pack of its
-    projections, so cosine-close vectors collide with high probability."""
-    import numpy as np
-
-    rng = np.random.default_rng(42)
-    return rng.standard_normal((_LSH_BANDS * bits, dim))
-
-
-def _bucketize(
-    spark: SparkSession, emb: DataFrame, n: int, dim: int = 64
-) -> DataFrame:
-    """(vec_id, embedding) -> (band, bucket, vec_id, embedding): one row per
-    band. Arrow-vectorized projection; no shuffle here — the join shuffles
-    on (band, bucket), moving |V| x bands rows instead of the |V|^2 pairs a
-    naive self-join needs.  ``n`` (from parquet-footer metadata, no Spark
-    job — see _corpus_stats) sizes the band width via _lsh_bits so bucket
-    population stays ~constant as the corpus grows; AQE skew-split handles
-    residual imbalance."""
-    import numpy as np
-    from pyspark.sql.types import ArrayType, IntegerType
-
-    bits = _lsh_bits(n)
-    planes = _lsh_planes(dim, bits)
-    b_planes = spark.sparkContext.broadcast(planes)
-    bands = _LSH_BANDS
-
-    @F.pandas_udf(ArrayType(IntegerType()))
-    def band_codes(vs: pd.Series) -> pd.Series:
-        P = b_planes.value
-        M = np.stack(vs.to_numpy()).astype("float64")
-        signs = (M @ P.T) > 0  # |batch| x (bands*bits)
-        weights = 1 << np.arange(bits)
-        codes = signs.reshape(len(vs), bands, bits) @ weights
-        return pd.Series(list(codes.astype("int32")))
-
-    # "*" passes any caller-attached columns (e.g. the pairwise path's
-    # precomputed nrm, r14) through the explode; every r13 caller passes
-    # exactly (vec_id, embedding), for which this is the same projection
-    return emb.select(
-        "*", F.posexplode(band_codes("embedding")).alias("band", "bucket")
-    )
 
 
 def _pin_recall(
@@ -2003,61 +1962,31 @@ def _pin_recall(
 
 
 def _knn_ivf_lsh_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Approximate top-20 cosine pairs via sign-LSH banding (SURVEY L6 scale
-    path; the 'IVF or LSH-bucketed variant' of the north star). Candidates =
-    pairs sharing any band bucket; exact cosine re-rank JVM-side; global
-    top-20. At 100 TB the only shuffle is the (band,bucket) co-location —
-    candidate volume is sum of C(bucket,2), kept linear by the adaptive
-    band width (_lsh_bits), vs the impossible C(n,2) of the exact path.
-
-    r13 OPTIMIZATION round, value-identical (the dedup_minhash_lsh
-    bucket-grouped lesson + guide §2.3/§2.5): the r7-r12 shape formed
-    candidates as a banded SELF-JOIN whose pair-dedup exchange carried
-    BOTH 64-float embeddings per candidate row (~12.4 M × 550 B ≈
-    6.5 GB at sf0.1), each survivor paid THREE interpreted 64-element
-    higher-order folds (dot + two sumsq), and the planner was free to
-    broadcast one side — duplicating the whole ArrowEvalPython banding
-    lineage (observed when the join projection changed).  Now:
-    (1) the skinny (vec_id, embedding) frame round-robins to cluster
-    width BEFORE banding, so the pandas-UDF projection isn't serialized
-    behind the biggest scan split (observed (24+1)/25 straggler);
-    (2) each vector's norm computes ONCE per banded row; (3) candidates
-    come from ONE width-pinned groupBy(band, bucket) + collect_list
-    with pairs and their cosines expanded IN-ROW — the banding lineage
-    executes exactly once and the dedup exchange moves only
-    (a_id, b_id, cosine_raw).  The cosine is the same
-    dot/(nrm·nrm) doubles in the same order (multiplication is
-    commutative in IEEE754), so values are bit-identical — verified
-    pairwise on all three shapes at sf0.1.  Measured: 8.69 s (self-join)
-    → 3.87 s (bucket-grouped) → 2.17 s (width-pinned) at sf0.1.
-
-    Salt-segmented buckets (r14, value-identical): see
-    _segmented_bucket_pairs — the dedup_minhash_lsh skew guard applied
-    to the embedding banding, bounding any hot bucket's aggregation
-    buffer at ~_LSH_SEG_TARGET members regardless of cluster size."""
+    """Approximate top-20 cosine pairs (SURVEY L6 scale path; the 'IVF or
+    LSH-bucketed variant' of the north star).  The corpus round-robins to
+    shuffle width, computes each vector's norm once, and bands through
+    _embed_codes at _lsh_bits width.  Candidates are the pairs that share
+    a (band, bucket) cell: _segmented_bucket_pairs groups each cell's
+    members (salt-segmented, so a hot bucket's aggregation buffer stays
+    near _LSH_SEG_TARGET) and expands the pairs with their cosine
+    dot/(nrm·nrm) in-row.  Only (a_id, b_id, cosine_raw) rides the
+    pair-dedup exchange; the global top-20 follows.  The only shuffle of
+    vectors is the cell co-location: |V| × bands rows, never the C(n, 2)
+    of the exact path."""
     emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     n, dim = _corpus_stats(f"{sf_dir}/embeddings.parquet")
-    nparts = shuffle_width(spark)
-    sumsq = F.expr(spark_sumsq("embedding"))
-    # nrm is attached before _bucketize, but the optimizer does not keep
-    # it there: the executed plan evaluates the SQRT fold in a Project
-    # ABOVE the posexplode Generate, once per (vector, band) row, not
-    # once per vector.  Same
-    # expression, same double, so downstream cosines are bit-identical.
-    withnorm = _bucketize(
-        spark,
-        emb.repartition(nparts).withColumn("nrm", F.sqrt(sumsq)),
-        n=n,
-        dim=dim,
+    nrm = F.sqrt(F.expr(spark_sumsq("embedding")))
+    banded = _embed_codes(
+        emb.repartition(shuffle_width(spark)).withColumn("nrm", nrm),
+        _lsh_bits(n),
+        dim,
+        ("embedding", "nrm"),
     )
-    # r14 skew guard (_segmented_bucket_pairs, same treatment as
-    # dedup_minhash_lsh): bounded per-segment collect_list buffers; the
-    # in-row cosine is the same dot/(nrm·nrm) doubles in the same order
-    # (each zip_with term x_i·y_i commutes), so values stay bit-identical
-    # whichever segment a pair member lands in.
+    # the cosine is the same dot/(nrm·nrm) doubles in the same order
+    # whichever segment a pair member lands in (each x_i·y_i commutes)
     pairs = _segmented_bucket_pairs(
         spark,
-        withnorm,
+        banded,
         ["band", "bucket"],
         "vec_id",
         ["embedding", "nrm"],
@@ -2087,58 +2016,35 @@ def _knn_ivf_lsh_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def knn_ivf_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sign-LSH approximate pairwise top-20, oracle-checkable (round-7
-    upgrade from rows-only): runs the REAL banded-LSH plan
-    (_knn_ivf_lsh_approx — shingle-free sign-LSH banding, (band,bucket)
-    co-location join, exact re-rank) AND the exact block-matmul top-20,
+    """Sign-LSH approximate pairwise top-20, oracle-checkable: runs the
+    banded plan (_knn_ivf_lsh_approx) AND the exact block-matmul top-20,
     then emits the exact pairs (hash-verified vs DuckDB's all-pairs
-    oracle) plus ``recall_ge_08`` computed from the approximate result —
-    the oracle pins it TRUE, so LSH recall < 0.8 is a driver hash
-    failure.  Scale: the exact companion is the verification harness you
-    would drop at 100 TB; the LSH path's shuffle is |V|×bands rows."""
+    oracle) plus ``recall_ge_08`` computed from the approximate result.
+    The oracle pins it TRUE, so LSH recall < 0.8 is a driver hash failure.
+    Scale: the exact companion is the verification harness you would drop
+    at 100 TB; the LSH path's shuffle is |V|×bands rows."""
     exact = knn_cosine_topk(spark, sf_dir)
     approx = _knn_ivf_lsh_approx(spark, sf_dir)
     return _pin_recall(exact, approx, ["a_id", "b_id"], 0.8, "recall_ge_08")
 
 
 def _similarity_search_ann_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Query-vector top-10 via LSH cell probing (L7 scale path): compute the
-    query's band codes driver-side, scan only matching cells (partition-
-    prunable at scale when the corpus is bucket-partitioned), exact re-rank.
-    vs similarity_search_query's full scan: touches ~bands/2^bits of the
-    corpus."""
-    import numpy as np
-
-    emb = table(spark, sf_dir, "embeddings")
-    qv = np.array(
-        emb.filter(F.col("vec_id") == 0).select("embedding").first()[0], dtype="float64"
-    )
-    n, _dim = _corpus_stats(f"{sf_dir}/embeddings.parquet")
+    """Query-vector top-10 via LSH cell probing (L7 scale path): the query
+    row (vec_id = 0) bands through _embed_codes like the corpus, its
+    bands × 1 cells broadcast-join the corpus codes, and the matched
+    vectors re-rank by the exact cosine of similarity_search_query.  It
+    touches ~bands/2^bits of the corpus, and the build runs no job."""
+    emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    n, dim = _corpus_stats(f"{sf_dir}/embeddings.parquet")
     bits = _lsh_bits(n)
-    planes = _lsh_planes(len(qv), bits)
-    signs = (planes @ qv) > 0
-    weights = 1 << np.arange(bits)
-    q_codes = signs.reshape(_LSH_BANDS, bits) @ weights
-    probe = [(int(bd), int(ct)) for bd, ct in enumerate(q_codes)]
-
-    bucketed = _bucketize(spark, emb.select("vec_id", "embedding"), n=n, dim=len(qv))
-    cells = spark.createDataFrame(probe, "band INT, bucket INT")
-    cand = (
-        bucketed.join(F.broadcast(cells), ["band", "bucket"])
-        .filter(F.col("vec_id") != 0)
-        .dropDuplicates(["vec_id"])
-    )
-    b_q = spark.sparkContext.broadcast(qv / np.sqrt((qv * qv).sum()))
-
-    @F.pandas_udf("double")
-    def qcos(vs: pd.Series) -> pd.Series:
-        Q = b_q.value
-        M = np.stack(vs.to_numpy()).astype("float64")
-        M = M / np.sqrt((M * M).sum(axis=1, keepdims=True))
-        return pd.Series(M @ Q)
-
+    cells = _embed_codes(
+        emb.filter(F.col("vec_id") == 0), bits, dim, ("embedding",)
+    ).select("band", "bucket", F.col("embedding").alias("qe"))
     return (
-        cand.withColumn("cosine_raw", qcos("embedding"))
+        _embed_codes(emb.filter(F.col("vec_id") != 0), bits, dim, ("embedding",))
+        .join(F.broadcast(cells), ["band", "bucket"])
+        .select("vec_id", F.expr(_spark_cos("qe", "embedding")).alias("cosine_raw"))
+        .dropDuplicates(["vec_id"])  # a vector may match in >1 band
         .orderBy(F.col("cosine_raw").desc(), "vec_id")
         .limit(10)
         .select("vec_id", F.round("cosine_raw", 6).alias("cosine"))
@@ -2147,13 +2053,13 @@ def _similarity_search_ann_approx(spark: SparkSession, sf_dir: str) -> DataFrame
 
 @query("similarity_search_ann", oracle=_sql_query_topk_oracle("recall_ge_06"))
 def similarity_search_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LSH cell-probing search, oracle-checkable (round-7 upgrade from
-    rows-only): the real probe plan (_similarity_search_ann_approx) runs
-    alongside the exact full scan; output = exact top-10 (hash-verified)
-    + ``recall_ge_06`` from the approximate result, pinned TRUE by the
-    oracle.  The 0.6 floor matches tests/test_ann.py — sign-LSH on
-    near-uniform random vectors (worst case: no cluster structure) probes
-    bands/2^bits of the corpus and recovers ≥6 of the true top-10."""
+    """LSH cell-probing search, oracle-checkable: the probe plan
+    (_similarity_search_ann_approx) runs alongside the exact full scan;
+    output = exact top-10 (hash-verified) + ``recall_ge_06`` from the
+    approximate result, pinned TRUE by the oracle.  The 0.6 floor matches
+    tests/test_ann.py: on near-uniform random vectors (no cluster
+    structure, the worst case) the probe recovers ≥ 6 of the true top-10
+    at every shipped scale."""
     exact = similarity_search_query(spark, sf_dir)
     approx = _similarity_search_ann_approx(spark, sf_dir)
     return _pin_recall(exact, approx, ["vec_id"], 0.6, "recall_ge_06")
@@ -4259,11 +4165,6 @@ def _minhash_probe(
     b = idx.select(
         F.col("doc_id").alias("idx_id"), "band", "bsig", F.col("sig").alias("sig_b")
     )
-    agree = F.aggregate(
-        F.zip_with("sig_a", "sig_b", lambda x, y: F.when(x == y, 1.0).otherwise(0.0)),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
     cols = ["new_id", "idx_id"]
     if idx_src:
         cols.append(
@@ -4271,7 +4172,7 @@ def _minhash_probe(
             .otherwise(F.lit("corpus"))
             .alias("idx_src")
         )
-    cols.append(F.round(agree / F.lit(float(_MINHASH_SEEDS)), 6).alias("est_jaccard"))
+    cols.append(_minhash_est_jaccard())
     return (
         a.join(b, ["band", "bsig"])
         .dropDuplicates(["new_id", "idx_id"])
@@ -4494,7 +4395,7 @@ def ensure_embedding_index(spark: SparkSession, sf_dir: str):
     """Standing semantic index over the already-ingested corpus
     (vec_id % 10 != 0; the other 10% plays tonight's delta): sign-LSH
     codes + a norms-precomputed vector store.  Bit width comes from the
-    FULL corpus count (_embed_codes law) — a structural choice made once
+    FULL corpus count (_dedup_bits law) — a structural choice made once
     at build time, exactly how a production index pins its geometry."""
     from duckdb_postgis_spark.plans.layout import ensure_tables
 
@@ -4502,7 +4403,7 @@ def ensure_embedding_index(spark: SparkSession, sf_dir: str):
 
     def build(codes, vecs) -> None:
         corpus = table(spark, sf_dir, "embeddings").filter(F.col("vec_id") % 10 != 0)
-        codes(_embed_codes(corpus, n, dim))
+        codes(_embed_codes(corpus, _dedup_bits(n), dim))
         vecs(
             corpus.select(
                 "vec_id",
@@ -4527,7 +4428,7 @@ def _embed_probe(
     candidate (new_id, idx_id) ids shuffle into the vector store's
     vec_id buckets for verify — the INDEX side never moves, and
     embeddings never ride the candidate exchange (ids only)."""
-    probe = _embed_codes(delta, n, dim)
+    probe = _embed_codes(delta, _dedup_bits(n), dim)
     cand = (
         probe.select(F.col("vec_id").alias("new_id"), "band", "bucket")
         .join(
@@ -4635,7 +4536,7 @@ def ensure_embedding_index2(spark: SparkSession, sf_dir: str):
             .withColumnRenamed("new_id", "vec_id")
         )
         accepted = delta.join(rejected, "vec_id", "left_anti")
-        codes(_embed_codes(accepted, n, dim))
+        codes(_embed_codes(accepted, _dedup_bits(n), dim))
         vecs(
             accepted.select(
                 "vec_id",

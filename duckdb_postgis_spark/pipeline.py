@@ -144,11 +144,12 @@ def metadata_crs(df: DataFrame) -> str | None:
 def infer_crs_from_xy(df: DataFrame, x_col: str, y_col: str) -> str:
     """Coordinate-range CRS inference on a probe sample
     (geo_strategy.rs:186-253): collect ≤10 non-null (x,y), fold min/max,
-    classify by the reference's range ladder."""
+    classify by the reference's range ladder.  A value that does not
+    parse as a double (``try_cast``) is skipped, not raised."""
     rows = csv_probe(df, [x_col, y_col], _PROBE_ROWS, DoubleType())
     if rows is None:
         probe = df.filter(F.col(x_col).isNotNull() & F.col(y_col).isNotNull()).select(
-            F.col(x_col).cast("double"), F.col(y_col).cast("double")
+            F.col(x_col).try_cast("double"), F.col(y_col).try_cast("double")
         )
         rows = probe.limit(_PROBE_ROWS).collect()
     xs = [r[0] for r in rows if r[0] is not None]
@@ -218,7 +219,9 @@ def synthesize_point_wkt(
     (geo_strategy.rs:314-347). When src == 4326 this is pure JVM string
     synthesis; otherwise a ``mapInPandas`` reprojects each Arrow batch's
     points with one kernel call (``_wkt_4326``; ST_Transform analog,
-    skip-when-same-CRS per geo_strategy.rs:322-340)."""
+    skip-when-same-CRS per geo_strategy.rs:322-340).  A coordinate that
+    does not parse as a double (``try_cast``) keeps its row with a NULL
+    WKT."""
     out_col = f"{geom_name}_wkt"
     filtered = df.filter(F.col(x_col).isNotNull() & F.col(y_col).isNotNull())
     if src_crs == _TARGET_CRS:
@@ -226,9 +229,9 @@ def synthesize_point_wkt(
             out_col,
             F.concat(
                 F.lit("POINT ("),
-                F.col(x_col).cast("double").cast("string"),
+                F.col(x_col).try_cast("double").cast("string"),
                 F.lit(" "),
-                F.col(y_col).cast("double").cast("string"),
+                F.col(y_col).try_cast("double").cast("string"),
                 F.lit(")"),
             ),
         )
@@ -240,8 +243,8 @@ def synthesize_point_wkt(
             res[out_col] = _wkt_4326([("Point", p) for p in pts], src_crs)
             yield res
 
-    tagged = filtered.withColumn("__x", F.col(x_col).cast("double")).withColumn(
-        "__y", F.col(y_col).cast("double")
+    tagged = filtered.withColumn("__x", F.col(x_col).try_cast("double")).withColumn(
+        "__y", F.col(y_col).try_cast("double")
     )
     schema = StructType(
         [f for f in tagged.schema.fields if f.name not in ("__x", "__y")]

@@ -122,8 +122,9 @@ def csv_probe(
 ) -> list[Row] | None:
     """For a small-file ``read_csv`` frame, the rows of
     ``df.filter(<every column non-null>).select(*columns).limit(n)``,
-    each column cast to ``cast`` when one is given, computed from the
-    reader's driver-side parse without a Spark job.  None for
+    each column try-cast to ``cast`` when one is given (``try_cast``: NULL
+    for a value that does not parse), computed from the reader's
+    driver-side parse without a Spark job.  None for
     any other frame, and for a cast that Spark's analysis rejects (the
     frame's own query raises it)."""
     small = _SMALL_CSV.get(df)
@@ -144,7 +145,7 @@ class _SmallCsv:
     ``CSVInferSchema.inferRowType`` folds them inside the JVM in one py4j
     call, then ``mergeRowTypes`` and ``toStructFields``.  ``probe`` runs
     the column-pruned parse of ``CSVFileFormat.buildReader``
-    (``UnivocityParser.parseIterator``), Spark's ``Cast`` and the
+    (``UnivocityParser.parseIterator``), Spark's ``Cast`` in TRY mode and the
     conversion ``collect`` pickles rows with."""
 
     def __init__(self, spark: SparkSession, path: str, options, lines) -> None:
@@ -262,7 +263,7 @@ class _SmallCsv:
                 e = j.BoundReference(i, jrequired.apply(i).dataType(), True)
                 if cast is not None:
                     tz = j.Some(conf.sessionLocalTimeZone())
-                    e = j.Cast(e, jout.apply(k).dataType(), tz, j.EvalMode.fromSQLConf(conf))
+                    e = j.Cast(e, jout.apply(k).dataType(), tz, j.EvalMode.TRY())
                     if e.checkInputDataTypes().isFailure():
                         return None  # the frame's analysis raises the error
                 exprs.add(e)

@@ -10,19 +10,32 @@ the driver can't see.
 
 from __future__ import annotations
 
+import os
+
+import pytest
+
 from duckdb_postgis_spark import registry
 from duckdb_postgis_spark.operators import llm
 
 registry.load_all()
+
+#: every shipped scale the registered recall floors must hold at
+SCALES = ["sf0.001", "sf0.01", "sf0.1"]
+
+
+def _scale_dir(sf_dir: str, sf: str) -> str:
+    return os.path.join(os.path.dirname(sf_dir), sf)
 
 
 def _pairs(df):
     return {(r.a_id, r.b_id) for r in df.collect()}
 
 
-def test_knn_ivf_lsh_recall(spark, sf_dir):
-    exact = _pairs(registry.QUERIES["knn_cosine_topk"](spark, sf_dir))
-    approx = _pairs(llm._knn_ivf_lsh_approx(spark, sf_dir))
+@pytest.mark.parametrize("sf", SCALES)
+def test_knn_ivf_lsh_recall(spark, sf_dir, sf):
+    d = _scale_dir(sf_dir, sf)
+    exact = _pairs(registry.QUERIES["knn_cosine_topk"](spark, d))
+    approx = _pairs(llm._knn_ivf_lsh_approx(spark, d))
     recall = len(exact & approx) / len(exact)
     assert recall >= 0.8, f"pair recall@20 {recall}"
 
@@ -36,11 +49,26 @@ def test_knn_ivf_lsh_registered_pins_recall(spark, sf_dir):
     assert {(r.a_id, r.b_id) for r in rows} == exact
 
 
-def test_similarity_search_ann_recall(spark, sf_dir):
-    exact = {r.vec_id for r in registry.QUERIES["similarity_search_query"](spark, sf_dir).collect()}
-    approx = {r.vec_id for r in llm._similarity_search_ann_approx(spark, sf_dir).collect()}
+@pytest.mark.parametrize("sf", SCALES)
+def test_similarity_search_ann_recall(spark, sf_dir, sf):
+    d = _scale_dir(sf_dir, sf)
+    exact = {r.vec_id for r in registry.QUERIES["similarity_search_query"](spark, d).collect()}
+    approx = {r.vec_id for r in llm._similarity_search_ann_approx(spark, d).collect()}
     recall = len(exact & approx) / len(exact)
     assert recall >= 0.6, f"query recall@10 {recall}"
+
+
+@pytest.mark.parametrize(
+    "approx", [llm._knn_ivf_lsh_approx, llm._similarity_search_ann_approx]
+)
+def test_lsh_arms_run_no_python(spark, sf_dir, approx):
+    """Both approximate LSH arms band through _embed_codes and re-rank in
+    the JVM: their executed plans hold no Python node (no *EvalPython,
+    *InPandas or MapInArrow)."""
+    df = approx(spark, sf_dir)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert not any(k in plan for k in ("Python", "InPandas", "InArrow")), plan
 
 
 def test_knn_ivf_lsh_deterministic(spark, sf_dir):

@@ -153,7 +153,7 @@ def test_knn_banding_buffer_bound(spark, monkeypatch):
     emb = spark.createDataFrame(
         [(i, vec) for i in range(n)], "vec_id bigint, embedding array<float>"
     )
-    banded = llm._bucketize(spark, emb, n=n, dim=8)
+    banded = llm._embed_codes(emb, llm._lsh_bits(n), 8, ("embedding",))
     segs = llm._segment_lists(
         spark, banded, ["band", "bucket"], "vec_id", ["embedding"], n
     )

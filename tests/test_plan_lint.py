@@ -21,6 +21,12 @@ Everything else must be equi-join + codegen only. This caught a
 BroadcastNestedLoopJoin hiding under the MinHash seed expansion
 (crossJoin against a 32-row seed table) that explode(sequence(...))
 eliminates.
+
+The LSH arms (``knn_ivf_lsh``, ``similarity_search_ann``) band through
+``_embed_codes``, the one (band, bucket) rule the dedup and index
+families and the DuckDB oracle share: SQL arithmetic in codegen, no
+pandas UDF (``tests/test_ann.py::test_lsh_arms_run_no_python``).  Their
+whitelisting below is only the 1-row recall-pin attach.
 """
 
 from __future__ import annotations

@@ -160,6 +160,22 @@ def test_geo_corpus(spark, tmp_path, corpus_csvs):
         _check(spark, path, tmp_path / path.stem)
 
 
+def test_text_coordinate_keeps_row(spark, tmp_path):
+    """A coordinate that does not parse as a double (``east``) aborts
+    neither the CRS probe nor the point synthesis on either path: the
+    file processes, and its row is kept with a NULL WKT."""
+    path = tmp_path / "text_coordinates.csv"
+    path.write_bytes(EDGE_FILES["text_coordinates"])
+    results = [_process(spark, path, tmp_path / "driver")]
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(readers._SmallCsv, "open", classmethod(lambda cls, spark, path: None))
+        results.append(_process(spark, path, tmp_path / "jobs"))
+    for res in results:
+        assert res != "raised"
+        wkt = {r["id"]: r["geom_from_longitude_latitude_wkt"] for r in res[4]}
+        assert res[3] == "4326" and wkt == {1: None, 2: "POINT (3.0 4.0)"}, res
+
+
 def test_probe_casts_like_spark(spark, tmp_path):
     """``csv_probe`` keeps the asked column order and casts through
     Spark's ``Cast``: an integer column comes back as a double."""

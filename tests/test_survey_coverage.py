@@ -315,16 +315,61 @@ def test_exact_fold_inventory():
         others += v.others
     assert copies == [], f"use num.spark_sumsq/spark_dot instead: {sorted(copies)}"
     assert sorted(others) == [
-        ("operators/llm.py", "_minhash_probe"),  # minhash band agreement
+        ("operators/llm.py", "_minhash_est_jaccard"),  # minhash band agreement
         ("operators/llm.py", "_pca_pass"),  # x·v against a broadcast vector
         ("operators/llm.py", "_similarity_search_pq_approx"),  # PQ LUT sum
         ("operators/llm.py", "_similarity_search_quantized_approx"),  # q_sum
         ("operators/llm.py", "_similarity_search_quantized_approx"),  # deq_norm
-        ("operators/llm.py", "dedup_minhash_lsh"),  # minhash band agreement
         ("operators/llm.py", "embed_quantize_int8"),  # SQ8 checksum
         ("operators/llm.py", "embed_quantize_int8"),  # SQ8 code sum
         ("operators/multimodal.py", "multimodal_scene_cut"),  # byte sum
     ]
+
+
+def test_band_code_inventory():
+    """Embedding (band, bucket) codes have one producer, ``_embed_codes``
+    in ``operators/llm.py``: the SQL component-difference rule the DuckDB
+    oracle replays.  Every alias that names a ``band`` column sits in one
+    of the pinned sites below, no pandas UDF is defined inside any of them
+    (no Python worker computes a band code), and no random plane table
+    (``standard_normal``) exists in the package."""
+    import ast
+    from pathlib import Path
+
+    import duckdb_postgis_spark
+
+    def pandas_udf(node) -> bool:
+        return any(
+            "pandas_udf" in ast.unparse(d)
+            for d in getattr(node, "decorator_list", [])
+        )
+
+    root = Path(duckdb_postgis_spark.__file__).parent
+    sites, udf_sites, planes = [], [], []
+    for py in root.rglob("*.py"):
+        rel = py.relative_to(root).as_posix()
+        for fn in ast.parse(py.read_text()).body:
+            name = getattr(fn, "name", "<module>")
+            for node in ast.walk(fn):
+                if (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "alias"
+                    and any(getattr(a, "value", None) == "band" for a in node.args)
+                ):
+                    sites.append((rel, name))
+                if node is not fn and pandas_udf(node):
+                    udf_sites.append((rel, name))
+                if isinstance(node, ast.Attribute) and node.attr == "standard_normal":
+                    planes.append((rel, name))
+    assert sorted(sites) == [
+        ("operators/llm.py", "_embed_codes"),  # embedding sign-LSH codes
+        ("operators/llm.py", "_minhash_banded"),  # MinHash band signatures
+        ("operators/llm.py", "dedup_simhash"),  # SimHash 16-bit bands
+        ("operators/multimodal.py", "multimodal_phash_dedup"),  # pHash bands
+    ]
+    assert not set(sites) & set(udf_sites), sorted(set(sites) & set(udf_sites))
+    assert planes == [], planes
 
 
 def test_session_builder_inventory():
